@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
   * A short untimed warmup (session init, parquet footers, codegen paths)
@@ -9,16 +7,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     // untimed warmup: spin executors + touch every table's footer/schema,
     // then exercise the interpreted-lambda tokenize path and the codegen'd
@@ -34,13 +23,6 @@ object Bench {
           warmLog.warn(s"warmup '$what' failed (continuing): " +
             s"${e.getClass.getName}: ${Option(e.getMessage).getOrElse("").linesIterator.find(_.nonEmpty).getOrElse("")}")
       }
-    // Function registration is NOT warm-up: the assignment-fold kernels
-    // (round 20) reference dot_f/dot_fl as SQL text in 30+ query paths, so
-    // a skipped registration is a mass analysis failure, not a slow first
-    // query. Registered unconditionally, ahead of any failable warm body
-    // (it was previously inside the tokenize warm block, where a bad
-    // documents read would have silently skipped it).
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
     spark.range(1000).selectExpr("sum(id)").collect()
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings").foreach { t =>

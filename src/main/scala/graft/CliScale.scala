@@ -4,7 +4,7 @@ import java.io.BufferedWriter
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 
 import graft.model.Transaction
@@ -167,14 +167,7 @@ object CliScale {
   def main(args: Array[String]): Unit = {
     val workDir = args.headOption.getOrElse("/tmp/graft-cli-scale")
     val scale = if (args.length > 1) args(1).toDouble else 1.0
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     import spark.implicits._
 
     def secs[A](f: => A): (A, Double) = {

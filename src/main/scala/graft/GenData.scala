@@ -9,7 +9,7 @@ import scala.concurrent.{Await, Future}
 import scala.concurrent.duration.Duration
 import scala.concurrent.ExecutionContext.Implicits.global
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 
 /** Deterministic synthetic-data generator for AT-SCALE REHEARSAL: mirrors
   * the driver testdata's schemas and value distributions (TESTDATA.md; all
@@ -152,15 +152,7 @@ object GenData {
     // distribution it exists for. Uniform mode is byte-identical to before.
     val skew = args.length > 2 && args(2) == "zipf"
     Files.createDirectories(outDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "8g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     import spark.implicits._
 
     def n(base: Long): Long = math.max(1L, (base * sf).toLong)

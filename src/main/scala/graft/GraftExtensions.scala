@@ -2,37 +2,20 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.graft.{DotProductF, DotProductFL, DotProductRewrite, JsNumberFormat, ShingleHash32}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.graft.{DotProductRewrite, GraftFunctions}
 
-/** Session extensions for the graft engine: registers the custom Catalyst
-  * functions so SQL users get them too.
-  *
-  * Usage:
-  * {{{
-  *   SparkSession.builder()
-  *     .withExtensions(new GraftExtensions)          // programmatic
-  *   // or: --conf spark.sql.extensions=graft.GraftExtensions
-  * }}}
-  */
+/** Session extensions for the graft engine: every SQL function in
+  * [[GraftFunctions.table]], plus the [[DotProductRewrite]] optimizer rule.
+  * Graft's own mains get the functions alone, from [[GraftSession.local]].
+  * Install it with `.withExtensions(new GraftExtensions)` on a session
+  * builder, or with `--conf spark.sql.extensions=graft.GraftExtensions`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("js_num"),
-      new ExpressionInfo(classOf[JsNumberFormat].getName, "js_num"),
-      (children: Seq[Expression]) => JsNumberFormat(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("dot_f"),
-      new ExpressionInfo(classOf[DotProductF].getName, "dot_f"),
-      (children: Seq[Expression]) => DotProductF(children(0), children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("dot_fl"),
-      new ExpressionInfo(classOf[DotProductFL].getName, "dot_fl"),
-      (children: Seq[Expression]) => DotProductFL(children(0), children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("shingle_hash32"),
-      new ExpressionInfo(classOf[ShingleHash32].getName, "shingle_hash32"),
-      (children: Seq[Expression]) => ShingleHash32(children.head)))
+    GraftFunctions.table.foreach { case (name, builder) =>
+      ext.injectFunction((new FunctionIdentifier(name),
+        new ExpressionInfo(GraftFunctions.getClass.getName, name), builder))
+    }
     // declarative HOF dot products over float arrays lower to the codegen
     // kernel automatically (see DotProductRewrite)
     ext.injectOptimizerRule(_ => DotProductRewrite)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.model.Transaction
 import graft.pipeline.MergeSortSink
 import graft.sources._
@@ -31,16 +30,7 @@ object Main {
     val Array(kind, path) = positional.take(2)
     val out = if (positional.length == 3) positional(2) else "data.txt"
 
-    val spark = SparkSession.builder()
-      .appName("graft")
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     val f = new java.io.File(path)
     if (!f.exists()) { System.err.println(s"No such file or folder: $path"); sys.exit(1) }

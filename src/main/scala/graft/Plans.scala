@@ -1,12 +1,14 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Dumps `explain("formatted")` for every SparkEntry query to a directory —
   * the feedback loop for plan tuning (pushdown, pruning, broadcast choice,
   * shuffle count). Usage: `runMain graft.Plans <sfDir> <outDir> [names...]`
-  * (names restrict the dump to those queries — Verify's subset contract). */
+  * (names restrict the dump to those queries — Verify's subset contract).
+  * A query whose plan fails gets `ERROR: <message>` as its file; the run
+  * goes on, then exits non-zero and names the failed queries.
+  * `scripts/plans_diff.py` compares two dumps. */
 object Plans {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -14,29 +16,22 @@ object Plans {
     val unknown = only -- SparkEntry.queries.keySet
     require(unknown.isEmpty,
       s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
+    val spark = GraftSession.local()
     Files.createDirectories(Paths.get(outDir))
-    SparkEntry.queries.toSeq.sortBy(_._1)
+    val failed = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try {
-        val plan = fn(spark, sfDir).queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        Files.writeString(Paths.get(s"$outDir/$name.txt"), plan)
-      } catch {
-        case e: Throwable =>
-          Files.writeString(Paths.get(s"$outDir/$name.txt"), s"ERROR: ${e.getMessage}")
-      }
+      .flatMap { case (name, fn) =>
+        val (text, failure) =
+          try (fn(spark, sfDir).queryExecution.explainString(
+            org.apache.spark.sql.execution.FormattedMode), None)
+          catch { case e: Throwable => (s"ERROR: ${e.getMessage}", Some(name)) }
+        Files.writeString(Paths.get(s"$outDir/$name.txt"), text)
+        failure
       }
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[plans] ${failed.size} queries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

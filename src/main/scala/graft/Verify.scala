@@ -4,8 +4,27 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. Optional extra
   * args name a subset of queries to (re-)dump — builder iteration only;
-  * the driver's two-arg invocation always dumps everything. */
+  * the driver's two-arg invocation always dumps everything. Exits non-zero
+  * and names the failed queries when any dump fails. */
 object Verify {
+  /** Dumps each selected query (all when `only` is empty) to
+    * `outDir/<name>`, going on past failures; returns the failed names. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+           only: Set[String]): Seq[String] = {
+    new java.io.File(outDir).mkdirs()
+    SparkEntry.queries.toSeq
+      .filter { case (name, _) => only.isEmpty || only(name) }
+      .flatMap { case (name, fn) =>
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+          None
+        } catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(name)
+        }
+      }
+  }
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet
@@ -29,27 +48,8 @@ object Verify {
         "DuckDB oracle above the sampling rungs, so this dump would gate " +
         "against the wrong mirror. Unset the flag(s), or set GRAFT_AUDIT=1 " +
         "to dump anyway (audit use only — do NOT run the oracle compare).")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
-    new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
+    val spark = GraftSession.local()
+    val failed = dump(spark, sfDir, outDir, only)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -67,5 +67,9 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     graft.analytics.LlmOps.releaseCaches()
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} queries failed: ${failed.sorted.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

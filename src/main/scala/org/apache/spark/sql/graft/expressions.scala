@@ -13,8 +13,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * §7.3; golden expectations like `78990` from `78,990.00` in the reference's
   * bullionvault fixtures). Codegen emits a direct static call, so the
   * formatter stays inside whole-stage codegen instead of paying ScalaUDF's
-  * encoder + closure-call overhead. Registered as SQL function `js_num` by
-  * [[graft.GraftExtensions]].
+  * encoder + closure-call overhead. Registered as SQL function `js_num` via
+  * [[GraftFunctions]].
   *
   * Lives under `org.apache.spark.sql` because the expression/Column bridge
   * APIs it builds on are `private[sql]` in Spark 4's classic backend — the
@@ -158,9 +158,17 @@ case class DotProductFL(left: Expression, right: Expression)
 /** Shared pieces of the per-document text kernels. */
 private[graft] object GraftKernels {
   /** Precompiled tokenizer pattern — `split(str, '\\s+')` semantics. */
-  val Whitespace: java.util.regex.Pattern = java.util.regex.Pattern.compile("\\s+")
+  private val Whitespace: java.util.regex.Pattern = java.util.regex.Pattern.compile("\\s+")
   /** Precompiled line splitter — `split(str, '\n')` semantics. */
   val Newline: java.util.regex.Pattern = java.util.regex.Pattern.compile("\n")
+
+  /** The kernels' tokenizer, equal to
+    * `filter(split(lower(trim(text)), '\\s+'), t -> t != '')`: trim/lower
+    * are the UTF8String calls Spark's trim()/lower() make, and the
+    * precompiled pattern skips the per-row regex compile String.split
+    * would pay. */
+  def tokens(u: UTF8String): Array[String] =
+    Whitespace.split(u.trim().toLowerCase.toString, -1).filter(_.nonEmpty)
 }
 
 /** Per-document shingle-hash kernel: text → array of 32-bit hashes (as
@@ -192,11 +200,7 @@ case class ShingleHash32(child: Expression) extends UnaryExpression with Expects
   override def prettyName: String = "shingle_hash32"
 
   override def nullSafeEval(input: Any): Any = {
-    // trim/lower on UTF8String mirror Spark's trim()/lower() exactly;
-    // the precompiled pattern mirrors split(str, '\\s+') without the
-    // per-row regex compile String.split would pay
-    val s = input.asInstanceOf[UTF8String].trim().toLowerCase.toString
-    val toks = GraftKernels.Whitespace.split(s, -1).filter(_.nonEmpty)
+    val toks = GraftKernels.tokens(input.asInstanceOf[UTF8String])
     if (toks.length < 3) return new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Long])
     val seen = new java.util.LinkedHashSet[String](toks.length * 2)
     var i = 0
@@ -237,8 +241,7 @@ case class PassageHash(child: Expression, n: Int) extends UnaryExpression with E
   override def prettyName: String = "passage_hash"
 
   override def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String].trim().toLowerCase.toString
-    val toks = GraftKernels.Whitespace.split(s, -1).filter(_.nonEmpty)
+    val toks = GraftKernels.tokens(input.asInstanceOf[UTF8String])
     if (toks.length < n)
       return new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Any])
     val md = java.security.MessageDigest.getInstance("MD5")
@@ -312,10 +315,7 @@ case class GopherStats(child: Expression) extends UnaryExpression with ExpectsIn
 
   override def nullSafeEval(input: Any): Any = {
     val u = input.asInstanceOf[UTF8String]
-    // token side — lower(trim(text)) via the SAME UTF8String ops Spark's
-    // trim()/lower() evaluate, then the shared \s+ split
-    val toks = GraftKernels.Whitespace.split(u.trim().toLowerCase.toString, -1)
-      .filter(_.nonEmpty)
+    val toks = GraftKernels.tokens(u)
     val nWords = toks.length.toLong
     var sumWl = 0L
     var i = 0
@@ -396,8 +396,7 @@ case class TypeFreq(child: Expression) extends UnaryExpression with ExpectsInput
   override def prettyName: String = "type_freq"
 
   override def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String].trim().toLowerCase.toString
-    val toks = GraftKernels.Whitespace.split(s, -1).filter(_.nonEmpty)
+    val toks = GraftKernels.tokens(input.asInstanceOf[UTF8String])
     // LinkedHashMap: first-occurrence order — deterministic, and consumers
     // treat the entries as a set anyway
     val counts = new java.util.LinkedHashMap[String, java.lang.Long](toks.length * 2)
@@ -466,9 +465,7 @@ case class ClassifierStats(child: Expression, stops: Seq[String])
   }
 
   override def nullSafeEval(input: Any): Any = {
-    val toks = GraftKernels.Whitespace
-      .split(input.asInstanceOf[UTF8String].trim().toLowerCase.toString, -1)
-      .filter(_.nonEmpty)
+    val toks = GraftKernels.tokens(input.asInstanceOf[UTF8String])
     var nStop = 0L
     var nShort = 0L
     var nLong = 0L
@@ -910,34 +907,29 @@ case class CmsEstimate(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Runtime registration for sessions not built with
-  * `spark.sql.extensions=graft.GraftExtensions` — makes `js_num` callable
-  * from SQL text on an existing session. */
+/** The SQL functions graft provides, as one `name → builder` table.
+  * [[register]] adds them to a running session ([[graft.GraftSession]]
+  * calls it for every graft session); [[graft.GraftExtensions]] injects the
+  * same table into sessions built with `spark.sql.extensions`. */
 object GraftFunctions {
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    classic.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "js_num", exprs => JsNumberFormat(exprs.head), "scala_udf")
-    classic.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_f", exprs => DotProductF(exprs(0), exprs(1)), "scala_udf")
-    classic.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_fl", exprs => DotProductFL(exprs(0), exprs(1)), "scala_udf")
-    classic.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingle_hash32", exprs => ShingleHash32(exprs.head), "scala_udf")
-    classic.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "passage_hash", exprs => PassageHash(exprs(0),
-        exprs(1).eval().asInstanceOf[Int]), "scala_udf")
-    classic.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "gopher_stats", exprs => GopherStats(exprs.head), "scala_udf")
-    classic.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "type_freq", exprs => TypeFreq(exprs.head), "scala_udf")
-    // aggregate: the analyzer wraps a bare AggregateFunction builder result
+  val table: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "js_num" -> (e => JsNumberFormat(e.head)),
+    "dot_f" -> (e => DotProductF(e(0), e(1))),
+    "dot_fl" -> (e => DotProductFL(e(0), e(1))),
+    "shingle_hash32" -> (e => ShingleHash32(e.head)),
+    "passage_hash" -> (e => PassageHash(e(0), e(1).eval().asInstanceOf[Int])),
+    "gopher_stats" -> (e => GopherStats(e.head)),
+    "type_freq" -> (e => TypeFreq(e.head)),
+    // aggregates: the analyzer wraps a bare AggregateFunction builder result
     // in AggregateExpression, same as the built-in sum/min registrations
-    classic.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash_agg", exprs => SimhashAgg(exprs(0),
-        exprs(1).eval().asInstanceOf[Int]), "scala_udf")
-    classic.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "topk_min", exprs => TopKMinAgg(exprs(0),
-        exprs(1).eval().asInstanceOf[Int]), "scala_udf")
+    "simhash_agg" -> (e => SimhashAgg(e(0), e(1).eval().asInstanceOf[Int])),
+    "topk_min" -> (e => TopKMinAgg(e(0), e(1).eval().asInstanceOf[Int])))
+
+  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
+    val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.functionRegistry
+    table.foreach { case (name, builder) =>
+      registry.createOrReplaceTempFunction(name, builder, "scala_udf")
+    }
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.GraftFunctions
 
 /** The injected optimizer rule must lower the declarative HOF dot product
   * to the DotProductF kernel — same values, no ArrayAggregate left in the
@@ -60,6 +61,24 @@ class DotProductRewriteSpec extends SparkSpec {
       // null/length-mismatch parity with the HOF semantics: both give NULL
       val mism = Seq((Array(1.0f, 2.0f), Array(1.0f, 2.0f, 3.0f))).toDF("a", "b")
       assert(mism.selectExpr(s"$hof AS d").collect()(0).isNullAt(0))
+
+      // the extension injects the same function table register() installs
+      GraftFunctions.table.foreach { case (name, _) =>
+        assert(s.catalog.functionExists(name), s"$name missing from the extension session")
+      }
+      val row = s.sql(
+        """SELECT js_num(CAST(78990.0 AS DOUBLE)), dot_fl(array(1.0F, 2.0F), array(3L, 4L)),
+          |  size(shingle_hash32('a b c d')), size(passage_hash('a b c d', 2)),
+          |  gopher_stats('a b a').n_words, type_freq('a b a'), topk_min(id, 2),
+          |  simhash_agg(id, 8) IS NOT NULL
+          |FROM range(3)""".stripMargin).collect()(0)
+      assert(row.getString(0) == "78990")
+      assert(row.getDouble(1) == 11.0)
+      assert((row.getInt(2), row.getInt(3), row.getLong(4)) == ((2, 3, 3L)))
+      assert(row.getSeq[org.apache.spark.sql.Row](5).map(r => (r.getString(0), r.getLong(1))) ==
+        Seq(("a", 2L), ("b", 1L)))
+      assert(row.getSeq[Long](6) == Seq(0L, 1L))
+      assert(row.getBoolean(7))
     }
   }
 }

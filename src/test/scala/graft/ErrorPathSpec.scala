@@ -157,4 +157,12 @@ class ErrorPathSpec extends SparkSpec {
         e.getMessage.contains("audit-mode"), e.getMessage)
     } finally sys.props.remove("GRAFT_FULL_PAIRS")
   }
+
+  test("Verify names a query whose dump fails") {
+    // a data dir with no tables: the query cannot even be planned, and the
+    // dump must report it instead of passing over it
+    val noTables = java.nio.file.Files.createTempDirectory("verify-no-tables").toString
+    val out = java.nio.file.Files.createTempDirectory("verify-out").toString
+    assert(Verify.dump(spark, noTables, out, Set("q01_lineitem_agg")) == Seq("q01_lineitem_agg"))
+  }
 }
