@@ -185,30 +185,26 @@ object CliScale {
       "fidelity" -> (() => Transaction.toLines(FidelitySource.readFile(spark, s"$workDir/fidelity.csv"))),
       "bullionvault" -> (() => Transaction.toLines(BullionVaultSource.readFolder(spark, s"$workDir/emails"))))
 
-    var sinkDir: Option[String] = None
+    // the first round reads back a sink that does not exist yet (empty)
+    var sinkDir = s"$workDir/empty"
     val phases = rounds.zipWithIndex.map { case ((name, fresh), i) =>
       val out = s"$workDir/sink_$i"
-      val (_, t) = secs {
-        val existing = sinkDir match {
-          case Some(d) => spark.read.textFile(d).map(_.trim).filter(_.nonEmpty)
-          case None => spark.emptyDataset[String]
-        }
-        MergeSortSink.writeSorted(MergeSortSink.merge(existing, fresh()), out)
-      }
-      sinkDir = Some(out)
+      val (_, t) = secs(MergeSortSink.writeSorted(
+        MergeSortSink.merge(MergeSortSink.readExisting(spark, sinkDir), fresh()), out))
+      sinkDir = out
       name -> t
     }
 
     // ---- read-back verification (distributed) ---------------------------
     val (okCount, badFormat, badOrder, tVerify) = {
       val t0 = System.nanoTime()
-      val back = spark.read.textFile(sinkDir.get)
+      val back = spark.read.textFile(sinkDir)
       val total = back.count()
       val lineRe = "^(BUY|SELL) \\d{2}/\\d{2}/\\d{4} \\S+ -?\\d+(\\.\\d+)?([eE][+-]?\\d+)? \\d+(\\.\\d+)?([eE][+-]?\\d+)? \\d+(\\.\\d+)?([eE][+-]?\\d+)?$"
       val nBadFmt = back.filter(!col("value").rlike(lineRe)).count()
       // per-part sortedness + boundary order: parts are range-partitioned
       import scala.jdk.CollectionConverters._
-      val partFiles = Files.list(Paths.get(sinkDir.get)).iterator().asScala
+      val partFiles = Files.list(Paths.get(sinkDir)).iterator().asScala
         .filter(_.getFileName.toString.startsWith("part-")).toSeq.sortBy(_.toString)
       def dkey(line: String): String = {
         val d = line.split(" ")(1).split("/")

@@ -6,7 +6,7 @@ package graft
   *
   * Each query runs twice (cold, then warm — the second run shows how much
   * of the cold cost is one-off session/codegen/cache-build work). Honors
-  * GRAFT_CLUSTER_DEBUG etc. via the forked JVM's environment.
+  * GRAFT_FULL_PAIRS etc. via the forked JVM's environment.
   *
   * GRAFT_PROBE_HASH=1 times a full-column xxhash64 fold instead of
   * `.count()`: Catalyst prunes columns a count never reads, so a

@@ -275,7 +275,7 @@ private[analytics] trait DedupOps {
     * url_norm — the shared [[OpsKernels.bucketedStateTable]] lifecycle,
     * same as the fingerprint state's. */
   private[analytics] def frontierTable(spark: SparkSession, dir: String): String =
-    bucketedStateTable(spark, s"graft_frontier_bucketed_${Tables.dirTag(dir)}", "url_norm", dir) {
+    bucketedStateTable(spark, s"graft_frontier_bucketed_${Tables.dirTag(dir)}", "url_norm", dir, 8) {
       urlNormalized(spark, dir)
         .filter(expr(urlFrontierPredSql))
         .select(col("url_norm")).distinct()
@@ -834,7 +834,7 @@ private[analytics] trait DedupOps {
     kept.unpersist(blocking = true)
     if (thinActive) den.unpersist(blocking = true)
     spark.createDataFrame(rdd, plan.schema)
-    } finally releaseShingleState(hold)
+    } finally releaseShingleState(spark, dir, hold)
   }
 
 
@@ -913,20 +913,12 @@ private[analytics] trait DedupOps {
       jpairLadder(corpusDocCount(spark, dir)))
 
 
-  /** Doc count memo for the ladder rung — THREE pair-state builders call
-    * [[jpairSampleThreshold]] (jaccard, banded-recall gate, containment),
-    * and each used to pay a full documents scan just to pick the rung.
-    * Fingerprint-keyed like the memo cells, so a regenerated dir
-    * recounts. Entries are one boxed long each, but the KEYS pin
-    * SparkSession references and a long-lived session that regenerates
-    * dirs appends a new entry per fingerprint — so the map is cleared by
-    * [[OpsKernels.releaseCaches]] alongside sigMemo rather than left to
-    * accumulate stale entries. */
-  private[analytics] val docCountMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Long), java.lang.Long]
+  /** Corpus doc count for the ladder rung, memoized on the spine — THREE
+    * pair-state builders call [[jpairSampleThreshold]] (jaccard,
+    * banded-recall gate, containment), and each used to pay a full
+    * documents scan just to pick the rung. */
   private def corpusDocCount(spark: SparkSession, dir: String): Long =
-    docCountMemo.computeIfAbsent((spark, dir, dirFingerprint(spark, dir)),
-      _ => java.lang.Long.valueOf(Tables.documents(spark, dir).count())).longValue
+    memo(spark, dir, "doc_count")(Tables.documents(spark, dir).count())
 
 
   /** The pure ladder (docs → keep-threshold of 65536), mirrored verbatim
@@ -1038,7 +1030,7 @@ private[analytics] trait DedupOps {
       // identical binaries measured 96→244→272 s across three
       // back-to-back runs — but the deterministic handoff stands on
       // its own.)
-      } finally releaseShingleState(hold)
+      } finally releaseShingleState(spark, dir, hold)
     }
 
 
@@ -1132,65 +1124,38 @@ private[analytics] trait DedupOps {
     * <3 tokens have no sh rows and drop out — they can never appear in
     * `common` anyway. */
   private[analytics] final class ShingleHold(
-      val key: (SparkSession, String, Long),
       val sh: DataFrame, val capped: DataFrame, val sizes: DataFrame) {
     var remaining: Int = 3
   }
-  private val shingleHolds =
-    scala.collection.mutable.HashMap.empty[(SparkSession, String, Long), ShingleHold]
 
   /** Ref-counted access to [[shingleState]] for the THREE pair-state
     * builders ([[buildJaccardPairs]], [[bandedJaccardPairs]],
     * [[buildContainmentPairs]]): the state stage runs them back-to-back,
     * and each used to pay the full tokenize/shingle/cap materialization —
     * the triple is now built ONCE and unpersisted when the last builder
-    * has checkpointed its pair table. The hold is fingerprint-keyed like the memo cells (a
-    * regenerated dir gets a fresh build, never stale shingles), and the
+    * has checkpointed its pair table. The hold is one memo-spine cell
+    * (a regenerated dir gets a fresh build, never stale shingles), and the
     * persisted frames are also registered in the tracked-cache registry
-    * as the backstop for a session where only one builder ever runs
-    * (its half-released hold then frees at [[releaseCaches]]). */
-  private def acquireShingleState(spark: SparkSession, dir: String): ShingleHold = {
-    val key = (spark, dir, dirFingerprint(spark, dir))
-    shingleHolds.synchronized {
-      shingleHolds.get(key) match {
-        case Some(held) => held
-        case None =>
-          val (sh, capped, sizes) = shingleState(spark, dir)
-          track(sh); track(capped); track(sizes)
-          val held = new ShingleHold(key, sh, capped, sizes)
-          shingleHolds(key) = held
-          // releaseCaches backstop: the frames' UNPERSISTS are tracked
-          // above, but without this thunk the map ENTRY survived a bulk
-          // release (a builder exception between acquire and release, or
-          // a half-released single-builder session), so the next build
-          // cycle reused a hold whose frames were already unpersisted —
-          // recomputing the tokenize/shingle chain per reference, the
-          // exact cost the ref-counting exists to remove. Remove-if-same
-          // so a hold created AFTER the release (fresh cycle) is never
-          // torn down by the stale thunk.
-          trackThunk(() => shingleHolds.synchronized {
-            if (shingleHolds.get(key).exists(_ eq held)) shingleHolds.remove(key); ()
-          })
-          held
-      }
+    * for a session where only one builder ever runs (its half-released
+    * hold then frees at [[releaseCaches]], which also empties the spine). */
+  private def acquireShingleState(spark: SparkSession, dir: String): ShingleHold =
+    memo(spark, dir, "shingle_hold") {
+      val (sh, capped, sizes) = shingleState(spark, dir)
+      track(sh); track(capped); track(sizes)
+      new ShingleHold(sh, capped, sizes)
     }
-  }
 
   /** Release keyed by the ACQUIRED hold object, not a recomputed
     * fingerprint: a dir regeneration mid-build changes dirFingerprint,
-    * and the old release-by-key variant then decremented a DIFFERENT
-    * (fresh) hold — leaving this one's count unbalanced forever. */
-  private def releaseShingleState(hold: ShingleHold): Unit = {
-    val done = shingleHolds.synchronized {
-      hold.remaining -= 1
-      if (hold.remaining <= 0) {
-        if (shingleHolds.get(hold.key).exists(_ eq hold)) shingleHolds.remove(hold.key)
-        true
-      } else false
-    }
-    // the Spark calls run OUTSIDE the lock (the memoCell discipline);
+    * and a release by fingerprint would decrement a DIFFERENT (fresh)
+    * hold — leaving this one's count unbalanced forever. The last release
+    * drops exactly this hold's spine cell (by identity). */
+  private def releaseShingleState(spark: SparkSession, dir: String, hold: ShingleHold): Unit = {
+    val done = hold.synchronized { hold.remaining -= 1; hold.remaining <= 0 }
+    // the Spark calls run OUTSIDE the lock (the memo discipline);
     // blocking for the same deterministic-handoff reason as before
     if (done) {
+      memoForget(spark, dir, "shingle_hold", hold)
       hold.sh.unpersist(blocking = true)
       hold.capped.unpersist(blocking = true)
       hold.sizes.unpersist(blocking = true)
@@ -1227,14 +1192,9 @@ private[analytics] trait DedupOps {
 
 
   private[analytics] def buildJaccardPairs(spark: SparkSession, dir: String): DataFrame = {
-    val dbg = sys.env.contains("GRAFT_CLUSTER_DEBUG")
-    val t0 = System.nanoTime()
-    def lap(tag: String): Unit =
-      if (dbg) println(f"JPBUILD $tag ${(System.nanoTime() - t0) / 1e9}%.2fs")
     val hold = acquireShingleState(spark, dir)
     try {
     val (capped, sizes) = (hold.capped, hold.sizes)
-    lap("shingle state planned")
     // the sample ladder (see jpairSampleThreshold) bounds THIS join — the
     // last superlinear stage — by filtering both sides' docs BEFORE the
     // self-join (the filter rides the capped-scan projection, so the join
@@ -1273,14 +1233,13 @@ private[analytics] trait DedupOps {
     jpRdd.localCheckpoint()
     jpRdd.count() // materialize eagerly; lineage truncates here
     val jp = spark.createDataFrame(jpRdd, jpPlan.schema)
-    lap("pairs checkpointed")
     trackRdd(jpRdd)
     jp
     // the shingle tables only served the builds — the ref-counted release
     // (in the finally, so a failed build never strands the count) frees
     // them the moment the LAST pair builder has checkpointed: executor
     // storage stays bounded by the pair tables
-    } finally releaseShingleState(hold)
+    } finally releaseShingleState(spark, dir, hold)
   }
 
 
@@ -1403,22 +1362,12 @@ private[analytics] trait DedupOps {
     * unique fixpoint regardless of round count — which is what makes it
     * comparable to the oracle's recursive-CTE transitive closure. */
   def ddCluster(spark: SparkSession, dir: String): DataFrame = {
-    val debug = sys.env.contains("GRAFT_CLUSTER_DEBUG")
-    val dbgT = System.nanoTime()
     val lblTable = jaccardCcLabels(spark, dir)
-    if (debug)
-      println(f"CLUSTER labels-build ${(System.nanoTime() - dbgT) / 1e9}%.2fs")
     val sizes = lblTable.toDF("sd", "slbl")
       .groupBy(col("slbl")).agg(count(lit(1)).as("cluster_size"))
-    val result = lblTable.join(sizes, col("lbl") === col("slbl"))
+    lblTable.join(sizes, col("lbl") === col("slbl"))
       .select(col("d").as("doc_id"), col("lbl").as("cluster_id"), col("cluster_size"))
       .orderBy(col("doc_id"))
-    if (debug) {
-      val tf = System.nanoTime()
-      result.count()
-      println(f"CLUSTER final-assembly ${(System.nanoTime() - tf) / 1e9}%.2fs")
-    }
-    result
   }
 
 
@@ -1481,8 +1430,6 @@ private[analytics] trait DedupOps {
     // round's checkpoint RDD is unpersisted as soon as its successor is
     // materialized, so executor storage is bounded by two label tables no
     // matter how many rounds run.
-    val debug = sys.env.contains("GRAFT_CLUSTER_DEBUG")
-    val dbgT = System.nanoTime()
 
     // Mark for local checkpoint (lazily — the round-1 job materializes
     // edges, initial labels, and the round-1 state together).
@@ -1492,8 +1439,6 @@ private[analytics] trait DedupOps {
     val edgeSchema = edges.schema
     val edgesRdd = ckptRdd(edges)
     trackRdd(edgesRdd)
-    if (debug)
-      println(f"CLUSTER edges-planned ${(System.nanoTime() - dbgT) / 1e9}%.2fs")
     // Every re-wrap of a materialized RDD mints FRESH attribute ids, so one
     // materialized state can appear several times in a round's plan without
     // tripping analyzer attribute-rewrite on shared checkpointed leaves.
@@ -1507,8 +1452,6 @@ private[analytics] trait DedupOps {
       .select(col("d"), col("d").as("lbl"), lit(true).as("chg"))
     val stateSchema = init.schema
     var labelsRdd = ckptRdd(init)
-    if (debug)
-      println(f"CLUSTER init-planned ${(System.nanoTime() - dbgT) / 1e9}%.2fs")
     def labelsDf(n1: String, n2: String): DataFrame =
       spark.createDataFrame(labelsRdd, stateSchema).select(col("d").as(n1), col("lbl").as(n2))
 
@@ -1518,7 +1461,6 @@ private[analytics] trait DedupOps {
     var changed = 1L
     var rounds = 0
     while (changed > 0) {
-      val rt = System.nanoTime()
       rounds += 1
       // part 1: min over own + neighbors' labels
       val viaNeighbor = sym.join(labelsDf("d2", "lbl2"), col("b") === col("d2"))
@@ -1544,7 +1486,6 @@ private[analytics] trait DedupOps {
       // deliberate free of a truncated-lineage RDD — suppress the WARN
       withQuietRddLogger { labelsRdd.unpersist(blocking = false) }
       labelsRdd = nextRdd
-      if (debug) println(f"CLUSTER round $rounds done ${(System.nanoTime() - rt) / 1e9}%.2fs changed=$changed")
     }
     trackRdd(labelsRdd) // final state feeds the caller's lazy result plan
     (() => labelsDf("d", "lbl"), rounds)

@@ -91,7 +91,7 @@ private[analytics] trait IngestOps {
     * in-memory catalog forgets tables across restarts but the files
     * persist) is deleted before the rewrite. */
   private[analytics] def fingerprintTable(spark: SparkSession, dir: String): String =
-    bucketedStateTable(spark, s"graft_fp_bucketed_${Tables.dirTag(dir)}", "fp", dir) {
+    bucketedStateTable(spark, s"graft_fp_bucketed_${Tables.dirTag(dir)}", "fp", dir, 8) {
       Tables.documents(spark, dir)
         .filter(col("doc_id") < IncrementalSplit)
         .select(md5(col("text")).as("fp"))

@@ -1,16 +1,15 @@
 package graft.analytics
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Shared machinery for the LlmOps surface: the cache/memo registry,
-  * cross-engine hash/arith fragments, the codegen dot-product bridges and
-  * the data-sized index parameters. Split out of the monolithic LlmOps
-  * object (round 15) purely for code health - every member is unchanged. */
+/** Shared machinery for the LlmOps surface: the cache registry, the one
+  * fingerprinted memo spine ([[memo]]) and the one bucketed warehouse-table
+  * lifecycle ([[bucketedStateTable]]), cross-engine hash/arith fragments,
+  * the codegen dot-product bridges and the data-sized index parameters. */
 private[analytics] trait OpsKernels {
-  this: DedupOps => // releaseCaches clears DedupOps.docCountMemo too
 
   // --------------------------------------------------------- cache registry
 
@@ -28,25 +27,17 @@ private[analytics] trait OpsKernels {
 
 
   private[analytics] def track(df: DataFrame): DataFrame =
-    { trackThunk(() => { df.unpersist(); () }); df }
+    { synchronized { tracked += (() => { df.unpersist(); () }) }; df }
 
 
   private[analytics] def trackRdd(rdd: RDD[_]): Unit =
-    trackThunk(() => { rdd.unpersist(blocking = false); () })
+    synchronized { tracked += (() => { rdd.unpersist(blocking = false); () }) }
 
 
-  /** Register an arbitrary cleanup to run at [[releaseCaches]] — for
-    * state that is not a frame/RDD handle (e.g. the shingle-hold map
-    * entries, whose UNPERSISTS are tracked separately but whose map
-    * residency would otherwise survive a release and serve unpersisted
-    * frames to the next build cycle). */
-  private[analytics] def trackThunk(f: () => Unit): Unit =
-    synchronized { tracked += f }
-
-
-  /** Unpersist every tracked frame/RDD and drop the jaccard-pair memo. Safe
-    * to call repeatedly; after a release the next query rebuilds its caches
-    * from scratch. */
+  /** Unpersist every tracked frame/RDD and empty the memo spine
+    * ([[memoCells]]) — the one store of per-(session, dir) derived state.
+    * Safe to call repeatedly; after a release the next query rebuilds its
+    * caches from scratch. */
   def releaseCaches(): Unit = synchronized {
     // Unpersisting a locally-checkpointed RDD makes its concrete class
     // logger (e.g. org.apache.spark.rdd.MapPartitionsRDD) WARN "... was
@@ -57,14 +48,7 @@ private[analytics] trait OpsKernels {
     withQuietRddLogger {
       tracked.foreach(f => try f() catch { case _: Throwable => () })
       tracked.clear()
-      sigMemo.clear()
-      // Unlike sigMemo's MemoCells the doc-count entries are cheap, but
-      // their keys pin SparkSession references and regenerated dirs (new
-      // fingerprint) append forever — release them with everything else.
-      docCountMemo.clear()
-      // q38's broadcast-gate node count rides the same fingerprint spine
-      // and pins sessions the same way.
-      graft.analytics.Relational.pagerankNodeMemo.clear()
+      memoCells.clear()
     }
   }
 
@@ -146,54 +130,6 @@ private[analytics] trait OpsKernels {
     * numerically identical to the left-folded HOF formulation AND to the
     * unrolled left-associated chain in [[dot]] used by the oracles (same
     * accumulation order from 0.0, same per-term double widening). */
-  /** ONE idempotent bucketed-state-table lifecycle, shared by the
-    * fingerprint and frontier states (previously two drifting copies):
-    * dir-tagged table name supplied by the caller, stale-warehouse
-    * cleanup (the in-memory catalog forgets tables across restarts but
-    * the files persist — and the walk stream is CLOSED, unlike the
-    * copies this replaces), single writer task at test SF (production
-    * repartitions on the bucket key instead, sized so each task writes
-    * one healthy file per bucket).
-    *
-    * Like [[memoCell]], the lifecycle is SOURCE-FINGERPRINTED: the
-    * [[dirFingerprint]] observed at build time is recorded JVM-side,
-    * and a call that observes a strictly NEWER fingerprint (the driver
-    * regenerates testdata dirs mid-session) drops and rebuilds the table
-    * instead of serving stale frontier/fingerprint state to the
-    * incremental queries. Strictly-newer, not `!=`, for the same
-    * monotonic-mtime race reason memoCell documents. The memo is keyed
-    * by TABLE NAME alone (dir-tagged, so distinct dirs never collide):
-    * sessions sharing one SharedState/catalog live in one JVM, so a
-    * session-keyed memo would miss for a sibling session and serve it
-    * the pre-regeneration table; across JVM restarts the in-memory
-    * catalog forgets the table and the build path runs anyway. */
-  private[analytics] lazy val bucketedFpMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]
-
-
-  private[analytics] def bucketedStateTable(spark: SparkSession, name: String,
-      key: String, dir: String)(build: => DataFrame): String = synchronized {
-    val fp = dirFingerprint(spark, dir)
-    val stale = Option(bucketedFpMemo.get(name)).exists(_.longValue < fp)
-    if (stale || !spark.catalog.tableExists(name)) {
-      spark.sql(s"DROP TABLE IF EXISTS $name")
-      val wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-        .stripPrefix("file:")
-      val p = java.nio.file.Paths.get(wh, name)
-      if (java.nio.file.Files.exists(p)) {
-        val walk = java.nio.file.Files.walk(p)
-        try {
-          import scala.jdk.CollectionConverters._
-          walk.iterator().asScala.toSeq.reverse.foreach(java.nio.file.Files.delete)
-        } finally walk.close()
-      }
-      build.repartition(1).write.bucketBy(8, key).sortBy(key).saveAsTable(name)
-      bucketedFpMemo.put(name, java.lang.Long.valueOf(fp))
-    }
-    name
-  }
-
-
   private[graft] def dotF(a: Column, b: Column): Column =
     org.apache.spark.sql.graft.ColumnBridge.column(
       org.apache.spark.sql.graft.DotProductF(
@@ -330,35 +266,46 @@ private[analytics] trait OpsKernels {
   private[analytics] def bucketHof(e: String, pl: Int): String =
     (0 until pl).map(p => s"(CASE WHEN (${planeDotHof(e, p)}) >= 0 THEN ${1 << p} ELSE 0 END)").mkString(" + ")
 
-  /** A memoized index-table slot: `fp` is the source-data fingerprint the
-    * build observed; the lazy `df` materializes under the CELL's own
+  // ------------------------------------------------------------ memo spine
+
+
+  /** One slot of the memo spine: `fp` is the source-data fingerprint the
+    * build observed; the lazy `value` materializes under the CELL's own
     * monitor, so concurrent consumers of DIFFERENT memo keys never
     * serialize behind one build (the map's per-bin lock only guards cell
-    * creation, which is cheap). `peek` exposes the frame ONLY once built —
+    * creation, which is cheap). `peek` exposes the value ONLY once built —
     * the stale-release path must never force an unbuilt cell (a failed
     * build's cell would otherwise rebuild, possibly recursively through
     * this very map, inside the release path). */
-  private[analytics] final class MemoCell(val fp: Long, build: () => DataFrame) {
-    @volatile private var built: DataFrame = _
-    def peek: Option[DataFrame] = Option(built)
-    lazy val df: DataFrame = { val d = build(); built = d; d }
+  private[analytics] final class MemoCell[A](val fp: Long, build: () => A) {
+    @volatile private var built: Option[A] = None
+    def peek: Option[A] = built
+    lazy val value: A = { val v = build(); built = Some(v); v }
   }
 
-  private[analytics] lazy val sigMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), MemoCell]
+  /** THE memo spine: every piece of derived state kept per (session, dir)
+    * — index tables, pair tables, the shingle hold, scalar censuses such as
+    * the corpus doc count and the pagerank node count — is one cell here,
+    * keyed (session, dir, kind) and stamped with the [[dirFingerprint]] its
+    * build observed. [[releaseCaches]] empties it. */
+  private[analytics] lazy val memoCells =
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), MemoCell[_]]
 
 
   /** Source-data fingerprint for a testdata dir: the newest modification
-    * time across the two tables the memoized index state derives from,
+    * time across the tables every memo and every [[bucketedStateTable]]
+    * derives from — `documents` and `embeddings` (the LLM family),
+    * `lineitem` and `orders` (the pagerank graph, the bucketed facts) —
     * resolved through the Hadoop filesystem of the path (so hdfs://s3://
     * URIs and directory-layout parquet fingerprint correctly — a plain
     * java.io.File mtime is 0 for a URI and misses in-place part-file
     * rewrites under a directory). A harness that REGENERATES a dir
     * mid-session (the driver does) changes the fingerprint, so the next
     * memo call misses and rebuilds — without this, build-once state would
-    * silently serve the old data. (`releaseCaches()` remains the bulk
-    * lifecycle: release everything when the session is done with a dir.) */
-  private[analytics] def dirFingerprint(spark: SparkSession, dir: String): Long = {
+    * silently serve the old data.
+    * (`releaseCaches()` remains the bulk lifecycle: release everything
+    * when the session is done with a dir.) */
+  private[graft] def dirFingerprint(spark: SparkSession, dir: String): Long = {
     val conf = spark.sparkContext.hadoopConfiguration
     val key = (spark, dir)
     // A MISSING table is a stable state and fingerprints as 0 (some dirs
@@ -369,8 +316,8 @@ private[analytics] trait OpsKernels {
     // Fall back to the last successfully observed value instead: unreadable
     // means "unchanged until proven otherwise".
     val computed: Option[Long] = try {
-      Some(Seq("documents.parquet", "embeddings.parquet").map { t =>
-        val p = new org.apache.hadoop.fs.Path(s"$dir/$t")
+      Some(Seq("documents", "embeddings", "lineitem", "orders").map { t =>
+        val p = new org.apache.hadoop.fs.Path(s"$dir/$t.parquet")
         val fs = p.getFileSystem(conf)
         try {
           val st = fs.getFileStatus(p)
@@ -395,37 +342,62 @@ private[analytics] trait OpsKernels {
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Long]
 
 
-  /** The memo spine shared by [[memoSig]] and [[memoRaw]]: fingerprint
-    * check, stale eviction, per-key lazy build. The stale release runs
-    * OUTSIDE any map lock — it is a Spark call, and a fresh build may
+  /** Memoize `build` in the spine: fingerprint check, stale eviction,
+    * per-key lazy build. A stale cell that built a DataFrame has it
+    * unpersisted; any other stale value is just dropped. The stale release
+    * runs OUTSIDE any map lock — it is a Spark call, and a fresh build may
     * recursively enter this memo (the serve-PQ code table builds on the
     * serve assignment); only cheap cell construction happens inside
     * computeIfAbsent. */
-  private[analytics] def memoCell(spark: SparkSession, dir: String, kind: String)
-      (thunk: () => DataFrame): DataFrame = {
+  private[analytics] def memo[A](spark: SparkSession, dir: String, kind: String)
+      (build: => A): A = {
     val key = (spark, dir, kind)
     val fp = dirFingerprint(spark, dir)
-    val existing = sigMemo.get(key)
+    val existing = memoCells.get(key)
     // Evict only when the OBSERVED fingerprint is strictly newer than the
     // cell's (mtimes are monotonic): a thread that read the fingerprint
     // BEFORE a concurrent regeneration must not tear down the fresh cell a
     // faster thread already installed — with `!=` it would unpersist a
     // table other queries are using and re-insert a cell stamped with the
     // stale fp, thrashing the memo until the next call re-evicts.
-    if (existing != null && existing.fp < fp && sigMemo.remove(key, existing))
+    if (existing != null && existing.fp < fp && memoCells.remove(key, existing))
       // stale entry (dir regenerated): best-effort drop of whatever it
       // MATERIALIZED (never force an unbuilt cell); self-tracked builds
       // keep their storage until releaseCaches, which is acceptable —
       // correctness needs only the memo MISS
-      existing.peek.foreach(d => try d.unpersist(false) catch { case _: Throwable => () })
-    sigMemo.computeIfAbsent(key, _ => new MemoCell(fp, thunk)).df
+      existing.peek.foreach {
+        case d: Dataset[_] => try d.unpersist(false) catch { case _: Throwable => () }
+        case _ => ()
+      }
+    memoCells.computeIfAbsent(key, _ => new MemoCell(fp, () => build))
+      .asInstanceOf[MemoCell[A]].value
+  }
+
+
+  /** Drop `kind`'s cell for (spark, dir) if it still holds `value` — by
+    * identity, so a fresh cell built after a regeneration is never torn
+    * down by the release of an older value. */
+  private[analytics] def memoForget(spark: SparkSession, dir: String, kind: String,
+      value: AnyRef): Unit = {
+    val key = (spark, dir, kind)
+    val cell = memoCells.get(key)
+    if (cell != null && cell.peek.exists(_.asInstanceOf[AnyRef] eq value))
+      memoCells.remove(key, cell)
+  }
+
+
+  /** The fingerprint each spine cell of (spark, dir) was built against,
+    * by kind. */
+  private[graft] def memoFingerprints(spark: SparkSession, dir: String): Map[String, Long] = {
+    import scala.jdk.CollectionConverters._
+    memoCells.asScala.collect { case ((s, d, k), c) if s == spark && d == dir => k -> c.fp }.toMap
   }
 
 
   /** Memoize + cache + eagerly materialize + track an index table. */
   private[analytics] def memoSig(spark: SparkSession, dir: String, kind: String)
       (build: => DataFrame): DataFrame =
-    memoCell(spark, dir, kind)(() => { val df = build.cache(); df.count(); track(df) })
+    memo(spark, dir, kind) { val df = build.cache(); df.count(); track(df) }
 
 
   /** Memoize a build that handles its OWN materialization/tracking
@@ -434,5 +406,58 @@ private[analytics] trait OpsKernels {
     * [[memoSig]] without double-caching the result. */
   private[analytics] def memoRaw(spark: SparkSession, dir: String, kind: String)
       (build: => DataFrame): DataFrame =
-    memoCell(spark, dir, kind)(() => build)
+    memo(spark, dir, kind)(build)
+
+
+  // ------------------------------------------------ warehouse state tables
+
+
+  /** ONE idempotent bucketed-state-table lifecycle, shared by every
+    * bucketed warehouse table: the fingerprint and frontier states (8
+    * buckets) and the two q35 fact tables ([[Relational.factBuckets]]).
+    * The dir-tagged table name is supplied by the caller; a stale
+    * warehouse directory is deleted before the rewrite (the in-memory
+    * catalog forgets tables across restarts but the files persist); the
+    * writer repartitions on the bucket key with the bucket count — Spark's
+    * repartition and bucketBy share the Murmur3 hash, so every writer task
+    * holds exactly one bucket's rows and commits one file per bucket, in
+    * parallel.
+    *
+    * Like [[memo]], the lifecycle is SOURCE-FINGERPRINTED: the
+    * [[dirFingerprint]] observed at build time is recorded JVM-side,
+    * and a call that observes a strictly NEWER fingerprint (a harness
+    * that regenerates a data dir mid-session) drops and rebuilds the table
+    * instead of serving stale state. Strictly-newer, not `!=`, for the
+    * same monotonic-mtime race reason [[memo]] documents. The record is
+    * keyed by TABLE NAME alone (dir-tagged, so distinct dirs never
+    * collide): sessions sharing one SharedState/catalog live in one JVM,
+    * so a session-keyed record would miss for a sibling session and serve
+    * it the pre-regeneration table; across JVM restarts the in-memory
+    * catalog forgets the table and the build path runs anyway. */
+  private[analytics] lazy val bucketedFpMemo =
+    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]
+
+
+  private[analytics] def bucketedStateTable(spark: SparkSession, name: String,
+      key: String, dir: String, buckets: Int)(build: => DataFrame): String = synchronized {
+    val fp = dirFingerprint(spark, dir)
+    val stale = Option(bucketedFpMemo.get(name)).exists(_.longValue < fp)
+    if (stale || !spark.catalog.tableExists(name)) {
+      spark.sql(s"DROP TABLE IF EXISTS $name")
+      val wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
+        .stripPrefix("file:")
+      val p = java.nio.file.Paths.get(wh, name)
+      if (java.nio.file.Files.exists(p)) {
+        val walk = java.nio.file.Files.walk(p)
+        try {
+          import scala.jdk.CollectionConverters._
+          walk.iterator().asScala.toSeq.reverse.foreach(java.nio.file.Files.delete)
+        } finally walk.close()
+      }
+      build.repartition(buckets, col(key))
+        .write.bucketBy(buckets, key).sortBy(key).saveAsTable(name)
+      bucketedFpMemo.put(name, java.lang.Long.valueOf(fp))
+    }
+    name
+  }
 }

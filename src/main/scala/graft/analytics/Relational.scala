@@ -502,11 +502,9 @@ object Relational {
     // bug (the sf10 probe measured it: a ~3.5M-row broadcast next to the
     // cached edges exhausts executor memory), so the hint is DATA-AWARE:
     // large graphs fall back to shuffling both sides on the node key —
-    // the standard distributed PageRank round. Round 20: the gate's node
-    // count is MEMOIZED on the same fingerprint spine as the edge state
-    // (the docCountMemo treatment) — it is a property of the memoized
-    // edge table, and every q38 call used to re-pay the distinct+count
-    // shuffle just to re-derive the same constant.
+    // the standard distributed PageRank round. The gate's node count is
+    // memoized on the spine like the edge table it counts: every q38 call
+    // used to re-pay the distinct+count shuffle for the same constant.
     val fitsBroadcast = pagerankNodeCount(spark, dir) <= broadcastNodeCap
     for (_ <- 1 to 3) {
       ranks = e.join(if (fitsBroadcast) broadcast(ranks) else ranks,
@@ -531,28 +529,18 @@ object Relational {
     * temporarily-zeroed cap (the round-16 ADVICE race). */
   private[graft] val PagerankBroadcastNodeCap = 1000000L
 
+  /** Node count of the memoized pagerank graph — the q38 broadcast gate's
+    * input, a property of the edge table and memoized with it. */
+  private def pagerankNodeCount(spark: SparkSession, dir: String): Long =
+    LlmOps.memo(spark, dir, "pagerank_nodes")(
+      pagerankEdges(spark, dir).select(col("src")).distinct().count())
+
   /** The symmetrized purchase graph with per-source out-degrees,
     * (src, dst, deg) — checkpointed ONCE and memoized on the shared
     * fingerprint spine (a production PageRank materializes its edge
     * table; the unrolled plan reads it three times, and exchange reuse
     * does not reliably dedupe the subtree under AQE — measured 3×
     * recompute without this). Prewarmed as explicitly-timed state. */
-  /** Node count of the memoized pagerank graph — the q38 broadcast gate's
-    * input, memoized per (session, dir, fingerprint) like
-    * [[graft.analytics.DedupOps]]'s docCountMemo (same rationale: the
-    * count is a property of the memoized edge state, and deriving it per
-    * call re-paid a distinct+count shuffle over the full edge table).
-    * Cleared by [[LlmOps.releaseCaches]] alongside the other memos — the
-    * keys pin SparkSession references. */
-  private[analytics] val pagerankNodeMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Long), java.lang.Long]
-
-  private def pagerankNodeCount(spark: SparkSession, dir: String): Long =
-    pagerankNodeMemo.computeIfAbsent(
-      (spark, dir, LlmOps.dirFingerprint(spark, dir)),
-      _ => java.lang.Long.valueOf(
-        pagerankEdges(spark, dir).select(col("src")).distinct().count())).longValue
-
   private def pagerankEdges(spark: SparkSession, dir: String): DataFrame =
     LlmOps.memoRaw(spark, dir, "pagerank_edges") {
       val pairs = Tables.lineitem(spark, dir)
@@ -1062,44 +1050,16 @@ object Relational {
   }
 
   /** Idempotently materialize orders/lineitem bucketed+sorted on the
-    * orderkey ([[factBuckets]] buckets), same lifecycle pattern as the
-    * LLM side's fingerprint state table: the table names carry a tag of
-    * the source dir (so two dirs in one warehouse/SharedState never
-    * clobber each other and no session-conf marker is needed), stale
-    * warehouse dirs from a previous JVM deleted before the rewrite,
-    * writers repartitioned on the bucket key so the N-bucket layout
-    * commits N files in parallel (production scales file count with
-    * data). */
-  private def bucketedFactTables(spark: SparkSession, dir: String): (String, String) =
-    synchronized {
-      val tag = graft.analytics.Tables.dirTag(dir)
-      val (ordersT, lineitemT) = (s"graft_orders_b_$tag", s"graft_lineitem_b_$tag")
-      val exists = spark.catalog.tableExists(ordersT) && spark.catalog.tableExists(lineitemT)
-      if (!exists) {
-        val wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-          .stripPrefix("file:")
-        val nb = factBuckets(spark, dir)
-        Seq(ordersT -> "orders", lineitemT -> "lineitem").foreach { case (t, src) =>
-          spark.sql(s"DROP TABLE IF EXISTS $t")
-          val p = java.nio.file.Paths.get(wh, t)
-          if (java.nio.file.Files.exists(p)) {
-            import scala.jdk.CollectionConverters._
-            java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-              .foreach(java.nio.file.Files.delete)
-          }
-          val key = if (src == "orders") "o_orderkey" else "l_orderkey"
-          // repartition on the bucket key with the bucket count: Spark's
-          // repartition and bucketBy share the Murmur3 hash, so every
-          // writer task holds exactly one bucket's rows — nb parallel
-          // writers, one file per bucket (repartition(1) measured 8s
-          // single-threaded for the sf0.1 lineitem write; this shape is
-          // also the production one, scaled to files-per-bucket targets)
-          Tables(spark, dir, src).repartition(nb, col(key))
-            .write.bucketBy(nb, key).sortBy(key).saveAsTable(t)
-        }
-      }
-      (ordersT, lineitemT)
-    }
+    * orderkey ([[factBuckets]] buckets) through the shared
+    * [[OpsKernels.bucketedStateTable]] lifecycle: dir-tagged names, stale
+    * warehouse cleanup, and a rebuild when the dir's fingerprint moves. */
+  private def bucketedFactTables(spark: SparkSession, dir: String): (String, String) = {
+    val (tag, nb) = (Tables.dirTag(dir), factBuckets(spark, dir))
+    (LlmOps.bucketedStateTable(spark, s"graft_orders_b_$tag", "o_orderkey", dir, nb)(
+      Tables.orders(spark, dir)),
+     LlmOps.bucketedStateTable(spark, s"graft_lineitem_b_$tag", "l_orderkey", dir, nb)(
+      Tables.lineitem(spark, dir)))
+  }
 
   /** One-time state build (bucketed fact tables), timed by Bench as an
     * explicit pre-stage — see LlmOps.stateBuilders for the rationale. */

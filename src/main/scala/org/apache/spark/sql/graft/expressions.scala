@@ -3,7 +3,7 @@ package org.apache.spark.sql.graft
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, CollationAwareUTF8String}
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, FloatType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -164,11 +164,13 @@ private[graft] object GraftKernels {
 
   /** The kernels' tokenizer, equal to
     * `filter(split(lower(trim(text)), '\\s+'), t -> t != '')`: trim/lower
-    * are the UTF8String calls Spark's trim()/lower() make, and the
-    * precompiled pattern skips the per-row regex compile String.split
-    * would pay. */
+    * are the calls Spark's trim()/lower() make — lower under the default
+    * ICU case mappings, which know letters the JDK's tables predate (e.g.
+    * U+A7C0) — and the precompiled pattern skips the per-row regex compile
+    * String.split would pay. */
   def tokens(u: UTF8String): Array[String] =
-    Whitespace.split(u.trim().toLowerCase.toString, -1).filter(_.nonEmpty)
+    Whitespace.split(CollationAwareUTF8String.toLowerCase(u.trim()).toString, -1)
+      .filter(_.nonEmpty)
 }
 
 /** Per-document shingle-hash kernel: text → array of 32-bit hashes (as

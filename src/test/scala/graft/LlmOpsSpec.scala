@@ -1099,6 +1099,58 @@ class LlmOpsSpec extends SparkSpec {
     } finally pool.shutdown()
   }
 
+  /** A temp dir holding copies of the named sf0.001 tables. */
+  private def copyOf(tables: Seq[String]): java.io.File = {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-regen").toFile
+    for (t <- tables)
+      java.nio.file.Files.copy(
+        java.nio.file.Paths.get(s"/root/testdata/sf0.001/$t.parquet"),
+        java.nio.file.Paths.get(tmp.getAbsolutePath, s"$t.parquet"))
+    tmp
+  }
+
+  test("regenerated lineitem: q35's bucketed facts and q38's memoized graph follow the new data") {
+    import java.nio.file.{Files, Paths}
+    import graft.analytics.Relational
+    val tables = Seq("lineitem", "orders", "documents", "embeddings")
+    val dir = copyOf(tables).getAbsolutePath
+    def results(d: String): Seq[Seq[Seq[Any]]] =
+      Seq(Relational.q35BucketedJoin(spark, d), Relational.q38Pagerank(spark, d))
+        .map(_.collect().map(_.toSeq).toSeq)
+    val before = results(dir)
+    // regenerate only lineitem, as a strict subset of its rows: written
+    // elsewhere, then moved into place
+    val subset = spark.read.parquet(s"$dir/lineitem.parquet").filter("l_orderkey % 3 <> 0")
+    val staged = Files.createTempDirectory("graft-regen-stage").resolve("lineitem.parquet")
+    subset.write.parquet(staged.toString)
+    val fresh = copyOf(tables.filterNot(_ == "lineitem")).getAbsolutePath
+    subset.write.parquet(s"$fresh/lineitem.parquet")
+    Files.delete(Paths.get(dir, "lineitem.parquet"))
+    Files.move(staged, Paths.get(dir, "lineitem.parquet"))
+    val after = results(dir)
+    val expected = results(fresh)
+    assert(expected != before, "the subset must change both results")
+    assert(after(0) == expected(0), "q35 served stale bucketed fact tables")
+    assert(after(1) == expected(1), "q38 served a stale memoized pagerank graph")
+  }
+
+  test("after a regeneration every memo-spine cell of the dir carries the new fingerprint") {
+    val tmp = copyOf(Seq("documents", "embeddings"))
+    val dir = tmp.getAbsolutePath
+    def buildAll(): Unit = LlmOps.stateBuilders(spark, dir).foreach(_._2())
+    buildAll()
+    val cells0 = LlmOps.memoFingerprints(spark, dir)
+    assert(cells0.nonEmpty)
+    tmp.listFiles.foreach(f => assert(f.setLastModified(f.lastModified + 10000)))
+    val fp = LlmOps.dirFingerprint(spark, dir)
+    assert(cells0.values.forall(_ < fp))
+    buildAll()
+    val cells1 = LlmOps.memoFingerprints(spark, dir)
+    assert(cells1.keySet == cells0.keySet)
+    val stale = cells1.filter(_._2 != fp).keys.toSeq.sorted
+    assert(stale.isEmpty, s"cells still on the old fingerprint: ${stale.mkString(", ")}")
+  }
+
   test("quality cut keeps exactly the top half per language, rank-contiguous") {
     val real = "/root/testdata/sf0.001"
     val kept = LlmOps.txtQualityCut(spark, real).collect()
