@@ -3,10 +3,18 @@
 
     python3 scripts/plans_diff.py <dirA> <dirB>
 
-Three counters in a plan differ from run to run of the same code, so each
-file has them replaced before the compare: expression IDs (`#123` -> `#N`),
-exchange IDs (`plan_id=45` -> `plan_id=N`) and RDD IDs (`RDD[678]` ->
-`RDD[N]`).
+Some fields of a plan differ from run to run, or from checkout to checkout,
+of the same code, so each file has them replaced before the compare:
+
+- expression IDs (`#123` -> `#N`), exchange IDs (`plan_id=45` ->
+  `plan_id=N`) and RDD IDs (`RDD[678]` -> `RDD[N]`), which are per-JVM
+  counters;
+- the line number of an RDD call site (`createDataFrame at
+  DedupOps.scala:971` -> `createDataFrame at DedupOps.scala`), which moves
+  whenever lines above the call move;
+- the directory a warehouse table sits in (`file:/work/a/spark-warehouse/t`
+  -> `file:<cwd>/spark-warehouse/t`), which is the working directory of the
+  run that wrote it.
 
 Prints a unified diff for every plan that differs and the name of every
 plan present on one side only. Exits 0 when the dumps are equal, 1 when
@@ -22,13 +30,15 @@ import pathlib
 import re
 import sys
 
-RUN_COUNTERS = [(re.compile(r"#\d+"), "#N"),
-                (re.compile(r"plan_id=\d+"), "plan_id=N"),
-                (re.compile(r"RDD\[\d+\]"), "RDD[N]")]
+RUN_FIELDS = [(re.compile(r"#\d+"), "#N"),
+              (re.compile(r"plan_id=\d+"), "plan_id=N"),
+              (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+              (re.compile(r"( at \w+\.scala):\d+"), r"\1"),
+              (re.compile(r"/[^\s,\[\]]*/spark-warehouse\b"), "<cwd>/spark-warehouse")]
 
 
 def normalized(text):
-    for pattern, replacement in RUN_COUNTERS:
+    for pattern, replacement in RUN_FIELDS:
         text = pattern.sub(replacement, text)
     return text
 

@@ -15,12 +15,21 @@ import org.apache.spark.sql.functions.udf
   * in `__tests__/data/freetrade.json` / `bullionvault.json`.
   *
   * Java's `Double.toString` disagrees (`10.0` instead of `10`, different
-  * scientific-notation thresholds), so we compute the shortest round-trip
-  * representation explicitly: try 1..17 significant digits via correctly-rounded
-  * `%.{p}e` formatting and take the first that parses back to the same double —
-  * exactly the ECMA-262 `Number::toString` digit-selection rule.
+  * scientific-notation thresholds), so we select the digits explicitly, by
+  * the ECMA-262 `Number::toString` rule: the fewest significant digits that
+  * parse back to the same double. The candidates come from one digit string,
+  * the round-tripping digits of `Double.toString`: for p = 1, 2, … they are
+  * rounded half-up to p digits, and the first that converts back to the
+  * value (`BigDecimal.doubleValue` rounds correctly, like
+  * `Double.parseDouble`) is rendered. That is the digit string and the
+  * rounding `Formatter`'s `%.{p-1}e` applies, so the result equals the search
+  * over `%.{p-1}e` renderings (kept as the test reference
+  * `graft.expr.JsNumberReference`) without formatting a string per try.
   */
 object JsNumber {
+
+  /** Half-up rounding to p significant digits, indexed by p. */
+  private val halfUp = Array.tabulate(18)(new java.math.MathContext(_, java.math.RoundingMode.HALF_UP))
 
   /** Shortest-round-trip JS rendering of a double. */
   def format(d: Double): String = {
@@ -30,19 +39,21 @@ object JsNumber {
     if (d == 0.0) return "0" // JS renders both 0 and -0 as "0"
     val neg = d < 0
     val a = math.abs(d)
-    // shortest significant-digit string s.t. parseDouble round-trips
-    var digits: String = null
-    var exp = 0
+    // Double.toString's digits always round-trip; keep the shortest half-up
+    // rounding of them that does too
+    val all = new java.math.BigDecimal(java.lang.Double.toString(a))
     var p = 1
-    while (digits == null && p <= 17) {
-      val s = String.format(java.util.Locale.ROOT, "%." + (p - 1) + "e", Double.box(a))
-      if (java.lang.Double.parseDouble(s) == a) {
-        val i = s.indexOf('e')
-        digits = s.substring(0, i).replace(".", "")
-        exp = Integer.parseInt(s.substring(i + 1))
-      }
-      p += 1
-    }
+    var r = all.round(halfUp(p))
+    while (r.doubleValue != a) { p += 1; r = all.round(halfUp(p)) }
+    val digits = r.unscaledValue.toString
+    val exp = r.precision - r.scale - 1
+    render(neg, digits, exp)
+  }
+
+  /** JS layout of significant `digits` whose first digit has decimal
+    * exponent `exp`: fixed notation for 1e-6 <= |x| < 1e21, else exponent
+    * form. */
+  private[expr] def render(neg: Boolean, digits: String, exp: Int): String = {
     val out =
       if (exp >= 21) expForm(digits, exp)
       else if (exp >= 0) {

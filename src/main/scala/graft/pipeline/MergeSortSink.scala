@@ -15,8 +15,14 @@ import graft.expr.Parse.failUnless
   *  - O1 sort parses token[1] of each line as D/M/YYYY and fails fast on any
   *    missing/unparsable date (`index.js:12-36`). JS `Array.sort` is stable,
   *    so same-date lines keep insertion order (existing-sink lines before new
-  *    lines, new lines in parser emit order) — Spark's sort is not stable, so
-  *    we carry an explicit sequence as the secondary sort key.
+  *    lines, each in file order and then line order) — Spark's sort is not
+  *    stable, so `merge` carries that order as an explicit secondary key.
+  *
+  * File order has to be restored in the plan: Spark packs the files of a
+  * read into partitions largest first, so a sink directory's part files, or
+  * an email folder's emails, come back in size order. The reference reads
+  * one `data.txt` and lists the email folder in name order (`readdirSync`);
+  * a range-sorted sink's part-file names are its sort order.
   *
   * Scale note: the global sort is a range-partitioned shuffle — fine at any
   * scale. The single-file `data.txt` write is inherently serial and exists
@@ -34,16 +40,17 @@ object MergeSortSink {
     else spark.emptyDataset[String]
   }
 
-  /** Attach the stability sequence: existing lines first (in file order), then
-    * fresh lines (in parser emit order) — reproducing `index.js:115`'s
-    * concatenation order under a non-stable distributed sort. */
+  /** Attach the stability key `seq` = (src, file, row): `src` 0 for existing
+    * lines and 1 for fresh ones (`index.js:115`'s concatenation order), then
+    * the input file name, then `monotonically_increasing_id` for the row
+    * order within a file. All three are computed in the plan, so merging
+    * runs no Spark job; a source with no input file keys on row order
+    * alone. */
   def merge(existing: Dataset[String], fresh: Dataset[String]): DataFrame = {
-    val spark = existing.sparkSession
-    import spark.implicits._
-    val nExisting = existing.count()
-    val a = existing.rdd.zipWithIndex().map { case (l, i) => (l, i) }
-    val b = fresh.rdd.zipWithIndex().map { case (l, i) => (l, i + nExisting) }
-    spark.createDataset(a.union(b)).toDF("line", "seq")
+    def keyed(lines: Dataset[String], src: Int): DataFrame =
+      lines.toDF("line").select(col("line"), struct(lit(src).as("src"),
+        input_file_name().as("file"), monotonically_increasing_id().as("row")).as("seq"))
+    keyed(existing, 0).union(keyed(fresh, 1))
   }
 
   /** Chronological sort with fail-fast date validation (`index.js:12-36`).

@@ -54,10 +54,18 @@ object CsvSupport {
   /** One row per `.eml` file in a directory (BullionVault, `index.js:100-102`).
     * The reference concatenates with `\nEOF\n` and re-splits
     * (`bullionvault.js:34`) — an artifact of its single-string API that we
-    * drop: each email is simply one row. */
+    * drop: each email is simply one row.
+    *
+    * The folder is the one root path, and `pathGlobFilter` keeps its direct
+    * `*.eml` files (case-sensitive), so Spark lists it on the driver. A glob
+    * path over the emails would make every email a root path, and past
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) Spark
+    * lists those with a Spark job on every read. Rows come in Spark's
+    * partition order, not name order; the merge restores name order
+    * (`MergeSortSink.merge`). */
   def readEmails(spark: SparkSession, dir: String): Dataset[String] = {
     import spark.implicits._
-    spark.read.option("wholetext", "true").text(dir + "/*.eml").as[String]
+    spark.read.option("wholetext", "true").option("pathGlobFilter", "*.eml").text(dir).as[String]
   }
 
   /** In-memory variant for golden tests: split on the reference's `\nEOF\n`

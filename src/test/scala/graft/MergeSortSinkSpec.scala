@@ -1,7 +1,9 @@
 package graft
 
 import java.nio.file.{Files, Path}
+import graft.model.Transaction
 import graft.pipeline.MergeSortSink
+import graft.sources.BullionVaultSource
 
 /** Merge/sort/sink lifecycle semantics (`index.js:108-122` parity). */
 class MergeSortSinkSpec extends SparkSpec {
@@ -58,5 +60,34 @@ class MergeSortSinkSpec extends SparkSpec {
     val e = intercept[Exception](MergeSortSink.mergeSortWrite(spark, bad, sink.toString))
     assert(e.getMessage.contains("Invalid or missing date"))
     assert(!Files.exists(sink)) // sink untouched on abort
+  }
+
+  test("same-date ties keep part-file order when a smaller part file comes first") {
+    import spark.implicits._
+    // Spark packs a read's files largest first; the key must still put
+    // part-00000's lines before part-00001's
+    val dir = Files.createTempDirectory("graft-parts")
+    val small = Seq("BUY 01/06/2024 A0 1 1 0", "BUY 01/06/2024 A1 1 1 0")
+    val large = Seq("BUY 01/06/2024 B0 1 1 0", "BUY 01/06/2024 B1 1 1 0") ++
+      (1 to 60).map(i => s"SELL 02/06/2024 C$i 1 1 0")
+    Files.write(dir.resolve("part-00000-x-c000.txt"), small.asJava)
+    Files.write(dir.resolve("part-00001-x-c000.txt"), large.asJava)
+    val existing = MergeSortSink.readExisting(spark, dir.toString)
+    val fresh = Seq("BUY 01/06/2024 NEW 1 1 0").toDS()
+    val out = MergeSortSink.sortLines(MergeSortSink.merge(existing, fresh)).collect().toSeq
+    assert(out == small ++ large.take(2) ++ Seq("BUY 01/06/2024 NEW 1 1 0") ++ large.drop(2))
+  }
+
+  test("same-date emails keep folder name order when the first-named email is smaller") {
+    val dir = Files.createTempDirectory("graft-emails")
+    def email(kg: String, padding: String) =
+      s"Security: Fine gold kilos\nSummary: Buy ${kg}kg @ GBP 800.00/kg\n" +
+        s"Deal time: May 20, 2025 at 9:59:30 PM BST\nConsideration: GBP 400.00\n" +
+        s"Commission: GBP 2.00\n$padding"
+    Files.writeString(dir.resolve("a.eml"), email("0.5", ""))
+    Files.writeString(dir.resolve("b.eml"), email("0.25", "x" * 4096))
+    val out = MergeSortSink.mergeSortWrite(spark,
+      Transaction.toLines(BullionVaultSource.readFolder(spark, dir.toString)), tmpFile().toString)
+    assert(out == Seq("BUY 20/05/2025 GOLD 0.5 800 2", "BUY 20/05/2025 GOLD 0.25 800 2"))
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalacheck.{Gen, Prop, Test => ScTest}
+import org.scalacheck.Prop.propBoolean
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graft.PassageHash
@@ -44,6 +45,37 @@ class PropertySpec extends SparkSpec {
       val s = JsNumber.format(d)
       JsNumber.format(s.toDouble) == s
     }, min = 500)
+  }
+
+  /** Doubles where the digit-string search could part from the `%.{p}e`
+    * search: every bit pattern, subnormals, the ranges JS prints in fixed
+    * notation but `Double.toString` in exponent form ([1e7, 1e21) and
+    * (1e-7, 1e-3)), its own fixed range [1e-3, 1e7), a few ulps around the
+    * 1e21, 1e-6 and 1e-7 thresholds, and money-shaped decimals; each with
+    * either sign. */
+  private val digitSearchDouble: Gen[Double] = {
+    def bits(d: Double) = java.lang.Double.doubleToLongBits(d)
+    def between(lo: Double, hi: Double) =
+      Gen.chooseNum(bits(lo), bits(hi) - 1).map(java.lang.Double.longBitsToDouble)
+    val magnitude = Gen.oneOf(
+      Gen.chooseNum(0L, 0x7fefffffffffffffL).map(java.lang.Double.longBitsToDouble),
+      Gen.chooseNum(1L, 0x000fffffffffffffL).map(java.lang.Double.longBitsToDouble),
+      between(1e7, 1e21),
+      between(1e-7, 1e-3),
+      between(1e-3, 1e7),
+      for { t <- Gen.oneOf(1e21, 1e-6, 1e-7); k <- Gen.chooseNum(-16, 16) }
+        yield java.lang.Double.longBitsToDouble(bits(t) + k),
+      for { units <- Gen.chooseNum(1L, 10000000000L); scale <- Gen.chooseNum(0, 8) }
+        yield units / math.pow(10, scale))
+    for { m <- magnitude; neg <- Gen.oneOf(false, true) } yield if (neg) -m else m
+  }
+
+  test("property: js_num digit-string search renders like the %.{p}e search") {
+    check(Prop.forAll(digitSearchDouble) { d =>
+      val got = JsNumber.format(d)
+      val want = graft.expr.JsNumberReference.format(d)
+      (got == want) :| s"format($d) = $got, reference $want"
+    }, min = 20000)
   }
 
   test("property: URL normalization is idempotent and erases exactly the crawl noise") {
