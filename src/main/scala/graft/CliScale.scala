@@ -49,10 +49,7 @@ object CliScale {
     * freetrade 500k rows (~1% statements, dropped), ii 300k (~1% fee rows,
     * dropped), fidelity 198k (+8-line preamble, ~1% Cash In, dropped),
     * bullionvault 2k emails — ~1M total lines. */
-  private[graft] def genFixturesForTest(dir: String, scale: Double): (Long, Long, Long, Long) =
-    genFixtures(dir, scale)
-
-  private def genFixtures(dir: String, scale: Double): (Long, Long, Long, Long) = {
+  private[graft] def genFixtures(dir: String, scale: Double): (Long, Long, Long, Long) = {
     val d = Paths.get(dir)
     Files.createDirectories(d)
     def n(base: Long) = math.max(1L, (base * scale).toLong)
@@ -204,8 +201,10 @@ object CliScale {
       val nBadFmt = back.filter(!col("value").rlike(lineRe)).count()
       // per-part sortedness + boundary order: parts are range-partitioned
       import scala.jdk.CollectionConverters._
-      val partFiles = Files.list(Paths.get(sinkDir)).iterator().asScala
-        .filter(_.getFileName.toString.startsWith("part-")).toSeq.sortBy(_.toString)
+      val listing = Files.list(Paths.get(sinkDir))
+      val partFiles = try listing.iterator().asScala
+          .filter(_.getFileName.toString.startsWith("part-")).toVector.sortBy(_.toString)
+        finally listing.close()
       def dkey(line: String): String = {
         val d = line.split(" ")(1).split("/")
         d(2) + d(1) + d(0)

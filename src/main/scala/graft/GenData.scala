@@ -166,18 +166,15 @@ object GenData {
     def writeOne(df: DataFrame, name: String): Unit = {
       val tmp = outDir.resolve(s".tmp_$name")
       df.repartition(1).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-      val part = Files.list(tmp).iterator()
-      var moved = false
-      while (part.hasNext && !moved) {
-        val p = part.next()
-        if (p.getFileName.toString.endsWith(".parquet")) {
-          Files.move(p, outDir.resolve(s"$name.parquet"), StandardCopyOption.REPLACE_EXISTING)
-          moved = true
-        }
-      }
       import scala.jdk.CollectionConverters._
-      Files.walk(tmp).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-      require(moved, s"no parquet part produced for $name")
+      val listing = Files.list(tmp)
+      val part = try listing.iterator().asScala.find(_.getFileName.toString.endsWith(".parquet"))
+        finally listing.close()
+      part.foreach(Files.move(_, outDir.resolve(s"$name.parquet"), StandardCopyOption.REPLACE_EXISTING))
+      val walk = Files.walk(tmp)
+      try walk.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
+      finally walk.close()
+      require(part.isDefined, s"no parquet part produced for $name")
     }
 
     def gen[T <: Product : org.apache.spark.sql.Encoder](name: String, rows: Long)(f: Long => T): Future[Unit] =

@@ -1,7 +1,7 @@
 package graft.expr
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.udf
+import org.apache.spark.sql.graft.{ColumnBridge, JsNumberFormat}
 
 /** JavaScript-compatible `Number → String` rendering.
   *
@@ -70,15 +70,9 @@ object JsNumber {
     m + "e" + sign + math.abs(exp)
   }
 
-  private val fmtUdf = udf((d: java.lang.Double) => if (d == null) null else format(d))
-
   /** Column form: render a DoubleType column JS-style as StringType, via the
     * codegen'd Catalyst expression
-    * [[org.apache.spark.sql.graft.JsNumberFormat]] (falls back to a plain
-    * Scala UDF if the classic Column bridge is unavailable, e.g. under a
-    * Connect client). */
+    * [[org.apache.spark.sql.graft.JsNumberFormat]]. */
   def jsNum(c: Column): Column =
-    try org.apache.spark.sql.graft.ColumnBridge.column(
-      org.apache.spark.sql.graft.JsNumberFormat(org.apache.spark.sql.graft.ColumnBridge.expression(c)))
-    catch { case _: LinkageError => fmtUdf(c) }
+    ColumnBridge.column(JsNumberFormat(ColumnBridge.expression(c)))
 }

@@ -18,11 +18,13 @@ import graft.expr.Parse.failUnless
   *    lines, each in file order and then line order) — Spark's sort is not
   *    stable, so `merge` carries that order as an explicit secondary key.
   *
-  * File order has to be restored in the plan: Spark packs the files of a
-  * read into partitions largest first, so a sink directory's part files, or
-  * an email folder's emails, come back in size order. The reference reads
-  * one `data.txt` and lists the email folder in name order (`readdirSync`);
-  * a range-sorted sink's part-file names are its sort order.
+  * File order matters only for a sink directory's part files, and it has
+  * to be restored in the plan: Spark packs the files of a read into
+  * partitions largest first, so the parts come back in size order, while a
+  * range-sorted sink's part-file names are its sort order. The reference
+  * reads one `data.txt`. Fresh lines come from one file or from rows
+  * already in order (an email folder is read on the Spark driver in the
+  * reference's `readdirSync` order, `CsvSupport.readEmails`).
   *
   * Scale note: the global sort is a range-partitioned shuffle — fine at any
   * scale. The single-file `data.txt` write is inherently serial and exists
@@ -44,8 +46,8 @@ object MergeSortSink {
     * lines and 1 for fresh ones (`index.js:115`'s concatenation order), then
     * the input file name, then `monotonically_increasing_id` for the row
     * order within a file. All three are computed in the plan, so merging
-    * runs no Spark job; a source with no input file keys on row order
-    * alone. */
+    * runs no Spark job; a source with no input file (the email folder's
+    * driver-side rows) keys on row order alone. */
   def merge(existing: Dataset[String], fresh: Dataset[String]): DataFrame = {
     def keyed(lines: Dataset[String], src: Int): DataFrame =
       lines.toDF("line").select(col("line"), struct(lit(src).as("src"),

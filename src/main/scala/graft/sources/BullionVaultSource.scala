@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.expr.Parse._
 
@@ -29,9 +29,6 @@ object BullionVaultSource {
 
   def readFolder(spark: SparkSession, dir: String): DataFrame =
     normalize(CsvSupport.readEmails(spark, dir).toDF("email"))
-
-  def fromContent(spark: SparkSession, content: String): DataFrame =
-    normalize(CsvSupport.parseEmails(spark, content).toDF("email"))
 
   /** `raw` must have a string column `email` (one row per email). */
   def normalize(raw: DataFrame): DataFrame = {

@@ -1,5 +1,11 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+import java.util.Arrays
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -21,27 +27,11 @@ object CsvSupport {
   def readHeaderCsv(spark: SparkSession, path: String): DataFrame =
     reader(spark).option("header", "true").csv(path)
 
-  /** Header-keyed read from in-memory content (golden tests; mirrors the
-    * reference's whole-string `parseToFormat` API). */
-  def parseHeaderCsv(spark: SparkSession, content: String): DataFrame = {
-    import spark.implicits._
-    // strip UTF-8 BOM and zero-width characters the ii parser sanitizes
-    // (`ii.js:34`, `bom: true` at `ii.js:42`)
-    val clean = content.replaceAll("^[﻿​‎‏]+", "")
-    reader(spark).option("header", "true").csv(spark.createDataset(clean.split("\n", -1).toIndexedSeq))
-  }
-
   /** Fixed-schema read (Fidelity): explicit column list, no header row
     * consumed (`fidelity.js:33-41`). `skipLines` physical lines are dropped
     * (csv-parse `from_line`); the repeated in-data header row is left to the
     * downstream type-whitelist filter, exactly as in the reference
     * (`fidelity.js:46`). */
-  def parseFixedCsv(spark: SparkSession, content: String, schema: StructType, skipLines: Int): DataFrame = {
-    import spark.implicits._
-    val lines = content.split("\n", -1).drop(skipLines).toIndexedSeq
-    reader(spark).schema(schema).option("header", "false").csv(spark.createDataset(lines))
-  }
-
   def readFixedCsv(spark: SparkSession, path: String, schema: StructType, skipLines: Int): DataFrame = {
     import spark.implicits._
     // skip the physical preamble without a header-based reader: index lines
@@ -56,22 +46,21 @@ object CsvSupport {
     * (`bullionvault.js:34`) — an artifact of its single-string API that we
     * drop: each email is simply one row.
     *
-    * The folder is the one root path, and `pathGlobFilter` keeps its direct
-    * `*.eml` files (case-sensitive), so Spark lists it on the driver. A glob
-    * path over the emails would make every email a root path, and past
-    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) Spark
-    * lists those with a Spark job on every read. Rows come in Spark's
-    * partition order, not name order; the merge restores name order
+    * The folder is read on the Spark driver, with no job: its direct regular
+    * files named `*.eml` (case-sensitive; subfolders are not entered) in the
+    * order of their unsigned UTF-8 name bytes, which is the order libuv's
+    * scandir gives the reference's `readdirSync`. Each file is decoded as
+    * UTF-8 with malformed bytes replaced by U+FFFD, as Node and Spark's
+    * text reader do. The rows keep that order through the merge
     * (`MergeSortSink.merge`). */
   def readEmails(spark: SparkSession, dir: String): Dataset[String] = {
     import spark.implicits._
-    spark.read.option("wholetext", "true").option("pathGlobFilter", "*.eml").text(dir).as[String]
-  }
-
-  /** In-memory variant for golden tests: split on the reference's `\nEOF\n`
-    * delimiter (`bullionvault.js:34`). */
-  def parseEmails(spark: SparkSession, content: String): Dataset[String] = {
-    import spark.implicits._
-    spark.createDataset(content.split("\nEOF\n", -1).toIndexedSeq)
+    val listing = Files.list(Paths.get(dir))
+    val files = try listing.iterator().asScala
+        .filter(p => p.getFileName.toString.endsWith(".eml") && Files.isRegularFile(p)).toVector
+      finally listing.close()
+    val byName = Ordering.fromLessThan[Array[Byte]](Arrays.compareUnsigned(_, _) < 0)
+    val sorted = files.sortBy(_.getFileName.toString.getBytes(UTF_8))(byName)
+    spark.createDataset(sorted.map(p => new String(Files.readAllBytes(p), UTF_8)))
   }
 }

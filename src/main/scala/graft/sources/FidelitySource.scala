@@ -39,9 +39,6 @@ object FidelitySource {
   def readFile(spark: SparkSession, path: String): DataFrame =
     normalize(CsvSupport.readFixedCsv(spark, path, schema, PreambleLines))
 
-  def fromContent(spark: SparkSession, content: String): DataFrame =
-    normalize(CsvSupport.parseFixedCsv(spark, content, schema, PreambleLines))
-
   def normalize(raw: DataFrame): DataFrame = {
     val filtered = raw.filter(lower(col("Transaction type")).isin(supportedTypes: _*))
 

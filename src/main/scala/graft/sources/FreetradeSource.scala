@@ -26,9 +26,6 @@ object FreetradeSource {
   def readFile(spark: SparkSession, path: String): DataFrame =
     normalize(CsvSupport.readHeaderCsv(spark, path))
 
-  def fromContent(spark: SparkSession, content: String): DataFrame =
-    normalize(CsvSupport.parseHeaderCsv(spark, content))
-
   def normalize(raw: DataFrame): DataFrame = {
     val filtered = raw.filter(
       lower(col("Type")) === "order" && lower(col("Buy / Sell")).isin("buy", "sell"))

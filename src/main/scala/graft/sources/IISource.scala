@@ -24,11 +24,16 @@ import graft.expr.Parse._
   */
 object IISource {
 
-  def readFile(spark: SparkSession, path: String): DataFrame =
-    normalize(CsvSupport.readHeaderCsv(spark, path))
-
-  def fromContent(spark: SparkSession, content: String): DataFrame =
-    normalize(CsvSupport.parseHeaderCsv(spark, content))
+  /** The reference strips a BOM and the zero-width marks U+200B, U+200E and
+    * U+200F from the start of the export (`ii.js:34`). Those can only land in
+    * the first header name, so that column is renamed; Hadoop's line reader
+    * has already dropped a UTF-8 BOM. */
+  def readFile(spark: SparkSession, path: String): DataFrame = {
+    val raw = CsvSupport.readHeaderCsv(spark, path)
+    val first = raw.columns.head
+    val clean = first.replaceAll("^[\\x{FEFF}\\x{200B}\\x{200E}\\x{200F}]+", "")
+    normalize(raw.withColumnRenamed(first, clean))
+  }
 
   def normalize(raw: DataFrame): DataFrame = {
     val filtered = raw.filter(jsNumber(col("Quantity")).isNotNull)

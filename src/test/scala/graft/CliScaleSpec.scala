@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.model.Transaction
@@ -17,9 +19,8 @@ import graft.sources._
 class CliScaleSpec extends SparkSpec {
 
   test("four-broker merge lifecycle through the distributed sink round-trips sorted, formatted lines") {
-    import spark.implicits._
     val dir = Files.createTempDirectory("graft-cli-spec").toString
-    val (kFt, kIi, kFid, kBv) = CliScale.genFixturesForTest(dir, 0.002)
+    val (kFt, kIi, kFid, kBv) = CliScale.genFixtures(dir, 0.002)
     val expected = kFt + kIi + kFid + kBv
 
     val rounds = Seq(
@@ -28,18 +29,15 @@ class CliScaleSpec extends SparkSpec {
       Transaction.toLines(FidelitySource.readFile(spark, s"$dir/fidelity.csv")),
       Transaction.toLines(BullionVaultSource.readFolder(spark, s"$dir/emails")))
 
-    var sinkDir: Option[String] = None
+    // the first round reads back a sink that does not exist yet (empty)
+    var sinkDir = s"$dir/empty"
     rounds.zipWithIndex.foreach { case (fresh, i) =>
-      val existing = sinkDir match {
-        case Some(d) => spark.read.textFile(d).map(_.trim).filter(_.nonEmpty)
-        case None => spark.emptyDataset[String]
-      }
       val out = s"$dir/sink_$i"
-      MergeSortSink.writeSorted(MergeSortSink.merge(existing, fresh), out)
-      sinkDir = Some(out)
+      MergeSortSink.writeSorted(MergeSortSink.merge(MergeSortSink.readExisting(spark, sinkDir), fresh), out)
+      sinkDir = out
     }
 
-    val back = spark.read.textFile(sinkDir.get)
+    val back = spark.read.textFile(sinkDir)
     assert(back.count() === expected)
     val lineRe = "^(BUY|SELL) \\d{2}/\\d{2}/\\d{4} \\S+ -?\\d+(\\.\\d+)?([eE][+-]?\\d+)? \\d+(\\.\\d+)?([eE][+-]?\\d+)? \\d+(\\.\\d+)?([eE][+-]?\\d+)?$"
     assert(back.filter(!col("value").rlike(lineRe)).count() === 0L)
@@ -50,12 +48,10 @@ class CliScaleSpec extends SparkSpec {
       val d = l.split(" ")(1).split("/"); d(2) + d(1) + d(0)
     }
     // re-read in part order for the order check
-    val parts = Files.list(java.nio.file.Paths.get(sinkDir.get)).iterator()
-    var ordered = Vector.empty[String]
-    while (parts.hasNext) {
-      val p = parts.next()
-      if (p.getFileName.toString.startsWith("part-")) ordered :+= p.toString
-    }
+    val listing = Files.list(java.nio.file.Paths.get(sinkDir))
+    val ordered = try listing.iterator().asScala
+        .filter(_.getFileName.toString.startsWith("part-")).map(_.toString).toVector
+      finally listing.close()
     val seq = ordered.sorted.flatMap(p =>
       Files.readAllLines(java.nio.file.Paths.get(p)).toArray(Array.empty[String]))
       .map { l => val d = l.split(" ")(1).split("/"); d(2) + d(1) + d(0) }

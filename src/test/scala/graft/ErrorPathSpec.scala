@@ -10,6 +10,12 @@ class ErrorPathSpec extends SparkSpec {
   private def run(df: org.apache.spark.sql.DataFrame): Seq[String] =
     Transaction.toLines(df).collect().toSeq
 
+  // each case's input goes through the read the CLI runs on it
+  private def freetrade(content: String) = FreetradeSource.readFile(spark, BrokerInputs.file(content))
+  private def ii(content: String) = IISource.readFile(spark, BrokerInputs.file(content))
+  private def fidelity(content: String) = FidelitySource.readFile(spark, BrokerInputs.file(content))
+  private def bullion(email: String) = BullionVaultSource.readFolder(spark, BrokerInputs.emailFolder(email))
+
   private val ftHeader =
     "Title,Type,Timestamp,Account Currency,Total Amount,Buy / Sell,Ticker,ISIN," +
       "Price per Share in Account Currency,Stamp Duty,Quantity," +
@@ -27,47 +33,47 @@ class ErrorPathSpec extends SparkSpec {
   }
 
   test("freetrade: bad timestamp aborts") {
-    expectFail(run(FreetradeSource.fromContent(spark, ftHeader + "\n" + ftRow(ts = "garbage"))),
+    expectFail(run(freetrade(ftHeader + "\n" + ftRow(ts = "garbage"))),
       "Invalid or missing Timestamp")
   }
   test("freetrade: missing asset aborts") {
-    expectFail(run(FreetradeSource.fromContent(spark,
+    expectFail(run(freetrade(
       ftHeader + "\n" + "T,ORDER,2025-01-02T03:04:05.000Z,GBP,1,BUY,,,10.5,0.1,2.5," + (12 to 44).map(_ => "").mkString(","))),
       "Missing asset identifier")
   }
   test("freetrade: zero quantity aborts") {
-    expectFail(run(FreetradeSource.fromContent(spark, ftHeader + "\n" + ftRow(qty = "0"))),
+    expectFail(run(freetrade(ftHeader + "\n" + ftRow(qty = "0"))),
       "Invalid Quantity")
   }
   test("freetrade: non-positive price aborts") {
-    expectFail(run(FreetradeSource.fromContent(spark, ftHeader + "\n" + ftRow(price = "-4"))),
+    expectFail(run(freetrade(ftHeader + "\n" + ftRow(price = "-4"))),
       "Invalid Price per Share")
   }
 
   private val iiHeader = "Date,Settlement Date,Symbol,Sedol,Quantity,Price,Description,Reference,Debit,Credit,Running Balance"
 
   test("ii: ambiguous debit/credit aborts") {
-    expectFail(run(IISource.fromContent(spark,
+    expectFail(run(ii(
       iiHeader + "\n\n01/01/2024,02/01/2024,SYM,SDL,5,1.5,x,r,\"£1.00\",\"£2.00\",\"£3.00\"")),
       "Unable to determine BUY/SELL")
   }
   test("ii: missing settlement date aborts") {
-    expectFail(run(IISource.fromContent(spark,
+    expectFail(run(ii(
       iiHeader + "\n\n01/01/2024,,SYM,SDL,5,1.5,x,r,\"£1.00\",n/a,\"£3.00\"")),
       "Missing settlement date")
   }
   test("ii: missing date wins over ambiguous debit/credit (ii.js:62 precedence)") {
-    expectFail(run(IISource.fromContent(spark,
+    expectFail(run(ii(
       iiHeader + "\n\n01/01/2024,,SYM,SDL,5,1.5,x,r,\"£1.00\",\"£2.00\",\"£3.00\"")),
       "Missing settlement date")
   }
   test("ii: missing asset aborts") {
-    expectFail(run(IISource.fromContent(spark,
+    expectFail(run(ii(
       iiHeader + "\n\n01/01/2024,02/01/2024,,,5,1.5,x,r,\"£1.00\",n/a,\"£3.00\"")),
       "Missing asset identifier")
   }
   test("ii: missing price aborts") {
-    expectFail(run(IISource.fromContent(spark,
+    expectFail(run(ii(
       iiHeader + "\n\n01/01/2024,02/01/2024,SYM,SDL,5,,x,r,\"£1.00\",n/a,\"£3.00\"")),
       "Missing Price")
   }
@@ -76,17 +82,17 @@ class ErrorPathSpec extends SparkSpec {
   private def fid(rest: String): String = "\n\n\n\n\n\n\n" + fidHeader + "\n\n" + rest
 
   test("fidelity: zero amount aborts") {
-    expectFail(run(FidelitySource.fromContent(spark,
+    expectFail(run(fidelity(
       fid("1 Jun 2023,2 Jun 2023,Buy,F,W,A,,0,10,1.5,R,Done,"))),
       "Invalid Amount")
   }
   test("fidelity: bad completion date aborts") {
-    expectFail(run(FidelitySource.fromContent(spark,
+    expectFail(run(fidelity(
       fid("1 Jun 2023,nonsense,Buy,F,W,A,,100,10,1.5,R,Done,"))),
       "Invalid Completion date")
   }
   test("fidelity: non-positive price aborts") {
-    expectFail(run(FidelitySource.fromContent(spark,
+    expectFail(run(fidelity(
       fid("1 Jun 2023,2 Jun 2023,Buy,F,W,A,,100,10,0,R,Done,"))),
       "Invalid Price per unit")
   }
@@ -99,33 +105,33 @@ class ErrorPathSpec extends SparkSpec {
     s"Security: $security\nSummary: $summary\nDeal time: $dealTime\nConsideration: $consideration\nCommission: $commission"
 
   test("bullionvault: non-GBP currency aborts") {
-    expectFail(run(BullionVaultSource.fromContent(spark, bvEmail(consideration = "USD 400.00"))),
+    expectFail(run(bullion(bvEmail(consideration = "USD 400.00"))),
       "Unsupported currency 'USD'")
   }
   test("bullionvault: missing commission line aborts") {
     // the reference null-derefs `commissionMatch[1]` (bullionvault.js:54)
-    expectFail(run(BullionVaultSource.fromContent(spark,
+    expectFail(run(bullion(
       "Security: Fine gold kilos\nSummary: Buy 0.5kg @ GBP 800.00/kg\nDeal time: May 20, 2025 at 9:59:30 PM BST\nConsideration: GBP 400.00")),
       "Missing commission line")
   }
   test("bullionvault: missing consideration line aborts") {
     // the reference null-derefs `considerationMatch[1]` (bullionvault.js:52)
-    expectFail(run(BullionVaultSource.fromContent(spark,
+    expectFail(run(bullion(
       "Security: Fine gold kilos\nSummary: Buy 0.5kg @ GBP 800.00/kg\nDeal time: May 20, 2025 at 9:59:30 PM BST\nCommission: GBP 2.00")),
       "Missing consideration line")
   }
   test("bullionvault: commission line without a parsable amount aborts") {
     // the amount group is part of COMMISSION_RE itself, so a numberless line
     // is indistinguishable from a missing one — in the reference too
-    expectFail(run(BullionVaultSource.fromContent(spark, bvEmail(commission = "GBP x"))),
+    expectFail(run(bullion(bvEmail(commission = "GBP x"))),
       "Missing commission line")
   }
   test("bullionvault: undetectable asset aborts") {
-    expectFail(run(BullionVaultSource.fromContent(spark, bvEmail(security = "Fine platinum kilos"))),
+    expectFail(run(bullion(bvEmail(security = "Fine platinum kilos"))),
       "Unable to detect asset type")
   }
   test("bullionvault: unparsable deal time aborts") {
-    expectFail(run(BullionVaultSource.fromContent(spark, bvEmail(dealTime = "sometime last week"))),
+    expectFail(run(bullion(bvEmail(dealTime = "sometime last week"))),
       "Unable to parse deal time")
   }
 

@@ -6,14 +6,15 @@ import graft.sources._
 /** The reference's 15 golden cases (the JSON fixtures under
   * `/root/reference/__tests__/data`),
   * ported verbatim: same input strings, same expected output lines. This is
-  * the parity floor (SURVEY.md §5). */
+  * the parity floor (SURVEY.md §5). Each input is written to a temp file (one
+  * file per email) and read with `readFile` / `readFolder`, as the CLI does. */
 class GoldenParitySpec extends SparkSpec {
 
   private val ftHeader =
     "Title,Type,Timestamp,Account Currency,Total Amount,Buy / Sell,Ticker,ISIN,Price per Share in Account Currency,Stamp Duty,Quantity,Venue,Order ID,Order Type,Instrument Currency,Total Shares Amount,Price per Share,FX Rate,Base FX Rate,FX Fee (BPS),FX Fee Amount,Dividend Ex Date,Dividend Pay Date,Dividend Eligible Quantity,Dividend Amount Per Share,Dividend Gross Distribution Amount,Dividend Net Distribution Amount,Dividend Withheld Tax Percentage,Dividend Withheld Tax Amount,Stock Split Ex Date,Stock Split Pay Date,Stock Split New ISIN,Stock Split Rate of Share Outturn From,Stock Split Rate of Share Outturn To,Stock Split Maintain Holding of Initial ISIN,Stock Split New Share Quantity,Stock Split Rate of Cash Outturn Amount,Stock Split Rate of Cash Outturn Currency,Stock Split Cash Outturn Received Amount,Stock Split Has Fractional Payout,Stock Split Rate of Fractional Payout Amount,Stock Split Rate of Fractional Payout Currency,Stock Split Fractional Payout Cash Received Amount,Stock Split Fractional Payout Cash Received Currency"
 
   private def freetrade(rows: String*): Seq[String] =
-    Transaction.toLines(FreetradeSource.fromContent(spark, (ftHeader +: rows).mkString("\n")))
+    Transaction.toLines(FreetradeSource.readFile(spark, BrokerInputs.file((ftHeader +: rows).mkString("\n"))))
       .collect().toSeq
 
   test("freetrade: BUY parsed correctly") {
@@ -37,7 +38,7 @@ class GoldenParitySpec extends SparkSpec {
   private val iiHeader = "Date,Settlement Date,Symbol,Sedol,Quantity,Price,Description,Reference,Debit,Credit,Running Balance"
 
   private def ii(rows: String*): Seq[String] =
-    Transaction.toLines(IISource.fromContent(spark, (iiHeader +: "" +: rows).mkString("\n")))
+    Transaction.toLines(IISource.readFile(spark, BrokerInputs.file((iiHeader +: "" +: rows).mkString("\n"))))
       .collect().toSeq
 
   test("ii: BUY (debit) parsed correctly") {
@@ -61,7 +62,7 @@ class GoldenParitySpec extends SparkSpec {
   private val fidPreamble = "\n\n\n\n\n\n\n" // 7 blank lines + header = 8 preamble lines
 
   private def fidelity(rest: String): Seq[String] =
-    Transaction.toLines(FidelitySource.fromContent(spark, fidPreamble + fidHeader + rest))
+    Transaction.toLines(FidelitySource.readFile(spark, BrokerInputs.file(fidPreamble + fidHeader + rest)))
       .collect().toSeq
 
   test("fidelity: BUY parsed correctly") {
@@ -89,8 +90,9 @@ class GoldenParitySpec extends SparkSpec {
                       consideration: String, commission: String): String =
     s"Date: Tue, 20 May 2025 21:02:22 +0000\n\nSubject: Dealing advice 10443663\n\n<html>\n\n<body>\n\n<p>\n\n=09Security: $security<br>\n\n=09Summary: $summary\n\n</p>\n\n<p>\n\n=09Deal time: $dealTime\n\n=09Consideration: $consideration\n\n=09Commission: $commission\n\n</p>\n\n</body>\n\n</html>"
 
-  private def bullion(content: String): Seq[String] =
-    Transaction.toLines(BullionVaultSource.fromContent(spark, content)).collect().toSeq
+  private def bullion(emails: String*): Seq[String] =
+    Transaction.toLines(BullionVaultSource.readFolder(spark, BrokerInputs.emailFolder(emails: _*)))
+      .collect().toSeq
 
   test("bullionvault: GOLD BUY parsed correctly") {
     assert(bullion(bvEmail("Fine gold kilos in London vault", "Buy 0.012kg @ GBP 78,990.00/kg",
@@ -123,11 +125,13 @@ class GoldenParitySpec extends SparkSpec {
   }
 
   test("bullionvault: multiple emails concatenated with EOF delimiter") {
-    val two = bvEmail("Fine gold kilos in London vault", "Buy 0.012kg @ GBP 78,990.00/kg",
-      "May 20, 2025 at 9:59:30 PM BST", "GBP 947.88", "GBP 4.74") + "\nEOF\n" +
+    // the reference joins a folder's emails with `\nEOF\n`; here they are
+    // the folder's two files
+    assert(bullion(
+      bvEmail("Fine gold kilos in London vault", "Buy 0.012kg @ GBP 78,990.00/kg",
+        "May 20, 2025 at 9:59:30 PM BST", "GBP 947.88", "GBP 4.74"),
       bvEmail("Fine silver kilos in London vault", "Sell 0.75kg @ GBP 880.00/kg",
-        "Feb 21, 2025 at 9:14:30 AM BST", "GBP 660.00", "GBP 3.30")
-    assert(bullion(two).toSet == Set(
+        "Feb 21, 2025 at 9:14:30 AM BST", "GBP 660.00", "GBP 3.30")).toSet == Set(
       "BUY 20/05/2025 GOLD 0.012 78990 4.74",
       "SELL 21/02/2025 SILVER 0.75 880 3.3"))
   }

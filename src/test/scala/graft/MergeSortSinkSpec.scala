@@ -78,16 +78,27 @@ class MergeSortSinkSpec extends SparkSpec {
     assert(out == small ++ large.take(2) ++ Seq("BUY 01/06/2024 NEW 1 1 0") ++ large.drop(2))
   }
 
+  private def email(kg: String, padding: String = "") =
+    s"Security: Fine gold kilos\nSummary: Buy ${kg}kg @ GBP 800.00/kg\n" +
+      s"Deal time: May 20, 2025 at 9:59:30 PM BST\nConsideration: GBP 400.00\n" +
+      s"Commission: GBP 2.00\n$padding"
+
   test("same-date emails keep folder name order when the first-named email is smaller") {
     val dir = Files.createTempDirectory("graft-emails")
-    def email(kg: String, padding: String) =
-      s"Security: Fine gold kilos\nSummary: Buy ${kg}kg @ GBP 800.00/kg\n" +
-        s"Deal time: May 20, 2025 at 9:59:30 PM BST\nConsideration: GBP 400.00\n" +
-        s"Commission: GBP 2.00\n$padding"
-    Files.writeString(dir.resolve("a.eml"), email("0.5", ""))
+    Files.writeString(dir.resolve("a.eml"), email("0.5"))
     Files.writeString(dir.resolve("b.eml"), email("0.25", "x" * 4096))
     val out = MergeSortSink.mergeSortWrite(spark,
       Transaction.toLines(BullionVaultSource.readFolder(spark, dir.toString)), tmpFile().toString)
     assert(out == Seq("BUY 20/05/2025 GOLD 0.5 800 2", "BUY 20/05/2025 GOLD 0.25 800 2"))
+  }
+
+  test("same-date emails keep the byte order of their names, as readdirSync lists them") {
+    // ' ' (0x20) sorts before '!' (0x21); URL-encoded, "a%20b" sorts after "a!"
+    val dir = Files.createTempDirectory("graft-emails")
+    Files.writeString(dir.resolve("a!.eml"), email("0.2"))
+    Files.writeString(dir.resolve("a b.eml"), email("0.1"))
+    val out = MergeSortSink.mergeSortWrite(spark,
+      Transaction.toLines(BullionVaultSource.readFolder(spark, dir.toString)), tmpFile().toString)
+    assert(out == Seq("BUY 20/05/2025 GOLD 0.1 800 2", "BUY 20/05/2025 GOLD 0.2 800 2"))
   }
 }
