@@ -15,8 +15,9 @@ import graft.sources._
   * (`/root/reference/index.js:48-122` — parse one broker export, merge with
   * the existing sink, chronologically sort, overwrite) driven over a
   * generated ~1M-line corpus mixed across ALL FOUR sources, with the
-  * DISTRIBUTED sink ([[MergeSortSink.writeSorted]]: range-partitioned
-  * global sort, directory-of-parts output, no driver collect) instead of
+  * DISTRIBUTED sink ([[MergeSortSink.writeSorted]]: a range-partitioned
+  * global sort in the first round, then a merge into the previous round's
+  * parts; directory-of-parts output, no driver collect) instead of
   * the single-file CLI-parity path. Each round's sink output is the next
   * round's "existing" side, exactly like re-running the reference CLI per
   * broker. Verifies on read-back:

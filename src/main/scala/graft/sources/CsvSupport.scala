@@ -1,11 +1,14 @@
 package graft.sources
 
+import java.io.{BufferedReader, InputStreamReader}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 import java.util.Arrays
 
 import scala.jdk.CollectionConverters._
+import scala.util.Try
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -23,9 +26,33 @@ object CsvSupport {
       .option("mode", "PERMISSIVE")               // `relax_column_count/quotes`
       .option("multiLine", "false")
 
-  /** Header-keyed read from files (Freetrade / ii). */
-  def readHeaderCsv(spark: SparkSession, path: String): DataFrame =
-    reader(spark).option("header", "true").csv(path)
+  /** Header-keyed read from files (Freetrade / ii). The header is read on
+    * the Spark driver, so the read starts no job: the file's first non-blank
+    * line, less a leading U+FEFF as Hadoop's line reader drops it, gives the
+    * column names through the same reader options. A path that is not a
+    * regular file (a directory, a glob) or holds no non-blank line is read
+    * with Spark's own header inference. */
+  def readHeaderCsv(spark: SparkSession, path: String): DataFrame = {
+    import spark.implicits._
+    val csv = reader(spark).option("header", "true")
+    firstNonBlankLine(spark, path) match {
+      case Some(header) =>
+        csv.schema(reader(spark).option("header", "true").csv(Seq(header).toDS()).schema).csv(path)
+      case None => csv.csv(path)
+    }
+  }
+
+  private def firstNonBlankLine(spark: SparkSession, path: String): Option[String] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!Try(fs.getFileStatus(p).isFile).getOrElse(false)) None
+    else {
+      val in = new BufferedReader(new InputStreamReader(fs.open(p), UTF_8))
+      try (Option(in.readLine()).map(_.stripPrefix("\uFEFF")).iterator ++
+        Iterator.continually(in.readLine()).takeWhile(_ != null)).find(_.trim.nonEmpty)
+      finally in.close()
+    }
+  }
 
   /** Fixed-schema read (Fidelity): explicit column list, no header row
     * consumed (`fidelity.js:33-41`). `skipLines` physical lines are dropped

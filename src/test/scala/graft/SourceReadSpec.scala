@@ -1,7 +1,12 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.ListenerBusProbe
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
 import graft.model.Transaction
-import graft.sources.IISource
+import graft.sources.{CsvSupport, FreetradeSource, IISource}
 
 /** The steps the reference takes on an export's raw text before parsing it,
   * checked through the source's file read. */
@@ -14,5 +19,40 @@ class SourceReadSpec extends SparkSpec {
       val df = IISource.readFile(spark, BrokerInputs.file(prefix + rows))
       assert(Transaction.toLines(df).collect().toSeq == Seq("BUY 04/01/2024 BKV0VZ0 37.91 109.62806 0"))
     }
+  }
+
+  /** Spark jobs started while `body` runs. */
+  private def jobsDuring[A](body: => A): Int = {
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      ListenerBusProbe.drain(spark.sparkContext)
+      jobs.set(0)
+      body
+      ListenerBusProbe.drain(spark.sparkContext)
+      jobs.get
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("freetrade and ii exports are read without a Spark job: the header is read on the driver") {
+    val ft = BrokerInputs.file("\uFEFF\n  \nTitle,Type,Timestamp,Account Currency,Total Amount,Buy / Sell," +
+      "Ticker,ISIN,Price per Share in Account Currency,Stamp Duty,Quantity,FX Fee Amount\n" +
+      "Buy,ORDER,2024-05-01T10:00:00.000Z,GBP,100,BUY,ABC,GB00ABC,10,0.5,10,0\n")
+    val ii = BrokerInputs.file("\uFEFFSettlement Date,Symbol,Sedol,Quantity,Price,Debit,Credit\n" +
+      "04/01/2024,TEST,BKV0VZ0,37.91,109.62806,\"£4,160.00\",n/a")
+    assert(jobsDuring(FreetradeSource.readFile(spark, ft)) == 0, "reading the freetrade export started a job")
+    assert(jobsDuring(IISource.readFile(spark, ii)) == 0, "reading the ii export started a job")
+    assert(Transaction.toLines(FreetradeSource.readFile(spark, ft)).collect().toSeq ==
+      Seq("BUY 01/05/2024 GB00ABC 10 10 0.5"))
+    assert(Transaction.toLines(IISource.readFile(spark, ii)).collect().toSeq ==
+      Seq("BUY 04/01/2024 BKV0VZ0 37.91 109.62806 0"))
+  }
+
+  test("a header read on the driver names duplicate, empty and quoted columns as Spark's inference does") {
+    val path = BrokerInputs.file("a,A,,\"b,c\",a\n1,2,3,4,5\n")
+    assert(CsvSupport.readHeaderCsv(spark, path).columns.toSeq == Seq("a0", "A1", "_c2", "b,c", "a4"))
   }
 }
