@@ -164,7 +164,7 @@ private[analytics] trait DedupOps {
     * verbatim by both engines and every host-keyed query (the census
     * [[ddUrlHosts]], the cap [[ddHostCap]], and their DuckDB oracles), so
     * the host-key definition cannot silently fork across the four sites. */
-  private[graft] lazy val hostOfSql = "split_part(url_norm, '/', 1)"
+  private[analytics] lazy val hostOfSql = "split_part(url_norm, '/', 1)"
 
 
   /** Robots/license OPT-OUT host list — the governance gate a crawl runs
@@ -177,7 +177,7 @@ private[analytics] trait DedupOps {
     * the Spark census, the funnel flags, and the Duck mirrors — in
     * production this is a broadcast policy table keyed by host; at 3
     * constant rows the IN-list IS that broadcast. */
-  private[graft] lazy val optoutHostsSql =
+  private[analytics] lazy val optoutHostsSql =
     "('h2.example.com', 'h5.example.com', 'h8.example.com')"
 
 
@@ -218,8 +218,7 @@ private[analytics] trait DedupOps {
 
 
   /** INCREMENTAL URL-stage dedup — the batch admission contract sitting
-    * between the corpus-wide gate ([[ddUrl]]) and the per-micro-batch
-    * stream gate (`EventStream.urlDedupeAgainstFrontier`): a re-crawl
+    * after the corpus-wide gate ([[ddUrl]]): a re-crawl
     * BATCH arrives and each fetch is admitted iff its NORMALIZED URL is
     * not already on the frontier. The batch is every 4th fetch
     * (doc_id % 4 = 3 — the held-out convention the embedding serve paths
@@ -305,7 +304,7 @@ private[analytics] trait DedupOps {
     * domain" knob of C4-style corpus curation (Raffel et al. 2020 §2.2
     * caps; RefinedWeb §3.1 applies per-domain limits against SEO farms).
     * Small by design: the cap is the point. */
-  private[graft] lazy val HostCap = 16
+  private[analytics] lazy val HostCap = 16
 
 
   /** Per-HOST contribution CAP — keep at most [[HostCap]] fetches per
@@ -528,7 +527,7 @@ private[analytics] trait DedupOps {
     * the takedown flag, membership in the fingerprint state (doc_id <
     * [[IngestOps.IncrementalSplit]], the corpus split every incremental
     * query uses), and the token weight the shard manifest accounts in. */
-  private[graft] def takedownDocFlags(spark: SparkSession, dir: String): DataFrame =
+  private[analytics] def takedownDocFlags(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .withColumn("toks", expr(toksSpark))
       .select(col("doc_id"), expr(takedownSql).as("gone"),
@@ -537,50 +536,12 @@ private[analytics] trait DedupOps {
 
 
   /** The incremental probe's capped band-state frame ((doc_id, band, bh)
-    * rows) — hoisted so the batch takedown census and the streaming twin's
-    * static side ([[takedownDocStateRows]]) count the same physical band
-    * rows. Reads the MEMOIZED [[incrCorpusBands]] (round 21, the r20
+    * rows) — the band_state rows the takedown census and the post-state
+    * parity spec count. Reads the MEMOIZED [[incrCorpusBands]] (round 21, the r20
     * advice): this is by definition the same index table, and the inline
     * rebuild re-paid the band explode + bucket-cap window per call. */
-  private[graft] def takedownBandState(spark: SparkSession, dir: String): DataFrame =
+  private[analytics] def takedownBandState(spark: SparkSession, dir: String): DataFrame =
     incrCorpusBands(spark, dir)
-
-
-  /** STATIC side of the streaming takedown ledger
-    * ([[graft.streaming.EventStream.takedownCensus]]): one row per
-    * physical row of each DOC-keyed takedown state, keyed by the
-    * contributing doc_id — (state_id, state, doc_id, w). Derived from the
-    * SAME [[takedownDocFlags]] projection and capped-band frame the batch
-    * census aggregates, so the streaming ledger and [[ddTakedown]] count
-    * identical physical rows. The url-keyed frontier (all-holders
-    * semantics) is the separate [[takedownFrontierHolders]]. */
-  private[graft] def takedownDocStateRows(spark: SparkSession, dir: String): DataFrame = {
-    val doc = takedownDocFlags(spark, dir)
-      .select(col("doc_id"), expr(
-        """stack(3,
-             0L, 'corpus',         1L,
-             1L, 'fingerprints',   IF(in_fp, 1L, CAST(NULL AS BIGINT)),
-             4L, 'shard_manifest', n_toks) AS (state_id, state, w)"""))
-      .filter(col("w").isNotNull)
-      .select(col("state_id"), col("state"), col("doc_id"), col("w"))
-    val band = takedownBandState(spark, dir)
-      .select(lit(2L).as("state_id"), lit("band_state").as("state"),
-        col("doc_id"), lit(1L).as("w"))
-    doc.unionByName(band)
-  }
-
-
-  /** The frontier's holder graph — (doc_id, url_norm, n_holders), one row
-    * per fetch contributing a frontier URL, the URL's total holder count
-    * precomputed so the streaming side
-    * ([[graft.streaming.EventStream.frontierTakedown]]) can detect "last
-    * holder tombstoned" with one long of per-URL state. Same URL universe
-    * as [[takedownStates]]'s frontier frame (urlNormalized ∘
-    * urlFrontierPredSql). */
-  private[graft] def takedownFrontierHolders(spark: SparkSession, dir: String): DataFrame =
-    urlNormalized(spark, dir).filter(expr(urlFrontierPredSql))
-      .select(col("doc_id"), col("url_norm"))
-      .withColumn("n_holders", count(lit(1)).over(Window.partitionBy(col("url_norm"))))
 
 
   /** The takedown's per-STATE flagged frames — (state_id, state, frame)
@@ -597,7 +558,7 @@ private[analytics] trait DedupOps {
     *    its doc; content shared with a surviving doc keeps that doc's own
     *    row, so re-ingest admission is unaffected.
     *  - band_state: the incremental probe's capped LSH band rows
-    *    ([[nearDupCorpusState]]'s (doc_id, band, bh) layout) — rows of
+    *    ([[incrCorpusBands]]' (doc_id, band, bh) layout) — rows of
     *    taken-down docs leave; freed bucket slots refill at the next
     *    state rebuild, not here (the sim family's compact-vs-delete
     *    split).
@@ -682,9 +643,9 @@ private[analytics] trait DedupOps {
     * v2 lacks the %7=5 docs (removed since v1), and the %7=3 docs
     * changed content between the two snapshots (the in-query plant, like
     * the PII contact block — the corpus itself has no second version). */
-  private[graft] lazy val snapV1Pred = "doc_id % 7 <> 2"
-  private[graft] lazy val snapV2Pred = "doc_id % 7 <> 5"
-  private[graft] lazy val snapRev2Sql = "CASE WHEN doc_id % 7 = 3 THEN text || ' rev2' ELSE text END"
+  private[analytics] lazy val snapV1Pred = "doc_id % 7 <> 2"
+  private[analytics] lazy val snapV2Pred = "doc_id % 7 <> 5"
+  private[analytics] lazy val snapRev2Sql = "CASE WHEN doc_id % 7 = 3 THEN text || ' rev2' ELSE text END"
 
 
   /** CORPUS SNAPSHOT DIFF — the readout a periodic re-crawl publishes:
@@ -1565,6 +1526,20 @@ private[analytics] trait DedupOps {
   }
 
 
+  /** The CORPUS-side capped band index of the incremental probe —
+    * memoized + prewarmed like the sibling band tables (round 20): this
+    * IS the persistent LSH index a continuous-ingestion pipeline holds
+    * between batches (the probe joins batch bands to corpus bands only),
+    * and deriving it inline paid the band explode + bucket-cap window on
+    * every probe. */
+  private[analytics] def incrCorpusBands(spark: SparkSession, dir: String): DataFrame =
+    memoSig(spark, dir, "incr_corpus_bands") {
+      cappedWideBands(
+        minhashWideSig(spark, dir).filter(col("doc_id") < IncrementalSplit),
+        IncrementalProbeCap)
+    }
+
+
   /** Incremental NEAR-dup dedup — [[ddIncremental]]'s contract at MinHash
     * strength: an arriving batch (doc_id ≥ 250, the fixed split) is probed
     * against the EXISTING corpus (doc_id < 250) through the production-
@@ -1585,21 +1560,6 @@ private[analytics] trait DedupOps {
     * with a corpus match carries (match_id, est_sim) and drops at ≥ 0.5;
     * a sub-3-token doc has no shingles, cannot near-dup, and keeps with
     * a null match like any other unmatched doc. */
-  /** The CORPUS-side capped band index of the incremental probe —
-    * memoized + prewarmed like the sibling band tables (round 20): this
-    * IS the persistent LSH index a continuous-ingestion pipeline holds
-    * between batches (the streaming twin probes exactly it —
-    * [[graft.streaming.EventStream.nearDedupeAgainstCorpus]]'s
-    * "corpus-bands-only" contract), and deriving it inline paid the
-    * band explode + bucket-cap window on every probe. */
-  private[analytics] def incrCorpusBands(spark: SparkSession, dir: String): DataFrame =
-    memoSig(spark, dir, "incr_corpus_bands") {
-      cappedWideBands(
-        minhashWideSig(spark, dir).filter(col("doc_id") < IncrementalSplit),
-        IncrementalProbeCap)
-    }
-
-
   def ddIncrementalNear(spark: SparkSession, dir: String): DataFrame = {
     val sig = minhashWideSig(spark, dir)
     val half = IncrementalSplit
@@ -1785,70 +1745,6 @@ private[analytics] trait DedupOps {
           .as("n_buckets_capped"),
         sum(greatest(col("cnt") - IncrementalProbeCap, lit(0L)))
           .as("n_rows_capped_out"))
-
-
-  /** Row-LOCAL wide signature, for the STREAMING probe: the same 64
-    * min-slices as [[buildMinhashWideSig]] — same "w<d>:" seeded digests,
-    * same 8-hex slicing, min over the same shingle set — computed as
-    * array expressions within each document's own row (a streaming select
-    * cannot run the table aggregation; it doesn't need to, since all of a
-    * doc's shingles live in its row). Appends a `sig` array<string>(64)
-    * column; a doc that cannot shingle gets all-null slices, which
-    * null out its band hashes downstream — the per-row form of "no sig
-    * row, no bands". Each of the 16 digests is computed once per shingle
-    * and sliced four ways (codegen subexpression elimination keeps the
-    * md5 count identical to the batch build). */
-  private[graft] def withWideSigPerRow(df: DataFrame): DataFrame = {
-    val withSh = df.withColumn("toks", expr(toksSpark))
-      .withColumn("sh_", expr(shinglesSpark))
-    val withH = (0 until MinhashWidePerms / 4).foldLeft(withSh) { (d2, dg) =>
-      d2.withColumn(s"h$dg", expr(s"transform(sh_, s -> md5(concat('w$dg:', s)))"))
-    }
-    val sigCols = (0 until MinhashWidePerms).map { j =>
-      expr(s"array_min(transform(h${j / 4}, x -> substr(x, ${1 + 8 * (j % 4)}, 8)))")
-    }
-    withH.withColumn("sig", array(sigCols: _*))
-      .drop(((0 until MinhashWidePerms / 4).map(d => s"h$d") ++ Seq("toks", "sh_")): _*)
-  }
-
-
-  /** Row-local [[MinhashWideBands]]-band stack over a `sig` array column:
-    * array of (band, bh) structs, bh = md5 of the band's four slices —
-    * exactly [[wideBands]]'s hash over the same geometry constants, so
-    * the streaming probe and the batch index agree band for band. */
-  private[graft] def wideBandsPerRow(sig: Column): Column =
-    array((0 until MinhashWideBands).map { bd =>
-      struct(lit(bd).as("band"),
-        md5(concat((0 until 4).map(r => sig.getItem(4 * bd + r)): _*)).as("bh"))
-    }: _*)
-
-
-  /** The STATIC corpus state a streaming near-dup probe joins against —
-    * (ib, band, bh, mh0..mh63): the capped corpus band table
-    * ([[IncrementalProbeCap]], same as the batch probe) carrying the
-    * corpus signature slices, built from the ONE memoized wide-signature
-    * table. Re-read per micro-batch by the stream-static join (the same
-    * refresh-between-restarts contract as the fingerprint state in
-    * [[graft.streaming.EventStream.dedupeAgainstCorpus]]); at production
-    * scale this is the persisted LSH index table. */
-  def nearDupCorpusState(spark: SparkSession, dir: String): DataFrame = {
-    val sig = minhashWideSig(spark, dir).filter(col("doc_id") < IncrementalSplit)
-    // the capped band table IS the memoized incremental index
-    // ([[incrCorpusBands]]) — read it instead of re-deriving the band
-    // explode + bucket-cap window inline (round 21, the r20 advice)
-    incrCorpusBands(spark, dir).toDF("ib", "band", "bh")
-      .join(sig.toDF(("ib" +: (0 until MinhashWidePerms).map(j => s"mh$j")): _*), "ib")
-  }
-
-
-  /** est_sim of a streaming candidate row: the row-local `sig` array
-    * against a joined corpus signature's mh columns — [[wideEstSim]]'s
-    * arithmetic (count of matching slices, cast, one division) against
-    * the per-row layout. */
-  private[graft] def wideEstSimPerRow(sig: Column): Column =
-    (0 until MinhashWidePerms)
-      .map(j => when(sig.getItem(j) === col(s"mh$j"), 1).otherwise(0))
-      .reduce(_ + _).cast("double") / MinhashWidePerms.toDouble
 
 
   /** Matching-slice COUNT for a candidate joined to the signature as

@@ -116,12 +116,8 @@ private[analytics] trait IngestOps {
     * admit. (Implied conservation: the four counts sum to the corpus.)
     * Per-row work over one scan + a 4-row aggregate — an ingestion-health
     * dashboard query that stays free at any scale. */
-  /** The deterministic planted-damage JSONL feed behind
-    * [[ingestQuarantine]], exposed so the STREAMING quarantine twin's
-    * spec can replay the identical lines through
-    * [[graft.streaming.EventStream.quarantineCensus]]: one `value` column
-    * of raw lines, damaged by the doc_id % 10 rule above. */
-  private[graft] def plantedDamageLines(spark: SparkSession, dir: String): DataFrame = {
+  def ingestQuarantine(spark: SparkSession, dir: String): DataFrame = {
+    import graft.sources.JsonlDocs
     val full = "to_json(named_struct('doc_id', doc_id, 'text', text, 'lang', lang, 'source', source))"
     val noId = "to_json(named_struct('text', text, 'lang', lang, 'source', source))"
     val noText = "to_json(named_struct('doc_id', doc_id, 'lang', lang, 'source', source))"
@@ -134,12 +130,6 @@ private[analytics] trait IngestOps {
           .when(col("doc_id") % 10 === 5, expr(noId))
           .when(col("doc_id") % 10 === 7, expr(noText))
           .otherwise(expr(full)).as("value"))
-  }
-
-
-  def ingestQuarantine(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.JsonlDocs
-    plantedDamageLines(spark, dir)
       .withColumn("j", from_json(col("value"), JsonlDocs.schema))
       .select(
         when(JsonlDocs.okCol(col("j")), lit("ok"))
@@ -169,19 +159,16 @@ private[analytics] trait IngestOps {
     * (Schuhmann et al. 2021 used 0.28 for ViT-B/32 scores); explicit
     * DOUBLE so neither engine parses a DECIMAL. Shared verbatim by the
     * Spark filter and the Duck mirror. */
-  private[graft] lazy val ClipThresholdSql = "CAST(0.28 AS DOUBLE)"
+  private[analytics] lazy val ClipThresholdSql = "CAST(0.28 AS DOUBLE)"
 
 
   /** Shared pair-scoring kernel of the CLIP gate: a (doc_id, source)
     * frame joins its own embedding, derives the pair's image id (docs
     * (2k, 2k+1) share image 2k), joins the image embedding and scores
-    * the cross-modal cosine with the codegen'd dot kernel — used
-    * verbatim by the batch census ([[mmClipFilter]]) and the streaming
-    * admission twin ([[graft.streaming.EventStream.clipAdmission]]), so
-    * the two engines' pair derivation and arithmetic cannot drift. Both
-    * joins are id-equi (stream-static on the streaming side); fanout ≤ 2
-    * per image, no skew. */
-  private[graft] def clipScored(txt: DataFrame, e: DataFrame): DataFrame = {
+    * the cross-modal cosine with the codegen'd dot kernel — the pair
+    * derivation behind [[mmClipFilter]]. Both joins are id-equi; fanout
+    * ≤ 2 per image, no skew. */
+  private[analytics] def clipScored(txt: DataFrame, e: DataFrame): DataFrame = {
     val t = txt
       .join(e.select(col("vec_id"), col("embedding").as("temb")),
         col("doc_id") === col("vec_id"))

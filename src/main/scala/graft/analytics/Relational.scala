@@ -377,8 +377,7 @@ object Relational {
       .orderBy(col("l_returnflag"))
 
   /** Tumbling-window aggregation over the events table with the built-in
-    * `window()` generator (epoch-aligned 5-minute buckets) — the batch twin
-    * of the Structured Streaming windowedCounts in [[graft.streaming.EventStream]]. */
+    * `window()` generator (epoch-aligned 5-minute buckets). */
   def q21Tumbling(spark: SparkSession, dir: String): DataFrame =
     Tables.events(spark, dir)
       .groupBy(window(expr("timestamp_micros(ts div 1000)"), "5 minutes"), col("event_type"))

@@ -235,7 +235,7 @@ private[analytics] trait SimOps {
 
   /** The k lowest-id corpus vectors as serve-index centroids —
     * deterministic (TakeOrdered, no global sort materialized). */
-  private[graft] def serveCentroids(spark: SparkSession, dir: String): DataFrame =
+  private[analytics] def serveCentroids(spark: SparkSession, dir: String): DataFrame =
     Tables.embeddings(spark, dir)
       .filter(expr("vec_id % 4 <> 3"))
       .withColumn("nrm", dotF(col("embedding"), col("embedding")))
@@ -582,15 +582,11 @@ private[analytics] trait SimOps {
 
 
   /** The FLAT half of [[kmCentroids]] — per-(cell, pos) quantized BIGINT
-    * component sums over (cell, embedding) rows. Factored out (and
-    * private[graft]) because these sums are exactly associative-
-    * commutative integer adds: the streaming retrain-exec twin
-    * ([[graft.streaming.EventStream.retrainLloydSums]]) runs THIS
-    * projection as its one complete-mode aggregation, and
-    * [[simIvfRetrainExecFromSums]] recombines drained insert sums with
-    * the corpus sums by plain addition — bit-equal to summing the union
-    * in one pass, which is the whole point of the integer quantization. */
-  private[graft] def lloydPosSums(assigned: DataFrame): DataFrame =
+    * component sums over (cell, embedding) rows. Integer sums are exactly
+    * associative-commutative, so the sum over a union of member sets is
+    * bit-equal however Spark partitions it — the whole point of the
+    * integer quantization. */
+  private[analytics] def lloydPosSums(assigned: DataFrame): DataFrame =
     assigned
       .select(col("cell"), posexplode(col("embedding")).as(Seq("pos", "x")))
       .groupBy(col("cell"), col("pos"))
@@ -599,7 +595,7 @@ private[analytics] trait SimOps {
 
   /** The PACK half of [[kmCentroids]]: (cell, pos, s) sums → the
     * ascending-pos svec array + its norm. */
-  private[graft] def packLloyd(sums: DataFrame): DataFrame =
+  private[analytics] def packLloyd(sums: DataFrame): DataFrame =
     sums
       .groupBy(col("cell"))
       .agg(expr("transform(array_sort(collect_list(struct(pos, s))), p -> p.s)").as("svec"))
@@ -1238,36 +1234,15 @@ private[analytics] trait SimOps {
     * skew globals ride window aggregates over the k-row census, not a
     * separate agg crossJoined back (the [[simIvfRetrain]] single-subtree
     * lesson). */
-  def simIvfRetrainExec(spark: SparkSession, dir: String): DataFrame =
-    simIvfRetrainExecFromSums(spark, dir,
-      lloydPosSums(serveInsertAssign(spark, dir).select(col("cell"), col("embedding"))))
-
-
-  /** [[simIvfRetrainExec]] with the INSERT side's Lloyd sums supplied by
-    * the caller — the seam the streaming retrain-exec twin composes
-    * through (the [[graft.streaming.EventStream.retrainDecision]] move
-    * applied to execution): the stream accumulates per-(cell, pos)
-    * quantized insert sums in complete mode, and this batch pass adds
-    * them to the corpus sums — integer adds, so bit-equal to the
-    * one-pass union sum — then re-assigns and censuses exactly as the
-    * batch query. Rows with the census's -1 zero-norm diagnostic cell
-    * are EXCLUDED from the centroid update (a degenerate insert has no
-    * meaningful cell and must not move centroids; the batch path never
-    * produces them on real embeddings). */
-  private[graft] def simIvfRetrainExecFromSums(spark: SparkSession, dir: String,
-      insSums: DataFrame): DataFrame = {
+  def simIvfRetrainExec(spark: SparkSession, dir: String): DataFrame = {
     val corpus = ivfServeAssignTable(spark, dir)
       .select(col("vec_id"), col("embedding"), col("nrm"), col("cell"))
     val inserted = serveInsertAssign(spark, dir)
       .select(col("vec_id"), col("embedding"), col("nrm"), col("cell"))
     val members = corpus.union(inserted)
-    val combined = lloydPosSums(corpus)
-      .join(insSums.filter(col("cell") >= 0L).select(col("cell"), col("pos"),
-          col("s").as("s_ins")),
-        Seq("cell", "pos"), "full_outer")
-      .select(col("cell"), col("pos"),
-        (coalesce(col("s"), lit(0L)) + coalesce(col("s_ins"), lit(0L))).as("s"))
-    val cents = packLloyd(combined)
+    // an insert in the -1 zero-norm diagnostic cell has no meaningful
+    // cell and must not move a centroid (real embeddings never land there)
+    val cents = kmCentroids(corpus.union(inserted.filter(col("cell") >= 0L)))
       .select(col("cell").as("ncell"), col("svec"), col("snrm"))
     val after = retrainReassign(members, cents)
     val before = members.groupBy(col("cell")).agg(count(lit(1)).as("n_before"))
@@ -1288,34 +1263,6 @@ private[analytics] trait SimOps {
   }
 
 
-  /** MAP-ONLY full-corpus re-assignment — the k retrained centroids fold
-    * into ONE broadcast array-of-structs row (ascending `ncell` via
-    * sort_array), and each member row computes its argmax cell with a
-    * strict-`>` SQL `aggregate` fold over that array: the same shape, and
-    * the same bit-exactness contract, as the streaming serve path
-    * ([[graft.streaming.EventStream.annServe]]). This replaces the
-    * previous N × k `crossJoin(broadcast(cents))` + `row_number` window,
-    * whose k-fold row expansion was shuffled on vec_id just to take an
-    * argmax — at 3.5M vectors that Exchange IS the re-train cost; the
-    * fold makes re-assignment a projection over the member scan
-    * (PlanGuardSpec pins the subtree Window- and Exchange-free).
-    *
-    * Parity with the window path, by construction: cosines use the SAME
-    * registered `dot_fl` codegen expression the window variant called
-    * through [[OpsKernels.dotFL]]; the structs arrive in ascending-ncell
-    * order; and strict `>` keeps the FIRST struct on an exact tie —
-    * precisely the `(cos_c DESC, ncell ASC)` row_number argmax.
-    * PRECONDITION (inherited from annServe): centroid norms are nonzero —
-    * [[kmCentroids]] only emits cells that have members and real
-    * embeddings are non-degenerate — so no centroid-side cosine is NaN.
-    * The MEMBER side carries no such guarantee: a zero-norm member
-    * embedding makes every cosine NaN, `NaN > acc.cos` is false for all k
-    * structs, and the fold would return the (-2.0, -1) sentinel — a
-    * phantom cell id that the retired row_number window (NaN-first under
-    * DESC) never produced. Such a member keeps its CURRENT cell instead:
-    * a degenerate vector has no meaningful nearest centroid, so "don't
-    * move it" is the only assignment that cannot corrupt the before/after
-    * occupancy census with a cell no centroid owns. */
   /** Map-only nearest-centroid assignment over FLOAT centroids — the
     * [[retrainReassign]] packed fold generalized to the index BUILDERS
     * (round 20, guide §2.4): the k-row centroid table folds into ONE
@@ -1449,6 +1396,33 @@ private[analytics] trait SimOps {
   }
 
 
+  /** MAP-ONLY full-corpus re-assignment — the k retrained centroids fold
+    * into ONE broadcast array-of-structs row (ascending `ncell` via
+    * sort_array), and each member row computes its argmax cell with a
+    * strict-`>` SQL `aggregate` fold over that array: the same shape, and
+    * the same bit-exactness contract, as [[foldAssignCell]]. This replaces the
+    * previous N × k `crossJoin(broadcast(cents))` + `row_number` window,
+    * whose k-fold row expansion was shuffled on vec_id just to take an
+    * argmax — at 3.5M vectors that Exchange IS the re-train cost; the
+    * fold makes re-assignment a projection over the member scan
+    * (PlanGuardSpec pins the subtree Window- and Exchange-free).
+    *
+    * Parity with the window path, by construction: cosines use the SAME
+    * registered `dot_fl` codegen expression the window variant called
+    * through [[OpsKernels.dotFL]]; the structs arrive in ascending-ncell
+    * order; and strict `>` keeps the FIRST struct on an exact tie —
+    * precisely the `(cos_c DESC, ncell ASC)` row_number argmax.
+    * PRECONDITION: centroid norms are nonzero —
+    * [[kmCentroids]] only emits cells that have members and real
+    * embeddings are non-degenerate — so no centroid-side cosine is NaN.
+    * The MEMBER side carries no such guarantee: a zero-norm member
+    * embedding makes every cosine NaN, `NaN > acc.cos` is false for all k
+    * structs, and the fold would return the (-2.0, -1) sentinel — a
+    * phantom cell id that the retired row_number window (NaN-first under
+    * DESC) never produced. Such a member keeps its CURRENT cell instead:
+    * a degenerate vector has no meaningful nearest centroid, so "don't
+    * move it" is the only assignment that cannot corrupt the before/after
+    * occupancy census with a cell no centroid owns. */
   private[graft] def retrainReassign(members: DataFrame, cents: DataFrame): DataFrame = {
     val packed = cents
       .agg(sort_array(collect_list(struct(col("ncell"), col("svec"), col("snrm"))))

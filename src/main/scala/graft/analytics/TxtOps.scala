@@ -126,7 +126,7 @@ private[analytics] trait TxtOps {
       // round 21 (continuation): ONE classifier_stats kernel call per row
       // replaces the four interpreted filter-lambda counters (the
       // gopher_stats treatment; GopherStatsSpec pins parity against the
-      // retired declarative chain, classifierScoredDeclarative). The
+      // retired declarative chain, DeclarativeScans in src/test). The
       // score arithmetic is unchanged, applied to identical counters.
       classifierScore(
         Tables.documents(spark, dir)
@@ -141,31 +141,12 @@ private[analytics] trait TxtOps {
     }
 
 
-  /** The retired declarative classifier scan — interpreted filter-lambda
-    * counters. Stays in-tree as GopherStatsSpec's reference (the
-    * [[gopherScoredDeclarative]] pattern). Not memoized — spec-only. */
-  private[analytics] def classifierScoredDeclarative(spark: SparkSession, dir: String): DataFrame = {
-    val stopsIn = classifierStops.map(w => s"'$w'").mkString(", ")
-    classifierScore(
-      Tables.documents(spark, dir)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .withColumn("toks", expr(toksSpark))
-        .withColumn("n_toks", size(col("toks")).cast("long"))
-        .withColumn("n_stop", expr(s"size(filter(toks, t -> t IN ($stopsIn)))").cast("long"))
-        .withColumn("n_short", expr("size(filter(toks, t -> length(t) <= 2))").cast("long"))
-        .withColumn("n_long", expr("size(filter(toks, t -> length(t) >= 12))").cast("long"))
-        .withColumn("n_rep", (size(col("toks")) - size(array_distinct(col("toks")))).cast("long"))
-        .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
-          col("n_toks"), col("n_stop"), col("n_short"), col("n_long"), col("n_rep")))
-  }
-
-
   /** The frozen-weight linear score — ONE definition applied to both the
     * kernel build and the declarative spec reference, so the two can only
     * diverge in the integer counters the spec compares. Column order is
     * the classifier_scored contract (doc metadata rides along:
     * ddDedupKeepBest emits it with the keep verdict). */
-  private def classifierScore(counters: DataFrame): DataFrame =
+  private[analytics] def classifierScore(counters: DataFrame): DataFrame =
     counters
       .withColumn("score",
         (col("n_toks") + lit(4L) * col("n_stop") - lit(2L) * col("n_short")
@@ -481,9 +462,9 @@ private[analytics] trait TxtOps {
       // two doc-keyed shuffles + join — the top-bigram multiplicity is
       // doc-local, so the whole build is now a per-row projection (zero
       // shuffles past the repartition). GopherStatsSpec pins the kernel
-      // against the retired declarative chain ([[gopherScoredDeclarative]])
-      // field for field; the fraction/verdict arithmetic below is
-      // UNCHANGED, applied to identical integer counters.
+      // against the retired declarative chain (DeclarativeScans in
+      // src/test) field for field; the fraction/verdict arithmetic below
+      // is UNCHANGED, applied to identical integer counters.
       gopherFractions(
         Tables.documents(spark, dir)
           .repartition(spark.sparkContext.defaultParallelism)
@@ -497,47 +478,10 @@ private[analytics] trait TxtOps {
     }
 
 
-  /** The retired declarative Gopher scan — interpreted HOF counters + the
-    * bigram explode census. Stays in-tree as GopherStatsSpec's reference
-    * (the [[DedupOps.buildMinhashWideSigN]] pattern): the kernel build
-    * must stay bit-indistinguishable from this formulation, which the
-    * DuckDB oracle mirrors were derived from. Not memoized — spec-only. */
-  private[analytics] def gopherScoredDeclarative(spark: SparkSession, dir: String): DataFrame = {
-    val base = Tables.documents(spark, dir)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .withColumn("toks", expr(toksSpark))
-    val perRow = base
-      .withColumn("lns",
-        filter(transform(split(col("text"), "\n"), l => trim(l)), l => l =!= ""))
-      .select(col("doc_id"),
-        size(col("toks")).cast("long").as("n_words"),
-        size(col("lns")).cast("long").as("n_lines"),
-        (size(col("lns")) - size(array_distinct(col("lns")))).cast("long").as("n_dup"),
-        expr("size(filter(lns, l -> substr(l, 1, 2) IN ('- ', '* ')))").cast("long").as("n_bullet"),
-        expr("aggregate(toks, 0L, (acc, t) -> acc + length(t))").as("sum_wl"),
-        greatest(size(col("toks")).cast("long") - 1L, lit(0L)).as("n_bigrams"))
-      // identity aggregation over the unique doc_id — the InferFilters
-      // pushdown guard the declarative form needed (PLANS.md)
-      .groupBy(col("doc_id"))
-      .agg(min(col("n_words")).as("n_words"), min(col("n_lines")).as("n_lines"),
-        min(col("n_dup")).as("n_dup"), min(col("n_bullet")).as("n_bullet"),
-        min(col("sum_wl")).as("sum_wl"), min(col("n_bigrams")).as("n_bigrams"))
-    // explode_outer + isNotNull (not explode): see buildJaccardPairs for the
-    // InferFiltersFromGenerate pushdown pathology this dodges.
-    val bg = base.select(col("doc_id"), explode_outer(expr(
-        "case when size(toks) >= 2 then transform(sequence(0, size(toks) - 2), " +
-          "i -> concat(toks[i], ' ', toks[i+1])) else array() end")).as("b"))
-      .filter(col("b").isNotNull)
-    val top = bg.groupBy(col("doc_id"), col("b")).agg(count(lit(1)).as("n"))
-      .groupBy(col("doc_id")).agg(max(col("n")).as("top_n"))
-    gopherFractions(perRow.join(top, Seq("doc_id"), "left"))
-  }
-
-
   /** The Gopher fraction/verdict arithmetic — ONE definition applied to
     * both the kernel build and the declarative spec reference, so the two
     * can only diverge in the integer counters the spec compares. */
-  private def gopherFractions(counters: DataFrame): DataFrame =
+  private[analytics] def gopherFractions(counters: DataFrame): DataFrame =
     counters
       .select(col("doc_id"), col("n_words"), col("n_lines"),
         (col("n_dup") / nullif(col("n_lines"), lit(0))).as("dup_line_frac"),
@@ -657,23 +601,12 @@ private[analytics] trait TxtOps {
     * which is exactly the memoized [[rarityTf]] vocabulary census
     * (identical [[toksSpark]] tokenize). Σ over token instances of
     * windows(t) = Σ over types of n_t · windows(t): exact integer
-    * identity, pinned by LlmOpsSpec against the retired stream census.
+    * identity, pinned by BpeCensusSpec against the retired stream census.
     * Every training round now passes over vocab-bounded rows (Heaps'
     * law) instead of re-tokenizing the corpus — the [[rarityDocTf]]
     * move applied to the BPE family. */
   private[analytics] def bpeTypeWeights(spark: SparkSession, dir: String): DataFrame =
     rarityTf(spark, dir).select(col("t"), col("n_t").as("w"))
-
-
-  /** The retired token-stream source — spec reference for the weighted
-    * census identity (and the shape production pays WITHOUT a shared
-    * vocabulary census). */
-  private[analytics] def bpeTokens(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .withColumn("toks", expr(toksSpark))
-      .select(explode_outer(col("toks")).as("t"))
-      .filter(col("t").isNotNull)
 
 
   /** In-token adjacent-pair census over a weighted type table (`tcol`,
@@ -686,16 +619,6 @@ private[analytics] trait TxtOps {
         s"i -> substr($tcol, i, 2)) else array() end")).as("pair"))
     .filter(col("pair").isNotNull)
     .groupBy(col("pair")).agg(sum(col("w")).as("n"))
-
-
-  /** The retired instance-count census over the raw token stream — spec
-    * reference twin of [[bpePairCensus]]. */
-  private[analytics] def bpePairCensusStream(tf: DataFrame, tcol: String): DataFrame = tf
-    .select(explode_outer(expr(
-      s"case when length($tcol) >= 2 then transform(sequence(1, length($tcol) - 1), " +
-        s"i -> substr($tcol, i, 2)) else array() end")).as("pair"))
-    .filter(col("pair").isNotNull)
-    .groupBy(col("pair")).agg(count(lit(1)).as("n"))
 
 
   /** BPE TRAINING STEP — the round [[txtBpePairs]] only counts: APPLY the
@@ -1004,16 +927,9 @@ private[analytics] trait TxtOps {
     * category (on the RAW enriched text — counts are independent of
     * redaction order) plus source, shared by the per-doc readout and the
     * census. Pure per-row scan work, codegen'd regexp_count. */
-  private[analytics] def piiScored(spark: SparkSession, dir: String): DataFrame =
-    piiScoredOver(Tables.documents(spark, dir))
-
-  /** The same scoring over an arbitrary (doc_id, source, text) frame —
-    * streaming-safe (pure per-row projection, no window/aggregation), so
-    * [[graft.streaming.EventStream.piiCensus]] applies the identical
-    * fragment to arriving documents. */
-  private[graft] def piiScoredOver(docs: DataFrame): DataFrame = {
+  private[analytics] def piiScored(spark: SparkSession, dir: String): DataFrame = {
     val scored = piiRes.foldLeft(
-      docs.selectExpr("doc_id", "source", s"$piiRawSql AS raw")) {
+      Tables.documents(spark, dir).selectExpr("doc_id", "source", s"$piiRawSql AS raw")) {
       case (df, (cat, re)) =>
         df.withColumn(s"n_${cat}s", regexp_count(col("raw"), lit(re)).cast("long"))
     }
@@ -1038,14 +954,12 @@ private[analytics] trait TxtOps {
         (length(col("raw")) - length(col("clean"))).cast("long").as("chars_redacted"))
       .orderBy(col("doc_id"))
 
-  /** ONE definition of the census semantics shared by the batch rollup
-    * and the streaming complete-mode twin
-    * ([[graft.streaming.EventStream.piiCensus]]): the any-PII predicate
-    * (derived from [[piiRes]], so a fifth category extends both engines
-    * and both runtimes together) and the aggregate list. */
-  private[graft] lazy val piiHasPii: Column =
+  /** The census semantics of [[txtPiiCensus]]: the any-PII predicate
+    * (derived from [[piiRes]], so a fifth category extends the census
+    * with it) and the aggregate list. */
+  private[analytics] lazy val piiHasPii: Column =
     piiRes.map { case (cat, _) => col(s"n_${cat}s") }.reduce(_ + _) > 0
-  private[graft] lazy val piiCensusAggs: Seq[Column] =
+  private[analytics] lazy val piiCensusAggs: Seq[Column] =
     Seq(count(lit(1)).as("n_docs"), count(when(piiHasPii, 1)).as("n_docs_pii")) ++
       piiRes.map { case (cat, _) => sum(col(s"n_${cat}s")).as(s"n_${cat}s") }
 

@@ -202,6 +202,14 @@ class LlmOpsSpec extends SparkSpec {
       rows(251).getAs[Long]("match_id") == 0L, "one-word-off re-crawl must drop")
     assert(rows(252).getAs[Boolean]("kept") && rows(252).isNullAt(rows(252).fieldIndex("match_id")),
       "a fresh doc must survive with no corpus match")
+    // the real corpus: one verdict per arriving doc, and the probe bites
+    val real = "/root/testdata/sf0.001"
+    val verdicts = LlmOps.ddIncrementalNear(spark, real).collect()
+    val arriving = spark.read.parquet(s"$real/documents.parquet")
+      .filter("doc_id >= 250").count()
+    assert(verdicts.length == arriving &&
+      verdicts.map(_.getAs[Long]("doc_id")).distinct.length == arriving)
+    assert(verdicts.exists(!_.getAs[Boolean]("kept")), "the probe dropped nothing at sf0.001")
   }
 
   test("cluster: the exact+near dup triple forms one component labelled by its min id") {
@@ -1770,6 +1778,8 @@ class LlmOpsSpec extends SparkSpec {
     assert(sa.head == (rows.map(_.getAs[Long]("n_after")).max * k).toDouble / n)
     rows.foreach(r =>
       assert(r.getAs[Boolean]("rebalanced") == (sa.head <= sb.head)))
+    assert(rows.exists(r => r.getAs[Long]("n_before") != r.getAs[Long]("n_after")),
+      "the Lloyd round moved no occupancy")
   }
 
   test("filtered ANN: answers satisfy the label predicate; recall measured vs label-filtered brute force") {
@@ -1967,6 +1977,25 @@ class LlmOpsSpec extends SparkSpec {
     }
   }
 
+  test("ingest quarantine recovers exactly the planted damage, every reason present") {
+    // damage rule (IngestOps.ingestQuarantine): doc_id % 10 = 3 torn,
+    // 5 without doc_id, 7 without text, everything else clean
+    val dir = "/root/testdata/sf0.001"
+    val ids = spark.read.parquet(s"$dir/documents.parquet")
+      .select("doc_id").collect().map(_.getAs[Long]("doc_id"))
+    val want = ids.groupBy(i => i % 10 match {
+      case 3 => "torn_json"
+      case 5 => "missing_doc_id"
+      case 7 => "missing_text"
+      case _ => "ok"
+    }).map { case (k, v) => k -> v.length.toLong }
+    val got = LlmOps.ingestQuarantine(spark, dir).collect()
+      .map(r => r.getAs[String]("reason") -> r.getAs[Long]("n")).toMap
+    assert(want.keySet == Set("ok", "torn_json", "missing_doc_id", "missing_text"),
+      s"planted damage vacuous at sf0.001: $want")
+    assert(got == want, s"quarantine census $got diverged from the damage rule $want")
+  }
+
   test("PII census rolls up per source with an all-sources total row") {
     import spark.implicits._
     val d = java.nio.file.Files.createTempDirectory("piicensus").toString
@@ -1984,6 +2013,10 @@ class LlmOpsSpec extends SparkSpec {
       b.getAs[Double]("pii_doc_frac") == 1.0)
     assert(t.getAs[Long]("n_docs") == 6 && t.getAs[Long]("n_docs_pii") == 5 &&
       t.getAs[Double]("pii_doc_frac") == 5.0 / 6.0)
+    // the contact-enriched real corpus carries PII in some source
+    val real = LlmOps.txtPiiCensus(spark, "/root/testdata/sf0.001").collect()
+    assert(real.exists(r => r.getAs[String]("source") != "*" && r.getAs[Long]("n_docs_pii") > 0),
+      s"no source carries PII at sf0.001: ${real.toSeq}")
   }
 
   test("crawl funnel stages chain and match independently recomputed gate flags") {

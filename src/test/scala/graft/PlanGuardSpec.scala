@@ -257,7 +257,7 @@ class PlanGuardSpec extends SparkSpec {
   test("retrain re-assignment is map-only: no Window, no member-side exchange, window-parity") {
     // The round-16 verdict's top ask: simIvfRetrainExec's full-corpus
     // re-assignment must be the packed-centroid row-local fold (the
-    // annServe shape), NOT an N x k crossJoin + row_number shuffle. The
+    // foldAssignCell shape), NOT an N x k crossJoin + row_number shuffle. The
     // only exchanges allowed are the SinglePartition packing of the k-row
     // centroid side (it feeds a broadcast) — members never shuffle.
     import spark.implicits._

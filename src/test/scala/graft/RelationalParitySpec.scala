@@ -8,6 +8,7 @@ import graft.analytics.{Relational, Tables}
   * including the (ts, event_id) tie order and the 3-day horizon; the
   * naive scan is only feasible at sf0.001 (it is the O(n²) shape the
   * window avoids), which is exactly what makes it a usable oracle here.
+  * The gap sessionization (q10) is checked against a per-user gap scan.
   * The fixed-point PageRank (q38) is checked against a no-Spark
   * adjacency-map reimplementation of the same integer arithmetic on a
   * planted graph with hand-checkable structure. */
@@ -39,6 +40,37 @@ class RelationalParitySpec extends SparkSpec {
     // horizon is a filter, not a re-attribution: every emitted conversion
     // is within bounds and non-negative
     assert(got.forall(r => r._4 >= 0 && r._4 <= 259200L))
+  }
+
+  test("gap sessionization equals a per-user inactivity-gap scan") {
+    val dir = "/root/testdata/sf0.001"
+    val got = Relational.q10Sessionize(spark, dir).collect().map(r =>
+      (r.getAs[Long]("user_id"), r.getAs[Long]("session_idx"),
+        r.getAs[Long]("n_events"), r.getAs[Double]("sum_value")))
+    val ev = Tables.events(spark, dir)
+      .select("event_id", "user_id", "ts", "value").collect().map(r =>
+      (r.getAs[Long]("event_id"), r.getAs[Long]("user_id"),
+        r.getAs[Long]("ts"), r.getAs[Double]("value")))
+    // the semantics under test as the naive scan: in (ts, event_id) order,
+    // a session closes when the next event's second (ts is positive
+    // epoch-nanos, so Scala / agrees with SQL div) is more than 1800 later
+    val want = ev.groupBy(_._2).toSeq.flatMap { case (uid, rows) =>
+      val ordered = rows.sortBy(r => (r._3, r._1))
+      val secs = ordered.map(_._3 / 1000000000L)
+      val idx = secs.indices.scanLeft(0L) { (i, j) =>
+        if (j == 0 || secs(j) - secs(j - 1) > 1800) i + 1 else i
+      }.tail
+      ordered.zip(idx).groupBy(_._2).toSeq.map { case (i, rs) =>
+        (uid, i, rs.size.toLong, rs.map(_._1._4).sum)
+      }
+    }.sortBy(t => (t._1, t._2))
+    assert(got.map(t => (t._1, t._2, t._3)).toSeq == want.map(t => (t._1, t._2, t._3)),
+      "session boundaries diverge from the naive gap scan")
+    // sums are rounded to cents; summation order may move the last ulp
+    got.zip(want).foreach { case (g, w) =>
+      assert(math.abs(g._4 - w._4) <= 0.0101, s"session sum drifted: $g vs $w")
+    }
+    assert(got.exists(_._2 > 1L), "sf0.001 must contain a user with a closed session")
   }
 
   test("fixed-point PageRank equals an independent in-memory reimplementation on a planted graph") {

@@ -16,7 +16,7 @@ class BpeCensusSpec extends SparkSpec {
   test("weighted round-1 census equals the stream census on the real corpus") {
     val weighted = LlmOps.bpePairCensus(LlmOps.bpeTypeWeights(spark, dir), "t")
       .orderBy(col("pair")).collect()
-    val stream = LlmOps.bpePairCensusStream(LlmOps.bpeTokens(spark, dir), "t")
+    val stream = BpeStreamCensus.bpePairCensusStream(BpeStreamCensus.bpeTokens(spark, dir), "t")
       .orderBy(col("pair")).collect()
     assert(weighted.length == stream.length, "pair vocabulary drifted")
     weighted.zip(stream).foreach { case (w, s) =>
@@ -32,8 +32,8 @@ class BpeCensusSpec extends SparkSpec {
       LlmOps.bpeTypeWeights(spark, dir).crossJoin(broadcast(top1))
         .select(col("w"), expr(s"replace(t, mp, '$sent')").as("t2")), "t2")
       .orderBy(col("pair")).collect()
-    val stream = LlmOps.bpePairCensusStream(
-      LlmOps.bpeTokens(spark, dir).crossJoin(broadcast(top1))
+    val stream = BpeStreamCensus.bpePairCensusStream(
+      BpeStreamCensus.bpeTokens(spark, dir).crossJoin(broadcast(top1))
         .select(expr(s"replace(t, mp, '$sent')").as("t2")), "t2")
       .orderBy(col("pair")).collect()
     assert(weighted.length == stream.length, "post-merge pair vocabulary drifted")
@@ -45,9 +45,9 @@ class BpeCensusSpec extends SparkSpec {
   test("the trained merge table matches a stream-census retrain bit for bit") {
     // retrain the 4 rounds over the token STREAM (the retired formulation)
     // and compare the shipped artifact row for row
-    var cur = LlmOps.bpeTokens(spark, dir)
+    var cur = BpeStreamCensus.bpeTokens(spark, dir)
     val expected = (1 to LlmOps.BpeVocabRounds).map { r =>
-      val top1 = LlmOps.bpePairCensusStream(cur, "t")
+      val top1 = BpeStreamCensus.bpePairCensusStream(cur, "t")
         .orderBy(col("n").desc, col("pair")).limit(1)
         .select(lit(r.toLong).as("round"), col("pair"), col("n"))
         .collect()(0)

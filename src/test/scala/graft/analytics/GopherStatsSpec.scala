@@ -4,7 +4,7 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** The `gopher_stats` kernel must be indistinguishable from the retired
-  * declarative Gopher scan ([[graft.analytics.LlmOps.gopherScoredDeclarative]])
+  * declarative Gopher scan ([[DeclarativeScans.gopherScoredDeclarative]])
   * — the txt_gopher / txt_clean_corpus / txt_curation_funnel oracles were
   * derived from that chain's semantics, so any divergence (a trim nuance, a
   * code-point length, the NULL top_n of a <2-token doc) is a silent
@@ -14,7 +14,7 @@ class GopherStatsSpec extends SparkSpec {
   private def assertFrameParity(dir: String): Unit = {
     val kern = graft.analytics.LlmOps.gopherScored(spark, dir)
       .orderBy(col("doc_id")).collect()
-    val decl = graft.analytics.LlmOps.gopherScoredDeclarative(spark, dir)
+    val decl = DeclarativeScans.gopherScoredDeclarative(spark, dir)
       .orderBy(col("doc_id")).collect()
     assert(kern.length == decl.length, "row count drifted")
     kern.zip(decl).foreach { case (k, d) =>
@@ -71,7 +71,7 @@ class GopherStatsSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val kern = graft.analytics.LlmOps.classifierScored(spark, dir)
       .orderBy(col("doc_id")).collect()
-    val decl = graft.analytics.LlmOps.classifierScoredDeclarative(spark, dir)
+    val decl = DeclarativeScans.classifierScoredDeclarative(spark, dir)
       .orderBy(col("doc_id")).collect()
     assert(kern.length == decl.length, "row count drifted")
     kern.zip(decl).foreach { case (k, d) =>
