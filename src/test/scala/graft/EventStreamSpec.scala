@@ -1,101 +1,31 @@
 package graft
 
 import java.sql.Timestamp
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.OutputMode
-import graft.streaming.EventStream
-import graft.streaming.EventStream.Event
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import EventStreamSpec._
 
-/** Structured Streaming surface: watermarked window agg + stateful
-  * sessionization, driven through MemoryStream → memory sink. */
+/** Stream-side references for four oracle-checked batch queries: q21
+  * tumbling windows, q10 gap sessions, q37 forward as-of and q40 ordered
+  * funnel. The engine ships no streaming code; these Structured Streaming
+  * formulations live here, in the test tree, as independent references.
+  * Each is run over the sf0.001 events, once as a bounded frame (Spark's
+  * unified model) or fed through `MemoryStream` in chronological
+  * micro-batches, so cross-batch state and watermarks run. The accumulated
+  * sink must equal the batch query, which hash-matches DuckDB. */
 class EventStreamSpec extends SparkSpec {
-
-  private def ts(min: Int, sec: Int = 0): Timestamp =
-    Timestamp.valueOf(f"2024-01-01 10:$min%02d:$sec%02d")
-
-  test("watermarked tumbling-window counts") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Event]
-    val q = EventStream.toMemorySink(
-      EventStream.windowedCounts(input.toDF()), "win_counts", OutputMode.Append())
-    try {
-      input.addData(
-        Event(1, ts(0), 1, "click", 1.0),
-        Event(2, ts(1), 1, "click", 2.0),
-        Event(3, ts(6), 2, "error", 3.0))
-      q.processAllAvailable()
-      // advance the watermark far enough to close the earlier windows
-      input.addData(Event(4, ts(30), 1, "click", 1.0))
-      q.processAllAvailable()
-      val out = spark.table("win_counts").collect()
-        .map(r => (r.getAs[Timestamp]("w_start").toString, r.getAs[String]("event_type"), r.getAs[Long]("n")))
-        .toSet
-      assert(out.contains(("2024-01-01 10:00:00.0", "click", 2L)))
-      assert(out.contains(("2024-01-01 10:05:00.0", "error", 1L)))
-    } finally q.stop()
-  }
-
-  test("late-data census: watermark drops are counted, admitted windows equal the batch cutoff") {
-    // The one streaming loss mode without accounting until now: rows
-    // behind the watermark vanish BEFORE the aggregation. Plant late
-    // arrivals in later micro-batches and pin (a) the admitted window
-    // table equal to the SAME transform run in batch over the events
-    // minus exactly the planted rows, (b) lateDrops == the planted count.
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Event]
-    val q = EventStream.toMemorySink(
-      EventStream.windowedCounts(input.toDF()), "late_census", OutputMode.Append())
-    val onTime = Seq(
-      Event(1, ts(0), 1, "click", 1.0),
-      Event(2, ts(1), 1, "click", 2.0),
-      Event(3, ts(6), 2, "error", 3.0),
-      Event(4, ts(30), 1, "click", 1.0),   // batch 1 tail: watermark → 10:20
-      Event(6, ts(31), 2, "view", 2.0),    // batch 2 on-time companion
-      Event(8, ts(55), 1, "click", 4.0))   // batch 3: closes the 10:30 window
-    val late = Seq(
-      Event(5, ts(3), 1, "click", 8.0),    // batch 2: 10:03 < watermark 10:20
-      Event(7, ts(12), 2, "error", 9.0))   // batch 3: 10:12 < watermark 10:21
-    try {
-      input.addData(onTime(0), onTime(1), onTime(2), onTime(3))
-      q.processAllAvailable()
-      input.addData(late(0), onTime(4))
-      q.processAllAvailable()
-      input.addData(late(1), onTime(5))
-      q.processAllAvailable()
-      // one more advance (watermark → 11:20) so every on-time window,
-      // the 10:55 one included, has closed and emitted
-      input.addData(Event(9, Timestamp.valueOf("2024-01-01 11:30:00"), 1, "click", 1.0))
-      q.processAllAvailable()
-      assert(EventStream.lateDrops(q) == late.size.toLong,
-        s"late census: got ${EventStream.lateDrops(q)}, planted ${late.size}")
-      def key(r: org.apache.spark.sql.Row) =
-        (r.getAs[Timestamp]("w_start").toString, r.getAs[String]("event_type"),
-          r.getAs[Long]("n"), r.getAs[Double]("sum_value"))
-      val got = spark.table("late_census").collect().map(key).toSet
-      // batch recomputation with the same cutoff: the transform itself
-      // over the on-time rows only (the unified-model twin below), minus
-      // the final barrier event's still-open window
-      val want = EventStream.windowedCounts(onTime.toDF()).collect().map(key).toSet
-      assert(want.nonEmpty && got == want,
-        s"admitted windows diverged:\n extra=${got -- want}\n missing=${want -- got}")
-    } finally q.stop()
-  }
 
   test("streaming transform run in batch mode equals the batch tumbling query (unified semantics)") {
     // Spark's unified model: the SAME windowedCounts transform accepts a
     // bounded DataFrame (withWatermark is a no-op in batch). Running it
     // over the real testdata events table and comparing against
-    // q21Tumbling — the oracle-checked batch twin — extends the DuckDB
-    // correctness gate to the streaming transform's logic: only the
-    // watermark/trigger mechanics (spec-covered above) remain untestable
-    // against an oracle.
-    import org.apache.spark.sql.functions.{col, date_format, expr}
+    // q21Tumbling checks the batch query against a second formulation.
     val dir = "/root/testdata/sf0.001"
     val asTs = graft.analytics.Tables.events(spark, dir)
       .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-    val streamed = EventStream.windowedCounts(asTs)
+    val streamed = windowedCounts(asTs)
       .withColumn("w_start", date_format(col("w_start"), "yyyy-MM-dd HH:mm:ss"))
       .collect()
       .map(r => (r.getAs[String]("w_start"), r.getAs[String]("event_type"),
@@ -105,6 +35,7 @@ class EventStreamSpec extends SparkSpec {
       .map(r => (r.getAs[String]("w_start"), r.getAs[String]("event_type"),
         r.getAs[Long]("n"), r.getAs[Double]("sum_value")))
       .toSet
+    assert(batch.nonEmpty, "parity vacuous: q21 found no windows at this sf")
     assert(streamed == batch,
       "streaming transform diverged from the oracle-checked batch twin")
   }
@@ -118,46 +49,38 @@ class EventStreamSpec extends SparkSpec {
     // CLOSE (Append mode), so each user's final session stays open in state
     // — parity set = q10 minus each user's last session.
     import spark.implicits._
-    import org.apache.spark.sql.functions.{col, expr}
     val dir = "/root/testdata/sf0.001"
     val ev = graft.analytics.Tables.events(spark, dir)
       .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
       .as[Event]
-    val closed = EventStream.sessionize(ev).collect()
+    val closed = sessionize(ev).collect()
       .map(r => (r.user_id, r.n_events, r.sum_value))
     assert(closed.nonEmpty)
-    val batch = graft.analytics.Relational.q10Sessionize(spark, dir).collect()
-      .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("session_idx"),
-        r.getAs[Long]("n_events"), r.getAs[Double]("sum_value")))
-    val lastIdx = batch.groupBy(_._1).map { case (u, rows) => u -> rows.map(_._2).max }
-    val expected = batch.collect { case (u, idx, n, s) if idx != lastIdx(u) => (u, n, s) }
+    val expected = q10ClosedSessions(dir)
     def ms(xs: Seq[(Long, Long, Double)]) =
       xs.groupBy(identity).view.mapValues(_.size).toMap
-    val (got, want) = (ms(closed.toSeq), ms(expected.toSeq))
+    val (got, want) = (ms(closed.toSeq), ms(expected))
     val diff = (got.keySet ++ want.keySet).filter(k => got.get(k) != want.get(k))
     assert(diff.isEmpty,
       s"sessionizer diverged from q10 on ${diff.size} sessions, e.g. ${diff.take(3).mkString(", ")}")
   }
 
   // ---- stream-DRIVEN batch parity over the real testdata ----
-  // The three tests below go further than the unified-model (batch-mode)
-  // parity tests above: they execute the transforms as REAL streams —
-  // MemoryStream fed in chronological micro-batches, so the stateful paths
-  // (cross-batch session state, stream-stream join buffers, watermark
-  // advancement) actually run — and assert the accumulated sink equals the
-  // oracle-checked batch twin on the same input. This makes the streaming
-  // mechanics themselves indirectly oracle-checked: the batch twins hash-
-  // match DuckDB, and the streams must reproduce the batch twins.
+  // The tests below go further than the unified-model (batch-mode) parity
+  // tests above: they execute the transforms as REAL streams — MemoryStream
+  // fed in chronological micro-batches, so the stateful paths (cross-batch
+  // session state, watermark advancement) actually run — and assert the
+  // accumulated sink equals the oracle-checked batch query on the same
+  // input.
 
   /** The sf0.001 events as Event rows in global (ts, event_id) order,
     * chunked for micro-batch feeding. Global ts order makes each stream's
     * event time monotone, so nothing is ever late against its own
     * watermark — parity isolates the stateful mechanics, not late-drop
-    * policy (spec-covered separately). */
+    * policy. */
   private def chronoChunks(nChunks: Int): Seq[Seq[Event]] = {
     import spark.implicits._
-    import org.apache.spark.sql.functions.{col, expr}
     val all = graft.analytics.Tables.events(spark, "/root/testdata/sf0.001")
       .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
@@ -166,53 +89,20 @@ class EventStreamSpec extends SparkSpec {
       // transforms use), not getTime millis: the funnel/as-of paths compare
       // at ns strictness, so the chronological drive must too — two events
       // in the same millisecond must arrive in their ns order
-      .sortBy(e => (Math.floorDiv(e.ts.getTime, 1000) * 1000000000L + e.ts.getNanos, e.event_id))
+      .sortBy(e => (ns(e.ts), e.event_id))
       .toSeq
     val size = math.max(1, (all.length + nChunks - 1) / nChunks)
     all.grouped(size).toSeq
   }
 
-  test("stream-driven interval join over chronological micro-batches equals the batch interval join") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val chunks = chronoChunks(6)
-    val views = MemoryStream[Event]
-    val clicks = MemoryStream[Event]
-    val q = EventStream.toMemorySink(
-      EventStream.attributeClicks(views.toDF(), clicks.toDF()), "attrib_parity", OutputMode.Append())
-    try {
-      // feed both sides in lockstep so their watermarks advance together
-      chunks.foreach { ch =>
-        views.addData(ch.filter(_.event_type == "view"))
-        clicks.addData(ch.filter(_.event_type == "click"))
-        q.processAllAvailable()
-      }
-      // sentinels push both watermarks past every buffered row (distinct
-      // users so they cannot match each other)
-      val flushTs = Timestamp.valueOf("2025-06-01 00:00:00")
-      views.addData(Event(900001, flushTs, 999, "view", 0.0))
-      clicks.addData(Event(900002, flushTs, 998, "click", 0.0))
-      q.processAllAvailable()
-      val got = spark.table("attrib_parity").collect()
-        .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("view_id"),
-          r.getAs[Long]("click_id"), r.getAs[Double]("value"))).toSet
-      // independent batch formulation of the same attribution join (plain
-      // inner join, no watermarks) over the identical input rows
-      val all = chunks.flatten
-      val vb = all.filter(_.event_type == "view")
-        .map(e => (e.event_id, e.user_id, e.ts)).toDF("view_id", "user_id", "view_ts")
-      val cb = all.filter(_.event_type == "click")
-        .map(e => (e.event_id, e.user_id, e.ts, e.value)).toDF("click_id", "c_user_id", "click_ts", "value")
-      val want = vb.join(cb,
-          $"user_id" === $"c_user_id" && $"click_ts" >= $"view_ts" &&
-            $"click_ts" <= $"view_ts" + org.apache.spark.sql.functions.expr("INTERVAL 10 MINUTES"))
-        .select($"user_id", $"view_id", $"click_id", $"value").collect()
-        .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("view_id"),
-          r.getAs[Long]("click_id"), r.getAs[Double]("value"))).toSet
-      assert(want.nonEmpty, "parity vacuous: the batch join found no in-window pairs")
-      assert(got == want,
-        s"stream-driven interval join diverged from batch: missing ${(want -- got).take(3)}, extra ${(got -- want).take(3)}")
-    } finally q.stop()
+  /** q10's sessions minus each user's last one: the sessions a
+    * close-on-gap sessionizer has emitted once every event is fed. */
+  private def q10ClosedSessions(dir: String): Seq[(Long, Long, Double)] = {
+    val batch = graft.analytics.Relational.q10Sessionize(spark, dir).collect()
+      .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("session_idx"),
+        r.getAs[Long]("n_events"), r.getAs[Double]("sum_value")))
+    val lastIdx = batch.groupBy(_._1).map { case (u, rows) => u -> rows.map(_._2).max }
+    batch.collect { case (u, idx, n, s) if idx != lastIdx(u) => (u, n, s) }.toSeq
   }
 
   test("stream-driven sessionizer over chronological micro-batches equals oracle-checked q10 sessions") {
@@ -220,21 +110,15 @@ class EventStreamSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val chunks = chronoChunks(8)
     val input = MemoryStream[Event]
-    val q = EventStream.toMemorySink(
-      EventStream.sessionize(input.toDS()).toDF(), "sess_parity", OutputMode.Append())
+    val q = toMemorySink(sessionize(input.toDS()).toDF(), "sess_parity")
     try {
       chunks.foreach { ch => input.addData(ch); q.processAllAvailable() }
-      val got = spark.table("sess_parity").as[EventStream.SessionOut].collect()
+      val got = spark.table("sess_parity").as[SessionOut].collect()
         .map(r => (r.user_id, r.n_events, r.sum_value)).toSeq
-      // q10 is the DuckDB-hash-checked twin; sessions emit on CLOSE, so
-      // each user's final session stays open in state — expected = q10
-      // minus each user's last session (same contract as the batch-mode
-      // parity test above, now exercised ACROSS micro-batch boundaries)
-      val batch = graft.analytics.Relational.q10Sessionize(spark, "/root/testdata/sf0.001").collect()
-        .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("session_idx"),
-          r.getAs[Long]("n_events"), r.getAs[Double]("sum_value")))
-      val lastIdx = batch.groupBy(_._1).map { case (u, rows) => u -> rows.map(_._2).max }
-      val want = batch.collect { case (u, idx, n, s) if idx != lastIdx(u) => (u, n, s) }.toSeq
+      // sessions emit on CLOSE, so each user's final session stays open in
+      // state (same contract as the batch-mode parity test above, now
+      // exercised ACROSS micro-batch boundaries)
+      val want = q10ClosedSessions("/root/testdata/sf0.001")
       def ms(xs: Seq[(Long, Long, Double)]) = xs.groupBy(identity).view.mapValues(_.size).toMap
       val (g, w) = (ms(got), ms(want))
       assert(want.nonEmpty, "parity vacuous: q10 closed no sessions at this sf")
@@ -249,17 +133,16 @@ class EventStreamSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val chunks = chronoChunks(6)
     val input = MemoryStream[Event]
-    val q = EventStream.toMemorySink(
-      EventStream.attributeForward(input.toDS()).toDF(), "asof_fwd_parity", OutputMode.Append())
+    val q = toMemorySink(attributeForward(input.toDS()).toDF(), "asof_fwd_parity")
     try {
       chunks.foreach { ch => input.addData(ch); q.processAllAvailable() }
       val got = spark.table("asof_fwd_parity").collect()
         .map(r => (r.getAs[Long]("view_id"), r.getAs[Long]("user_id"),
           r.getAs[Long]("next_purchase_id"), r.getAs[Long]("secs_to_purchase"))).toSet
-      // q37 is the DuckDB-hash-checked twin; a view attributes the moment
-      // its purchase arrives, so — unlike the sessionizer — the stream
-      // emits the COMPLETE batch answer once all events are fed (pending
-      // unconverted views are exactly the rows q37 also drops)
+      // a view attributes the moment its purchase arrives, so — unlike the
+      // sessionizer — the stream emits the COMPLETE batch answer once all
+      // events are fed (pending unconverted views are exactly the rows q37
+      // also drops)
       val want = graft.analytics.Relational.q37AsofForward(spark, "/root/testdata/sf0.001").collect()
         .map(r => (r.getAs[Long]("view_id"), r.getAs[Long]("user_id"),
           r.getAs[Long]("next_purchase_id"), r.getAs[Long]("secs_to_purchase"))).toSet
@@ -272,11 +155,9 @@ class EventStreamSpec extends SparkSpec {
   test("stream-driven windowed counts equal the oracle-checked batch tumbling query once closed") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions.{col, date_format}
     val chunks = chronoChunks(6)
     val input = MemoryStream[Event]
-    val q = EventStream.toMemorySink(
-      EventStream.windowedCounts(input.toDF()), "win_parity", OutputMode.Append())
+    val q = toMemorySink(windowedCounts(input.toDF()), "win_parity")
     try {
       chunks.foreach { ch => input.addData(ch); q.processAllAvailable() }
       // the sentinel's watermark closes every real window; its own window
@@ -297,144 +178,12 @@ class EventStreamSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("stream-stream interval join attributes clicks to in-window views and drops the rest") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val views = MemoryStream[Event]
-    val clicks = MemoryStream[Event]
-    val q = EventStream.toMemorySink(
-      EventStream.attributeClicks(views.toDF(), clicks.toDF()), "attrib", OutputMode.Append())
-    try {
-      views.addData(
-        Event(100, ts(0), 1, "view", 0.0),   // user 1 views at 10:00
-        Event(101, ts(0), 2, "view", 0.0))   // user 2 views at 10:00
-      clicks.addData(
-        Event(200, ts(5), 1, "click", 7.5),  // in window (5 min after view)
-        Event(201, ts(25), 2, "click", 1.0), // OUT of window (25 min after)
-        Event(202, ts(5), 3, "click", 1.0))  // no matching view user
-      q.processAllAvailable()
-      // push both watermarks forward so all joinable state resolves
-      views.addData(Event(102, ts(59), 9, "view", 0.0))
-      clicks.addData(Event(203, ts(59), 9, "error", 0.0))
-      q.processAllAvailable()
-      val out = spark.table("attrib").collect()
-        .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("view_id"), r.getAs[Long]("click_id")))
-        .toSet
-      assert(out.contains((1L, 100L, 200L)), out.mkString(","))
-      assert(!out.exists(_._3 == 201L)) // outside the interval
-      assert(!out.exists(_._1 == 3L))   // no view to attribute to
-    } finally q.stop()
-  }
-
-  test("late data beyond the watermark is dropped, closed windows stay final") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Event]
-    val q = EventStream.toMemorySink(
-      EventStream.windowedCounts(input.toDF()), "late_counts", OutputMode.Append())
-    try {
-      input.addData(Event(1, ts(0), 1, "click", 1.0))
-      q.processAllAvailable()
-      // advance the watermark far beyond the first window (10:00–10:05)
-      input.addData(Event(2, ts(40), 1, "click", 1.0))
-      q.processAllAvailable()
-      // a 40-minute-late event for the long-closed first window
-      input.addData(Event(3, ts(1), 1, "click", 99.0))
-      input.addData(Event(4, ts(41), 1, "click", 1.0))
-      q.processAllAvailable()
-      val firstWindow = spark.table("late_counts").collect()
-        .filter(_.getAs[java.sql.Timestamp]("w_start").toString == "2024-01-01 10:00:00.0")
-      // emitted once with the on-time count only; the late event never lands
-      assert(firstWindow.map(_.getAs[Long]("n")).toSeq == Seq(1L), firstWindow.mkString(","))
-    } finally q.stop()
-  }
-
-  test("streaming dedup drops re-delivered event_ids within the watermark") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Event]
-    val q = EventStream.toMemorySink(
-      EventStream.dedupe(input.toDF()), "deduped", OutputMode.Append())
-    try {
-      input.addData(
-        Event(1, ts(0), 1, "click", 1.0),
-        Event(1, ts(0), 1, "click", 1.0),  // exact re-delivery
-        Event(2, ts(1), 1, "click", 2.0))
-      q.processAllAvailable()
-      input.addData(Event(1, ts(2), 1, "click", 1.0)) // late re-delivery, same id
-      q.processAllAvailable()
-      val ids = spark.table("deduped").collect().map(_.getAs[Long]("event_id")).toSeq
-      assert(ids.sorted == Seq(1L, 2L), ids.mkString(","))
-    } finally q.stop()
-  }
-
-  test("streaming ingestion dedup drops docs whose content is already in the corpus state") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // static corpus state: fingerprints of two already-ingested texts
-    val corpus = Seq("already ingested text one", "already ingested text two")
-      .toDF("text").selectExpr("md5(text) AS fp")
-    val input = MemoryStream[(Long, String)]
-    val docs = input.toDF().toDF("doc_id", "text")
-    val q = EventStream.toMemorySink(
-      EventStream.dedupeAgainstCorpus(docs, corpus), "ingested", OutputMode.Append())
-    try {
-      input.addData(
-        (10L, "already ingested text one"),   // dup of state -> dropped
-        (11L, "genuinely new content here"),  // kept
-        (12L, "already ingested text two"))   // dup of state -> dropped
-      q.processAllAvailable()
-      input.addData((13L, "more new content arrives later")) // kept, next batch
-      q.processAllAvailable()
-      val kept = spark.table("ingested").collect().map(_.getAs[Long]("doc_id")).toSeq.sorted
-      assert(kept == Seq(11L, 13L), kept.mkString(","))
-    } finally q.stop()
-  }
-
-  test("stream-static join enriches events with the broadcast user dimension") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dim = Seq((1L, "gold"), (2L, "basic")).toDF("user_id", "tier")
-    val input = MemoryStream[Event]
-    val q = EventStream.toMemorySink(
-      EventStream.enrich(input.toDF(), dim), "enriched", OutputMode.Append())
-    try {
-      input.addData(
-        Event(1, ts(0), 1, "click", 1.0),
-        Event(2, ts(1), 3, "view", 2.0)) // user 3 not in dim → null tier
-      q.processAllAvailable()
-      val out = spark.table("enriched").collect()
-        .map(r => (r.getAs[Long]("event_id"), Option(r.getAs[String]("tier")))).toSet
-      assert(out == Set((1L, Some("gold")), (2L, None)))
-    } finally q.stop()
-  }
-
-  test("stateful sessionization closes a session after the inactivity gap") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Event]
-    val q = EventStream.toMemorySink(
-      EventStream.sessionize(input.toDS()).toDF(), "sessions", OutputMode.Append())
-    try {
-      input.addData(
-        Event(1, ts(0), 7, "click", 1.5),
-        Event(2, ts(10), 7, "click", 2.5))
-      q.processAllAvailable()
-      // 40 minutes later (> 30-min gap) → previous session closes on arrival
-      input.addData(Event(3, ts(50), 7, "click", 9.0))
-      q.processAllAvailable()
-      val out = spark.table("sessions").as[EventStream.SessionOut].collect().toSeq
-      assert(out.contains(EventStream.SessionOut(7, 2, 4.0)))
-    } finally q.stop()
-  }
-
   test("stream-driven funnel over chronological micro-batches equals the oracle-checked q40") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val chunks = chronoChunks(5)
     val input = MemoryStream[Event]
-    val q = EventStream.toMemorySink(
-      EventStream.funnelStages(input.toDS()).toDF(), "funnel_parity", OutputMode.Append())
+    val q = toMemorySink(funnelStages(input.toDS()).toDF(), "funnel_parity")
     try {
       chunks.foreach { ch => input.addData(ch); q.processAllAvailable() }
       val got = spark.table("funnel_parity").collect()
@@ -455,710 +204,160 @@ class EventStreamSpec extends SparkSpec {
         "a user skipped a funnel stage")
     } finally q.stop()
   }
+}
 
-  test("stream-driven near-dup ingestion probe equals the oracle-checked batch dd_incremental_near") {
-    // The admission-consistency contract: the arriving half of the
-    // documents table (doc_id >= 250), fed as a real stream in several
-    // micro-batches, LSH-probed per batch against the static corpus band
-    // state, must produce EXACTLY the verdicts of the oracle-checked
-    // batch probe on the same split — per-doc verdicts depend only on
-    // the corpus state, so the micro-batching must not matter.
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dir = "/root/testdata/sf0.001"
-    val corpusState = graft.analytics.LlmOps.nearDupCorpusState(spark, dir)
-    val arriving = graft.analytics.Tables.documents(spark, dir)
-      .filter("doc_id >= 250").select($"doc_id", $"text")
-      .as[(Long, String)].collect().sortBy(_._1).toSeq
-    val chunks = arriving.grouped((arriving.size + 3) / 4).toSeq
-    val input = MemoryStream[(Long, String)]
-    val q = EventStream.toMemorySink(
-      EventStream.nearDedupeAgainstCorpus(
-        input.toDF().toDF("doc_id", "text"), corpusState).toDF(),
-      "near_parity", OutputMode.Append())
-    try {
-      chunks.foreach { ch => input.addData(ch); q.processAllAvailable() }
-      def key(r: org.apache.spark.sql.Row) = (r.getAs[Long]("doc_id"),
-        Option(r.getAs[java.lang.Long]("match_id")).map(_.toLong),
-        Option(r.getAs[java.lang.Double]("est_sim")).map(_.toDouble),
-        r.getAs[Boolean]("kept"))
-      val got = spark.table("near_parity").collect().map(key).toSet
-      val want = graft.analytics.LlmOps.ddIncrementalNear(spark, dir).collect().map(key).toSet
-      assert(got.size == arriving.size, "conservation: one verdict per arriving doc")
-      assert(want.exists(!_._4), "parity vacuous: the batch probe dropped nothing at this sf")
-      assert(got == want,
-        s"stream probe diverged from batch: missing ${(want -- got).take(3)}, extra ${(got -- want).take(3)}")
-    } finally q.stop()
-  }
+/** The spec's Structured Streaming references. Each takes the `events`
+  * shape `(event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING,
+  * value DOUBLE)` and works on a bounded or an unbounded input. */
+object EventStreamSpec {
 
-  test("streaming URL gate refuses re-crawls of frontier pages, admits new pages, equals the batch anti-join") {
-    // The admission-consistency contract for the URL stage: arriving
-    // fetches, micro-batched, anti-joined per batch against the static
-    // normalized-URL frontier, must admit exactly what the batch
-    // computation over the same split admits. Corpus ids 0..17 hold page
-    // 17; arrival 18 (18 % 13 = 5) re-crawls page 17 with different URL
-    // noise and must be REFUSED; arrivals 20/21 fetch new pages.
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val d = java.nio.file.Files.createTempDirectory("urlstream").toString
-    ((0L to 17L) ++ Seq(18L, 20L, 21L)).map(i => LlmDoc(i, s"doc $i", "en", "s", 6)).toDF()
-      .write.parquet(s"$d/documents.parquet")
-    val all = graft.analytics.LlmOps.urlNormalized(spark, d)
-    val frontier = all.filter($"doc_id" <= 17).select($"url_norm").distinct()
-    val arriving = all.filter($"doc_id" >= 18)
-      .select($"doc_id", $"url").as[(Long, String)].collect().sortBy(_._1).toSeq
-    val chunks = Seq(arriving.take(1), arriving.drop(1)) // 18 alone, then 20+21
-    val input = MemoryStream[(Long, String)]
-    val q = EventStream.toMemorySink(
-      EventStream.urlDedupeAgainstFrontier(
-        input.toDF().toDF("doc_id", "url"), frontier),
-      "url_gate", OutputMode.Append())
-    try {
-      chunks.foreach { ch => input.addData(ch); q.processAllAvailable() }
-      val got = spark.table("url_gate").collect().map(_.getAs[Long]("doc_id")).toSet
-      val want = all.filter($"doc_id" >= 18)
-        .join(frontier, Seq("url_norm"), "left_anti")
-        .collect().map(_.getAs[Long]("doc_id")).toSet
-      assert(want == Set(20L, 21L), s"batch twin vacuous or wrong: $want")
-      assert(got == want, s"stream gate admitted $got, batch admits $want")
-    } finally q.stop()
-  }
+  case class Event(event_id: Long, ts: Timestamp, user_id: Long, event_type: String, value: Double)
+  case class SessionState(nEvents: Long, sumValue: Double, lastSec: Long)
+  case class SessionOut(user_id: Long, n_events: Long, sum_value: Double)
+  case class PendingView(view_id: Long, ns: Long)
+  case class AsofOut(view_id: Long, user_id: Long, next_purchase_id: Long, secs_to_purchase: Long)
+  case class FunnelState(t1: Option[Long], t2: Option[Long], t3: Option[Long], t4: Option[Long])
+  case class FunnelOut(user_id: Long, stage: Int, event_type: String, event_id: Long)
 
-  test("streaming per-host quota admits exactly the batch host cap's kept set, refusing across micro-batches") {
-    // The quota-consistency contract, and the one admission stage needing
-    // CROSS-BATCH state: fetches replayed in crawl (doc_id) order over 4
-    // micro-batches must admit exactly the batch dd_host_cap kept set —
-    // including a hot host whose 16-fetch quota exhausts in the FIRST
-    // micro-batch and must still be refused in every later one (state the
-    // stateless anti-join gates cannot express). 1024 docs cover the full
-    // pid%1024 host ramp: host 0 takes ~half the fetches (and the whole
-    // first 256-doc micro-batch, since pids 0..255 all fall in its
-    // <512 bucket), while the tail hosts get fewer than 16 fetches and
-    // ride along as the never-capped control group.
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val d = java.nio.file.Files.createTempDirectory("hostquota").toString
-    (0L until 1024L).map(i => LlmDoc(i, s"doc $i", "en", "s", 6)).toDF()
-      .write.parquet(s"$d/documents.parquet")
-    val arriving = graft.analytics.LlmOps.urlNormalized(spark, d)
-      .select($"doc_id", $"url").as[(Long, String)].collect().sortBy(_._1).toSeq
-    val chunks = arriving.grouped(256).toSeq // host 0 saturates inside chunk 1
-    val input = MemoryStream[(Long, String)]
-    val q = EventStream.toMemorySink(
-      EventStream.hostCapAdmission(input.toDF().toDF("doc_id", "url"),
-        graft.analytics.LlmOps.HostCap).toDF(),
-      "host_quota", OutputMode.Append())
-    try {
-      chunks.foreach { ch => input.addData(ch); q.processAllAvailable() }
-      val verdicts = spark.table("host_quota").collect()
-      assert(verdicts.length == 1024, "one verdict per fetch")
-      val admitted = verdicts.filter(_.getAs[Boolean]("admitted"))
-        .map(_.getAs[Long]("doc_id")).toSet
-      val want = graft.analytics.LlmOps.ddHostCap(spark, d).collect()
-        .map(_.getAs[Long]("kept_id")).toSet
-      assert(admitted == want,
-        s"quota diverges from batch cap: extra=${admitted -- want} missing=${want -- admitted}")
-      // the cross-batch property: host 0's quota exhausts in chunk 1
-      // (first 256 crawl-ordered fetches hold ≥16 host-0 fetches), so
-      // every later host-0 arrival is refused — and some exist
-      val host0Later = verdicts.filter(r => r.getAs[String]("host").startsWith("h0.") &&
-        r.getAs[Long]("doc_id") >= 256)
-      assert(host0Later.nonEmpty && host0Later.forall(!_.getAs[Boolean]("admitted")),
-        "no cross-batch refusal exercised for the hot host")
-      // quota conservation: per host, admitted count == min(fetches, cap)
-      val byHost = verdicts.groupBy(_.getAs[String]("host"))
-      for ((h, vs) <- byHost) {
-        val adm = vs.count(_.getAs[Boolean]("admitted"))
-        assert(adm == math.min(vs.length, graft.analytics.LlmOps.HostCap),
-          s"host $h spent $adm of ${vs.length}")
+  /** Epoch nanoseconds rebuilt from the Timestamp (getNanos carries the
+    * full sub-second), so ordering and gap arithmetic match the batch
+    * queries' `ts` (ns) down to the nanosecond. */
+  def ns(t: Timestamp): Long = Math.floorDiv(t.getTime, 1000) * 1000000000L + t.getNanos
+
+  def toMemorySink(df: DataFrame, name: String): StreamingQuery =
+    df.writeStream.format("memory").queryName(name).outputMode(OutputMode.Append()).start()
+
+  /** Watermarked 5-minute tumbling-window counts per event_type (q21). */
+  def windowedCounts(events: DataFrame): DataFrame =
+    events
+      .withWatermark("ts", "10 minutes")
+      .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
+      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
+      .select(col("window.start").as("w_start"), col("event_type"), col("n"), col("sum_value"))
+
+  /** Gap sessionization (30-minute inactivity, q10) with
+    * flatMapGroupsWithState: emits a session when an event arrives more
+    * than the gap after the previous one. `sec` is the rebuilt ns under
+    * the same truncating division as q10's `ts div 1000000000`. */
+  def sessionize(events: Dataset[Event]): Dataset[SessionOut] = {
+    import events.sparkSession.implicits._
+    events
+      .groupByKey(_.user_id)
+      .flatMapGroupsWithState[SessionState, SessionOut](
+        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
+        (userId: Long, batch: Iterator[Event], state: GroupState[SessionState]) =>
+          val events = batch.toSeq.sortBy(e => (ns(e.ts), e.event_id))
+          var closed = List.empty[SessionOut]
+          var cur = state.getOption
+          events.foreach { e =>
+            val sec = ns(e.ts) / 1000000000L
+            cur match {
+              case Some(s) if sec - s.lastSec > 1800 =>
+                // HALF_UP, matching Spark's round(col, 2) in q10 (math.rint
+                // is HALF_EVEN — the two modes diverge on exact .xx5 sums)
+                closed ::= SessionOut(userId, s.nEvents,
+                  BigDecimal(s.sumValue).setScale(2, BigDecimal.RoundingMode.HALF_UP).toDouble)
+                cur = Some(SessionState(1, e.value, sec))
+              case Some(s) =>
+                cur = Some(SessionState(s.nEvents + 1, s.sumValue + e.value, sec))
+              case None =>
+                cur = Some(SessionState(1, e.value, sec))
+            }
+          }
+          cur.foreach(state.update)
+          closed.reverseIterator
       }
-    } finally q.stop()
   }
 
-  test("streaming quarantine census equals the oracle-checked batch ingest_quarantine") {
-    // The ingestion-health-consistency contract: the same planted-damage
-    // JSONL lines, fed as a stream in 4 micro-batches, classified with
-    // the same JsonlDocs admission/reason classifiers, must accumulate
-    // to EXACTLY the batch census (complete-mode aggregation — the
-    // 4-row reason table IS the stream state).
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dir = "/root/testdata/sf0.001"
-    val lines = graft.analytics.LlmOps.plantedDamageLines(spark, dir)
-      .as[String].collect().toSeq
-    val chunks = lines.grouped((lines.size + 3) / 4).toSeq
-    val input = MemoryStream[String]
-    val q = EventStream.toMemorySink(
-      EventStream.quarantineCensus(input.toDF().toDF("value")),
-      "quarantine_census", OutputMode.Complete())
-    try {
-      chunks.foreach { ch => input.addData(ch); q.processAllAvailable() }
-      val got = spark.table("quarantine_census").collect()
-        .map(r => r.getAs[String]("reason") -> r.getAs[Long]("n")).toMap
-      val want = graft.analytics.LlmOps.ingestQuarantine(spark, dir).collect()
-        .map(r => r.getAs[String]("reason") -> r.getAs[Long]("n")).toMap
-      assert(want.keySet == Set("ok", "torn_json", "missing_doc_id", "missing_text"),
-        s"parity vacuous: batch census missing a damage reason: $want")
-      assert(got == want,
-        s"stream census $got diverged from batch $want")
-    } finally q.stop()
-  }
-
-  test("the streaming admission chain composes: URL gate into host quota in one query") {
-    // The two pre-content gates CHAIN in a single streaming DAG — the
-    // stateless frontier anti-join feeding the stateful per-host quota —
-    // and the composed verdicts equal the batch composition (URL-admitted
-    // fetches, then the cap's k smallest per host). Re-crawls refused by
-    // the gate must never spend quota.
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val d = java.nio.file.Files.createTempDirectory("admchain").toString
-    (0L until 1024L).map(i => LlmDoc(i, s"doc $i", "en", "s", 6)).toDF()
-      .write.parquet(s"$d/documents.parquet")
-    val all = graft.analytics.LlmOps.urlNormalized(spark, d)
-    val frontier = all.filter($"doc_id" % 4 =!= 3).select($"url_norm").distinct()
-    val arriving = all.filter($"doc_id" % 4 === 3)
-      .select($"doc_id", $"url").as[(Long, String)].collect().sortBy(_._1).toSeq
-    val input = MemoryStream[(Long, String)]
-    val gated = EventStream.urlDedupeAgainstFrontier(
-      input.toDF().toDF("doc_id", "url"), frontier)
-    val q = EventStream.toMemorySink(
-      EventStream.hostCapAdmission(gated.select($"doc_id", $"url"),
-        graft.analytics.LlmOps.HostCap).toDF(),
-      "adm_chain", OutputMode.Append())
-    try {
-      arriving.grouped(64).foreach { ch => input.addData(ch); q.processAllAvailable() }
-      val got = spark.table("adm_chain").collect()
-        .filter(_.getAs[Boolean]("admitted")).map(_.getAs[Long]("doc_id")).toSet
-      // batch twin of the composition
-      val urlAdmitted = graft.analytics.LlmOps.ddUrlIncremental(spark, d)
-        .collect().map(_.getAs[Long]("doc_id")).toSet
-      val hostOf = all.collect()
-        .map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("url_norm").split('/')(0)).toMap
-      val want = urlAdmitted.groupBy(hostOf).values
-        .flatMap(_.toSeq.sorted.take(graft.analytics.LlmOps.HostCap)).toSet
-      assert(urlAdmitted.size < arriving.size, "URL gate vacuous (no refusals)")
-      assert(want.size < urlAdmitted.size, "quota vacuous (never bites)")
-      assert(got == want,
-        s"chain diverged: extra=${got -- want} missing=${want -- got}")
-    } finally q.stop()
-  }
-
-  test("the full streaming admission chain: opt-out into URL gate into host quota") {
-    // The governance gate heads the chain — a disallowed host's fetches
-    // are refused before the frontier is consulted and before any quota
-    // is spent (the compliance ordering crawlFlags encodes as p1) — and
-    // the three-stage composition equals the batch gate order. The
-    // 1024-doc plant covers the full h0-h9 host universe, so the
-    // opt-out list (h2/h5/h8) genuinely bites.
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val d = java.nio.file.Files.createTempDirectory("admchain3").toString
-    (0L until 1024L).map(i => LlmDoc(i, s"doc $i", "en", "s", 6)).toDF()
-      .write.parquet(s"$d/documents.parquet")
-    val all = graft.analytics.LlmOps.urlNormalized(spark, d)
-    val frontier = all.filter($"doc_id" % 4 =!= 3).select($"url_norm").distinct()
-    val arriving = all.filter($"doc_id" % 4 === 3)
-      .select($"doc_id", $"url").as[(Long, String)].collect().sortBy(_._1).toSeq
-    val input = MemoryStream[(Long, String)]
-    val admitted = EventStream.urlDedupeAgainstFrontier(
-      EventStream.optoutGate(input.toDF().toDF("doc_id", "url"))
-        .select($"doc_id", $"url"),
-      frontier)
-    val q = EventStream.toMemorySink(
-      EventStream.hostCapAdmission(admitted.select($"doc_id", $"url"),
-        graft.analytics.LlmOps.HostCap).toDF(),
-      "adm_chain3", OutputMode.Append())
-    try {
-      arriving.grouped(64).foreach { ch => input.addData(ch); q.processAllAvailable() }
-      val got = spark.table("adm_chain3").collect()
-        .filter(_.getAs[Boolean]("admitted")).map(_.getAs[Long]("doc_id")).toSet
-      // batch twin of the composition, gate order preserved
-      val optHosts = Set("h2.example.com", "h5.example.com", "h8.example.com")
-      val hostOf = all.collect()
-        .map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("url_norm").split('/')(0)).toMap
-      val policyAdmitted = graft.analytics.LlmOps.ddUrlIncremental(spark, d)
-        .collect().map(_.getAs[Long]("doc_id")).filterNot(i => optHosts(hostOf(i))).toSet
-      val want = policyAdmitted.groupBy(hostOf).values
-        .flatMap(_.toSeq.sorted.take(graft.analytics.LlmOps.HostCap)).toSet
-      val refusedByPolicy = arriving.map(_._1).filter(i => optHosts(hostOf(i)))
-      assert(refusedByPolicy.nonEmpty, "opt-out gate vacuous (no listed host arrived)")
-      assert(got.intersect(refusedByPolicy.toSet).isEmpty,
-        "a policy-refused fetch leaked through the chain")
-      assert(got == want,
-        s"chain diverged: extra=${got -- want} missing=${want -- got}")
-    } finally q.stop()
-  }
-
-  test("streaming ANN serve equals the oracle-checked batch sim_ivf_serve bit-for-bit") {
-    // The similarity family's streaming twin: arriving query vectors,
-    // micro-batched, probe the static serve index; the row-local HOF cell
-    // assignment must reproduce the dot_f kernel's arithmetic exactly, so
-    // every (qid, rk, cid, cos) — cos as a raw double — matches batch.
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dir = "/root/testdata/sf0.001"
-    val cents = graft.analytics.LlmOps.serveCentroids(spark, dir)
-    val corpus = graft.analytics.LlmOps.ivfServeAssignTable(spark, dir)
-      .select($"vec_id".as("cid"), $"embedding".as("ce"),
-        $"nrm".as("cn"), $"cell".as("ccell"))
-    val qs = spark.read.parquet(s"$dir/embeddings.parquet")
-      .filter($"vec_id" % 200 === 3)
-      .select($"vec_id", $"embedding").as[(Long, Seq[Float])].collect().sortBy(_._1).toSeq
-    assert(qs.size >= 2, "need at least two held-out queries to micro-batch")
-    val chunks = qs.grouped((qs.size + 1) / 2).toSeq
-    val input = MemoryStream[(Long, Seq[Float])]
-    val q = EventStream.toMemorySink(
-      EventStream.annServe(input.toDF().toDF("vec_id", "embedding"), cents, corpus).toDF(),
-      "ann_serve", OutputMode.Append())
-    try {
-      chunks.foreach { ch => input.addData(ch); q.processAllAvailable() }
-      val got = spark.table("ann_serve").collect()
-        .map(r => (r.getAs[Long]("qid"), r.getAs[Int]("rk"),
-          r.getAs[Long]("cid"), r.getAs[Double]("cos"))).toSet
-      val want = graft.analytics.LlmOps.queries("sim_ivf_serve")(spark, dir).collect()
-        .map(r => (r.getAs[Long]("qid"), r.getAs[Int]("rk"),
-          r.getAs[Long]("cid"), r.getAs[Double]("cos"))).toSet
-      assert(want.nonEmpty, "batch serve twin vacuous")
-      assert(got == want,
-        s"stream serve diverged:\n extra=${got -- want}\n missing=${want -- got}")
-    } finally q.stop()
-  }
-
-  test("streaming retrain-decision census equals the oracle-checked batch sim_ivf_retrain") {
-    // The last serve-lifecycle member without a streaming twin: insert
-    // vectors arriving over 4 micro-batches are cell-assigned row-locally
-    // and accumulated in a complete-mode census; composed with the static
-    // corpus occupancy it must reproduce the batch retrain decision
-    // row-for-row — counts, drift signals, AND the retrain verdict.
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dir = "/root/testdata/sf0.001"
-    val cents = graft.analytics.LlmOps.serveCentroids(spark, dir)
-    val inserts = spark.read.parquet(s"$dir/embeddings.parquet")
-      .filter($"vec_id" % 4 === 3)
-      .select($"vec_id", $"embedding").as[(Long, Seq[Float])].collect().sortBy(_._1).toSeq
-    assert(inserts.size >= 4, "need enough inserts to micro-batch")
-    val chunks = inserts.grouped((inserts.size + 3) / 4).toSeq
-    val input = MemoryStream[(Long, Seq[Float])]
-    val q = EventStream.toMemorySink(
-      EventStream.retrainInsertCensus(input.toDF().toDF("vec_id", "embedding"), cents),
-      "retrain_census", OutputMode.Complete())
-    try {
-      input.addData(chunks.head); q.processAllAvailable()
-      val partial = spark.table("retrain_census")
-        .agg(org.apache.spark.sql.functions.sum($"n_inserted")).collect()
-        .head.getLong(0)
-      assert(partial == chunks.head.size,
-        s"first snapshot must hold exactly the first micro-batch: $partial")
-      chunks.tail.foreach { ch => input.addData(ch); q.processAllAvailable() }
-      val corpusOcc = graft.analytics.LlmOps.ivfServeAssignTable(spark, dir)
-        .groupBy($"cell").agg(org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("n_corpus"))
-      def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
-        (r.getAs[Long]("cell"), r.getAs[Long]("n_corpus"), r.getAs[Long]("n_inserted"),
-          r.getAs[Long]("n_total"), r.getAs[Double]("frac_inserted"),
-          r.getAs[Double]("skew"), r.getAs[Boolean]("retrain"))).toSeq
-      val got = rows(EventStream.retrainDecision(spark.table("retrain_census"), corpusOcc))
-      val want = rows(graft.analytics.LlmOps.simIvfRetrain(spark, dir))
-      assert(want.exists(_._3 > 0), "batch twin vacuous: no cell received inserts")
-      assert(got == want, s"retrain decision diverged:\n got=$got\n want=$want")
-    } finally q.stop()
-  }
-
-  test("streaming ANN serve rejects a degenerate (zero-norm) query LOUDLY") {
-    // The ADVICE r15 hole: a query whose cosines are all NaN (zero-norm
-    // vector) used to keep the sentinel cell -1, join nothing, and vanish
-    // from the stream. It must now surface as an explicit rejected
-    // verdict (rk 0, cid -1, cos NaN) while normal queries in the same
-    // micro-batch still serve their top-5.
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dir = "/root/testdata/sf0.001"
-    val cents = graft.analytics.LlmOps.serveCentroids(spark, dir)
-    val corpus = graft.analytics.LlmOps.ivfServeAssignTable(spark, dir)
-      .select($"vec_id".as("cid"), $"embedding".as("ce"),
-        $"nrm".as("cn"), $"cell".as("ccell"))
-    val normal = spark.read.parquet(s"$dir/embeddings.parquet")
-      .filter($"vec_id" % 200 === 3)
-      .select($"vec_id", $"embedding").as[(Long, Seq[Float])].head()
-    val degenerate = (-7L, Seq.fill(64)(0.0f))
-    val input = MemoryStream[(Long, Seq[Float])]
-    val q = EventStream.toMemorySink(
-      EventStream.annServe(input.toDF().toDF("vec_id", "embedding"), cents, corpus).toDF(),
-      "ann_serve_degen", OutputMode.Append())
-    try {
-      input.addData(Seq(normal, degenerate)); q.processAllAvailable()
-      val rows = spark.table("ann_serve_degen").collect()
-      val rejected = rows.filter(_.getAs[Long]("qid") == -7L)
-      assert(rejected.length == 1, s"expected ONE rejected verdict, got ${rejected.toSeq}")
-      assert(rejected.head.getAs[Int]("rk") == 0 &&
-        rejected.head.getAs[Long]("cid") == -1L &&
-        rejected.head.getAs[Double]("cos").isNaN,
-        s"rejected verdict malformed: ${rejected.head}")
-      val served = rows.filter(_.getAs[Long]("qid") == normal._1)
-      assert(served.length == 5 && served.map(_.getAs[Int]("rk")).sorted.toSeq == Seq(1, 2, 3, 4, 5),
-        s"normal query no longer serves top-5: ${served.toSeq}")
-    } finally q.stop()
-  }
-
-  test("streaming Lloyd sums compose to the oracle-checked batch sim_ivf_retrain_exec") {
-    // The retrain-EXECUTION twin: insert vectors arriving over 4
-    // micro-batches accumulate per-(cell, pos) quantized component sums
-    // in complete mode; composed batch-side with the corpus sums
-    // (integer adds — bit-equal to the one-pass union sum) the execution
-    // census must reproduce the batch query row-for-row: occupancies,
-    // both skew signals, and the rebalanced verdict.
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dir = "/root/testdata/sf0.001"
-    val cents = graft.analytics.LlmOps.serveCentroids(spark, dir)
-    val inserts = spark.read.parquet(s"$dir/embeddings.parquet")
-      .filter($"vec_id" % 4 === 3)
-      .select($"vec_id", $"embedding").as[(Long, Seq[Float])].collect().sortBy(_._1).toSeq
-    val chunks = inserts.grouped((inserts.size + 3) / 4).toSeq
-    val input = MemoryStream[(Long, Seq[Float])]
-    val q = EventStream.toMemorySink(
-      EventStream.retrainLloydSums(input.toDF().toDF("vec_id", "embedding"), cents),
-      "retrain_sums", OutputMode.Complete())
-    try {
-      chunks.foreach { ch => input.addData(ch); q.processAllAvailable() }
-      def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
-        (r.getAs[Long]("cell"), r.getAs[Long]("n_before"), r.getAs[Long]("n_after"),
-          r.getAs[Double]("skew_before"), r.getAs[Double]("skew_after"),
-          r.getAs[Boolean]("rebalanced"))).toSeq
-      val got = rows(graft.analytics.LlmOps.simIvfRetrainExecFromSums(
-        spark, dir, spark.table("retrain_sums")))
-      val want = rows(graft.analytics.LlmOps.simIvfRetrainExec(spark, dir))
-      assert(want.exists(t => t._2 != t._3), "batch twin vacuous: no occupancy moved")
-      assert(got == want, s"composed retrain exec diverged:\n got=$got\n want=$want")
-    } finally q.stop()
-  }
-
-  test("retrain census buckets a zero-norm insert diagnostically, excluded from drift signals") {
-    // The ADVICE r18 hole: a zero-norm insert made every cosine NaN, so
-    // the packed-centroid fold kept its (-2.0, -1) seed and the sentinel
-    // leaked into the census as a spurious cell, distorting g_cells/skew.
-    // Cell -1 is now a DELIBERATE diagnostic bucket: the degenerate
-    // arrival is counted there (no silent drop), and retrainDecision's
-    // drift signals are computed over real cells only — identical to a
-    // run that never saw the degenerate row.
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dir = "/root/testdata/sf0.001"
-    val cents = graft.analytics.LlmOps.serveCentroids(spark, dir)
-    val normals = spark.read.parquet(s"$dir/embeddings.parquet")
-      .filter($"vec_id" % 4 === 3)
-      .select($"vec_id", $"embedding").as[(Long, Seq[Float])].collect().sortBy(_._1).toSeq
-    val degenerate = (-7L, Seq.fill(64)(0.0f))
-    val corpusOcc = graft.analytics.LlmOps.ivfServeAssignTable(spark, dir)
-      .groupBy($"cell").agg(org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("n_corpus"))
-    def decided(census: org.apache.spark.sql.DataFrame) =
-      EventStream.retrainDecision(census, corpusOcc).collect().map(r =>
-        (r.getAs[Long]("cell"), r.getAs[Long]("n_corpus"), r.getAs[Long]("n_inserted"),
-          r.getAs[Long]("n_total"), r.getAs[Double]("frac_inserted"),
-          r.getAs[Double]("skew"), r.getAs[Boolean]("retrain"))).toSeq
-    def run(data: Seq[(Long, Seq[Float])], sink: String) = {
-      val input = MemoryStream[(Long, Seq[Float])]
-      val q = EventStream.toMemorySink(
-        EventStream.retrainInsertCensus(input.toDF().toDF("vec_id", "embedding"), cents),
-        sink, OutputMode.Complete())
-      try { input.addData(data); q.processAllAvailable() } finally q.stop()
-      spark.table(sink)
-    }
-    val clean = decided(run(normals, "retrain_census_clean"))
-    val withDegen = decided(run(normals :+ degenerate, "retrain_census_degen"))
-    val diag = withDegen.filter(_._1 == -1L)
-    assert(diag.length == 1 && diag.head._3 == 1L,
-      s"zero-norm insert must land in the -1 diagnostic bucket exactly once: $withDegen")
-    assert(withDegen.filterNot(_._1 == -1L) == clean,
-      s"real cells' counts and drift signals must be untouched by the degenerate row:\n" +
-        s" clean=$clean\n degen=$withDegen")
-  }
-
-  test("streaming PII census equals the oracle-checked batch txt_pii_census per source") {
-    // The privacy-health-consistency contract: the same documents, fed
-    // as a stream in 4 micro-batches, scored with the same scan-side PII
-    // fragment, must accumulate to the batch census exactly — minus the
-    // '*' rollup row, the one thing a complete-mode streaming aggregation
-    // cannot express.
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dir = "/root/testdata/sf0.001"
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-      .select($"doc_id", $"source", $"text")
-      .as[(Long, String, String)].collect().sortBy(_._1).toSeq
-    val chunks = docs.grouped((docs.size + 3) / 4).toSeq
-    val input = MemoryStream[(Long, String, String)]
-    val q = EventStream.toMemorySink(
-      EventStream.piiCensus(input.toDF().toDF("doc_id", "source", "text")),
-      "pii_census", OutputMode.Complete())
-    def key(r: org.apache.spark.sql.Row) = r.getAs[String]("source") ->
-      ((r.getAs[Long]("n_docs"), r.getAs[Long]("n_docs_pii"), r.getAs[Long]("n_urls"),
-        r.getAs[Long]("n_emails"), r.getAs[Long]("n_phones"), r.getAs[Long]("n_ips"),
-        r.getAs[Double]("pii_doc_frac")))
-    try {
-      chunks.foreach { ch => input.addData(ch); q.processAllAvailable() }
-      val got = spark.table("pii_census").collect().map(key).toMap
-      val want = graft.analytics.LlmOps.txtPiiCensus(spark, dir).collect()
-        .filter(_.getAs[String]("source") != "*").map(key).toMap
-      assert(want.nonEmpty && want.values.exists(_._2 > 0), s"parity vacuous: $want")
-      assert(got == want, s"stream PII census diverged:\n got=$got\nwant=$want")
-    } finally q.stop()
-  }
-
-  test("streaming CLIP gate verdicts accumulate to the oracle-checked batch census") {
-    // The multimodal family's streaming twin: image-text pairs arriving
-    // over 3 micro-batches, scored with the shared pair/cosine kernel
-    // against the static embedding table, must admit exactly what the
-    // batch mm_clip_filter census counts — matched (even-doc) pairs all
-    // admitted, and the 0.28 gate must genuinely cut some odd pairs.
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dir = "/root/testdata/sf0.001"
-    val emb = graft.analytics.Tables.embeddings(spark, dir)
-    val arriving = graft.analytics.Tables.documents(spark, dir)
-      .select($"doc_id", $"source").as[(Long, String)].collect().sortBy(_._1).toSeq
-    val input = MemoryStream[(Long, String)]
-    val q = EventStream.toMemorySink(
-      EventStream.clipAdmission(input.toDF().toDF("doc_id", "source"), emb),
-      "clip_gate", OutputMode.Append())
-    try {
-      arriving.grouped((arriving.size + 2) / 3).foreach { ch =>
-        input.addData(ch); q.processAllAvailable()
+  /** Forward as-of attribution (q37): each view attributes to the user's
+    * NEXT purchase inside the 3-day horizon. State is a per-user
+    * pending-view buffer: a purchase flushes it, any event lets views
+    * older than the horizon fall out, and an event-time timeout clears
+    * an idle user's buffer. */
+  def attributeForward(events: Dataset[Event]): Dataset[AsofOut] = {
+    import events.sparkSession.implicits._
+    val horizonNs = 259200L * 1000000000L
+    events.withWatermark("ts", "10 minutes")
+      .as[Event]
+      .groupByKey(_.user_id)
+      .flatMapGroupsWithState[List[PendingView], AsofOut](
+        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
+        (uid: Long, batch: Iterator[Event], state: GroupState[List[PendingView]]) =>
+          if (state.hasTimedOut) { state.remove(); Iterator.empty }
+          else {
+            val sorted = batch.toSeq.sortBy(e => (ns(e.ts), e.event_id))
+            var pending = state.getOption.getOrElse(Nil)
+            val out = List.newBuilder[AsofOut]
+            sorted.foreach { e =>
+              val now = ns(e.ts)
+              e.event_type match {
+                case "view" =>
+                  pending = (pending :+ PendingView(e.event_id, now))
+                    .filter(v => now - v.ns <= horizonNs)
+                case "purchase" =>
+                  pending.foreach { v =>
+                    val d = now - v.ns
+                    if (d >= 0 && d <= horizonNs)
+                      out += AsofOut(v.view_id, uid, e.event_id, d / 1000000000L)
+                  }
+                  pending = Nil
+                case _ =>
+                  pending = pending.filter(v => now - v.ns <= horizonNs)
+              }
+            }
+            if (pending.isEmpty) state.remove()
+            else {
+              state.update(pending)
+              val lastMs = sorted.lastOption.map(_.ts.getTime).getOrElse(0L)
+              state.setTimeoutTimestamp(lastMs + horizonNs / 1000000L + 1)
+            }
+            out.result().iterator
+          }
       }
-      val verdicts = spark.table("clip_gate").collect()
-      val gotPairs = verdicts.groupBy(_.getAs[String]("source"))
-        .map { case (s, vs) => s -> (vs.length.toLong,
-          vs.count(_.getAs[Boolean]("admitted")).toLong) }
-      val want = graft.analytics.LlmOps.mmClipFilter(spark, dir).collect()
-        .map(r => r.getAs[String]("source") ->
-          (r.getAs[Long]("n_pairs"), r.getAs[Long]("n_kept"))).toMap
-      assert(want.values.map(_._1).sum > want.values.map(_._2).sum,
-        s"parity vacuous: the gate cuts nothing at this SF: $want")
-      assert(gotPairs == want, s"stream gate $gotPairs diverged from batch census $want")
-      val evens = verdicts.filter(_.getAs[Long]("doc_id") % 2 == 0)
-      assert(evens.nonEmpty && evens.forall(_.getAs[Boolean]("admitted")),
-        "matched (even-doc) pairs must all pass the gate (cos = 1)")
-    } finally q.stop()
   }
 
-  test("streaming takedown ledger accumulates to the batch census's removed column") {
-    // The compliance-consistency contract: the planted takedown list,
-    // delivered as requests over 3 micro-batches, joined to the SAME
-    // per-row state layout the batch census aggregates, must accumulate
-    // (complete mode — the 4-row ledger IS the stream state) to exactly
-    // dd_takedown's n_removed for every doc-keyed state.
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dir = "/root/testdata/sf0.001"
-    val states = graft.analytics.LlmOps.takedownDocStateRows(spark, dir)
-      .as[(Long, String, Long, Long)].collect().toSeq // static snapshot,
-      .toDF("state_id", "state", "doc_id", "w")       // as a deployed ledger would hold
-    val list = graft.analytics.LlmOps.takedownDocFlags(spark, dir)
-      .filter($"gone").select($"doc_id").as[Long].collect().sorted.toSeq
-    assert(list.size > 3, s"takedown list too small to micro-batch: $list")
-    val input = MemoryStream[Long]
-    val q = EventStream.toMemorySink(
-      EventStream.takedownCensus(input.toDF().toDF("doc_id"), states),
-      "takedown_ledger", OutputMode.Complete())
-    try {
-      list.grouped((list.size + 2) / 3).foreach { ch =>
-        input.addData(ch); q.processAllAvailable()
+  /** Ordered funnel (q40): emits a row the moment a user FIRST reaches
+    * each stage of signup → view → click → purchase, a stage counting
+    * only strictly after the previous one. State is four optional
+    * epoch-nanos per user and is kept after completion, so a later
+    * signup cannot re-open stage 1. */
+  def funnelStages(events: Dataset[Event]): Dataset[FunnelOut] = {
+    import events.sparkSession.implicits._
+    val stageOf = Map("signup" -> 1, "view" -> 2, "click" -> 3, "purchase" -> 4)
+    events
+      .groupByKey(_.user_id)
+      .flatMapGroupsWithState[FunnelState, FunnelOut](
+        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
+        (uid: Long, batch: Iterator[Event], state: GroupState[FunnelState]) =>
+          val sorted = batch.toSeq.sortBy(e => (ns(e.ts), e.event_id))
+          var s = state.getOption.getOrElse(FunnelState(None, None, None, None))
+          val out = List.newBuilder[FunnelOut]
+          sorted.foreach { e =>
+            stageOf.get(e.event_type).foreach { k =>
+              val now = ns(e.ts)
+              // stage 1 is unconstrained (every real ns > MinValue)
+              val prev = k match {
+                case 1 => Some(Long.MinValue)
+                case 2 => s.t1
+                case 3 => s.t2
+                case _ => s.t3
+              }
+              val unreached = (k match {
+                case 1 => s.t1; case 2 => s.t2; case 3 => s.t3; case _ => s.t4
+              }).isEmpty
+              if (unreached && prev.exists(now > _)) {
+                s = k match {
+                  case 1 => s.copy(t1 = Some(now))
+                  case 2 => s.copy(t2 = Some(now))
+                  case 3 => s.copy(t3 = Some(now))
+                  case _ => s.copy(t4 = Some(now))
+                }
+                out += FunnelOut(uid, k, e.event_type, e.event_id)
+              }
+            }
+          }
+          state.update(s)
+          out.result().iterator
       }
-      val got = spark.table("takedown_ledger").collect()
-        .map(r => r.getAs[String]("state") -> r.getAs[Long]("n_removed")).toMap
-      val want = graft.analytics.LlmOps.ddTakedown(spark, dir).collect()
-        .filter(_.getAs[String]("state") != "frontier")
-        .map(r => r.getAs[String]("state") -> r.getAs[Long]("n_removed")).toMap
-      assert(want.keySet == Set("corpus", "fingerprints", "band_state", "shard_manifest")
-        && want.values.forall(_ > 0), s"parity vacuous: batch census $want")
-      assert(got == want, s"stream ledger $got diverged from batch census $want")
-    } finally q.stop()
-  }
-
-  test("streaming frontier takedown emits each URL exactly when its LAST holder is tombstoned") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // Part 1 — parity on the real corpus: after the full planted list
-    // drains, the removed-URL set equals the batch frontier frame's
-    // bool_and(gone) rows.
-    val dir = "/root/testdata/sf0.001"
-    val holders = graft.analytics.LlmOps.takedownFrontierHolders(spark, dir)
-      .as[(Long, String, Long)].collect().toSeq
-      .toDF("doc_id", "url_norm", "n_holders")
-    val list = graft.analytics.LlmOps.takedownDocFlags(spark, dir)
-      .filter($"gone").select($"doc_id").as[Long].collect().sorted.toSeq
-    val input = MemoryStream[Long]
-    val q = EventStream.toMemorySink(
-      EventStream.frontierTakedown(input.toDF().toDF("doc_id"), holders).toDF(),
-      "frontier_takedown", OutputMode.Append())
-    try {
-      list.grouped((list.size + 2) / 3).foreach { ch =>
-        input.addData(ch); q.processAllAvailable()
-      }
-      val got = spark.table("frontier_takedown").collect()
-        .map(_.getAs[String]("url_norm")).toSet
-      val frontier = graft.analytics.LlmOps.takedownStates(spark, dir)
-        .collectFirst { case (_, "frontier", df) => df }.get.collect()
-      val want = frontier.filter(_.getAs[Boolean]("gone"))
-        .map(_.getAs[String]("key")).toSet
-      assert(want.nonEmpty && want.size < frontier.length,
-        "parity vacuous: takedown removes nothing (or everything) from the frontier")
-      assert(got == want,
-        s"removed-URL sets diverged: extra=${got -- want} missing=${want -- got}")
-    } finally q.stop()
-
-    // Part 2 — the cross-batch all-holders semantics on a planted holder
-    // graph: url "u" has two holders split across micro-batches and must
-    // be emitted only in the SECOND batch; single-holder "v" emits in the
-    // first; "w" keeps a surviving holder and must never emit.
-    val g = Seq((1L, "u", 2L), (2L, "u", 2L), (3L, "v", 1L), (4L, "w", 2L), (5L, "w", 2L))
-      .toDF("doc_id", "url_norm", "n_holders")
-    val input2 = MemoryStream[Long]
-    val q2 = EventStream.toMemorySink(
-      EventStream.frontierTakedown(input2.toDF().toDF("doc_id"), g).toDF(),
-      "frontier_takedown2", OutputMode.Append())
-    try {
-      input2.addData(1L, 3L, 4L); q2.processAllAvailable()
-      val afterB1 = spark.table("frontier_takedown2").collect()
-        .map(_.getAs[String]("url_norm")).toSet
-      assert(afterB1 == Set("v"), s"batch 1 should remove only v, got $afterB1")
-      input2.addData(2L); q2.processAllAvailable()
-      val afterB2 = spark.table("frontier_takedown2").collect()
-        .map(r => r.getAs[String]("url_norm") -> r.getAs[Long]("last_doc")).toMap
-      assert(afterB2 == Map("v" -> 3L, "u" -> 2L),
-        s"after batch 2 expected u (last holder doc 2) and v, got $afterB2")
-    } finally q2.stop()
-  }
-
-  test("streaming snapshot diff classifies v2 fetches to the batch categories; removal stays batch") {
-    // The incremental half of dd_snapshot_diff: v2 fetches arriving over
-    // micro-batches, classified against the static v1 fingerprint state,
-    // must census to EXACTLY the batch diff's added/changed/unchanged
-    // rows on the planted mod-7 corpus. 'removed' is the documented batch
-    // boundary — the spec asserts the batch diff HAS it and the stream
-    // result does not (absence mid-crawl is not evidence of removal).
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{expr => fexpr, md5}
-    implicit val sqlCtx = spark.sqlContext
-    val dir = "/root/testdata/sf0.001"
-    val docs = graft.analytics.Tables.documents(spark, dir)
-    val v1Fp = docs.filter(fexpr(graft.analytics.LlmOps.snapV1Pred))
-      .select($"doc_id", md5($"text").as("fp1"))
-      .as[(Long, String)].collect().toSeq
-      .toDF("doc_id", "fp1") // the static table the previous crawl published
-    val arrivals = docs.filter(fexpr(graft.analytics.LlmOps.snapV2Pred))
-      .select($"doc_id", fexpr(graft.analytics.LlmOps.snapRev2Sql).as("text"))
-      .as[(Long, String)].collect().sortBy(_._1).toSeq
-    val input = MemoryStream[(Long, String)]
-    val q = EventStream.toMemorySink(
-      EventStream.snapshotDiff(input.toDF().toDF("doc_id", "text"), v1Fp),
-      "snapshot_diff", OutputMode.Append())
-    try {
-      arrivals.grouped((arrivals.size + 2) / 3).foreach { ch =>
-        input.addData(ch); q.processAllAvailable()
-      }
-      val got = spark.table("snapshot_diff").collect()
-        .groupBy(_.getAs[String]("category")).view.mapValues(_.length.toLong).toMap
-      val batch = graft.analytics.LlmOps.ddSnapshotDiff(spark, dir).collect()
-        .map(r => r.getAs[String]("category") -> r.getAs[Long]("n_docs")).toMap
-      assert(batch.keySet == Set("added", "removed", "changed", "unchanged")
-        && batch.values.forall(_ > 0), s"parity vacuous: batch diff $batch")
-      assert(got == batch - "removed",
-        s"stream census $got diverged from batch ${batch - "removed"}")
-      // every fetch got exactly one verdict
-      assert(spark.table("snapshot_diff").count() == arrivals.size)
-    } finally q.stop()
-  }
-
-  test("re-delivered requests never double-count: ledger, frontier, host quota") {
-    // The round-16 verdict's ask #4: the stateful streaming twins must
-    // ENFORCE the distinct-arrival precondition, not document it — an
-    // at-least-once transport re-delivers, and a double-counted deletion
-    // ledger / re-emitted frontier removal / double-spent quota is a
-    // compliance bug. Every chunk below is delivered TWICE.
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dir = "/root/testdata/sf0.001"
-
-    // 1. takedown ledger: duplicate deliveries within AND across batches
-    val states = graft.analytics.LlmOps.takedownDocStateRows(spark, dir)
-      .as[(Long, String, Long, Long)].collect().toSeq
-      .toDF("state_id", "state", "doc_id", "w")
-    val list = graft.analytics.LlmOps.takedownDocFlags(spark, dir)
-      .filter($"gone").select($"doc_id").as[Long].collect().sorted.toSeq
-    val input = MemoryStream[Long]
-    val q = EventStream.toMemorySink(
-      EventStream.takedownCensus(input.toDF().toDF("doc_id"), states),
-      "takedown_ledger_rd", OutputMode.Complete())
-    try {
-      list.grouped((list.size + 2) / 3).foreach { ch =>
-        input.addData(ch ++ ch); q.processAllAvailable() // in-batch duplicates
-      }
-      input.addData(list.take(2)); q.processAllAvailable() // cross-batch re-delivery
-      val got = spark.table("takedown_ledger_rd").collect()
-        .map(r => r.getAs[String]("state") -> r.getAs[Long]("n_removed")).toMap
-      val want = graft.analytics.LlmOps.ddTakedown(spark, dir).collect()
-        .filter(_.getAs[String]("state") != "frontier")
-        .map(r => r.getAs[String]("state") -> r.getAs[Long]("n_removed")).toMap
-      assert(got == want, s"re-delivery double-counted the ledger: $got vs $want")
-      // read-back seeding: a drained sink missing a state still publishes
-      // the full batch-comparable ledger, absent states at 0
-      val partial = spark.table("takedown_ledger_rd").filter($"state" =!= "corpus")
-      val seeded = EventStream.ledgerWithSeeds(partial, states).collect()
-        .map(r => r.getAs[String]("state") -> r.getAs[Long]("n_removed")).toMap
-      assert(seeded == want + ("corpus" -> 0L),
-        s"seeded ledger must publish every state: $seeded")
-    } finally q.stop()
-
-    // 2. frontier: re-delivery before completion must not advance the
-    // count; re-delivery after completion must not re-emit the removal
-    val g = Seq((1L, "u", 2L), (2L, "u", 2L), (3L, "w", 2L))
-      .toDF("doc_id", "url_norm", "n_holders")
-    val input2 = MemoryStream[Long]
-    val q2 = EventStream.toMemorySink(
-      EventStream.frontierTakedown(input2.toDF().toDF("doc_id"), g).toDF(),
-      "frontier_rd", OutputMode.Append())
-    try {
-      input2.addData(1L, 1L); q2.processAllAvailable() // in-batch duplicate
-      input2.addData(1L); q2.processAllAvailable()     // cross-batch re-delivery
-      assert(spark.table("frontier_rd").isEmpty,
-        "re-delivered first holder must not complete u (1 of 2 tombstoned)")
-      input2.addData(2L); q2.processAllAvailable()     // genuine last holder
-      input2.addData(2L, 1L); q2.processAllAvailable() // re-delivery AFTER completion
-      val rows = spark.table("frontier_rd").collect()
-        .map(r => r.getAs[String]("url_norm") -> r.getAs[Long]("last_doc"))
-      assert(rows.toSeq == Seq("u" -> 2L),
-        s"frontier removal must emit exactly once: ${rows.toSeq}")
-    } finally q2.stop()
-
-    // 3. host quota: a re-delivered fetch neither re-spends quota nor
-    // re-emits a verdict; later NEW fetches still spend correctly
-    val input3 = MemoryStream[(Long, String)]
-    val q3 = EventStream.toMemorySink(
-      EventStream.hostCapAdmission(input3.toDF().toDF("doc_id", "url"), 2).toDF(),
-      "host_quota_rd", OutputMode.Append())
-    try {
-      input3.addData((1L, "http://a.com/1"), (2L, "http://a.com/2"), (2L, "http://a.com/2"))
-      q3.processAllAvailable()
-      input3.addData((2L, "http://a.com/2"), (3L, "http://a.com/3")) // re-delivery + new
-      q3.processAllAvailable()
-      val vs = spark.table("host_quota_rd").collect()
-        .map(r => r.getAs[Long]("doc_id") -> r.getAs[Boolean]("admitted")).toMap
-      assert(spark.table("host_quota_rd").count() == 3,
-        "exactly one verdict per unique fetch")
-      assert(vs == Map(1L -> true, 2L -> true, 3L -> false),
-        s"cap-2 quota must admit {1,2} and refuse 3: $vs")
-      // the drop counter makes the watermark's silent drops observable:
-      // two drops precede doc 3's verdict (the in-batch duplicate of 2 in
-      // batch 1, the cross-batch re-delivery of 2 in batch 2), so its
-      // verdict must carry host_dropped = 2 — a violated replay contract
-      // (drops outpacing known re-deliveries) is detectable from output
-      val d3 = spark.table("host_quota_rd").collect()
-        .find(_.getAs[Long]("doc_id") == 3L).get.getAs[Long]("host_dropped")
-      assert(d3 == 2L, s"doc 3's verdict must report 2 prior drops, got $d3")
-    } finally q3.stop()
   }
 }
