@@ -5,12 +5,8 @@ import org.apache.spark.sql.graft.GraftFunctions
 
 /** The one place a graft process builds its SparkSession. Every main and
   * the spec session go through [[local]], so they all read timestamps,
-  * casts and parquet the same way and all have graft's SQL functions.
-  *
-  * The functions come from [[GraftFunctions.register]], not from
-  * `withExtensions(new GraftExtensions)`: the extension also installs the
-  * `DotProductRewrite` optimizer rule, which would change the plans of
-  * queries that spell a dot product as `zip_with` + `aggregate`. */
+  * casts and parquet the same way and all have graft's SQL functions
+  * (from [[GraftFunctions.register]]). */
 object GraftSession {
   /** Local worker threads: `SPARK_GRAFT_CPUS`, default 4. */
   def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(4)

@@ -81,7 +81,7 @@ private[analytics] trait DedupOps {
   def ddContainmentThin(spark: SparkSession, dir: String): DataFrame = {
     // same memo key as the state build — whichever runs first pays the
     // one shingle pass, the other reads the checkpointed types-sized leaf
-    val dfc = memoRaw(spark, dir, "containment_dfc") {
+    val dfc = memo(spark, dir, "containment_dfc") {
       checkpointLeaf(spark, Tables.documents(spark, dir)
         .select(col("doc_id"), col("lang"), explode_outer(shingleHash(col("text"))).as("s"))
         .filter(col("s").isNotNull)
@@ -187,8 +187,8 @@ private[analytics] trait DedupOps {
     * their Duck mirrors; a drifted copy of this predicate would let the
     * census and the state it claims to census disagree while every
     * oracle stayed green. */
-  private[graft] lazy val urlBatchPredSql = "doc_id % 4 = 3"
-  private[graft] lazy val urlFrontierPredSql = "doc_id % 4 <> 3"
+  private[analytics] lazy val urlBatchPredSql = "doc_id % 4 = 3"
+  private[analytics] lazy val urlFrontierPredSql = "doc_id % 4 <> 3"
 
 
   /** Shared derivation: doc_id → (doc_id, url, url_norm). Spec-visible so
@@ -520,7 +520,7 @@ private[analytics] trait DedupOps {
     * all of them, so the list intersects every derived state at every
     * SF). ONE fragment interpolated into the Spark filters AND the Duck
     * mirror, like the band/cap constants. */
-  private[graft] lazy val takedownSql = "doc_id % 23 = 11"
+  private[analytics] lazy val takedownSql = "doc_id % 23 = 11"
 
 
   /** ONE documents pass behind the doc-keyed takedown states: per doc —
@@ -681,7 +681,7 @@ private[analytics] trait DedupOps {
     * fingerprint spine and prewarmed as explicitly-timed state (see
     * [[stateBuilders]]), like the jaccard pairs it parallels. */
   private[analytics] def containmentPairs(spark: SparkSession, dir: String): DataFrame =
-    memoRaw(spark, dir, "containment_pairs")(buildContainmentPairs(spark, dir))
+    memo(spark, dir, "containment_pairs")(buildContainmentPairs(spark, dir))
 
 
   private[analytics] def buildContainmentPairs(spark: SparkSession, dir: String): DataFrame = {
@@ -707,7 +707,7 @@ private[analytics] trait DedupOps {
     // 31-36 s per census run at sf10). Built here from the persisted sh
     // when the state build runs first; built stand-alone by the census
     // accessor otherwise — identical content either way.
-    val dfc = memoRaw(spark, dir, "containment_dfc") {
+    val dfc = memo(spark, dir, "containment_dfc") {
       checkpointLeaf(spark, sh.groupBy(col("s"), col("lang"))
         .agg(count(lit(1)).as("df")).filter(col("df") <= StopShingleCap))
     }
@@ -785,16 +785,10 @@ private[analytics] trait DedupOps {
         (col("common") / col("nb")).as("containment"), floorB.as("ok")))
       .filter(col("containment") >= 0.5 && col("ok"))
       .select(col("ia"), col("ib"), col("containment"))
-    // RDD-level checkpoint for the same reason as buildJaccardPairs: the
-    // DataFrame variant derives new child RDDs per access, so no handle
-    // to the persisted RDD would survive for release
-    val rdd = plan.rdd
-    rdd.localCheckpoint()
-    rdd.count()
-    trackRdd(rdd)
+    val pairs = checkpointLeaf(spark, plan)
     kept.unpersist(blocking = true)
     if (thinActive) den.unpersist(blocking = true)
-    spark.createDataFrame(rdd, plan.schema)
+    pairs
     } finally releaseShingleState(spark, dir, hold)
   }
 
@@ -904,18 +898,20 @@ private[analytics] trait DedupOps {
 
   /** All blocked shingle-Jaccard pairs (no threshold/limit) — shared by the
     * reporting query above, the dedup action, and the clustering query.
-    * Memoized through [[memoRaw]] (fingerprinted like every other index
+    * Memoized through [[memo]] (fingerprinted like every other index
     * table, so a regenerated dir rebuilds instead of serving stale pairs):
     * the three consumers get the SAME frame instance, so the checkpointed
     * pair table is registered once and released by [[releaseCaches]]. */
   private[analytics] def jaccardPairs(spark: SparkSession, dir: String): DataFrame =
-    memoRaw(spark, dir, "jaccard_pairs")(buildJaccardPairs(spark, dir))
+    memo(spark, dir, "jaccard_pairs")(buildJaccardPairs(spark, dir))
 
 
-  /** Eager RDD-level local checkpoint of a derived frame — the
-    * buildJaccardPairs materialization pattern as a helper: consumers
-    * plan over a LEAF, and the tracked RDD handle keeps the release
-    * real. */
+  /** Eager RDD-level local checkpoint of a derived frame: consumers plan
+    * over a LEAF, and the tracked RDD handle keeps the release real. At
+    * the RDD level, not DataFrame.localCheckpoint: the frame the
+    * DataFrame variant returns derives NEW child RDDs on every .rdd
+    * access, so no handle to the actually-persisted RDD would survive for
+    * releaseCaches — unpersisting a derived child frees nothing. */
   private[analytics] def checkpointLeaf(spark: SparkSession, plan: DataFrame): DataFrame = {
     val rdd = plan.rdd
     rdd.localCheckpoint()
@@ -939,7 +935,7 @@ private[analytics] trait DedupOps {
     * ([[jaccardBins]]) already require — no additional build anywhere
     * the censuses run. */
   private[analytics] def jaccardPairsFull02(spark: SparkSession, dir: String): DataFrame =
-    memoRaw(spark, dir, "jaccard_pairs_full_02")(checkpointLeaf(spark,
+    memo(spark, dir, "jaccard_pairs_full_02")(checkpointLeaf(spark,
       jaccardPairs(spark, dir).filter(col("jaccard") >= 0.2)
         .select(col("ia"), col("ib"), col("jaccard"))))
 
@@ -964,7 +960,7 @@ private[analytics] trait DedupOps {
     * retrieved edges is not assumed away: [[ddBandGap]] is the
     * per-corpus accounting. */
   private[analytics] def bandedJaccardPairs(spark: SparkSession, dir: String): DataFrame =
-    memoRaw(spark, dir, "jaccard_pairs_banded") {
+    memo(spark, dir, "jaccard_pairs_banded") {
       val hold = acquireShingleState(spark, dir)
       try {
       val (capped, sizes) = (hold.capped, hold.sizes)
@@ -1024,7 +1020,7 @@ private[analytics] trait DedupOps {
     * pair table directly; `GRAFT_UNGATED_EDGES=1` is the audited escape
     * for deliberately running a lossy dedup anyway. */
   private[analytics] def jaccardEdges08(spark: SparkSession, dir: String): DataFrame =
-    memoRaw(spark, dir, "jaccard_edges_08") {
+    memo(spark, dir, "jaccard_edges_08") {
       val edges = checkpointLeaf(spark,
         bandedJaccardPairs(spark, dir).filter(col("jaccard") >= 0.8)
           .select(col("ia"), col("ib")))
@@ -1181,21 +1177,10 @@ private[analytics] trait DedupOps {
     // block-bounded (never doc²), so the checkpoint is small at any scale;
     // on a real cluster this becomes a reliable checkpoint / staging table
     // — which is what a production dedup pipeline materializes anyway.
-    // Checkpoint at the RDD level (not DataFrame.localCheckpoint): the
-    // frame returned by the DataFrame variant derives NEW child RDDs on
-    // every .rdd access, so no handle to the actually-persisted RDD
-    // survives for releaseCaches — unpersisting a derived child frees
-    // nothing. Holding the checkpointed RDD itself makes the release real.
-    val jpPlan = common
+    checkpointLeaf(spark, common
       .join(sizes.toDF("ia", "na"), "ia")
       .join(sizes.toDF("ib", "nb"), "ib")
-      .withColumn("jaccard", col("common") / (col("na") + col("nb") - col("common")))
-    val jpRdd = jpPlan.rdd
-    jpRdd.localCheckpoint()
-    jpRdd.count() // materialize eagerly; lineage truncates here
-    val jp = spark.createDataFrame(jpRdd, jpPlan.schema)
-    trackRdd(jpRdd)
-    jp
+      .withColumn("jaccard", col("common") / (col("na") + col("nb") - col("common"))))
     // the shingle tables only served the builds — the ref-counted release
     // (in the finally, so a failed build never strands the count) frees
     // them the moment the LAST pair builder has checkpointed: executor
@@ -1252,9 +1237,9 @@ private[analytics] trait DedupOps {
     * [[ddClusterHist]] through it, and [[ddDedupKeepBest]]). A production
     * dedup pipeline materializes exactly this cluster-assignment table
     * once per corpus version. The CC loop already local-checkpoints its
-    * result, so memoRaw (no double-caching). */
+    * result, so plain [[memo]] (no double-caching). */
   private[analytics] def jaccardCcLabels(spark: SparkSession, dir: String): DataFrame =
-    memoRaw(spark, dir, "cc_labels_08") {
+    memo(spark, dir, "cc_labels_08") {
       val edges = jaccardEdges08(spark, dir)
         .select(col("ia").as("a"), col("ib").as("b"))
       val (labels, _) = connectedComponents(spark, edges)
@@ -1617,40 +1602,15 @@ private[analytics] trait DedupOps {
   private[analytics] def minhashWideSig(spark: SparkSession, dir: String): DataFrame =
     memoSig(spark, dir, "minhash_wide_sig") {
       // the 64-perm signature is by construction the first 64 slices of
-      // the 128-perm table (same "w<d>:" seeds, same slice scheme — the
-      // buildMinhashWideSigN Scaladoc's own claim), so derive it from the
-      // memoized 128 table instead of paying a second full tokenize +
-      // shingle + digest pass over the corpus (round 20). The stand-alone
-      // builder stays for the spec that pins the equivalence.
+      // the 128-perm table (same "w<d>:" seeds, same slice scheme), so
+      // derive it from the memoized 128 table instead of paying a second
+      // full tokenize + shingle + digest pass over the corpus (round 20).
+      // The stand-alone builder (DeclarativeScans in src/test) stays for
+      // the spec that pins the equivalence.
       minhashWide128Arr(spark, dir)
         .select(col("doc_id") +:
           (0 until MinhashWidePerms).map(j => col("mh").getItem(j).as(s"mh$j")): _*)
     }
-
-
-  private[analytics] def buildMinhashWideSig(spark: SparkSession, dir: String): DataFrame =
-    buildMinhashWideSigN(spark, dir, MinhashWidePerms)
-
-
-  /** The wide-signature build generalized over permutation count —
-    * perms/4 seeded digests ("w<d>:" prefixes keep them independent of
-    * the didactic path's md5(s) / md5('x'||s) family; the 64-perm
-    * signature is by construction the first 64 slices of the 128-perm
-    * one). One map-side-combinable min-aggregation whatever the width. */
-  private[graft] def buildMinhashWideSigN(spark: SparkSession, dir: String, perms: Int): DataFrame = {
-    val sh = Tables.documents(spark, dir)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .withColumn("toks", expr(toksSpark))
-      .select(col("doc_id"), explode_outer(expr(shinglesSpark)).as("s"))
-      .filter(col("s").isNotNull)
-    val hashed = (0 until perms / 4).foldLeft(sh) { (df, d) =>
-      df.withColumn(s"h$d", md5(concat(lit(s"w$d:"), col("s"))))
-    }
-    val mhs = (0 until perms).map { j =>
-      min(substring(col(s"h${j / 4}"), 1 + 8 * (j % 4), 8)).as(s"mh$j")
-    }
-    hashed.groupBy(col("doc_id")).agg(mhs.head, mhs.tail: _*)
-  }
 
 
   /** TRUE-production-width MinHash signatures — 128 permutations (Lee et
@@ -1671,8 +1631,9 @@ private[analytics] trait DedupOps {
     * slices in a primitive int buffer, replacing 32 md5 projections + 128
     * substring + 128 string min-aggregates per shingle row, and the array
     * blob caches ~1.5 s faster than 128 string columns at sf0.1. Slices
-    * are bit-identical to the declarative [[buildMinhashWideSigN]]
-    * (LlmOpsSpec pins it), so every mirror and consumer is unchanged. */
+    * are bit-identical to the retired declarative builder (DeclarativeScans
+    * in src/test; LlmOpsSpec pins it), so every mirror and consumer is
+    * unchanged. */
   private[analytics] def minhashWide128Arr(spark: SparkSession, dir: String): DataFrame =
     memoSig(spark, dir, "minhash_wide128_sig") {
       Tables.documents(spark, dir)
@@ -1884,12 +1845,6 @@ private[analytics] trait DedupOps {
     simhashSig(spark, dir).select(col("doc_id"), col("simhash")).orderBy(col("doc_id"))
 
 
-  /** The unordered signature table — what the pairs query materializes.
-    * NO orderBy here: a global sort ahead of a checkpoint would run the
-    * whole tokenize pipeline twice (the range partitioner's sampling pass
-    * executes the child once before the real pass), and join consumers
-    * don't care about order. The driver-facing [[ddSimhash]] adds the sort
-    * on top for its deterministic output contract. */
   /** Deterministic 1/2 content sample: docs whose md5(text) first hex
     * nibble is even. Content-keyed (not id-keyed) so the sample is stable
     * under re-ingestion/re-sharding, and expressible verbatim in DuckDB —
@@ -1897,7 +1852,14 @@ private[analytics] trait DedupOps {
   private[analytics] lazy val evenFpSpark =
     "substr(md5(text), 1, 1) IN ('0','2','4','6','8','a','c','e')"
 
-  /** Memoized per (session, dir, width): ONE signature build serves both
+  /** The unordered signature table — what the pairs query materializes.
+    * NO orderBy here: a global sort ahead of a checkpoint would run the
+    * whole tokenize pipeline twice (the range partitioner's sampling pass
+    * executes the child once before the real pass), and join consumers
+    * don't care about order. The driver-facing [[ddSimhash]] adds the sort
+    * on top for its deterministic output contract.
+    *
+    * Memoized per (session, dir, width): ONE signature build serves both
     * the signature-reporting query and the pairs query of its width (and
     * is prewarmed by [[stateBuilders]] so neither absorbs the build into
     * its floor). The 16-bit table carries the [[evenFpSpark]] flag as a
@@ -2305,17 +2267,6 @@ private[analytics] trait DedupOps {
   }
 
 
-  /** PRODUCTION-WIDTH (8-token) decontamination with an overlap that is
-    * real by construction: the benchmark suite is built from genuine
-    * 20-token excerpts (token positions 5..24) of the docs with
-    * doc_id ≡ 7 mod 89 — the way real eval sets end up contaminated, by
-    * containing verbatim passages that also live in the crawl. Every
-    * corpus doc sharing at least one 8-token window with any excerpt is
-    * flagged (the excerpt sources themselves flag by construction, ≥ 1
-    * per 89 docs at every SF, so the cross-engine check can't go
-    * vacuous). Same scale shape as [[ddContamination]]: the excerpt side
-    * is tiny and broadcast, only 16-hex fingerprints join, the corpus
-    * text never shuffles. */
   /** The benchmark suite's excerpt windows — ONE construction (mod-89
     * items, 20-token excerpts at positions 5..24, 8-token PassageHash
     * windows) shared by BOTH contamination directions, so the corpus-side
@@ -2334,6 +2285,18 @@ private[analytics] trait DedupOps {
       .filter(col("bw").isNotNull)
       .distinct()
 
+
+  /** PRODUCTION-WIDTH (8-token) decontamination with an overlap that is
+    * real by construction: the benchmark suite is built from genuine
+    * 20-token excerpts (token positions 5..24) of the docs with
+    * doc_id ≡ 7 mod 89 — the way real eval sets end up contaminated, by
+    * containing verbatim passages that also live in the crawl. Every
+    * corpus doc sharing at least one 8-token window with any excerpt is
+    * flagged (the excerpt sources themselves flag by construction, ≥ 1
+    * per 89 docs at every SF, so the cross-engine check can't go
+    * vacuous). Same scale shape as [[ddContamination]]: the excerpt side
+    * is tiny and broadcast, only 16-hex fingerprints join, the corpus
+    * text never shuffles. */
   def ddContamination8(spark: SparkSession, dir: String): DataFrame = {
     val bench = benchExcerptWindows(spark, dir).select(col("bw")).distinct()
     passageWindows(spark, dir, 8)

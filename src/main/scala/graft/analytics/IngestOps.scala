@@ -4,6 +4,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Ingestion + multimodal operators: incremental dedup state paths,
   * the quarantine census feed, mm_* metadata/frame queries. Moved verbatim
@@ -14,9 +15,9 @@ private[analytics] trait IngestOps {
 
   /** Frame-sampling plumbing over an opaque payload column: one row per
     * sampled frame (every 256 bytes, max 8 frames/item), with a
-    * deterministic per-frame digest standing in for the decode step (the
-    * real decoder is a Pandas-style batch UDF in [[Multimodal]]; this query
-    * pins the explode/schema/partitioning layer, which is engine-checkable).
+    * deterministic per-frame digest standing in for the decode step (this
+    * query pins the explode/schema/partitioning layer, which is
+    * engine-checkable).
     * Generation via `sequence` keeps the fanout inside codegen — no join. */
   def mmFrameSample(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
@@ -98,17 +99,44 @@ private[analytics] trait IngestOps {
     }
 
 
-  /** INGESTION-HEALTH census — promotes [[graft.sources.JsonlDocs]]'s
-    * quarantine accounting to the oracle-checked surface: a JSONL feed is
+  /** The fields a JSONL document line is parsed to. */
+  private[analytics] lazy val jsonlSchema: StructType = StructType(Seq(
+    StructField("doc_id", LongType),
+    StructField("text", StringType),
+    StructField("lang", StringType),
+    StructField("source", StringType)))
+
+
+  /** Admission predicate over the parsed struct: valid JSON with the two
+    * required fields present. */
+  private[analytics] def jsonlOkCol(j: Column): Column =
+    j.isNotNull && j.getField("doc_id").isNotNull && j.getField("text").isNotNull
+
+
+  /** Damage-reason classifier for rows failing [[jsonlOkCol]] — precedence:
+    * `torn_json` when nothing recognizable parsed (from_json returned
+    * null, or every schema field did — an all-null parse of e.g. `{}` is
+    * operationally indistinguishable from torn), else `missing_doc_id`,
+    * else `missing_text`. */
+  private[analytics] def jsonlReasonCol(j: Column): Column =
+    when(j.isNull ||
+        (j.getField("doc_id").isNull && j.getField("text").isNull &&
+          j.getField("lang").isNull && j.getField("source").isNull), "torn_json")
+      .when(j.getField("doc_id").isNull, "missing_doc_id")
+      .otherwise("missing_text")
+
+
+  /** INGESTION-HEALTH census — the permissive JSONL parse's quarantine
+    * accounting on the oracle-checked surface: a JSONL feed is
     * derived in-plan from the documents table with DETERMINISTIC planted
     * damage (doc_id % 10 = 3 → line truncated INSIDE the first field's
     * KEY, so the prefix `{"doc` contains no complete field and no parser
     * version — not even a partial-result parser in the SPARK-33134
     * lineage — can recover doc_id or text from it; % 10 = 5 → the
     * required doc_id field absent; % 10 = 7 → the required text field
-    * absent), pushed through the REAL permissive parser (`from_json` over
-    * [[graft.sources.JsonlDocs.schema]]) and the REAL admission/reason
-    * classifiers ingestion uses, then counted per reason. The oracle
+    * absent), pushed through the permissive parser (`from_json` over
+    * [[jsonlSchema]]) and the admission/reason classifiers
+    * ([[jsonlOkCol]], [[jsonlReasonCol]]), then counted per reason. The oracle
     * recomputes the expected counts from the damage rule alone — so the
     * hash match asserts the parser + classifier recover exactly the
     * damage that was planted: torn lines parse to nothing, field-dropped
@@ -117,7 +145,6 @@ private[analytics] trait IngestOps {
     * Per-row work over one scan + a 4-row aggregate — an ingestion-health
     * dashboard query that stays free at any scale. */
   def ingestQuarantine(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.JsonlDocs
     val full = "to_json(named_struct('doc_id', doc_id, 'text', text, 'lang', lang, 'source', source))"
     val noId = "to_json(named_struct('text', text, 'lang', lang, 'source', source))"
     val noText = "to_json(named_struct('doc_id', doc_id, 'lang', lang, 'source', source))"
@@ -130,10 +157,10 @@ private[analytics] trait IngestOps {
           .when(col("doc_id") % 10 === 5, expr(noId))
           .when(col("doc_id") % 10 === 7, expr(noText))
           .otherwise(expr(full)).as("value"))
-      .withColumn("j", from_json(col("value"), JsonlDocs.schema))
+      .withColumn("j", from_json(col("value"), jsonlSchema))
       .select(
-        when(JsonlDocs.okCol(col("j")), lit("ok"))
-          .otherwise(JsonlDocs.reasonCol(col("j"))).as("reason"))
+        when(jsonlOkCol(col("j")), lit("ok"))
+          .otherwise(jsonlReasonCol(col("j"))).as("reason"))
       .groupBy(col("reason")).agg(count(lit(1)).as("n"))
       .orderBy(col("reason"))
   }
@@ -208,32 +235,6 @@ private[analytics] trait IngestOps {
       .orderBy(col("source"))
 
 
-  /** CROSS-MODAL RETRIEVAL census — the LAION-style retrieval eval
-    * (text→image recall@k), the readout that prices serving a multimodal
-    * corpus through an ANN index instead of exact search. The image
-    * corpus is the pair convention's EVEN embeddings (docs (2k, 2k+1)
-    * share image 2k — [[clipScored]]'s plant); queries are a capped
-    * sample of TEXT embeddings across both parities (`vec_id % 25`, so
-    * matched even pairs and mismatched odd pairs both appear). Two
-    * retrieval paths are censused per query, the [[SimOps.simIvfRecall]]
-    * shape applied cross-modally:
-    *  - truth: exact top-5 over the image corpus (self INCLUDED — for an
-    *    even query its own image is the matched pair, which is the point
-    *    of the eval);
-    *  - ivf: an IVF index over the IMAGE half (first-k even vectors as
-    *    centroids — the deterministic first-k convention on the image
-    *    id-space), probed at nprobe=2 (the widened-probe convention of
-    *    the filtered family: the image side halves the corpus, so a
-    *    1-cell probe under-retrieves).
-    * Output per query: overlap hits/recall of ivf vs exact, plus the
-    * matched-pair hit bit through EACH path — `hit_pair_exact` /
-    * `hit_pair_ivf` — whose even/odd separation is the retrieval-eval
-    * readout (MultimodalSpec pins even ⇒ both 1; for an even query the
-    * self-pair is cell-coincident by construction, so IVF can never
-    * miss it). Scale shape: truth is the one irreducible exact pass any
-    * recall census pays (broadcast capped queries × linear image scan);
-    * the IVF side is k centroid dots per query + a bounded cell scan;
-    * censuses are map-side-combinable; output ≤ SimQueryCap rows. */
   /** First-k centroids over the IMAGE (even) half — the image-side
     * serving index's quantizer, shared by the retrieval census and the
     * image dedup readout. */
@@ -265,6 +266,32 @@ private[analytics] trait IngestOps {
     }
 
 
+  /** CROSS-MODAL RETRIEVAL census — the LAION-style retrieval eval
+    * (text→image recall@k), the readout that prices serving a multimodal
+    * corpus through an ANN index instead of exact search. The image
+    * corpus is the pair convention's EVEN embeddings (docs (2k, 2k+1)
+    * share image 2k — [[clipScored]]'s plant); queries are a capped
+    * sample of TEXT embeddings across both parities (`vec_id % 25`, so
+    * matched even pairs and mismatched odd pairs both appear). Two
+    * retrieval paths are censused per query, the [[SimOps.simIvfRecall]]
+    * shape applied cross-modally:
+    *  - truth: exact top-5 over the image corpus (self INCLUDED — for an
+    *    even query its own image is the matched pair, which is the point
+    *    of the eval);
+    *  - ivf: an IVF index over the IMAGE half (first-k even vectors as
+    *    centroids — the deterministic first-k convention on the image
+    *    id-space), probed at nprobe=2 (the widened-probe convention of
+    *    the filtered family: the image side halves the corpus, so a
+    *    1-cell probe under-retrieves).
+    * Output per query: overlap hits/recall of ivf vs exact, plus the
+    * matched-pair hit bit through EACH path — `hit_pair_exact` /
+    * `hit_pair_ivf` — whose even/odd separation is the retrieval-eval
+    * readout (MultimodalSpec pins even ⇒ both 1; for an even query the
+    * self-pair is cell-coincident by construction, so IVF can never
+    * miss it). Scale shape: truth is the one irreducible exact pass any
+    * recall census pays (broadcast capped queries × linear image scan);
+    * the IVF side is k centroid dots per query + a bounded cell scan;
+    * censuses are map-side-combinable; output ≤ SimQueryCap rows. */
   def mmRetrievalRecall(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
       .withColumn("nrm", dotF(col("embedding"), col("embedding")))
@@ -431,7 +458,7 @@ private[analytics] trait IngestOps {
 
   /** Multimodal column plumbing: treat content as opaque binary + typed
     * metadata (byte length, sha256 digest) — the schema/partitioning layer
-    * under decode UDFs (see [[Multimodal]] for the batch decode path). */
+    * under decode UDFs. */
   def mmMeta(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .select(col("doc_id"),

@@ -381,9 +381,6 @@ private[analytics] trait LlmOracles {
        |    ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id)""".stripMargin
 
 
-  /** 64-slice signature-agreement COUNT over `sig` aliases sa/sb — the
-    * integer est_sim numerator, exposed separately for the calibration
-    * census's exact BIGINT sums ([[wideMatches]]'s mirror). */
   /** The benchmark excerpt windows keyed by item (bx → bwt CTEs) — the
     * Duck twin of DedupOps.benchExcerptWindows, shared by BOTH
     * contamination mirrors so the two directions cannot drift. Expects a
@@ -398,6 +395,10 @@ private[analytics] trait LlmOracles {
        |      i -> substr(md5(array_to_string(list_slice(et, i, i + 7), ' ')), 1, 16))) AS bw
        |  FROM bx)""".stripMargin
 
+
+  /** 64-slice signature-agreement COUNT over `sig` aliases sa/sb — the
+    * integer est_sim numerator, exposed separately for the calibration
+    * census's exact BIGINT sums ([[wideMatches]]'s mirror). */
   private[analytics] def wideMatchesDuck: String =
     s"(${(0 until MinhashWidePerms).map(j => s"CASE WHEN sa.mh$j = sb.mh$j THEN 1 ELSE 0 END").mkString(" + ")})"
 
@@ -723,7 +724,8 @@ private[analytics] trait LlmOracles {
 
 
   /** 64 min-slice aggregates over the 16 seeded digests h0..h15 — the
-    * DuckDB mirror of [[buildMinhashWideSig]]'s slicing. */
+    * DuckDB mirror of the 64-perm wide signature's slicing
+    * ([[minhashWideSig]]). */
   private[analytics] def minhashWideSliceCols: String = minhashWideSliceColsN(64)
 
 

@@ -137,16 +137,6 @@ private[analytics] trait OpsKernels {
         org.apache.spark.sql.graft.ColumnBridge.expression(b)))
 
 
-  /** Mixed float-array × BIGINT-array dot via the codegen'd
-    * [[org.apache.spark.sql.graft.DotProductFL]] — the k-means assignment
-    * kernel (float row against an integer Lloyd-sum centroid). */
-  private[analytics] def dotFL(a: Column, b: Column): Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      org.apache.spark.sql.graft.DotProductFL(
-        org.apache.spark.sql.graft.ColumnBridge.expression(a),
-        org.apache.spark.sql.graft.ColumnBridge.expression(b)))
-
-
   /** Per-doc distinct-3-gram-shingle hashes via the
     * [[org.apache.spark.sql.graft.ShingleHash32]] kernel (see its Scaladoc
     * for why this beats the declarative HOF chain ~5x). */
@@ -398,15 +388,6 @@ private[analytics] trait OpsKernels {
   private[analytics] def memoSig(spark: SparkSession, dir: String, kind: String)
       (build: => DataFrame): DataFrame =
     memo(spark, dir, kind) { val df = build.cache(); df.count(); track(df) }
-
-
-  /** Memoize a build that handles its OWN materialization/tracking
-    * (jaccard pairs checkpoint their RDD, passage windows cache+count
-    * inside the build) — same fingerprint + per-key-lock semantics as
-    * [[memoSig]] without double-caching the result. */
-  private[analytics] def memoRaw(spark: SparkSession, dir: String, kind: String)
-      (build: => DataFrame): DataFrame =
-    memo(spark, dir, kind)(build)
 
 
   // ------------------------------------------------ warehouse state tables

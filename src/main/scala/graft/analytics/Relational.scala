@@ -526,7 +526,7 @@ object Relational {
     * passing `broadcastNodeCap = 0` instead of mutating shared object
     * state, so concurrent suites in one JVM can never observe a
     * temporarily-zeroed cap (the round-16 ADVICE race). */
-  private[graft] val PagerankBroadcastNodeCap = 1000000L
+  private[analytics] val PagerankBroadcastNodeCap = 1000000L
 
   /** Node count of the memoized pagerank graph — the q38 broadcast gate's
     * input, a property of the edge table and memoized with it. */
@@ -541,7 +541,7 @@ object Relational {
     * does not reliably dedupe the subtree under AQE — measured 3×
     * recompute without this). Prewarmed as explicitly-timed state. */
   private def pagerankEdges(spark: SparkSession, dir: String): DataFrame =
-    LlmOps.memoRaw(spark, dir, "pagerank_edges") {
+    LlmOps.memo(spark, dir, "pagerank_edges") {
       val pairs = Tables.lineitem(spark, dir)
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
         .join(Tables.orders(spark, dir).select(col("o_orderkey").as("ok"), col("o_custkey").as("ck")), "ok")
@@ -550,12 +550,7 @@ object Relational {
       val edges = pairs.select(col("cn").as("src"), col("pn").as("dst"))
         .union(pairs.select(col("pn").as("src"), col("cn").as("dst")))
       val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      val ePlan = edges.join(outdeg, "src")
-      val eRdd = ePlan.rdd
-      eRdd.localCheckpoint()
-      eRdd.count()
-      LlmOps.trackRdd(eRdd)
-      spark.createDataFrame(eRdd, ePlan.schema)
+      LlmOps.checkpointLeaf(spark, edges.join(outdeg, "src"))
     }
 
   /** WEEKLY COHORT RETENTION — the cohort-analysis shape over the events

@@ -61,10 +61,6 @@ private[analytics] trait SimOps {
     }
 
 
-  /** Hyperplane-LSH approximate NN: deterministic hyperplanes → 2^AnnPlanes
-    * sign-buckets; queries only scan their own bucket. The scale path —
-    * candidate count drops ~2^AnnPlanes× vs brute force, at measured recall
-    * cost (see LlmOpsSpec's recall probe). */
   /** The sign-bucket table (vec_id, embedding, nrm, bucket) shared by the
     * three hyperplane-LSH queries, memoized per (session, dir) and
     * prewarmed by [[stateBuilders]] — the LSH index analogue of
@@ -79,6 +75,10 @@ private[analytics] trait SimOps {
     }
 
 
+  /** Hyperplane-LSH approximate NN: deterministic hyperplanes → 2^AnnPlanes
+    * sign-buckets; queries only scan their own bucket. The scale path —
+    * candidate count drops ~2^AnnPlanes× vs brute force, at measured recall
+    * cost (see LlmOpsSpec's recall probe). */
   def simAnnLsh(spark: SparkSession, dir: String): DataFrame = {
     val e = annBucketTable(spark, dir)
     val q = e.filter(expr("vec_id % 50 = 0"))
@@ -976,7 +976,7 @@ private[analytics] trait SimOps {
     * (codes cell-partitioned) and pins disk-served answers bitwise-equal
     * to session-state serving, so a serve-path restart never retrains
     * the quantizer. */
-  private[graft] def servePqTop5Over(spark: SparkSession, dir: String, nprobe: Int,
+  private[analytics] def servePqTop5Over(spark: SparkSession, dir: String, nprobe: Int,
                           labelFiltered: Boolean, cb: DataFrame,
                           codeIndex: DataFrame): DataFrame = {
     val e = Tables.embeddings(spark, dir)
@@ -1408,8 +1408,9 @@ private[analytics] trait SimOps {
     * (PlanGuardSpec pins the subtree Window- and Exchange-free).
     *
     * Parity with the window path, by construction: cosines use the SAME
-    * registered `dot_fl` codegen expression the window variant called
-    * through [[OpsKernels.dotFL]]; the structs arrive in ascending-ncell
+    * registered `dot_fl` codegen expression
+    * ([[org.apache.spark.sql.graft.DotProductFL]]) the window variant
+    * called; the structs arrive in ascending-ncell
     * order; and strict `>` keeps the FIRST struct on an exact tie —
     * precisely the `(cos_c DESC, ncell ASC)` row_number argmax.
     * PRECONDITION: centroid norms are nonzero —

@@ -581,8 +581,8 @@ private[analytics] trait TxtOps {
   /** Merge-placeholder symbol for BPE round `r` (0-based): the Unicode
     * NONCHARACTER U+FDD0+r. Noncharacters are permanently unassigned and
     * excluded from interchanged text by Unicode conformance (C2/D14), so
-    * no real corpus — including arbitrary web text arriving through
-    * [[graft.sources.JsonlDocs]] — can legitimately contain one; a
+    * no real corpus — including arbitrary web text — can legitimately
+    * contain one; a
     * printable placeholder (the old 'º') collides with e.g. Spanish "nº"
     * and conflates merged symbols with literal text in later censuses.
     * Mirrored as chr($BpeSentinelBase + r) in DuckDB — BOTH engines
@@ -684,7 +684,7 @@ private[analytics] trait TxtOps {
     * and consumed twice, exactly the production relationship between a BPE
     * trainer and the encode path it ships merges to. */
   private[analytics] def bpeMergeTable(spark: SparkSession, dir: String): DataFrame =
-    memoRaw(spark, dir, "bpe_merges") {
+    memo(spark, dir, "bpe_merges") {
       // round 21 (continuation): the rounds iterate over the WEIGHTED TYPE
       // table ([[bpeTypeWeights]] — the memoized vocabulary census), not
       // the token stream: k rounds cost k vocab-bounded passes + the one
@@ -692,14 +692,10 @@ private[analytics] trait TxtOps {
       // tokenizes. Counts are bit-identical (exact weighted sums).
       var cur = bpeTypeWeights(spark, dir)
       val rounds = (1 to BpeVocabRounds).map { r =>
-        val top1Plan = bpePairCensus(cur, "t")
+        // checkpointed: the 1-row barrier that keeps rounds linear
+        val top1 = checkpointLeaf(spark, bpePairCensus(cur, "t")
           .orderBy(col("n").desc, col("pair")).limit(1)
-          .select(lit(r.toLong).as("round"), col("pair"), col("n"))
-        val rdd = top1Plan.rdd
-        rdd.localCheckpoint()
-        rdd.count() // materialize: the 1-row barrier that keeps rounds linear
-        trackRdd(rdd)
-        val top1 = spark.createDataFrame(rdd, top1Plan.schema)
+          .select(lit(r.toLong).as("round"), col("pair"), col("n")))
         cur = cur.crossJoin(broadcast(top1.select(col("pair").as("mp"))))
           .select(col("w"), expr(s"replace(t, mp, '${bpeSentinel(r - 1)}')").as("t"))
         top1
@@ -811,15 +807,6 @@ private[analytics] trait TxtOps {
   }
 
 
-  /** The composed CLEANING PIPELINE — what a training-data run actually
-    * executes, as one operator: a doc survives iff it (a) passes the
-    * Gopher-style quality filter, (b) is the canonical copy of its exact-
-    * duplicate group (min doc_id per content hash), and (c) is not the
-    * dropped side of any near-duplicate pair. Composition is three
-    * semi/anti joins over operators that already exist — the near-dup
-    * side reuses the memoized checkpointed pairs table, so running this
-    * after any dd_* query adds only the joins. Demonstrates that the
-    * operator set composes into the end-to-end corpus-cleaning job. */
   /** Exact-dedup canonical flag: true iff the row's doc_id is the min of
     * its identical-text (md5) group — ONE definition of the
     * canonicalization for [[txtCleanCorpus]] and [[txtCurationFunnel]],
@@ -829,6 +816,15 @@ private[analytics] trait TxtOps {
     col("doc_id") === min(col("doc_id")).over(Window.partitionBy(md5(col("text"))))
 
 
+  /** The composed CLEANING PIPELINE — what a training-data run actually
+    * executes, as one operator: a doc survives iff it (a) passes the
+    * Gopher-style quality filter, (b) is the canonical copy of its exact-
+    * duplicate group (min doc_id per content hash), and (c) is not the
+    * dropped side of any near-duplicate pair. Composition is three
+    * semi/anti joins over operators that already exist — the near-dup
+    * side reuses the memoized checkpointed pairs table, so running this
+    * after any dd_* query adds only the joins. Demonstrates that the
+    * operator set composes into the end-to-end corpus-cleaning job. */
   def txtCleanCorpus(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val passes = gopherScored(spark, dir).filter(col("passes")).select(col("doc_id"))
@@ -917,7 +913,7 @@ private[analytics] trait TxtOps {
     * construct, the two engines compile the identical pattern, and
     * neither engine's string-literal escaping can bite (the "ip" entry
     * uses `[.]` classes for that reason, like urlNormSql). */
-  private[graft] lazy val piiRes: Seq[(String, String)] = Seq(
+  private[analytics] lazy val piiRes: Seq[(String, String)] = Seq(
     "url" -> "https?://[^ ]+",
     "email" -> "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+",
     "phone" -> "[0-9]{3}-[0-9]{3}-[0-9]{4}",
@@ -1027,12 +1023,6 @@ private[analytics] trait TxtOps {
   }
 
 
-  /** Deterministic source-mixture sampling — the mixture-weighting stage:
-    * each provenance source gets a keep-rate, and a doc survives iff its
-    * md5-derived uniform draw falls under its source's rate. Seedless and
-    * partition-independent like [[txtBalance]]; changing a single source's
-    * weight re-decides ONLY that source's docs (hash draws are per-doc,
-    * not positional). Pure per-row filter — no shuffle before the sort. */
   /** Source-parity CASE head shared by the mixture rate, the budget
     * weight, and their Duck mirrors — ONE definition of the even/odd
     * source convention, so a weight change cannot drift between the four
@@ -1050,6 +1040,13 @@ private[analytics] trait TxtOps {
   private[analytics] lazy val sourceWeightSql =
     sourceParityCase("CAST(3 AS BIGINT)", "CAST(1 AS BIGINT)")
 
+
+  /** Deterministic source-mixture sampling — the mixture-weighting stage:
+    * each provenance source gets a keep-rate, and a doc survives iff its
+    * md5-derived uniform draw falls under its source's rate. Seedless and
+    * partition-independent like [[txtBalance]]; changing a single source's
+    * weight re-decides ONLY that source's docs (hash draws are per-doc,
+    * not positional). Pure per-row filter — no shuffle before the sort. */
   def txtMixture(spark: SparkSession, dir: String): DataFrame = {
     // weight by source parity: even-numbered sources keep 75%, odd 25% —
     // a stand-in for a real mixture table (which would broadcast-join here)
@@ -1067,7 +1064,7 @@ private[analytics] trait TxtOps {
   /** Training budget = [[DataBudgetEpochs]] × the corpus's total token
     * count — proportional to corpus size so the planner exercises the
     * same repeat structure at every SF. */
-  private[graft] lazy val DataBudgetEpochs = 2L
+  private[analytics] lazy val DataBudgetEpochs = 2L
 
 
   /** TOKEN-BUDGET / EPOCH PLANNER — the data-constrained-scaling readout a
@@ -1204,19 +1201,6 @@ private[analytics] trait TxtOps {
   }
 
 
-  /** The frequency family's token stream — the RETIRED declarative
-    * tokenize, kept in-tree as TypeFreqSpec's reference: the census build
-    * now runs the row-local [[org.apache.spark.sql.graft.TypeFreq]]
-    * kernel, and the spec pins the kernel census set-equal to the
-    * groupBy-count over this stream on the real corpus. */
-  private[analytics] def rarityToks(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .withColumn("toks", expr(toksSpark))
-      .select(col("doc_id"), col("lang"), explode_outer(col("toks")).as("t"))
-      .filter(col("t").isNotNull)
-
-
   /** The PER-DOCUMENT type-frequency census (doc_id, t, tf) — the
     * intermediate the [[rarityTf]] build always computed and then threw
     * away, MEMOIZED as a checkpointed leaf (round 21, continuation): both
@@ -1233,13 +1217,13 @@ private[analytics] trait TxtOps {
     * sub-linear in token count (Heaps' law per doc); the tokenize itself
     * now runs ONCE per session, inside this build. */
   private[analytics] def rarityDocTf(spark: SparkSession, dir: String): DataFrame =
-    memoRaw(spark, dir, "rarity_doc_tf")(checkpointLeaf(spark,
+    memo(spark, dir, "rarity_doc_tf")(checkpointLeaf(spark,
       // round 21 (continuation): the TypeFreq kernel — type frequencies
       // are doc-local, so the token-instance explode, the interpreted
       // filter() lambda and the hash aggregation over the exploded stream
       // collapse into one JVM loop per row (the ShingleHash32/GopherStats
       // treatment; TypeFreqSpec pins set-equality against the retired
-      // declarative census, which [[rarityToks]] still feeds). lang rides
+      // declarative census, DeclarativeScans in src/test). lang rides
       // the projection for free (functionally dependent on doc_id) so the
       // per-language readers (txt_top_terms) never rejoin the documents
       // table.
@@ -1271,7 +1255,7 @@ private[analytics] trait TxtOps {
     * work now runs once per session inside this build and txt_tfidf's
     * query side shrinks to its 50-doc slice. */
   private[analytics] def rarityTf(spark: SparkSession, dir: String): DataFrame =
-    memoRaw(spark, dir, "rarity_tf")(checkpointLeaf(spark,
+    memo(spark, dir, "rarity_tf")(checkpointLeaf(spark,
       rarityDocTf(spark, dir)
         .groupBy(col("t"))
         .agg(sum(col("tf")).as("n_t"), count(lit(1)).as("df"))))

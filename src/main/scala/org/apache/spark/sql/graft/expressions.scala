@@ -911,8 +911,7 @@ case class CmsEstimate(left: Expression, right: Expression)
 
 /** The SQL functions graft provides, as one `name → builder` table.
   * [[register]] adds them to a running session ([[graft.GraftSession]]
-  * calls it for every graft session); [[graft.GraftExtensions]] injects the
-  * same table into sessions built with `spark.sql.extensions`. */
+  * calls it for every graft session). */
 object GraftFunctions {
   val table: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "js_num" -> (e => JsNumberFormat(e.head)),

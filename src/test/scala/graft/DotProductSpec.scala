@@ -48,4 +48,23 @@ class DotProductSpec extends SparkSpec {
     val r = spark.sql("SELECT dot_f(CAST(NULL AS ARRAY<FLOAT>), array(CAST(1.0 AS FLOAT)))").first()
     assert(r.isNullAt(0))
   }
+
+  test("every GraftFunctions.table function is callable from SQL on the graft session") {
+    GraftFunctions.table.foreach { case (name, _) =>
+      assert(spark.catalog.functionExists(name), s"$name missing from the graft session")
+    }
+    val row = spark.sql(
+      """SELECT js_num(CAST(78990.0 AS DOUBLE)), dot_fl(array(1.0F, 2.0F), array(3L, 4L)),
+        |  size(shingle_hash32('a b c d')), size(passage_hash('a b c d', 2)),
+        |  gopher_stats('a b a').n_words, type_freq('a b a'), topk_min(id, 2),
+        |  simhash_agg(id, 8) IS NOT NULL
+        |FROM range(3)""".stripMargin).collect()(0)
+    assert(row.getString(0) == "78990")
+    assert(row.getDouble(1) == 11.0)
+    assert((row.getInt(2), row.getInt(3), row.getLong(4)) == ((2, 3, 3L)))
+    assert(row.getSeq[org.apache.spark.sql.Row](5).map(r => (r.getString(0), r.getLong(1))) ==
+      Seq(("a", 2L), ("b", 1L)))
+    assert(row.getSeq[Long](6) == Seq(0L, 1L))
+    assert(row.getBoolean(7))
+  }
 }

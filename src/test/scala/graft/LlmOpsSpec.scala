@@ -1,6 +1,6 @@
 package graft
 
-import graft.analytics.LlmOps
+import graft.analytics.{DeclarativeScans, LlmOps}
 
 /** Semantic checks for the LLM-pipeline operators, on a crafted corpus with
   * planted exact/near duplicates (the DuckDB oracle proves engine agreement;
@@ -67,7 +67,7 @@ class LlmOpsSpec extends SparkSpec {
     // table, so the check above became by-construction — pin the slice
     // against the retired STAND-ALONE 64-perm build instead (the
     // equivalence the derivation rests on)
-    val standalone = LlmOps.buildMinhashWideSigN(spark, dir, 64).collect()
+    val standalone = DeclarativeScans.buildMinhashWideSigN(spark, dir, 64).collect()
       .map(r => r.getAs[Long]("doc_id") -> r).toMap
     assert(standalone.keySet == sig.keySet)
     standalone.foreach { case (id, rSa) =>
@@ -81,7 +81,7 @@ class LlmOpsSpec extends SparkSpec {
     // array-valued result) — pin EVERY slice of EVERY doc against the
     // retired declarative builder, the equivalence the whole wide-minhash
     // family now rests on
-    val declar128 = LlmOps.buildMinhashWideSigN(spark, dir, 128).collect()
+    val declar128 = DeclarativeScans.buildMinhashWideSigN(spark, dir, 128).collect()
       .map(r => r.getAs[Long]("doc_id") -> r).toMap
     assert(declar128.keySet == sig128.keySet)
     declar128.foreach { case (id, rD) =>

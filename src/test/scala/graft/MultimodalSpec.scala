@@ -1,42 +1,10 @@
 package graft
 
-import graft.analytics.Multimodal
-
-/** Multimodal binary plumbing: schema, batched decode, frame sampling.
-  * The decode itself is a documented deterministic stub (no codecs in the
-  * container) — these tests pin the Spark-side contract. */
+/** The multimodal queries' readouts on planted data: image dedup drops,
+  * its per-cell cap, the media storage census and the cross-modal
+  * retrieval census. */
 class MultimodalSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
-
-  test("media table has the binary+metadata schema") {
-    val m = Multimodal.mediaTable(spark, dir)
-    val fields = m.schema.fields.map(f => f.name -> f.dataType.simpleString).toMap
-    assert(fields("content") == "binary")
-    assert(fields("kind") == "string")
-    assert(fields("meta_w") == "int")
-    assert(m.count() > 0)
-  }
-
-  test("batched feature extraction: one digest + fixed-dim vector per item, deterministic") {
-    val m = Multimodal.mediaTable(spark, dir).limit(50)
-    val f1 = Multimodal.extractFeatures(m).collect().sortBy(_.media_id)
-    val f2 = Multimodal.extractFeatures(m.repartition(7)).collect().sortBy(_.media_id)
-    assert(f1.length == 50)
-    assert(f1.forall(_.features.length == Multimodal.DecodeStub.dim))
-    assert(f1.forall(_.digest.length == 16))
-    // repartition-invariant (decode is a pure per-item function)
-    assert(f1.map(x => (x.media_id, x.digest, x.features.toSeq)).toSeq ==
-      f2.map(x => (x.media_id, x.digest, x.features.toSeq)).toSeq)
-  }
-
-  test("frame sampling explodes video payloads into indexed frames") {
-    val m = Multimodal.mediaTable(spark, dir)
-    val frames = Multimodal.sampleFrames(m, everyNthByte = 64)
-    val row = frames.filter("media_id = 2").orderBy("frame_idx").collect()
-    assert(row.nonEmpty)
-    assert(row.head.getAs[Int]("frame_idx") == 0)
-    assert(row.forall(_.getAs[Array[Byte]]("frame_bytes").length <= 64))
-  }
 
   test("image dedup drops a planted even-even near-duplicate and keeps the rest") {
     // The driver corpora plant embedding dups only on (even, odd)

@@ -11,9 +11,12 @@ import org.apache.spark.sql.functions._
   * oracle mirrors were derived from. Each applies the SAME score
   * definition as its kernel build ([[LlmOps.gopherFractions]],
   * [[LlmOps.classifierScore]]), so the two can only diverge in the
-  * integer counters the spec compares. Not memoized. */
+  * integer counters the spec compares. Also the retired wide-MinHash
+  * builder (LlmOpsSpec's reference for the MinhashSlicesAgg kernel) and
+  * the retired frequency-family tokenize ([[TypeFreqSpec]]'s reference
+  * for the TypeFreq kernel). Not memoized. */
 object DeclarativeScans {
-  import LlmOps.{classifierScore, classifierStops, gopherFractions, toksSpark}
+  import LlmOps.{classifierScore, classifierStops, gopherFractions, shinglesSpark, toksSpark}
 
   def gopherScoredDeclarative(spark: SparkSession, dir: String): DataFrame = {
     val base = Tables.documents(spark, dir)
@@ -61,4 +64,38 @@ object DeclarativeScans {
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
           col("n_toks"), col("n_stop"), col("n_short"), col("n_long"), col("n_rep")))
   }
+
+
+  /** The wide-signature build generalized over permutation count —
+    * perms/4 seeded digests ("w<d>:" prefixes keep them independent of
+    * the didactic path's md5(s) / md5('x'||s) family; the 64-perm
+    * signature is by construction the first 64 slices of the 128-perm
+    * one). One map-side-combinable min-aggregation whatever the width. */
+  def buildMinhashWideSigN(spark: SparkSession, dir: String, perms: Int): DataFrame = {
+    val sh = Tables.documents(spark, dir)
+      .repartition(spark.sparkContext.defaultParallelism)
+      .withColumn("toks", expr(toksSpark))
+      .select(col("doc_id"), explode_outer(expr(shinglesSpark)).as("s"))
+      .filter(col("s").isNotNull)
+    val hashed = (0 until perms / 4).foldLeft(sh) { (df, d) =>
+      df.withColumn(s"h$d", md5(concat(lit(s"w$d:"), col("s"))))
+    }
+    val mhs = (0 until perms).map { j =>
+      min(substring(col(s"h${j / 4}"), 1 + 8 * (j % 4), 8)).as(s"mh$j")
+    }
+    hashed.groupBy(col("doc_id")).agg(mhs.head, mhs.tail: _*)
+  }
+
+
+  /** The frequency family's token stream — the RETIRED declarative
+    * tokenize, kept in-tree as TypeFreqSpec's reference: the census build
+    * now runs the row-local [[org.apache.spark.sql.graft.TypeFreq]]
+    * kernel, and the spec pins the kernel census set-equal to the
+    * groupBy-count over this stream on the real corpus. */
+  def rarityToks(spark: SparkSession, dir: String): DataFrame =
+    Tables.documents(spark, dir)
+      .repartition(spark.sparkContext.defaultParallelism)
+      .withColumn("toks", expr(toksSpark))
+      .select(col("doc_id"), col("lang"), explode_outer(col("toks")).as("t"))
+      .filter(col("t").isNotNull)
 }

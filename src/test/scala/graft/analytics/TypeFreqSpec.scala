@@ -6,7 +6,7 @@ import org.apache.spark.sql.graft.TypeFreqBridge.typeFreq
 
 /** The TypeFreq kernel census must be indistinguishable from the retired
   * declarative chain (round 21 continuation): explode(toks) → groupBy(doc,
-  * t) → count(*) over [[TxtOps.rarityToks]]. Every frequency-family reader
+  * t) → count(*) over [[DeclarativeScans.rarityToks]]. Every frequency-family reader
   * (txt_rarity, txt_lm_score, txt_tfidf, the BPE training censuses,
   * txt_top_terms, txt_vocab_coverage, both SimHash signature builds)
   * silently depends on this identity. */
@@ -20,7 +20,7 @@ class TypeFreqSpec extends SparkSpec {
       .filter(col("e").isNotNull)
       .select(col("doc_id"), col("lang"), col("e.t").as("t"), col("e.tf").as("tf"))
       .orderBy(col("doc_id"), col("t")).collect()
-    val declarative = LlmOps.rarityToks(spark, dir)
+    val declarative = DeclarativeScans.rarityToks(spark, dir)
       .groupBy(col("doc_id"), col("lang"), col("t"))
       .agg(count(lit(1)).as("tf"))
       .orderBy(col("doc_id"), col("t")).collect()
