@@ -9,9 +9,9 @@ of the same code, so each file has them replaced before the compare:
 - expression IDs (`#123` -> `#N`), exchange IDs (`plan_id=45` ->
   `plan_id=N`) and RDD IDs (`RDD[678]` -> `RDD[N]`), which are per-JVM
   counters;
-- the line number of an RDD call site (`createDataFrame at
-  DedupOps.scala:971` -> `createDataFrame at DedupOps.scala`), which moves
-  whenever lines above the call move;
+- the file and line number of an RDD call site (`createDataFrame at
+  DedupOps.scala:971` -> `createDataFrame at <src>`), which move whenever
+  lines above the call move or a shared helper makes the call;
 - the directory a warehouse table sits in (`file:/work/a/spark-warehouse/t`
   -> `file:<cwd>/spark-warehouse/t`), which is the working directory of the
   run that wrote it.
@@ -33,7 +33,7 @@ import sys
 RUN_FIELDS = [(re.compile(r"#\d+"), "#N"),
               (re.compile(r"plan_id=\d+"), "plan_id=N"),
               (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
-              (re.compile(r"( at \w+\.scala):\d+"), r"\1"),
+              (re.compile(r" at \w+\.scala:\d+"), " at <src>"),
               (re.compile(r"/[^\s,\[\]]*/spark-warehouse\b"), "<cwd>/spark-warehouse")]
 
 

@@ -78,7 +78,14 @@ private[analytics] trait DedupOps {
     * integer draw, so a drifted ladder constant or salt breaks THIS row's
     * hash-match before it can silently skew the pair census. Cost: one
     * shingle scan + a types-sized aggregate, constant output. */
-  def ddContainmentThin(spark: SparkSession, dir: String): DataFrame = {
+  def ddContainmentThin(spark: SparkSession, dir: String): DataFrame =
+    containmentThinCensus(spark, dir, corpusDocCount(spark, dir) > CThinMinDocs)
+
+
+  /** [[ddContainmentThin]]'s row with the ladder's state given: `active`
+    * is whether the types are thinned (the query passes the corpus rung). */
+  private[analytics] def containmentThinCensus(spark: SparkSession, dir: String,
+      active: Boolean): DataFrame = {
     // same memo key as the state build — whichever runs first pays the
     // one shingle pass, the other reads the checkpointed types-sized leaf
     val dfc = memo(spark, dir, "containment_dfc") {
@@ -88,7 +95,6 @@ private[analytics] trait DedupOps {
         .groupBy(col("s"), col("lang")).agg(count(lit(1)).as("df"))
         .filter(col("df") <= StopShingleCap))
     }
-    val active = cthinActive(spark, dir)
     val keptCol = if (active) expr(cthinKeepPred) else lit(true)
     dfc.select(col("df"), keptCol.as("kept"))
       .agg(
@@ -681,10 +687,17 @@ private[analytics] trait DedupOps {
     * fingerprint spine and prewarmed as explicitly-timed state (see
     * [[stateBuilders]]), like the jaccard pairs it parallels. */
   private[analytics] def containmentPairs(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, dir, "containment_pairs")(buildContainmentPairs(spark, dir))
+    memo(spark, dir, "containment_pairs") {
+      val nDocs = corpusDocCount(spark, dir)
+      buildContainmentPairs(spark, dir, jpairLadder(nDocs), nDocs > CThinMinDocs)
+    }
 
 
-  private[analytics] def buildContainmentPairs(spark: SparkSession, dir: String): DataFrame = {
+  /** The containment pairs at ':jpair' keep-threshold `p` (out of 65536;
+    * 65536 keeps every doc), with the shingle types thinned when
+    * `thinActive`. [[containmentPairs]] passes the corpus rungs. */
+  private[analytics] def buildContainmentPairs(spark: SparkSession, dir: String,
+      p: Int, thinActive: Boolean): DataFrame = {
     // round 21 (continuation): the containment build is the THIRD consumer
     // of the ref-counted shingle state — its private shingle pass ran the
     // identical ShingleHash32 kernel over the identical rows (the hold's
@@ -711,7 +724,7 @@ private[analytics] trait DedupOps {
       checkpointLeaf(spark, sh.groupBy(col("s"), col("lang"))
         .agg(count(lit(1)).as("df")).filter(col("df") <= StopShingleCap))
     }
-    // df-weighted shingle-universe ladder (see [[cthinActive]]): past the
+    // df-weighted shingle-universe ladder (`thinActive`): past the
     // same 60k-doc rung as the ':jpair' doc ladder, shingle TYPES are
     // deterministically thinned with keep-probability min(1, B/df) — the
     // draw is a pure function of the shingle hash, so a type survives for
@@ -728,7 +741,6 @@ private[analytics] trait DedupOps {
     // semantics at every driver-gate SF. The mirror applies the identical
     // CASE-over-count(*) gate and integer draw; [[ddContainmentThin]] is
     // the oracle-checked accounting of exactly what the ladder keeps.
-    val thinActive = cthinActive(spark, dir)
     val keptTypes = (if (thinActive) dfc.filter(expr(cthinKeepPred)) else dfc)
       .select(col("s"), col("lang"))
     val kept = sh.join(keptTypes, Seq("s", "lang"), "left_semi")
@@ -743,7 +755,6 @@ private[analytics] trait DedupOps {
     // doc-sampling both join sides cuts the join by p² while sizes/df
     // stay full-corpus. One documented sample universe for every pair
     // census — the mirror applies the identical CASE-over-count(*) ladder.
-    val p = jpairSampleThreshold(spark, dir)
     val sampled = if (p >= 65536) kept
       else kept.filter(expr(s"${jpairDraw("doc_id")} < $p"))
     val a = sampled.toDF("ia", "la", "s")
@@ -806,18 +817,6 @@ private[analytics] trait DedupOps {
   private[analytics] lazy val CThinKeptFloor = 8L
 
 
-  /** Whether the containment build thins the shingle universe: corpus
-    * above the rung, unless `GRAFT_FULL_PAIRS` requests the exact full
-    * state (audit mode — oracle parity then only holds at unthinned
-    * SFs). `GRAFT_CTHIN_FORCE` is the spec-only escape that activates
-    * thinning on a tiny corpus so the sampling semantics are testable
-    * where the rung would keep all. */
-  private[analytics] def cthinActive(spark: SparkSession, dir: String): Boolean =
-    envOrProp("GRAFT_CTHIN_FORCE").isDefined ||
-      (envOrProp("GRAFT_FULL_PAIRS").isEmpty &&
-        corpusDocCount(spark, dir) > CThinMinDocs)
-
-
   /** The type-keep predicate over a (s, df) row — INTEGER arithmetic only
     * (draw·df < 65536·B ⟺ draw < 65536·B/df), so both engines compare
     * exactly: no division, no float rounding. Salt ':cthin' keeps the
@@ -841,52 +840,33 @@ private[analytics] trait DedupOps {
   private[analytics] lazy val StopShingleCap = 500
 
 
-  /** Doc-sample keep-threshold for the FULL pair state (out of 65536) —
-    * the round-17 verdict's last superlinear build, scale-bounded by
-    * SAMPLING rather than banding: the full state's consumers are
-    * reporting/calibration CENSUSES (jaccard bins, source-overlap matrix,
-    * top-200 ranked list, band-gap accounting) that need unbiased
-    * mid-Jaccard pairs, not every pair — so past the corpus size where
-    * the block self-join's Σdf² growth turns superlinear, the state is
-    * built over a deterministic md5 doc sample (the txt_mixture/txt_split
-    * seedless-draw convention, salt ':jpair') and pair volume scales by
-    * p². The ladder is a pure function of the corpus doc count, computed
-    * identically by the DuckDB mirrors (a CASE over count(*)), so
-    * hash-match survives at every SF: ≤60k docs (through sf1) keeps
-    * everything — the driver's correctness gates are bit-for-bit
-    * unchanged — 100k docs (sf2) keeps ~70%, and beyond (sf10's 500k)
-    * ~45%, which cuts the superlinear join stage to ~0.2× while planted
-    * duplicate mass grows linearly with the corpus, so expected pairs
-    * per census bin still RISE with SF. `GRAFT_FULL_PAIRS=1` restores
-    * the exact full state for once-per-corpus audits (oracle parity then
-    * only holds at ladder-p=65536 SFs); `GRAFT_JPAIR_SAMPLE_P` is the
-    * spec-only override that forces a threshold on a tiny corpus so the
-    * sampling semantics are testable where the ladder would keep all. */
-  private[analytics] def jpairSampleThreshold(spark: SparkSession, dir: String): Int =
-    if (envOrProp("GRAFT_FULL_PAIRS").isDefined) 65536
-    else envOrProp("GRAFT_JPAIR_SAMPLE_P").map(_.toInt).getOrElse(
-      jpairLadder(corpusDocCount(spark, dir)))
-
-
-  /** Corpus doc count for the ladder rung, memoized on the spine — THREE
-    * pair-state builders call [[jpairSampleThreshold]] (jaccard,
-    * banded-recall gate, containment), and each used to pay a full
-    * documents scan just to pick the rung. */
+  /** Corpus doc count for the ladder rungs, memoized on the spine — the
+    * jaccard and containment pair states and the thin census each pick
+    * their rung from it, and each used to pay a full documents scan to
+    * do so. */
   private def corpusDocCount(spark: SparkSession, dir: String): Long =
     memo(spark, dir, "doc_count")(Tables.documents(spark, dir).count())
 
 
-  /** The pure ladder (docs → keep-threshold of 65536), mirrored verbatim
-    * by [[LlmOracles.jpSampleDuck]]'s CASE. */
+  /** Doc-sample keep-threshold (out of 65536) for the FULL pair state,
+    * from the corpus doc count — the round-17 verdict's last superlinear
+    * build, scale-bounded by SAMPLING rather than banding: the full
+    * state's consumers are reporting/calibration CENSUSES (jaccard bins,
+    * source-overlap matrix, top-200 ranked list, band-gap accounting)
+    * that need unbiased mid-Jaccard pairs, not every pair — so past the
+    * corpus size where the block self-join's Σdf² growth turns
+    * superlinear, the state is built over a deterministic md5 doc sample
+    * (the txt_mixture/txt_split seedless-draw convention, salt ':jpair')
+    * and pair volume scales by p². The ladder is a pure function of the
+    * corpus doc count, mirrored verbatim by [[LlmOracles.jpSampleDuck]]'s
+    * CASE over count(*), so hash-match survives at every SF: ≤60k docs
+    * (through sf1) keeps everything — the sf0.001–sf1 oracle gates are
+    * bit-for-bit unchanged — 100k docs (sf2) keeps ~70%, and beyond
+    * (sf10's 500k) ~45%, which cuts the superlinear join stage to ~0.2×
+    * while planted duplicate mass grows linearly with the corpus, so
+    * expected pairs per census bin still RISE with SF. */
   private[analytics] def jpairLadder(nDocs: Long): Int =
     if (nDocs <= 60000L) 65536 else if (nDocs <= 150000L) 45875 else 29491
-
-
-  /** Spec-visible env override: tests run in-process and cannot set real
-    * environment variables, so each escape hatch also reads a same-named
-    * system property. */
-  private def envOrProp(name: String): Option[String] =
-    sys.env.get(name).orElse(sys.props.get(name))
 
 
   /** The ':jpair'-salted md5 draw as a 0..65535 integer over a doc-id
@@ -903,7 +883,8 @@ private[analytics] trait DedupOps {
     * the three consumers get the SAME frame instance, so the checkpointed
     * pair table is registered once and released by [[releaseCaches]]. */
   private[analytics] def jaccardPairs(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, dir, "jaccard_pairs")(buildJaccardPairs(spark, dir))
+    memo(spark, dir, "jaccard_pairs")(
+      buildJaccardPairs(spark, dir, jpairLadder(corpusDocCount(spark, dir))))
 
 
   /** Eager RDD-level local checkpoint of a derived frame: consumers plan
@@ -1017,24 +998,21 @@ private[analytics] trait DedupOps {
     * the gate with probability ≥ 1-(1-p²)^missed — near-certain for any
     * systematic loss). [[ddBandGap]] — the diagnostic an operator runs to
     * SIZE the loss — deliberately bypasses the gate by reading the banded
-    * pair table directly; `GRAFT_UNGATED_EDGES=1` is the audited escape
-    * for deliberately running a lossy dedup anyway. */
+    * pair table directly. */
   private[analytics] def jaccardEdges08(spark: SparkSession, dir: String): DataFrame =
     memo(spark, dir, "jaccard_edges_08") {
       val edges = checkpointLeaf(spark,
         bandedJaccardPairs(spark, dir).filter(col("jaccard") >= 0.8)
           .select(col("ia"), col("ib")))
-      if (envOrProp("GRAFT_UNGATED_EDGES").isEmpty) {
-        val missed = jaccardPairs(spark, dir).filter(col("jaccard") >= 0.8)
-          .select(col("ia"), col("ib"))
-          .join(edges, Seq("ia", "ib"), "left_anti").count()
-        if (missed > 0L) throw new IllegalStateException(
-          s"banded dedup edge set is LOSSY on this corpus: $missed truth edge(s) " +
-            "at jaccard >= 0.8 were not retrieved by the capped 16x4 bands " +
-            "(likely a duplicate cluster larger than the band-bucket cap). " +
-            "Run dd_band_gap to size the loss; widen the bands / raise the " +
-            "bucket cap, or set GRAFT_UNGATED_EDGES=1 to dedup lossily anyway.")
-      }
+      val missed = jaccardPairs(spark, dir).filter(col("jaccard") >= 0.8)
+        .select(col("ia"), col("ib"))
+        .join(edges, Seq("ia", "ib"), "left_anti").count()
+      if (missed > 0L) throw new IllegalStateException(
+        s"banded dedup edge set is LOSSY on this corpus: $missed truth edge(s) " +
+          "at jaccard >= 0.8 were not retrieved by the capped 16x4 bands " +
+          "(likely a duplicate cluster larger than the band-bucket cap). " +
+          "Run dd_band_gap to size the loss, then widen the bands or raise " +
+          "the bucket cap.")
       edges
     }
 
@@ -1148,11 +1126,14 @@ private[analytics] trait DedupOps {
   }
 
 
-  private[analytics] def buildJaccardPairs(spark: SparkSession, dir: String): DataFrame = {
+  /** The blocked jaccard pairs at ':jpair' keep-threshold `p` (out of
+    * 65536; 65536 keeps every doc). [[jaccardPairs]] passes the corpus
+    * rung, [[jpairLadder]]. */
+  private[analytics] def buildJaccardPairs(spark: SparkSession, dir: String, p: Int): DataFrame = {
     val hold = acquireShingleState(spark, dir)
     try {
     val (capped, sizes) = (hold.capped, hold.sizes)
-    // the sample ladder (see jpairSampleThreshold) bounds THIS join — the
+    // the sample ladder (see jpairLadder) bounds THIS join — the
     // last superlinear stage — by filtering both sides' docs BEFORE the
     // self-join (the filter rides the capped-scan projection, so the join
     // and its aggregation shrink by p²). sizes stays unsampled: it is the
@@ -1160,7 +1141,6 @@ private[analytics] trait DedupOps {
     // OTHER docs survive the sample — and the rare/capped stop-shingle df
     // census above is likewise computed on the FULL corpus (sampling df
     // would re-admit stop shingles and change surviving pairs' commons).
-    val p = jpairSampleThreshold(spark, dir)
     val sampled = if (p >= 65536) capped
       else capped.filter(expr(s"${jpairDraw("doc_id")} < $p"))
     val a = sampled.toDF("ia", "la", "ba", "s")

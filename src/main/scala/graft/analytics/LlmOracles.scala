@@ -276,7 +276,7 @@ private[analytics] trait LlmOracles {
 
 
   /** The keep-threshold ladder as a DuckDB scalar CTE — the mirror of
-    * [[DedupOps.jpairSampleThreshold]] (same breakpoints, same values;
+    * [[DedupOps.jpairLadder]] (same breakpoints, same values;
     * a drifted copy would break every sampled mirror's parity at big
     * SFs while the ≤60k-doc driver gates stayed green). */
   private[analytics] def jpSampleDuck: String =

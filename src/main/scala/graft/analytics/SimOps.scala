@@ -884,7 +884,7 @@ private[analytics] trait SimOps {
     * vector near a cell boundary finds its true neighbors in the runner-up
     * cell); candidates still live in exactly one cell so no pair is
     * produced twice. */
-  private[analytics] lazy val ServeNprobe = 2
+  private[graft] lazy val ServeNprobe = 2
 
 
   /** Probe width of the FILTERED serve path ([[simIvfFiltered]]): a 1/L
@@ -949,13 +949,6 @@ private[analytics] trait SimOps {
     servePqTop5(spark, dir, ServeNprobe, labelFiltered = false)
 
 
-  /** Plain (unfiltered, [[ServeNprobe]]) serving over a caller-supplied
-    * persisted codebook + code index — the spec-facing persistence seam. */
-  private[graft] def servePqServeOver(spark: SparkSession, dir: String,
-      cb: DataFrame, codeIndex: DataFrame): DataFrame =
-    servePqTop5Over(spark, dir, ServeNprobe, labelFiltered = false, cb, codeIndex)
-
-
   /** The shared two-stage ADC retrieval kernel behind [[simIvfServePq]]
     * and [[simIvfFilteredPq]] — ONE implementation of query quantization,
     * per-query ADC table, shortlist scan and exact re-rank, so a change
@@ -976,7 +969,7 @@ private[analytics] trait SimOps {
     * (codes cell-partitioned) and pins disk-served answers bitwise-equal
     * to session-state serving, so a serve-path restart never retrains
     * the quantizer. */
-  private[analytics] def servePqTop5Over(spark: SparkSession, dir: String, nprobe: Int,
+  private[graft] def servePqTop5Over(spark: SparkSession, dir: String, nprobe: Int,
                           labelFiltered: Boolean, cb: DataFrame,
                           codeIndex: DataFrame): DataFrame = {
     val e = Tables.embeddings(spark, dir)

@@ -54,21 +54,23 @@ object Tables {
   }
 
   /** Register every table as a temp view so the whole surface is reachable
-    * from `spark.sql(...)` (plus `js_num` via GraftFunctions/extensions).
-    * Idempotent per (session, dir): re-registration would re-read ten
-    * parquet schemas on every SQL-surface query. `force = true` re-registers
-    * unconditionally — harnesses that rewrite the parquet under an already-
-    * registered dir mid-session use it to avoid serving stale views. */
-  def registerViews(spark: SparkSession, sfDir: String, force: Boolean = false): Unit = {
+    * from `spark.sql(...)` (plus `js_num` via GraftFunctions).
+    * Idempotent per (session, dir, fingerprint): re-registration would
+    * re-read ten parquet schemas on every SQL-surface query, but a view
+    * holds its file listing, so a dir regenerated mid-session (a newer
+    * [[OpsKernels.dirFingerprint]], as [[OpsKernels.memo]] keys on)
+    * registers again instead of serving stale views. */
+  def registerViews(spark: SparkSession, sfDir: String): Unit = {
     val marker = "graft.views.dir"
-    if (force || !spark.conf.getOption(marker).contains(sfDir)) {
+    val stamp = s"$sfDir@${LlmOps.dirFingerprint(spark, sfDir)}"
+    if (!spark.conf.getOption(marker).contains(stamp)) {
       // events goes through the normalizing loader so the SQL surface sees
       // the same epoch-nanos `ts` contract as the DataFrame surface
       names.foreach { n =>
         val df = if (n == "events") events(spark, sfDir) else apply(spark, sfDir, n)
         df.createOrReplaceTempView(n)
       }
-      spark.conf.set(marker, sfDir)
+      spark.conf.set(marker, stamp)
     }
   }
 

@@ -150,20 +150,6 @@ class ErrorPathSpec extends SparkSpec {
       Some(s"Expected a folder of .eml files: ${file.getPath}"))
   }
 
-  test("Verify refuses an oracle dump under audit-mode plan flags") {
-    // GRAFT_CTHIN_FORCE / GRAFT_FULL_PAIRS swap in plans the DuckDB
-    // mirrors do not model above the sampling rungs — a dump taken with
-    // either set must fail fast before any query runs, unless the
-    // operator explicitly acknowledges audit use with GRAFT_AUDIT=1
-    sys.props("GRAFT_FULL_PAIRS") = "1"
-    try {
-      val e = intercept[IllegalArgumentException](
-        Verify.main(Array("/root/testdata/sf0.001", "/tmp/verify-audit-spec")))
-      assert(e.getMessage.contains("GRAFT_FULL_PAIRS") &&
-        e.getMessage.contains("audit-mode"), e.getMessage)
-    } finally sys.props.remove("GRAFT_FULL_PAIRS")
-  }
-
   test("Verify names a query whose dump fails") {
     // a data dir with no tables: the query cannot even be planned, and the
     // dump must report it instead of passing over it

@@ -1142,6 +1142,29 @@ class LlmOpsSpec extends SparkSpec {
     assert(after(1) == expected(1), "q38 served a stale memoized pagerank graph")
   }
 
+  test("regenerated orders: q30's SQL views follow the new data") {
+    import java.nio.file.{Files, Paths}
+    import graft.analytics.{Relational, Tables}
+    // registerViews reads every table, so the copies hold them all
+    val dir = copyOf(Tables.names).getAbsolutePath
+    def result(d: String): Seq[Seq[Any]] =
+      Relational.q30GroupingSets(spark, d).collect().map(_.toSeq).toSeq
+    val before = result(dir)
+    // regenerate orders as a strict subset of its rows: written elsewhere,
+    // then moved into place
+    val subset = spark.read.parquet(s"$dir/orders.parquet").filter("o_orderkey % 3 <> 0")
+    val staged = Files.createTempDirectory("graft-regen-stage").resolve("orders.parquet")
+    subset.write.parquet(staged.toString)
+    val fresh = copyOf(Tables.names.filterNot(_ == "orders")).getAbsolutePath
+    subset.write.parquet(s"$fresh/orders.parquet")
+    Files.delete(Paths.get(dir, "orders.parquet"))
+    Files.move(staged, Paths.get(dir, "orders.parquet"))
+    val after = result(dir)
+    val expected = result(fresh)
+    assert(expected != before, "the subset must change the counts")
+    assert(after == expected, "q30 served views over the old orders")
+  }
+
   test("after a regeneration every memo-spine cell of the dir carries the new fingerprint") {
     val tmp = copyOf(Seq("documents", "embeddings"))
     val dir = tmp.getAbsolutePath

@@ -87,7 +87,8 @@ class PartitionPruningSpec extends SparkSpec {
     def key(rows: Array[org.apache.spark.sql.Row]) = rows.map(r =>
       (r.getAs[Long]("qid"), r.getAs[Int]("rk"), r.getAs[Long]("cid"), r.getAs[Double]("cos"))).toSet
     val mem = LlmOps.simIvfServePq(spark, real).collect()
-    val fromDisk = LlmOps.servePqServeOver(spark, real, cbDisk, codesDisk).collect()
+    val fromDisk = LlmOps.servePqTop5Over(spark, real, LlmOps.ServeNprobe,
+      labelFiltered = false, cbDisk, codesDisk).collect()
     assert(mem.nonEmpty && key(mem) == key(fromDisk),
       "persisted-PQ serving diverged from session-state serving")
   }

@@ -91,11 +91,16 @@ object DeclarativeScans {
     * tokenize, kept in-tree as TypeFreqSpec's reference: the census build
     * now runs the row-local [[org.apache.spark.sql.graft.TypeFreq]]
     * kernel, and the spec pins the kernel census set-equal to the
-    * groupBy-count over this stream on the real corpus. */
+    * groupBy-count over this stream, on the real corpus and on generated
+    * text. */
   def rarityToks(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .withColumn("toks", expr(toksSpark))
+    toksStream(Tables.documents(spark, dir)
+      .repartition(spark.sparkContext.defaultParallelism))
+
+  /** The declarative (doc_id, lang, t) token stream over any frame with
+    * doc_id, lang and text columns. */
+  def toksStream(docs: DataFrame): DataFrame =
+    docs.withColumn("toks", expr(toksSpark))
       .select(col("doc_id"), col("lang"), explode_outer(col("toks")).as("t"))
       .filter(col("t").isNotNull)
 }

@@ -37,25 +37,23 @@ class PairSampleSpec extends SparkSpec {
     // deterministic ':jpair' draw — same common/denominators/jaccard on
     // every surviving pair (the stop-shingle df census and the size
     // denominators are computed on the FULL corpus in both builds).
+    // The builder takes the threshold, so the tiny corpus can be sampled
+    // where the corpus ladder would keep all.
     // token-DISJOINT groups: zero cross-group shingle overlap, so the
-    // full state is exactly the 36 within-group pairs (well under
-    // ddNgramJaccard's top-200 cut — the restriction comparison below
-    // must not race a truncation)
+    // full state is exactly the 36 within-group pairs
     val texts = (0 until 12).map(g =>
       (0 until 12).map(t => s"g${g}tok$t").mkString(" "))
     val rows = for (g <- 0 until 12; m <- 0 until 3)
       yield D(g * 3L + m, texts(g), "en", "s", texts(g).length.toLong)
-    val dirA = writeDocs(rows) // sampled build
-    val dirB = writeDocs(rows) // full build (fresh dir => fresh memo key)
-    def pairs(d: String) = LlmOps.ddNgramJaccard(spark, d).collect()
+    val dir = writeDocs(rows)
+    def pairs(state: org.apache.spark.sql.DataFrame) = state.collect()
       .map(r => (r.getAs[Long]("ia"), r.getAs[Long]("ib")) -> r.getAs[Double]("jaccard"))
       .toMap
-    val sampled =
-      try { sys.props("GRAFT_JPAIR_SAMPLE_P") = "32768"; pairs(dirA) }
-      finally sys.props.remove("GRAFT_JPAIR_SAMPLE_P")
-    val full = pairs(dirB)
+    val sampled = pairs(LlmOps.buildJaccardPairs(spark, dir, 32768))
+    // the memoized state: this 36-doc corpus sits on the keep-all rung
+    val full = pairs(LlmOps.jaccardPairs(spark, dir))
     // the draw as the engine computes it (jpairDraw's SQL, evaluated here)
-    val inSample = spark.read.parquet(s"$dirA/documents.parquet")
+    val inSample = spark.read.parquet(s"$dir/documents.parquet")
       .filter(expr(s"${LlmOps.jpairDraw("doc_id")} < 32768"))
       .collect().map(_.getAs[Long]("doc_id")).toSet
     assert(inSample.nonEmpty && inSample.size < rows.size,
@@ -77,9 +75,9 @@ class PairSampleSpec extends SparkSpec {
     // pair scores containment EXACTLY 1.0 through any amount of
     // thinning; (2) the kept-source noise floor silently-drops nothing —
     // dd_containment_thin publishes the floor and the exact funnel.
-    // GRAFT_CTHIN_FORCE activates the ladder on this tiny corpus (the
-    // GRAFT_JPAIR_SAMPLE_P convention); df must exceed CThinBudget=32
-    // for the draw to bite, hence the 40 superset docs.
+    // The builder and the census take the ladder's state, so thinning
+    // runs on this tiny corpus, whose rung keeps all; df must exceed
+    // CThinBudget=32 for the draw to bite, hence the 40 superset docs.
     val aToks = (0 until 40).map(t => s"a$t")
     val aText = aToks.mkString(" ")
     val tText = aToks.take(5).mkString(" ") // 3 shingles — under the floor
@@ -87,25 +85,22 @@ class PairSampleSpec extends SparkSpec {
     val rows = Seq(D(0L, tText, "en", "s", tText.length.toLong),
         D(1L, aText, "en", "s", aText.length.toLong)) ++
       (0 until 40).map(i => D(10L + i, bText(i), "en", "s", bText(i).length.toLong))
-    val dirA = writeDocs(rows) // thinned build
-    val dirB = writeDocs(rows) // unthinned build (fresh dir => fresh memo key)
-    def pairs(d: String) = LlmOps.containmentPairs(spark, d).collect()
+    val dir = writeDocs(rows)
+    def pairs(state: org.apache.spark.sql.DataFrame) = state.collect()
       .map(r => (r.getAs[Long]("ia"), r.getAs[Long]("ib")) -> r.getAs[Double]("containment"))
       .toMap
-    val (thinned, thinRow) =
-      try {
-        sys.props("GRAFT_CTHIN_FORCE") = "1"
-        (pairs(dirA), LlmOps.ddContainmentThin(spark, dirA).collect().head)
-      } finally sys.props.remove("GRAFT_CTHIN_FORCE")
-    val (plain, plainRow) =
-      (pairs(dirB), LlmOps.ddContainmentThin(spark, dirB).collect().head)
+    val thinned = pairs(LlmOps.buildContainmentPairs(spark, dir, 65536, thinActive = true))
+    val thinRow = LlmOps.containmentThinCensus(spark, dir, active = true).collect().head
+    // the query path: the memoized state and dd_containment_thin, unthinned
+    val plain = pairs(LlmOps.containmentPairs(spark, dir))
+    val plainRow = LlmOps.ddContainmentThin(spark, dir).collect().head
     // accounting row: active, floor published, the draw really dropped
     // df>32 types, and every kept aggregate is a strict sub-mass
     assert(thinRow.getAs[Boolean]("thin_active") &&
       thinRow.getAs[Long]("kept_floor") == 8L)
     assert(thinRow.getAs[Long]("n_types_kept") > 0 &&
       thinRow.getAs[Long]("n_types_kept") < thinRow.getAs[Long]("n_types"),
-      s"forced thinning must drop some df>32 types: $thinRow")
+      s"thinning must drop some df>32 types: $thinRow")
     assert(thinRow.getAs[Long]("joinrows_kept") < thinRow.getAs[Long]("joinrows_capped") &&
       thinRow.getAs[Long]("inst_kept") < thinRow.getAs[Long]("inst_capped"))
     // inactive identity: the accounting row keeps everything, no floor
@@ -129,14 +124,13 @@ class PairSampleSpec extends SparkSpec {
     assert(aPairs.forall(k => plain.get(k).contains(1.0)))
   }
 
-  test("dedup actions REFUSE a corpus where the banded edge set is lossy; the escape hatch and the census still work") {
+  test("dedup actions REFUSE a corpus where the banded edge set is lossy; the census still works") {
     // The round-17 advice item: the action consumers' oracles derive
     // >=0.8 edges from the full state while the engine rides the capped
     // bands — so a band-cap-saturated corpus (here: 310 identical docs
     // vs the 64-doc bucket cap) must fail LOUDLY at edge-memo build
     // time, not silently under-drop. The band-gap census itself bypasses
-    // the gate (it is the loss-sizing diagnostic), and the documented
-    // escape hatch lets an operator dedup lossily on purpose.
+    // the gate (it is the loss-sizing diagnostic).
     val text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     val d = writeDocs((0L until 310L).map(i => D(i, text, "en", "s", text.length.toLong)))
     val e = intercept[IllegalStateException](LlmOps.ddCluster(spark, d).collect())
@@ -145,10 +139,5 @@ class PairSampleSpec extends SparkSpec {
     // the diagnostic is not gated: recall readout stays available
     val gap = LlmOps.ddBandGap(spark, d).collect().head
     assert(gap.getAs[Double]("recall") < 0.05)
-    // escape hatch: the action runs (lossily) when explicitly unlocked
-    val unlocked =
-      try { sys.props("GRAFT_UNGATED_EDGES") = "1"; LlmOps.ddCluster(spark, d).collect() }
-      finally sys.props.remove("GRAFT_UNGATED_EDGES")
-    assert(unlocked.nonEmpty, "unlocked action must produce clusters")
   }
 }

@@ -3,10 +3,12 @@ package graft.analytics
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.TypeFreqBridge.typeFreq
+import org.scalacheck.{Gen, Prop, Test => ScTest}
 
 /** The TypeFreq kernel census must be indistinguishable from the retired
   * declarative chain (round 21 continuation): explode(toks) → groupBy(doc,
-  * t) → count(*) over [[DeclarativeScans.rarityToks]]. Every frequency-family reader
+  * t) → count(*) over [[DeclarativeScans.rarityToks]]'s token stream, on the
+  * real corpus and on generated text. Every frequency-family reader
   * (txt_rarity, txt_lm_score, txt_tfidf, the BPE training censuses,
   * txt_top_terms, txt_vocab_coverage, both SimHash signature builds)
   * silently depends on this identity. */
@@ -29,6 +31,29 @@ class TypeFreqSpec extends SparkSpec {
     kernel.zip(declarative).foreach { case (k, d) =>
       assert(k == d, s"census row drifted: kernel $k vs declarative $d")
     }
+  }
+
+  test("property: kernel census equals the declarative census on generated text") {
+    import spark.implicits._
+    def census(rows: Array[org.apache.spark.sql.Row]): Set[(Long, String, Long)] =
+      rows.map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
+    val prop = Prop.forAll(Gen.listOfN(400, TextGen.text)) { batch =>
+      val docs = batch.zipWithIndex.map { case (t, i) => (i.toLong, "en", t) }
+        .toDF("doc_id", "lang", "text")
+      val kernel = census(docs
+        .select(col("doc_id"), explode_outer(typeFreq(col("text"))).as("e"))
+        .filter(col("e").isNotNull)
+        .select(col("doc_id"), col("e.t"), col("e.tf")).collect())
+      val declarative = census(DeclarativeScans.toksStream(docs)
+        .groupBy(col("doc_id"), col("t")).agg(count(lit(1)).as("tf")).collect())
+      kernel == declarative || {
+        info(s"kernel only: ${(kernel -- declarative).take(5)}; " +
+          s"declarative only: ${(declarative -- kernel).take(5)}")
+        false
+      }
+    }
+    val res = ScTest.check(ScTest.Parameters.default.withMinSuccessfulTests(10), prop)
+    assert(res.passed, res.status.toString)
   }
 
   test("kernel edge cases: empty, whitespace-only, repeats, mixed case, unicode") {
