@@ -6,10 +6,12 @@
 set -euo pipefail
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
 CP="$REPO/target/scala-2.13/classes:/opt/spark/jars/*"
-# GRAFT_XMX: default sized for a SOLO run on the 128 GiB box; co-running two
-# JVMs at the default OOM-kills the second (observed at sf2) — set e.g.
-# GRAFT_XMX=48g when sharing the machine.
-exec java -Xmx"${GRAFT_XMX:-96g}" \
+# Heap: GRAFT_XMX when set, else three quarters of MemTotal (96g on a 128 GiB
+# machine), else 4g where /proc/meminfo cannot be read. A solo run; set
+# GRAFT_XMX lower when two JVMs share the machine (two at 96g OOM-killed the
+# second at sf2).
+XMX="${GRAFT_XMX:-$(awk '/^MemTotal:/ {print int($2 * 3 / 4 / 1024) "m"}' /proc/meminfo 2>/dev/null || true)}"
+exec java -Xmx"${XMX:-4g}" \
   --add-opens=java.base/java.lang=ALL-UNNAMED \
   --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
   --add-opens=java.base/java.lang.reflect=ALL-UNNAMED \

@@ -97,6 +97,17 @@ class ErrorPathSpec extends SparkSpec {
       "Invalid Price per unit")
   }
 
+  private val csvReads = Seq[(String, String => Any)](
+    "freetrade" -> (FreetradeSource.readFile(spark, _)),
+    "ii" -> (IISource.readFile(spark, _)),
+    "fidelity" -> (FidelitySource.readFile(spark, _)))
+
+  for ((broker, read) <- csvReads) test(s"$broker: a missing export fails in readFile with PATH_NOT_FOUND") {
+    val missing = java.nio.file.Files.createTempDirectory("graft-missing").resolve("export.csv").toString
+    val e = intercept[org.apache.spark.sql.AnalysisException](read(missing))
+    assert(e.getCondition == "PATH_NOT_FOUND", e.getMessage)
+  }
+
   private def bvEmail(summary: String = "Buy 0.5kg @ GBP 800.00/kg",
                       consideration: String = "GBP 400.00",
                       commission: String = "GBP 2.00",
