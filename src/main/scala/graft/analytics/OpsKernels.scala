@@ -283,16 +283,15 @@ private[analytics] trait OpsKernels {
 
 
   /** Source-data fingerprint for a testdata dir: the newest modification
-    * time across the tables every memo and every [[bucketedStateTable]]
-    * derives from — `documents` and `embeddings` (the LLM family),
-    * `lineitem` and `orders` (the pagerank graph, the bucketed facts) —
-    * resolved through the Hadoop filesystem of the path (so hdfs://s3://
-    * URIs and directory-layout parquet fingerprint correctly — a plain
-    * java.io.File mtime is 0 for a URI and misses in-place part-file
-    * rewrites under a directory). A harness that REGENERATES a dir
-    * mid-session (the driver does) changes the fingerprint, so the next
-    * memo call misses and rebuilds — without this, build-once state would
-    * silently serve the old data.
+    * time across every table in [[Tables.names]] — the tables every memo,
+    * every [[bucketedStateTable]] and every SQL view of
+    * [[Tables.registerViews]] derives from — resolved through the Hadoop
+    * filesystem of the path (so hdfs://s3:// URIs and directory-layout
+    * parquet fingerprint correctly — a plain java.io.File mtime is 0 for
+    * a URI and misses in-place part-file rewrites under a directory). A
+    * harness that REGENERATES a dir mid-session (the driver does) changes
+    * the fingerprint, so the next memo call misses and rebuilds — without
+    * this, build-once state would silently serve the old data.
     * (`releaseCaches()` remains the bulk lifecycle: release everything
     * when the session is done with a dir.) */
   private[graft] def dirFingerprint(spark: SparkSession, dir: String): Long = {
@@ -306,7 +305,7 @@ private[analytics] trait OpsKernels {
     // Fall back to the last successfully observed value instead: unreadable
     // means "unchanged until proven otherwise".
     val computed: Option[Long] = try {
-      Some(Seq("documents", "embeddings", "lineitem", "orders").map { t =>
+      Some(Tables.names.map { t =>
         val p = new org.apache.hadoop.fs.Path(s"$dir/$t.parquet")
         val fs = p.getFileSystem(conf)
         try {

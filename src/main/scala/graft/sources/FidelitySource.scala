@@ -9,11 +9,11 @@ import graft.expr.Parse._
   *
   * Reference semantics (`fidelity.js`):
   *  - S3 source: fixed 12-column schema, parsing starts at physical line 9
-  *    (8-line preamble skipped, `fidelity.js:33-41`): the driver finds the
-  *    byte offset after the preamble and the rest is parsed in parallel
-  *    line-aligned splits, with no job (`CsvSupport.readFixedCsv`). A
-  *    repeated header row inside the data survives parsing and is dropped
-  *    by the whitelist filter.
+  *    (8-line preamble skipped, `fidelity.js:33-41`) in one read of one
+  *    file (`CsvSupport.readFixedCsv`): the driver finds the offset after
+  *    the preamble (through the codec of a compressed export), the rest is
+  *    parsed in parallel line-aligned splits, with no job. A repeated header
+  *    row inside the data survives parsing; the whitelist filter drops it.
   *  - F3 filter: lower(Transaction type) ∈ 7-value whitelist
   *    (`fidelity.js:3-11,46`); Cash In / Transfer Out / header rows drop.
   *  - P3 projection (`fidelity.js:59-88`):

@@ -2,9 +2,11 @@ package graft
 
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
+import java.util.zip.GZIPOutputStream
 
 import scala.collection.mutable
 
+import org.apache.commons.compress.compressors.bzip2.BZip2CompressorOutputStream
 import org.apache.spark.sql.DataFrame
 import org.scalacheck.{Gen, Prop, Test => ScTest}
 import org.scalacheck.Prop.propBoolean
@@ -19,7 +21,9 @@ import graft.sources.{CsvSupport, FidelitySource}
   * and quoted fields. Each property also asserts that its cases covered a
   * BOM, CRLF and lone-CR line breaks, blank lines before the header, a
   * header or last preamble line cut by a split boundary, a data row equal to
-  * the header, quoted commas and a comma in the file name. */
+  * the header, quoted commas and a comma in the file name. Each export is
+  * also written gzip-compressed, and its read must equal the reference on
+  * the plain file. */
 class CsvSplitParitySpec extends SparkSpec {
 
   /** One generated export: its physical lines with their line breaks, and
@@ -133,14 +137,18 @@ class CsvSplitParitySpec extends SparkSpec {
       }
       covered ++= features(e, spans, last(spans.map(_._1)), header)
       val got = read(path.toString)
+      val zipped = read(gzip(path.resolveSibling(e.name + ".gz"), bytes))
       val want = reference(path.toString)
-      val splits = splitStarts(bytes.length, spark.sparkContext.defaultParallelism).size + 1
-      (got.columns.toSeq == want.columns.toSeq) :| s"columns ${got.columns.toSeq} vs ${want.columns.toSeq}" &&
-        (got.rdd.getNumPartitions == splits) :| s"${got.rdd.getNumPartitions} partitions, $splits splits" &&
-        {
-          val (g, w) = (got.collect().toSeq, want.collect().toSeq)
-          (g == w) :| s"rows differ: ${g.size} vs ${w.size}; ${g.zipAll(w, null, null).filter(p => p._1 != p._2).take(3)}"
-        }
+      val w = want.collect().toSeq
+      def same(label: String, df: DataFrame, parts: Int): Prop = {
+        val g = df.collect().toSeq
+        (df.columns.toSeq == want.columns.toSeq) :| s"$label columns ${df.columns.toSeq} vs ${want.columns.toSeq}" &&
+          (df.rdd.getNumPartitions == parts) :| s"$label: ${df.rdd.getNumPartitions} partitions, $parts splits" &&
+          (g == w) :| s"$label rows differ: ${g.size} vs ${w.size}; " +
+            s"${g.zipAll(w, null, null).filter(p => p._1 != p._2).take(3)}"
+      }
+      same("plain", got, splitStarts(bytes.length, spark.sparkContext.defaultParallelism).size + 1) &&
+        same("gzip", zipped, 1)
     }
     val res = ScTest.check(ScTest.Parameters.default.withMinSuccessfulTests(40), prop)
     assert(res.passed, res.status.toString)
@@ -148,6 +156,16 @@ class CsvSplitParitySpec extends SparkSpec {
       "row equal to the header", "quoted comma", "comma in the file name")
     assert(all -- covered == Set.empty, "generated exports never covered these")
   }
+
+  /** Writes `bytes` gzip-compressed to `path`; returns the path. */
+  private def gzip(path: java.nio.file.Path, bytes: Array[Byte]): String = {
+    val out = new GZIPOutputStream(Files.newOutputStream(path))
+    try out.write(bytes) finally out.close()
+    path.toString
+  }
+
+  private val iiHeader = "Date,Settlement Date,Symbol,Sedol,Quantity,Price,Description,Reference,Debit,Credit," +
+    "Running Balance"
 
   private def headerParity(header: String, cols: Int): Unit =
     parity(headerExport(header, cols), CsvSupport.readHeaderCsv(spark, _), CsvReference.readHeaderCsv(spark, _),
@@ -159,8 +177,33 @@ class CsvSplitParitySpec extends SparkSpec {
   }
 
   test("property: ii exports read in splits as in one scan") {
-    headerParity("Date,Settlement Date,Symbol,Sedol,Quantity,Price,Description,Reference,Debit,Credit," +
-      "Running Balance", 11)
+    headerParity(iiHeader, 11)
+  }
+
+  test("a gzip ii export that starts with a tab-only line reads all 11 ii columns") {
+    val text = "\t \n" + iiHeader + "\n01/01/2024,02/01/2024,SYM,SDL,5,1.5,x,r,1.00,n/a,3.00\n"
+    val path = gzip(Files.createTempDirectory("graft-split").resolve("ii.csv.gz"), text.getBytes(UTF_8))
+    val df = CsvSupport.readHeaderCsv(spark, path)
+    assert(df.columns.toSeq == iiHeader.split(",").toSeq)
+    assert(df.collect().map(_.getString(2)).toSeq == Seq("SYM"))
+  }
+
+  test("a bzip2 export of several compressed blocks reads in one split as its plain twin") {
+    // bzip2 is a splittable codec, and a later split's keys start counting
+    // at a compressed offset: behind ~220 KB of blank lines, the rows in
+    // later blocks would fall before the header's decompressed offset
+    val rnd = new scala.util.Random(7)
+    val lead = Seq.fill(40000)(Seq.fill(rnd.nextInt(10))(if (rnd.nextBoolean()) " " else "\t").mkString)
+    val rows = (1 to 3000).map(i => s"01/01/2024,02/01/2024,S$i,D$i,$i,1.5,x,r,1.00,n/a,3.00")
+    val bytes = (lead ++ (iiHeader +: rows)).mkString("", "\n", "\n").getBytes(UTF_8)
+    val dir = Files.createTempDirectory("graft-split")
+    val plain = Files.write(dir.resolve("ii.csv"), bytes).toString
+    val bz2 = dir.resolve("ii.csv.bz2")
+    val out = new BZip2CompressorOutputStream(Files.newOutputStream(bz2), 1) // 100 KB blocks
+    try out.write(bytes) finally out.close()
+    val df = CsvSupport.readHeaderCsv(spark, bz2.toString)
+    assert(df.rdd.getNumPartitions == 1)
+    assert(df.collect().toSeq == CsvReference.readHeaderCsv(spark, plain).collect().toSeq)
   }
 
   test("property: fidelity exports read in splits as in one scan, past the 8-line preamble") {

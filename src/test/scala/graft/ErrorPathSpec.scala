@@ -108,6 +108,18 @@ class ErrorPathSpec extends SparkSpec {
     assert(e.getCondition == "PATH_NOT_FOUND", e.getMessage)
   }
 
+  for ((broker, read) <- csvReads) test(s"$broker: a directory fails in readFile, naming it") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-export-dir")
+    java.nio.file.Files.writeString(dir.resolve("export.csv"), ftHeader + "\n" + ftRow())
+    expectFail(read(dir.toString), s"Expected a CSV file: $dir")
+  }
+
+  for ((broker, content) <- Seq("freetrade" -> "", "ii" -> "\n \t\n\r\n"))
+    test(s"$broker: an export with no header line fails in readFile, naming it") {
+      val path = BrokerInputs.file(content)
+      expectFail(csvReads.toMap.apply(broker)(path), s"No header line in CSV export: $path")
+    }
+
   private def bvEmail(summary: String = "Buy 0.5kg @ GBP 800.00/kg",
                       consideration: String = "GBP 400.00",
                       commission: String = "GBP 2.00",
@@ -147,18 +159,36 @@ class ErrorPathSpec extends SparkSpec {
   }
 
   test("bullionvault: empty folder fails the reference's friendly pre-check (index.js:66-71)") {
+    def error(f: java.io.File) = Main.check(Array("bullionvault", f.getPath)).left.toOption
     val empty = java.nio.file.Files.createTempDirectory("noeml").toFile
-    assert(Main.bullionVaultFolderError(empty) ==
-      Some(s"Folder '${empty.getPath}' does not contain any .eml files"))
+    assert(error(empty) == Some(s"Folder '${empty.getPath}' does not contain any .eml files"))
     // non-.eml content does not count; extension matching is
     // case-insensitive like the reference's toLowerCase().endsWith
     java.nio.file.Files.writeString(empty.toPath.resolve("readme.txt"), "x")
-    assert(Main.bullionVaultFolderError(empty).isDefined)
+    assert(error(empty).isDefined)
     java.nio.file.Files.writeString(empty.toPath.resolve("trade.EML"), "x")
-    assert(Main.bullionVaultFolderError(empty).isEmpty)
+    assert(error(empty).isEmpty)
     val file = java.nio.file.Files.createTempFile("notdir", ".eml").toFile
-    assert(Main.bullionVaultFolderError(file) ==
-      Some(s"Expected a folder of .eml files: ${file.getPath}"))
+    assert(error(file) == Some(s"Expected a folder of .eml files: ${file.getPath}"))
+  }
+
+  test("Main checks its arguments and path in the reference's order, before any read") {
+    def error(args: String*) = Main.check(args.toArray).left.toOption
+    val usage = "Usage: graft.Main <freetrade|ii|fidelity|bullionvault> <path> [out=data.txt] [--distinct]"
+    val dir = java.nio.file.Files.createTempDirectory("graft-cli").toString
+    val missing = s"$dir/none.csv"
+    val file = BrokerInputs.file(ftHeader)
+    assert(error("freetrade") == Some(usage))
+    assert(error("freetrade", file, "out", "extra") == Some(usage))
+    assert(error("freetrade", file, "--dedup") == Some(usage))
+    assert(error("nope", missing) == Some(s"No such file or folder: $missing"))
+    assert(error("nope", file) == Some("Unknown type: nope"))
+    for (broker <- Seq("freetrade", "II", "fidelity")) {
+      assert(error(broker, dir) == Some(s"Expected a CSV file: $dir"))
+      assert(error(broker, file).isEmpty)
+    }
+    assert(Main.check(Array("ii", file)).exists(r => r.out == "data.txt" && !r.distinct))
+    assert(Main.check(Array("ii", file, "sink.txt", "--distinct")).exists(r => r.out == "sink.txt" && r.distinct))
   }
 
   test("Verify names a query whose dump fails") {

@@ -1165,6 +1165,24 @@ class LlmOpsSpec extends SparkSpec {
     assert(after == expected, "q30 served views over the old orders")
   }
 
+  test("regenerated customer alone: registerViews re-registers its SQL view over the new data") {
+    import java.nio.file.{Files, Paths}
+    import graft.analytics.Tables
+    val dir = copyOf(Tables.names).getAbsolutePath
+    Tables.registerViews(spark, dir)
+    // regenerate customer alone as a strict subset of its rows: written
+    // elsewhere, then moved into place
+    val staged = Files.createTempDirectory("graft-regen-stage").resolve("customer.parquet")
+    spark.table("customer").filter("c_custkey % 3 <> 0").write.parquet(staged.toString)
+    val expected = spark.read.parquet(staged.toString).collect().toSet
+    Files.delete(Paths.get(dir, "customer.parquet"))
+    Files.move(staged, Paths.get(dir, "customer.parquet"))
+    Tables.registerViews(spark, dir)
+    val after = spark.table("customer").collect().toSet
+    assert(after == expected, s"the customer view kept the old file listing: ${after.size} rows, " +
+      s"${expected.size} expected")
+  }
+
   test("after a regeneration every memo-spine cell of the dir carries the new fingerprint") {
     val tmp = copyOf(Seq("documents", "embeddings"))
     val dir = tmp.getAbsolutePath

@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test => ScTest}
+
+import graft.analytics.TextGen
 
 /** The `shingle_hash32` kernel must be indistinguishable from the
   * declarative chain it replaced (tokenize → distinct 3-gram shingles →
@@ -61,22 +64,50 @@ class ShingleHashSpec extends SparkSpec {
     assertAgree(texts)
   }
 
-  test("passage_hash equals the declarative window chain, in order, on the real corpus") {
+  /** `passage_hash(text, 8)` against its declarative window chain,
+    * element for element and in order. */
+  private def assertPassagesAgree(texts: Seq[String]): Unit = {
     import spark.implicits._
     org.apache.spark.sql.graft.GraftFunctions.register(spark)
     val decl =
       s"""case when size($toks) >= 8 then transform(sequence(0, size($toks) - 8),
          |  i -> substr(md5(array_join(slice($toks, i + 1, 8), ' ')), 1, 16)) else array() end""".stripMargin
+    val rows = texts.toDF("text")
+      .selectExpr("text", "passage_hash(text, 8) AS kern", s"$decl AS decl").collect()
+    rows.foreach { r =>
+      assert(r.getAs[scala.collection.Seq[String]]("kern").toList ==
+        r.getAs[scala.collection.Seq[String]]("decl").toList, s"windows differ for: ${r.getString(0).take(60)}")
+    }
+  }
+
+  test("passage_hash equals the declarative window chain, in order, on the real corpus") {
     val crafted = Seq("", "one two three", (1 to 40).map(i => s"w${i % 7}").mkString(" "),
       "a b c d e f g h", "  Mixed CASE  with   runs of eight tokens here ")
     val real = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select("text").limit(200).collect().map(_.getString(0)).toSeq
-    val rows = (crafted ++ real).toDF("text")
-      .selectExpr("passage_hash(text, 8) AS kern", s"$decl AS decl").collect()
-    rows.foreach { r =>
-      assert(r.getAs[scala.collection.Seq[String]]("kern").toList ==
-        r.getAs[scala.collection.Seq[String]]("decl").toList)
-    }
+    assertPassagesAgree(crafted ++ real)
+  }
+
+  /** [[TextGen]]'s texts, alone and joined by spaces in runs long enough
+    * for several shingles and 8-token windows. NULL is left to the null
+    * test below: both chains are compared on strings. */
+  private val generated: Gen[Seq[String]] = Gen.listOfN(200, Gen.frequency(
+    1 -> TextGen.text,
+    2 -> Gen.chooseNum(2, 8).flatMap(Gen.listOfN(_, TextGen.text)).map(t => Some(t.flatten.mkString(" ")))))
+    .map(_.flatten)
+
+  private def holdsOnGenerated(check: Seq[String] => Unit): Unit = {
+    val res = ScTest.check(ScTest.Parameters.default.withMinSuccessfulTests(10),
+      Prop.forAll(generated) { texts => check(texts); true })
+    assert(res.passed, res.status.toString)
+  }
+
+  test("property: shingle_hash32 equals the declarative chain on generated text") {
+    holdsOnGenerated(assertAgree)
+  }
+
+  test("property: passage_hash equals the declarative window chain on generated text") {
+    holdsOnGenerated(assertPassagesAgree)
   }
 
   test("null text gives null, not a crash") {

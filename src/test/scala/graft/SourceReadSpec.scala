@@ -87,10 +87,17 @@ class SourceReadSpec extends SparkSpec {
     val ft = "Title,Type,Timestamp,Account Currency,Total Amount,Buy / Sell," +
       "Ticker,ISIN,Price per Share in Account Currency,Stamp Duty,Quantity,FX Fee Amount\n" +
       "Buy,ORDER,2024-05-01T10:00:00.000Z,GBP,100,BUY,ABC,GB00ABC,10,0.5,10,0\n"
-    for ((read, content, line) <- Seq(
-        ((p: String) => FreetradeSource.readFile(spark, p), ft, "BUY 01/05/2024 GB00ABC 10 10 0.5"),
-        ((p: String) => FidelitySource.readFile(spark, p), fidelityExport, "BUY 02/06/2023 Fund_A 10 1.5 0")))
-      assert(Transaction.toLines(read(gzip(content))).collect().toSeq == Seq(line))
+    val ii = "\uFEFFSettlement Date,Symbol,Sedol,Quantity,Price,Debit,Credit\n" +
+      "04/01/2024,TEST,BKV0VZ0,37.91,109.62806,\"£4,160.00\",n/a"
+    for ((broker, read, content, line) <- Seq(
+        ("freetrade", (p: String) => FreetradeSource.readFile(spark, p), ft, "BUY 01/05/2024 GB00ABC 10 10 0.5"),
+        ("ii", (p: String) => IISource.readFile(spark, p), ii, "BUY 04/01/2024 BKV0VZ0 37.91 109.62806 0"),
+        ("fidelity", (p: String) => FidelitySource.readFile(spark, p), fidelityExport,
+          "BUY 02/06/2023 Fund_A 10 1.5 0"))) {
+      val path = gzip(content)
+      assert(jobsDuring(read(path)) == 0, s"reading the gzip $broker export started a job")
+      assert(Transaction.toLines(read(path)).collect().toSeq == Seq(line))
+    }
   }
 
   test("a header read on the driver names duplicate, empty and quoted columns as Spark's inference does") {
