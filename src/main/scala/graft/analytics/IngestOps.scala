@@ -7,8 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Ingestion + multimodal operators: incremental dedup state paths,
-  * the quarantine census feed, mm_* metadata/frame queries. Moved verbatim
-  * from LlmOps (round 15). */
+  * the quarantine census feed, mm_* metadata/frame queries. */
 private[analytics] trait IngestOps {
   this: OpsKernels with TxtOps with DedupOps with SimOps with LlmOracles =>
 
@@ -253,14 +252,12 @@ private[analytics] trait IngestOps {
     * (cid, ce, cn, cell). */
   private[analytics] def imageCellAssign(spark: SparkSession, dir: String): DataFrame =
     memoSig(spark, dir, "mm_image_cells") {
-      // round 20: packed-fold assignment (SimOps.foldAssignCell) — the
-      // build was the N/2 × k crossJoin + row_number window; map-only now,
-      // and prewarmed by stateBuilders so the build no longer lands on the
-      // alphabetically-first mm consumer (mm_cell_balance).
+      // prewarmed by stateBuilders, so the build does not land on the
+      // first mm consumer (mm_cell_balance)
       val img = Tables.embeddings(spark, dir)
         .withColumn("nrm", dotF(col("embedding"), col("embedding")))
         .filter(col("vec_id") % 2 === 0)
-      foldAssignCell(img, imageCentroids(spark, dir))
+      nearestCell(img, imageCentroids(spark, dir), "cent_id", "cemb", "cnrm")
         .select(col("vec_id").as("cid"), col("embedding").as("ce"),
           col("nrm").as("cn"), col("cell"))
     }
@@ -296,7 +293,6 @@ private[analytics] trait IngestOps {
     val e = Tables.embeddings(spark, dir)
       .withColumn("nrm", dotF(col("embedding"), col("embedding")))
     val img = e.filter(col("vec_id") % 2 === 0)
-    val cents = imageCentroids(spark, dir)
     val cell = imageCellAssign(spark, dir)
     val q = e.filter(col("vec_id") % 25 === 0)
       .orderBy(col("vec_id")).limit(SimQueryCap)
@@ -308,10 +304,7 @@ private[analytics] trait IngestOps {
         Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("vec_id"))))
       .filter(col("rk") <= 5)
       .select(col("qid"), col("vec_id").as("cid"))
-    val qCells = q.crossJoin(broadcast(cents))
-      .withColumn("cos_c", dotF(col("qe"), col("cemb")) / sqrt(col("qn") * col("cnrm")))
-      .withColumn("ark", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("cos_c").desc, col("cent_id"))))
+    val qCells = probeCells(q, imageCentroids(spark, dir), "qid", "qe", "qn")
       .filter(col("ark") <= 2)
       .select(col("qid"), col("qe"), col("qn"), col("cent_id").as("cell"))
     val ivf5 = qCells.join(cell, Seq("cell"))
@@ -378,8 +371,8 @@ private[analytics] trait IngestOps {
 
 
   /** Per-cell REFERENCE cap for [[mmImageDedup]]'s within-cell self-join
-    * (round 21, the r20 verdict's ask #4 — the [[DedupOps.cappedWideBands]]
-    * treatment applied to the image index): each image compares against at
+    * (the [[DedupOps.cappedWideBands]] treatment applied to the image
+    * index): each image compares against at
     * most this many lowest-id cell-mates, so a pathologically hot cell
     * costs occ·cap, never occ². Far above any occupancy the test corpora
     * reach (max occ ≈ 2·√(N/2): 65 at sf0.1, ~200 at sf1z, ~sqrt-growth

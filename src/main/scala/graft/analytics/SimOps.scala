@@ -4,10 +4,11 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
 /** Similarity-search operators (sim_*): brute-force truth, hyperplane
   * LSH, IVF flat/kmeans/two-level, IVF-PQ + ADC, the serve lifecycle and
-  * the recall censuses, SemDeDup. Moved verbatim from LlmOps (round 15). */
+  * the recall censuses, SemDeDup. */
 private[analytics] trait SimOps {
   this: OpsKernels with TxtOps with DedupOps with IngestOps with LlmOracles =>
 
@@ -52,12 +53,7 @@ private[analytics] trait SimOps {
         .orderBy(col("vec_id")).limit(SimQueryCap)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("nrm").as("qn"))
       val c = e.select(col("vec_id").as("cid"), col("embedding").as("ce"), col("nrm").as("cn"))
-      val w = Window.partitionBy(col("qid")).orderBy(col("cos_exact").desc, col("cid"))
-      broadcast(q).crossJoin(c).filter(col("qid") =!= col("cid"))
-        .withColumn("cos_exact", dotF(col("qe"), col("ce")) / sqrt(col("qn") * col("cn")))
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= 5)
-        .select(col("qid"), col("rk"), col("cid"), col("cos_exact").as("cos"))
+      exactTop5(broadcast(q).crossJoin(c).filter(col("qid") =!= col("cid")))
     }
 
 
@@ -84,12 +80,7 @@ private[analytics] trait SimOps {
     val q = e.filter(expr("vec_id % 50 = 0"))
       .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("nrm").as("qn"), col("bucket"))
     val c = e.select(col("vec_id").as("cid"), col("embedding").as("ce"), col("nrm").as("cn"), col("bucket").as("cb"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos_exact").desc, col("cid"))
-    q.join(c, col("bucket") === col("cb") && col("qid") =!= col("cid"))
-      .withColumn("cos_exact", dotF(col("qe"), col("ce")) / sqrt(col("qn") * col("cn")))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 5)
-      .select(col("qid"), col("rk"), col("cid"), col("cos_exact").as("cos"))
+    exactTop5(q.join(c, col("bucket") === col("cb") && col("qid") =!= col("cid")))
       .orderBy(col("qid"), col("rk"))
   }
 
@@ -114,12 +105,7 @@ private[analytics] trait SimOps {
         explode_outer(expr(s"array(bucket, $probes)")).as("probe"))
       .filter(col("probe").isNotNull)
     val c = e.select(col("vec_id").as("cid"), col("embedding").as("ce"), col("nrm").as("cn"), col("bucket").as("cb"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos_exact").desc, col("cid"))
-    q.join(c, col("probe") === col("cb") && col("qid") =!= col("cid"))
-      .withColumn("cos_exact", dotF(col("qe"), col("ce")) / sqrt(col("qn") * col("cn")))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 5)
-      .select(col("qid"), col("rk"), col("cid"), col("cos_exact").as("cos"))
+    exactTop5(q.join(c, col("probe") === col("cb") && col("qid") =!= col("cid")))
       .orderBy(col("qid"), col("rk"))
   }
 
@@ -153,12 +139,7 @@ private[analytics] trait SimOps {
         explode_outer(expr(s"array($probes)")).as("probe"))
       .filter(col("probe").isNotNull)
     val c = e.select(col("vec_id").as("cid"), col("embedding").as("ce"), col("nrm").as("cn"), col("bucket").as("cb"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos_exact").desc, col("cid"))
-    q.join(c, col("probe") === col("cb") && col("qid") =!= col("cid"))
-      .withColumn("cos_exact", dotF(col("qe"), col("ce")) / sqrt(col("qn") * col("cn")))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 5)
-      .select(col("qid"), col("rk"), col("cid"), col("cos_exact").as("cos"))
+    exactTop5(q.join(c, col("probe") === col("cb") && col("qid") =!= col("cid")))
       .orderBy(col("qid"), col("rk"))
   }
 
@@ -175,13 +156,8 @@ private[analytics] trait SimOps {
     * unchanged. */
   def simIvf(spark: SparkSession, dir: String): DataFrame = {
     val (q, c) = ivfAssigned(spark, dir)
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos_exact").desc, col("cid"))
-    q.filter(col("ark") === 1).drop("ark")
-      .join(c, col("cell") === col("ccell") && col("qid") =!= col("cid"))
-      .withColumn("cos_exact", dotF(col("qe"), col("ce")) / sqrt(col("qn") * col("cn")))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 5)
-      .select(col("qid"), col("rk"), col("cid"), col("cos_exact").as("cos"))
+    exactTop5(q.filter(col("ark") === 1).drop("ark")
+      .join(c, col("cell") === col("ccell") && col("qid") =!= col("cid")))
       .orderBy(col("qid"), col("rk"))
   }
 
@@ -215,20 +191,11 @@ private[analytics] trait SimOps {
   private[graft] def serveTop5Over(spark: SparkSession, dir: String, c: DataFrame): DataFrame = {
     val e = Tables.embeddings(spark, dir)
       .withColumn("nrm", dotF(col("embedding"), col("embedding")))
-    val cents = serveCentroids(spark, dir)
-    val wAssign = Window.partitionBy(col("vec_id")).orderBy(col("cos_c").desc, col("cent_id"))
-    val q = e.filter(expr("vec_id % 200 = 3"))
-      .crossJoin(broadcast(cents))
-      .withColumn("cos_c", dotF(col("embedding"), col("cemb")) / sqrt(col("nrm") * col("cnrm")))
-      .withColumn("ark", row_number().over(wAssign))
+    val q = probeCells(e.filter(expr("vec_id % 200 = 3")), serveCentroids(spark, dir),
+        "vec_id", "embedding", "nrm")
       .filter(col("ark") === 1)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("nrm").as("qn"), col("cent_id").as("cell"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos_exact").desc, col("cid"))
-    q.join(c, col("cell") === col("ccell"))
-      .withColumn("cos_exact", dotF(col("qe"), col("ce")) / sqrt(col("qn") * col("cn")))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 5)
-      .select(col("qid"), col("rk"), col("cid"), col("cos_exact").as("cos"))
+    exactTop5(q.join(c, col("cell") === col("ccell")))
       .orderBy(col("qid"), col("rk"))
   }
 
@@ -251,13 +218,10 @@ private[analytics] trait SimOps {
     * so the lifecycle spec can drive read-back over it. */
   private[graft] def ivfServeAssignTable(spark: SparkSession, dir: String): DataFrame =
     memoSig(spark, dir, "ivf_serve_assign") {
-      // round 20: packed-fold assignment (foldAssignCell) — the build was
-      // an N × k crossJoin + row_number window whose Exchange/Sorts were
-      // the build's cost; the fold is map-only over the member scan.
       val e = Tables.embeddings(spark, dir)
         .filter(expr("vec_id % 4 <> 3"))
         .withColumn("nrm", dotF(col("embedding"), col("embedding")))
-      foldAssignCell(e, serveCentroids(spark, dir))
+      nearestCell(e, serveCentroids(spark, dir), "cent_id", "cemb", "cnrm")
         .select(col("vec_id"), col("embedding"), col("nrm"), col("label"), col("cell"))
     }
 
@@ -275,15 +239,12 @@ private[analytics] trait SimOps {
     * deployed index stores per vector (cell id + the vector + its norm). */
   private[analytics] def ivfAssignTable(spark: SparkSession, dir: String): DataFrame =
     memoSig(spark, dir, "ivf_assign") {
-      // round 20: top-2 packed fold (foldAssignTop2) — rank-1 AND rank-2
-      // cells from one row-local fold + a Generate, replacing the N × k
-      // crossJoin + row_number window (same parity argument; ark <= 2).
       val k = ivfK(spark, dir)
       val e = Tables.embeddings(spark, dir)
         .withColumn("nrm", dotF(col("embedding"), col("embedding")))
       val cents = e.filter(col("vec_id") < k)
         .select(col("vec_id").as("cent_id"), col("embedding").as("cemb"), col("nrm").as("cnrm"))
-      foldAssignTop2(e, cents)
+      nearestCell(e, cents, "cent_id", "cemb", "cnrm", top2 = true)
         .select(col("vec_id"), col("embedding"), col("nrm"), col("cell"), col("ark"))
     }
 
@@ -304,13 +265,8 @@ private[analytics] trait SimOps {
     * while staying ~k/2 below brute force. */
   def simIvfNprobe2(spark: SparkSession, dir: String): DataFrame = {
     val (q, c) = ivfAssigned(spark, dir)
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos_exact").desc, col("cid"))
-    q.drop("ark")
-      .join(c, col("cell") === col("ccell") && col("qid") =!= col("cid"))
-      .withColumn("cos_exact", dotF(col("qe"), col("ce")) / sqrt(col("qn") * col("cn")))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 5)
-      .select(col("qid"), col("rk"), col("cid"), col("cos_exact").as("cos"))
+    exactTop5(q.drop("ark")
+      .join(c, col("cell") === col("ccell") && col("qid") =!= col("cid")))
       .orderBy(col("qid"), col("rk"))
   }
 
@@ -423,12 +379,8 @@ private[analytics] trait SimOps {
         col("cell"), col("subcell"))
     val c = a.select(col("vec_id").as("cid"), col("embedding").as("ce"), col("nrm").as("cn"),
       col("cell").as("ccell"), col("subcell").as("csub"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos_exact").desc, col("cid"))
-    q.join(c, col("cell") === col("ccell") && col("subcell") === col("csub") && col("qid") =!= col("cid"))
-      .withColumn("cos_exact", dotF(col("qe"), col("ce")) / sqrt(col("qn") * col("cn")))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 5)
-      .select(col("qid"), col("rk"), col("cid"), col("cos_exact").as("cos"))
+    exactTop5(q.join(c,
+      col("cell") === col("ccell") && col("subcell") === col("csub") && col("qid") =!= col("cid")))
       .orderBy(col("qid"), col("rk"))
   }
 
@@ -438,52 +390,25 @@ private[analytics] trait SimOps {
     * siblings (built once, queried many times). */
   private[analytics] def ivf2AssignTable(spark: SparkSession, dir: String): DataFrame =
     memoSig(spark, dir, "ivf2_assign") {
-      // round 20: both levels ride the packed fold. Level 1 is
-      // foldAssignCell verbatim; level 2 packs each cell's sub-centroids
-      // into ONE array row (per-cell collect over the k lowest-id members,
-      // the only keyed shuffle left — it builds the index side) and each
-      // member folds over its own cell's array after a broadcast equi-join
-      // on cell, replacing the N × ~k_sub row expansion + row_number
-      // window that dominated the build. Tie/NaN parity per foldAssignCell.
+      // both levels ride the nearest-centroid fold; level 2 packs each
+      // cell's k lowest-id members as its sub-centroids (the only keyed
+      // shuffle, on the index side) and each member folds over its own
+      // cell's array
       val k = ivf2K(spark, dir)
       val e = Tables.embeddings(spark, dir)
         .withColumn("nrm", dotF(col("embedding"), col("embedding")))
       val cents = e.filter(col("vec_id") < k)
         .select(col("vec_id").as("cent_id"), col("embedding").as("cemb"), col("nrm").as("cnrm"))
-      val l1 = foldAssignCell(e, cents)
+      val l1 = nearestCell(e, cents, "cent_id", "cemb", "cnrm")
         .select(col("vec_id"), col("embedding"), col("nrm"), col("cell"))
       val wSub = Window.partitionBy(col("cell")).orderBy(col("vec_id"))
       val subcents = l1.withColumn("srk", row_number().over(wSub))
         .filter(col("srk") <= k)
         .select(col("cell").as("scell"), col("vec_id").as("sub_id"),
           col("embedding").as("semb"), col("nrm").as("ssnrm"))
-      foldAssignSubcell(l1, subcents)
+      nearestCell(l1, subcents, "sub_id", "semb", "ssnrm", by = Some("cell" -> "scell"))
         .select(col("vec_id"), col("embedding"), col("nrm"), col("cell"), col("subcell"))
     }
-
-
-  /** The ivf2 LEVEL-2 fold, extracted so PlanGuardSpec can pin its
-    * tie/NULL/NaN parity directly (r20 advice): packs each cell's
-    * sub-centroids `(scell, sub_id, semb, ssnrm)` into one array row,
-    * broadcast equi-joins on cell, and appends `subcell` via the same
-    * [[foldBeats]] fold as [[foldAssignCell]]. Members of a cell with no
-    * sub-centroid row drop out of the inner join — the same zero-rows
-    * behavior as the retired per-cell window. */
-  private[graft] def foldAssignSubcell(l1: DataFrame, subcents: DataFrame): DataFrame = {
-    val packedSub = subcents
-      .groupBy(col("scell"))
-      .agg(sort_array(collect_list(struct(col("sub_id"), col("semb"), col("ssnrm"))))
-        .as("subs"))
-    val subSql =
-      s"""aggregate(
-        |  transform(subs, c -> named_struct(
-        |    'cos', dot_f(embedding, c.semb) / sqrt(nrm * c.ssnrm), 'cell', c.sub_id)),
-        |  named_struct('cos', CAST(-2.0 AS DOUBLE), 'cell', CAST(-1 AS BIGINT)),
-        |  (acc, s) -> CASE WHEN ${foldBeats("s", "acc")} THEN s ELSE acc END)""".stripMargin
-    l1.join(broadcast(packedSub), col("cell") === col("scell"))
-      .withColumn("subcell", expr(subSql).getField("cell"))
-      .drop("scell", "subs")
-  }
 
 
   /** Component quantization scale for the k-means Lloyd sums: 2^20 keeps a
@@ -521,12 +446,7 @@ private[analytics] trait SimOps {
       .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("nrm").as("qn"), col("cell"))
     val c = assigned
       .select(col("vec_id").as("cid"), col("embedding").as("ce"), col("nrm").as("cn"), col("cell").as("ccell"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos_exact").desc, col("cid"))
-    q.join(c, col("cell") === col("ccell") && col("qid") =!= col("cid"))
-      .withColumn("cos_exact", dotF(col("qe"), col("ce")) / sqrt(col("qn") * col("cn")))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 5)
-      .select(col("qid"), col("rk"), col("cid"), col("cos_exact").as("cos"))
+    exactTop5(q.join(c, col("cell") === col("ccell") && col("qid") =!= col("cid")))
       .orderBy(col("qid"), col("rk"))
   }
 
@@ -570,7 +490,7 @@ private[analytics] trait SimOps {
   /** One sampled-member assignment against integer Lloyd-sum centroids
     * (cell, svec, snrm): (vec_id, embedding, cell). */
   private[analytics] def kmAssignSampled(e: DataFrame, cents: DataFrame): DataFrame =
-    foldAssignCellL(e.filter(expr("vec_id % 5 = 0")), cents)
+    nearestCell(e.filter(expr("vec_id % 5 = 0")), cents, "cell", "svec", "snrm")
       .select(col("vec_id"), col("embedding"), col("cell"))
 
 
@@ -613,17 +533,14 @@ private[analytics] trait SimOps {
       .withColumn("nrm", dotF(col("embedding"), col("embedding")))
     val cents0 = e.filter(col("vec_id") < k)
       .select(col("vec_id").as("cent_id"), col("embedding").as("cemb"), col("nrm").as("cnrm"))
-    // round 0: sampled members (every 5th vector) against the first-k init.
-    // Each round's sampled assignment is CACHED (and tracked for
-    // releaseCaches): the movement test is an action, and without the
-    // cache every round's count — and the final full assignment — would
-    // re-execute the whole chain of prior argmin rounds from scratch
-    // (O(rounds²) full passes inside a TIMED state build). Round 20: every
-    // assignment pass here rides the packed fold (foldAssignCell /
-    // foldAssignCellL / retrain-style) instead of the N × k crossJoin +
-    // row_number window — map-only, same argmax (tie/NaN parity pinned).
+    // the initial assignment: sampled members (every 5th vector) against
+    // the first-k init. Each Lloyd pass's sampled assignment is CACHED (and
+    // tracked for releaseCaches): the movement test is an action, and
+    // without the cache every pass's count — and the final full assignment
+    // — would re-execute the whole chain of prior passes from scratch
+    // (O(rounds²) full passes inside a TIMED state build).
     var members = track(
-      foldAssignCell(e.filter(expr("vec_id % 5 = 0")), cents0)
+      nearestCell(e.filter(expr("vec_id % 5 = 0")), cents0, "cent_id", "cemb", "cnrm")
         .select(col("vec_id"), col("embedding"), col("cell"))
         .cache())
     var cents = kmCentroids(members)
@@ -642,7 +559,7 @@ private[analytics] trait SimOps {
       converged = moved == 0
       r += 1
     }
-    foldAssignCellL(e, cents)
+    nearestCell(e, cents, "cell", "svec", "snrm")
       .select(col("vec_id"), col("embedding"), col("nrm"), col("cell"))
   }
 
@@ -869,12 +786,7 @@ private[analytics] trait SimOps {
       .withColumn("nrm", dotF(col("embedding"), col("embedding")))
     val qv = e.select(col("vec_id").as("qid"), col("embedding").as("qe"), col("nrm").as("qn"))
     val cv = e.select(col("vec_id").as("cid"), col("embedding").as("ce"), col("nrm").as("cn"))
-    val wEx = Window.partitionBy(col("qid")).orderBy(col("cos_exact").desc, col("cid"))
-    short.join(qv, "qid").join(cv, "cid")
-      .withColumn("cos_exact", dotF(col("qe"), col("ce")) / sqrt(col("qn") * col("cn")))
-      .withColumn("rk", row_number().over(wEx))
-      .filter(col("rk") <= 5)
-      .select(col("qid"), col("rk"), col("cid"), col("cos_exact").as("cos"))
+    exactTop5(short.join(qv, "qid").join(cv, "cid"))
       .orderBy(col("qid"), col("rk"))
   }
 
@@ -974,13 +886,9 @@ private[analytics] trait SimOps {
                           codeIndex: DataFrame): DataFrame = {
     val e = Tables.embeddings(spark, dir)
       .withColumn("nrm", dotF(col("embedding"), col("embedding")))
-    val cents = serveCentroids(spark, dir)
     // query-time quantization: nprobe nearest cells per held-out vector
-    val wAssign = Window.partitionBy(col("vec_id")).orderBy(col("cos_c").desc, col("cent_id"))
-    val q2 = e.filter(expr("vec_id % 200 = 3"))
-      .crossJoin(broadcast(cents))
-      .withColumn("cos_c", dotF(col("embedding"), col("cemb")) / sqrt(col("nrm") * col("cnrm")))
-      .withColumn("ark", row_number().over(wAssign))
+    val q2 = probeCells(e.filter(expr("vec_id % 200 = 3")), serveCentroids(spark, dir),
+        "vec_id", "embedding", "nrm")
       .filter(col("ark") <= nprobe)
       .select(col("vec_id").as("qid"), col("nrm").as("qn"),
         col("label").as("qlabel"), col("cent_id").as("cell"))
@@ -1015,18 +923,9 @@ private[analytics] trait SimOps {
       .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("nrm").as("qn"))
     val cv = ivfServeAssignTable(spark, dir)
       .select(col("vec_id").as("cid"), col("embedding").as("ce"), col("nrm").as("cn"))
-    val wEx = Window.partitionBy(col("qid")).orderBy(col("cos_exact").desc, col("cid"))
-    val ranked = broadcast(short.join(qv, "qid")).join(cv, "cid")
-      .withColumn("cos_exact", dotF(col("qe"), col("ce")) / sqrt(col("qn") * col("cn")))
-      .withColumn("rk", row_number().over(wEx))
-      .filter(col("rk") <= 5)
-    val out =
-      if (labelFiltered)
-        ranked.select(col("qid"), col("rk"), col("cid"),
-          col("qlabel").as("label"), col("cos_exact").as("cos"))
-      else
-        ranked.select(col("qid"), col("rk"), col("cid"), col("cos_exact").as("cos"))
-    out.orderBy(col("qid"), col("rk"))
+    exactTop5(broadcast(short.join(qv, "qid")).join(cv, "cid"),
+        (if (labelFiltered) Seq(col("qlabel").as("label")) else Nil): _*)
+      .orderBy(col("qid"), col("rk"))
   }
 
 
@@ -1083,10 +982,10 @@ private[analytics] trait SimOps {
     * once and accounted as a state build, not re-paid per query. */
   private[analytics] def serveInsertAssign(spark: SparkSession, dir: String): DataFrame =
     memoSig(spark, dir, "serve_insert_assign") {
-      // round 20: packed-fold assignment (see foldAssignCell) — map-only.
       val e = Tables.embeddings(spark, dir)
         .withColumn("nrm", dotF(col("embedding"), col("embedding")))
-      foldAssignCell(e.filter(expr("vec_id % 4 = 3")), serveCentroids(spark, dir))
+      nearestCell(e.filter(expr("vec_id % 4 = 3")), serveCentroids(spark, dir),
+          "cent_id", "cemb", "cnrm")
         .select(col("vec_id"), col("embedding"), col("nrm"), col("cell"))
     }
 
@@ -1256,65 +1155,137 @@ private[analytics] trait SimOps {
   }
 
 
-  /** Map-only nearest-centroid assignment over FLOAT centroids — the
-    * [[retrainReassign]] packed fold generalized to the index BUILDERS
-    * (round 20, guide §2.4): the k-row centroid table folds into ONE
-    * broadcast array-of-structs row (ascending `cent_id` via sort_array)
-    * and every member computes its argmax cell with a row-local SQL
-    * `aggregate` fold. This replaces the `crossJoin(broadcast(cents))` +
-    * `row_number` window the assignment tables were built with, whose
-    * N × k row expansion was shuffled AND double-sorted on vec_id just to
-    * take a per-row argmax — the Exchange and both Sorts are pure
-    * overhead, since the argmax never needs rows beyond the member's own.
-    * Appends `cell` to `members` (which must carry `embedding` + `nrm`
-    * and no `one`/`cents`/`cell` column); all other member columns pass
-    * through untouched, so each call site keeps its original projection.
+  /** The exact top-5 ranker of every exact-cosine query. `pairs` holds
+    * (query, candidate) pairs as (qid, qe, qn) and (cid, ce, cn); each
+    * pair is scored `cos_exact = dot(qe, ce) / sqrt(qn * cn)` and each
+    * qid keeps its first five under a `row_number` window ordered by
+    * (cos_exact DESC, cid ASC). Emits (qid, rk, cid, extra..., cos).
     *
-    * row_number PARITY, degenerate rows included: the windowed argmax
-    * ordered (cos_c DESC NULLS LAST, cent_id ASC). Three degenerate cos
-    * values exist and each must rank exactly as the window ranked it:
-    * a NaN cosine sorts FIRST (Spark treats NaN as the largest double),
-    * a NULL cosine sorts LAST (Spark's Divide returns NULL on a zero
-    * divisor — the zero-norm member case — and DESC ordering defaults to
-    * NULLS LAST), and exact real ties keep the lowest cent_id. The fold's
-    * replacement rule ([[foldBeats]]) mirrors that ordering term by term:
-    * a NULL-cos struct beats only the -1 sentinel (so an all-NULL member
-    * still lands on its lowest cent_id, never on the sentinel), any
-    * non-NULL beats a held NULL, NaN beats any real, and otherwise strict
-    * `>` keeps the FIRST (lowest-cent_id) struct on ties. PlanGuardSpec
-    * pins both the Exchange/Window-free member subtree and the
-    * tie/NULL/top-2 parity against the retired window formulation. */
-  private[graft] def foldAssignCell(members: DataFrame, cents: DataFrame): DataFrame = {
-    val packed = cents
-      .agg(sort_array(collect_list(struct(col("cent_id"), col("cemb"), col("cnrm"))))
-        .as("cents"))
-      .withColumn("one", lit(1))
-    val bestSql =
-      s"""aggregate(
-        |  transform(cents, c -> named_struct(
-        |    'cos', dot_f(embedding, c.cemb) / sqrt(nrm * c.cnrm), 'cell', c.cent_id)),
-        |  named_struct('cos', CAST(-2.0 AS DOUBLE), 'cell', CAST(-1 AS BIGINT)),
-        |  (acc, s) -> CASE WHEN ${foldBeats("s", "acc")} THEN s ELSE acc END)""".stripMargin
-    members.withColumn("one", lit(1))
-      .join(broadcast(packed), Seq("one"))
-      .withColumn("cell", expr(bestSql).getField("cell"))
-      // empty-centroid parity with the retired crossJoin+window plan (r20
-      // advice): the 1-row packed agg always exists, so with zero centroids
-      // every member would get the -1 sentinel where the window emitted
-      // zero rows — drop sentinel rows (a no-op whenever cents is non-empty,
-      // since any real struct beats the sentinel under foldBeats)
-      .filter(col("cell") >= 0L)
-      .drop("one", "cents")
+    * Contract: an exact tie keeps the lower cid; a NaN cosine ranks
+    * first (Spark sorts NaN greatest) and a NULL one (a zero norm)
+    * last; a qid with fewer than five candidates emits fewer rows, one
+    * with none emits no row. Rows are unordered; callers sort. */
+  private[analytics] def exactTop5(pairs: DataFrame, extra: Column*): DataFrame =
+    pairs
+      .withColumn("cos_exact", dotF(col("qe"), col("ce")) / sqrt(col("qn") * col("cn")))
+      .withColumn("rk", row_number().over(
+        Window.partitionBy(col("qid")).orderBy(col("cos_exact").desc, col("cid"))))
+      .filter(col("rk") <= 5)
+      .select(Seq(col("qid"), col("rk"), col("cid")) ++ extra :+ col("cos_exact").as("cos"): _*)
+
+
+  /** The query-side cell probe: crosses the queries `q` (id `qid`,
+    * vector `qe`, norm `qn`) with the broadcast centroid table (cent_id,
+    * cemb, cnrm), scores `cos_c = dot(qe, cemb) / sqrt(qn * cnrm)` and
+    * numbers each query's cells `ark` = 1, 2, … by (cos_c DESC,
+    * cent_id ASC). Callers keep `ark <= nprobe`. The query batch is
+    * bounded, so the window over |Q| × k rows stays small; the index
+    * builders take [[nearestCell]] instead. Ties, NaN and NULL rank as
+    * in [[exactTop5]]. */
+  private[analytics] def probeCells(q: DataFrame, cents: DataFrame, qid: String, qe: String,
+      qn: String): DataFrame =
+    q.crossJoin(broadcast(cents))
+      .withColumn("cos_c", dotF(col(qe), col("cemb")) / sqrt(col(qn) * col("cnrm")))
+      .withColumn("ark", row_number().over(
+        Window.partitionBy(col(qid)).orderBy(col("cos_c").desc, col("cent_id"))))
+
+
+  /** The nearest-centroid fold of every index build: appends each
+    * member's max-cosine centroid with no row expansion, window or
+    * member-side shuffle. The centroid table (`id`, `vec`, `nrm`) is
+    * packed into one array sorted by id ([[joinPacked]]): one broadcast
+    * row for all members, or with `by` = (member key, centroid key) one
+    * row per key, joined to the members with that key. Each member
+    * (`embedding`, `nrm`) scores the array in id order and keeps the
+    * best under [[foldBeats]] ([[nearestFold]]). Appends `cell`; with
+    * `top2` the best two as rows (cell, ark = 1, 2); with `by`, the best
+    * as `subcell` (`top2` does not apply). Other member columns pass
+    * through.
+    *
+    * Contract: the fold picks exactly the rows a `row_number` window
+    * ordered by (cos DESC, id ASC) ranks first (and second, with
+    * `top2`). An exact tie keeps the lower id; a NaN cosine outranks any
+    * real one; a NULL cosine (a zero norm on either side) ranks last, so
+    * a member whose cosines are all NULL lands on the lowest id. Where
+    * the window emits no row the fold emits none: an empty centroid
+    * table or group gives the member no row, and one centroid gives
+    * `top2` rank 1 alone. PlanGuardSpec pins all of this against the
+    * window. */
+  private[graft] def nearestCell(members: DataFrame, cents: DataFrame, id: String, vec: String,
+      nrm: String, top2: Boolean = false, by: Option[(String, String)] = None): DataFrame = {
+    val joined = joinPacked(members, cents, id, vec, nrm, by)
+    by match {
+      case Some((_, centKey)) =>
+        joined.withColumn("subcell", nearestFold(cents, "subs", id, vec, nrm).getField("cell"))
+          .drop(centKey, "subs")
+      case None =>
+        val ranked =
+          if (!top2) joined.withColumn("cell", nearestFold(cents, "cents", id, vec, nrm).getField("cell"))
+          else joined.withColumn("t2", nearestFold(cents, "cents", id, vec, nrm, top2 = true))
+            .withColumn("ac", explode(expr(
+              "array(named_struct('cell', t2.b.cell, 'ark', 1), " +
+                "named_struct('cell', t2.s2.cell, 'ark', 2))")))
+            .withColumn("cell", col("ac.cell"))
+            .withColumn("ark", col("ac.ark"))
+        // a slot still holding the sentinel is a rank the window never
+        // emitted: no centroid at all, or no second one
+        ranked.filter(col("cell") >= 0L).drop("one", "cents", "t2", "ac")
+    }
+  }
+
+
+  /** Joins `members` to the packed centroids: the (id, vec, nrm)
+    * structs collected into one array sorted by id. Without `by` that is
+    * one broadcast row named `cents`, joined on a constant `one`; with
+    * `by` one row named `subs` per centroid key, equi-joined on the
+    * member key. */
+  private def joinPacked(members: DataFrame, cents: DataFrame, id: String, vec: String,
+      nrm: String, by: Option[(String, String)]): DataFrame = {
+    val packed = sort_array(collect_list(struct(col(id), col(vec), col(nrm))))
+    by match {
+      case Some((key, centKey)) =>
+        members.join(broadcast(cents.groupBy(col(centKey)).agg(packed.as("subs"))),
+          col(key) === col(centKey))
+      case None =>
+        members.withColumn("one", lit(1))
+          .join(broadcast(cents.agg(packed.as("cents")).withColumn("one", lit(1))), Seq("one"))
+    }
+  }
+
+
+  /** The fold over packed array `arr`: scores each centroid struct `c`
+    * as `dot(embedding, c.vec) / sqrt(nrm * c.nrm)` (`dot_fl` for
+    * integer Lloyd-sum vectors, `dot_f` for float ones) and keeps the
+    * best (cos, cell) struct, or with `top2` the best two as (b, s2),
+    * starting from a (-2.0, -1) sentinel that any centroid beats. */
+  private def nearestFold(cents: DataFrame, arr: String, id: String, vec: String, nrm: String,
+      top2: Boolean = false): Column = {
+    val dot = cents.schema(vec).dataType match {
+      case ArrayType(LongType, _) => "dot_fl"
+      case _ => "dot_f"
+    }
+    val scored = s"transform($arr, c -> named_struct(" +
+      s"'cos', $dot(embedding, c.$vec) / sqrt(nrm * c.$nrm), 'cell', c.$id))"
+    val sentinel = "named_struct('cos', CAST(-2.0 AS DOUBLE), 'cell', CAST(-1 AS BIGINT))"
+    if (!top2)
+      expr(s"aggregate($scored, $sentinel, " +
+        s"(acc, s) -> CASE WHEN ${foldBeats("s", "acc")} THEN s ELSE acc END)")
+    else
+      expr(s"""aggregate($scored, named_struct('b', $sentinel, 's2', $sentinel),
+        |  (acc, s) -> CASE
+        |    WHEN ${foldBeats("s", "acc.b")} THEN named_struct('b', s, 's2', acc.b)
+        |    WHEN ${foldBeats("s", "acc.s2")} THEN named_struct('b', acc.b, 's2', s)
+        |    ELSE acc END)""".stripMargin)
   }
 
 
   /** The fold's replacement predicate — "struct `s` outranks held `acc`"
-    * under the retired window's (cos DESC NULLS LAST, cent_id ASC) order,
-    * evaluated in ascending-cent_id fold order so keep-on-tie IS the
-    * ASC tie-break. NULL cos (zero divisor) beats only the -1 sentinel;
-    * any non-NULL beats a held NULL; NaN beats any real (Spark sorts NaN
-    * greatest); else strict `>`. NaN > NaN is false in Spark's comparison
-    * (NaN equals itself), so the first NaN also keeps its slot. */
+    * under the window's (cos DESC NULLS LAST, id ASC) order, evaluated
+    * in ascending-id fold order so keep-on-tie IS the ASC tie-break.
+    * NULL cos (zero divisor) beats only the -1 sentinel; any non-NULL
+    * beats a held NULL; NaN beats any real (Spark sorts NaN greatest);
+    * else strict `>`. NaN > NaN is false in Spark's comparison (NaN
+    * equals itself), so the first NaN also keeps its slot. */
   private def foldBeats(s: String, acc: String): String =
     s"""(CASE
        |  WHEN isnull($s.cos) THEN $acc.cell = CAST(-1 AS BIGINT)
@@ -1323,117 +1294,17 @@ private[analytics] trait SimOps {
        |  ELSE $s.cos > $acc.cos END)""".stripMargin
 
 
-  /** [[foldAssignCell]] over INTEGER Lloyd-sum centroids (cell, svec,
-    * snrm) — the k-means family's shape ([[kmCentroids]] output), scored
-    * through the same codegen'd `dot_fl` the window formulation called.
-    * Same packing, same NaN/tie parity contract. */
-  private[graft] def foldAssignCellL(members: DataFrame, cents: DataFrame): DataFrame = {
-    val packed = cents
-      .agg(sort_array(collect_list(struct(col("cell"), col("svec"), col("snrm"))))
-        .as("cents"))
-      .withColumn("one", lit(1))
-    val bestSql =
-      s"""aggregate(
-        |  transform(cents, c -> named_struct(
-        |    'cos', dot_fl(embedding, c.svec) / sqrt(nrm * c.snrm), 'cell', c.cell)),
-        |  named_struct('cos', CAST(-2.0 AS DOUBLE), 'cell', CAST(-1 AS BIGINT)),
-        |  (acc, s) -> CASE WHEN ${foldBeats("s", "acc")} THEN s ELSE acc END)""".stripMargin
-    members.withColumn("one", lit(1))
-      .join(broadcast(packed), Seq("one"))
-      .withColumn("cell", expr(bestSql).getField("cell"))
-      // empty-centroid parity with the retired window plan — see
-      // [[foldAssignCell]]
-      .filter(col("cell") >= 0L)
-      .drop("one", "cents")
-  }
-
-
-  /** The TOP-2 sibling of [[foldAssignCell]] for [[ivfAssignTable]]'s
-    * `ark <= 2` contract: one fold tracks (best, second) — replace best
-    * iff the struct beats it (same `>`/isnan rule), else the second slot
-    * — then the two cells unfold to two rows via a row-local explode (a
-    * Generate, not an Exchange). Parity with `row_number <= 2` under
-    * (cos_c DESC, cent_id ASC): best is the window's rank 1 by the
-    * [[foldAssignCell]] argument; second collects the best of the rest
-    * under the identical comparison, which IS rank 2. Appends
-    * (cell, ark). */
-  private[graft] def foldAssignTop2(members: DataFrame, cents: DataFrame): DataFrame = {
-    val packed = cents
-      .agg(sort_array(collect_list(struct(col("cent_id"), col("cemb"), col("cnrm"))))
-        .as("cents"))
-      .withColumn("one", lit(1))
-    val top2Sql =
-      s"""aggregate(
-        |  transform(cents, c -> named_struct(
-        |    'cos', dot_f(embedding, c.cemb) / sqrt(nrm * c.cnrm), 'cell', c.cent_id)),
-        |  named_struct(
-        |    'b',  named_struct('cos', CAST(-2.0 AS DOUBLE), 'cell', CAST(-1 AS BIGINT)),
-        |    's2', named_struct('cos', CAST(-2.0 AS DOUBLE), 'cell', CAST(-1 AS BIGINT))),
-        |  (acc, s) -> CASE
-        |    WHEN ${foldBeats("s", "acc.b")} THEN named_struct('b', s, 's2', acc.b)
-        |    WHEN ${foldBeats("s", "acc.s2")} THEN named_struct('b', acc.b, 's2', s)
-        |    ELSE acc END)""".stripMargin
-    members.withColumn("one", lit(1))
-      .join(broadcast(packed), Seq("one"))
-      .withColumn("t2", expr(top2Sql))
-      .withColumn("ac", explode(expr(
-        "array(named_struct('cell', t2.b.cell, 'ark', 1), " +
-          "named_struct('cell', t2.s2.cell, 'ark', 2))")))
-      .withColumn("cell", col("ac.cell"))
-      .withColumn("ark", col("ac.ark"))
-      // parity with `row_number <= 2` on degenerate centroid tables (r20
-      // advice): with k=1 the window emitted ONE row (no rank 2) and with
-      // k=0 none — drop the unfilled sentinel slots the fold would emit
-      .filter(col("cell") >= 0L)
-      .drop("one", "cents", "t2", "ac")
-  }
-
-
-  /** MAP-ONLY full-corpus re-assignment — the k retrained centroids fold
-    * into ONE broadcast array-of-structs row (ascending `ncell` via
-    * sort_array), and each member row computes its argmax cell with a
-    * strict-`>` SQL `aggregate` fold over that array: the same shape, and
-    * the same bit-exactness contract, as [[foldAssignCell]]. This replaces the
-    * previous N × k `crossJoin(broadcast(cents))` + `row_number` window,
-    * whose k-fold row expansion was shuffled on vec_id just to take an
-    * argmax — at 3.5M vectors that Exchange IS the re-train cost; the
-    * fold makes re-assignment a projection over the member scan
-    * (PlanGuardSpec pins the subtree Window- and Exchange-free).
-    *
-    * Parity with the window path, by construction: cosines use the SAME
-    * registered `dot_fl` codegen expression
-    * ([[org.apache.spark.sql.graft.DotProductFL]]) the window variant
-    * called; the structs arrive in ascending-ncell
-    * order; and strict `>` keeps the FIRST struct on an exact tie —
-    * precisely the `(cos_c DESC, ncell ASC)` row_number argmax.
-    * PRECONDITION: centroid norms are nonzero —
-    * [[kmCentroids]] only emits cells that have members and real
-    * embeddings are non-degenerate — so no centroid-side cosine is NaN.
-    * The MEMBER side carries no such guarantee: a zero-norm member
-    * embedding makes every cosine NaN, `NaN > acc.cos` is false for all k
-    * structs, and the fold would return the (-2.0, -1) sentinel — a
-    * phantom cell id that the retired row_number window (NaN-first under
-    * DESC) never produced. Such a member keeps its CURRENT cell instead:
-    * a degenerate vector has no meaningful nearest centroid, so "don't
-    * move it" is the only assignment that cannot corrupt the before/after
-    * occupancy census with a cell no centroid owns. */
-  private[graft] def retrainReassign(members: DataFrame, cents: DataFrame): DataFrame = {
-    val packed = cents
-      .agg(sort_array(collect_list(struct(col("ncell"), col("svec"), col("snrm"))))
-        .as("cents"))
-      .withColumn("one", lit(1))
-    val bestSql =
-      """aggregate(
-        |  transform(cents, c -> named_struct(
-        |    'cos', dot_fl(embedding, c.svec) / sqrt(nrm * c.snrm), 'cell', c.ncell)),
-        |  named_struct('cos', CAST(-2.0 AS DOUBLE), 'cell', CAST(-1 AS BIGINT)),
-        |  (acc, s) -> CASE WHEN s.cos > acc.cos THEN s ELSE acc END)""".stripMargin
-    members.withColumn("one", lit(1))
-      .join(broadcast(packed), Seq("one"))
+  /** The re-train's full-corpus re-assignment against the retrained
+    * Lloyd-sum centroids (ncell, svec, snrm): (vec_id, ncell) by the
+    * [[nearestCell]] fold, map-only. One rule differs: a zero-norm member
+    * keeps its current `cell`, where the fold would put it on the lowest
+    * ncell — a degenerate vector has no nearest centroid, and moving it
+    * would shift the before/after occupancy census. */
+  private[graft] def retrainReassign(members: DataFrame, cents: DataFrame): DataFrame =
+    joinPacked(members, cents, "ncell", "svec", "snrm", None)
       .select(col("vec_id"),
         when(col("nrm") === 0d, col("cell"))
-          .otherwise(expr(bestSql).getField("cell")).as("ncell"))
-  }
+          .otherwise(nearestFold(cents, "cents", "ncell", "svec", "snrm").getField("cell")).as("ncell"))
 
 
   /** METADATA-FILTERED ANN — the "filtered search" every production
@@ -1459,21 +1330,13 @@ private[analytics] trait SimOps {
         col("nrm").as("cn"), col("cell").as("ccell"), col("label").as("clabel"))
     val e = Tables.embeddings(spark, dir)
       .withColumn("nrm", dotF(col("embedding"), col("embedding")))
-    val wAssign = Window.partitionBy(col("vec_id")).orderBy(col("cos_c").desc, col("cent_id"))
-    val q = e.filter(expr("vec_id % 200 = 3"))
-      .crossJoin(broadcast(serveCentroids(spark, dir)))
-      .withColumn("cos_c", dotF(col("embedding"), col("cemb")) / sqrt(col("nrm") * col("cnrm")))
-      .withColumn("ark", row_number().over(wAssign))
+    val q = probeCells(e.filter(expr("vec_id % 200 = 3")), serveCentroids(spark, dir),
+        "vec_id", "embedding", "nrm")
       .filter(col("ark") <= FilteredNprobe)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"),
         col("nrm").as("qn"), col("label").as("qlabel"), col("cent_id").as("cell"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cos_exact").desc, col("cid"))
-    q.join(c, col("cell") === col("ccell") && col("qlabel") === col("clabel"))
-      .withColumn("cos_exact", dotF(col("qe"), col("ce")) / sqrt(col("qn") * col("cn")))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 5)
-      .select(col("qid"), col("rk"), col("cid"), col("qlabel").as("label"),
-        col("cos_exact").as("cos"))
+    exactTop5(q.join(c, col("cell") === col("ccell") && col("qlabel") === col("clabel")),
+        col("qlabel").as("label"))
       .orderBy(col("qid"), col("rk"))
   }
 

@@ -177,8 +177,8 @@ object MergeSortSink {
     // an RDD shuffle, so there are as many routes as parts even when the
     // optimizer knows the fresh side is empty
     val byRoute = new Partitioner {
-      def numPartitions: Int = parts.length
-      def getPartition(key: Any): Int = routeOf(bounds, key.asInstanceOf[(Int, String, Long)]._1)
+      override def numPartitions: Int = parts.length
+      override def getPartition(key: Any): Int = routeOf(bounds, key.asInstanceOf[(Int, String, Long)]._1)
     }
     val routes = fresh
       .select(unix_date(lineDate(col("line"))), col("seq.file"), col("seq.row"), col("line"))

@@ -255,17 +255,18 @@ class PlanGuardSpec extends SparkSpec {
   }
 
   test("retrain re-assignment is map-only: no Window, no member-side exchange, window-parity") {
-    // The round-16 verdict's top ask: simIvfRetrainExec's full-corpus
-    // re-assignment must be the packed-centroid row-local fold (the
-    // foldAssignCell shape), NOT an N x k crossJoin + row_number shuffle. The
-    // only exchanges allowed are the SinglePartition packing of the k-row
-    // centroid side (it feeds a broadcast) — members never shuffle.
+    // simIvfRetrainExec's full-corpus re-assignment must be the
+    // packed-centroid row-local fold (the nearestCell shape), NOT an N x k
+    // crossJoin + row_number shuffle. The only exchanges allowed are the
+    // SinglePartition packing of the k-row centroid side (it feeds a
+    // broadcast) — members never shuffle.
     import spark.implicits._
     val members = Seq(
       (1L, Array(1.0f, 0.0f), 1.0, 0L),
       (2L, Array(0.0f, 1.0f), 1.0, 1L),
       (3L, Array(0.6f, 0.8f), 1.0, 0L),
-      (4L, Array(1.0f, 1.0f), 2.0, 1L) // exact tie: both cosines equal -> lowest ncell
+      (4L, Array(1.0f, 1.0f), 2.0, 1L), // exact tie: both cosines equal -> lowest ncell
+      (5L, Array(0.0f, 0.0f), 0.0, 1L)  // zero norm: keeps its current cell
     ).toDF("vec_id", "embedding", "nrm", "cell")
     val cents = Seq(
       (0L, Array(10L, 0L), 100.0),
@@ -290,14 +291,18 @@ class PlanGuardSpec extends SparkSpec {
       .select(col("vec_id"), col("ncell"))
       .as[(Long, Long)].collect().toMap
     val folded = re.as[(Long, Long)].collect().toMap
-    assert(folded == windowed, s"fold=$folded window=$windowed")
+    assert(folded - 5L == windowed - 5L, s"fold=$folded window=$windowed")
     assert(folded(4L) == 0L, "exact tie must keep the lowest ncell")
+    // the window puts the zero-norm member (all cosines NULL, NULLS LAST)
+    // on the lowest ncell; the re-assignment leaves it where it was
+    assert(windowed(5L) == 0L && folded(5L) == 1L,
+      s"zero-norm member must keep its current cell 1: fold=${folded(5L)} window=${windowed(5L)}")
   }
 
   test("builder fold assignment is map-only and row_number-exact (ties, NaN, top-2)") {
-    // Round-20: every index-build assignment (ivf/serve/insert/kmeans/
-    // two-level/image) rides foldAssignCell/foldAssignTop2 instead of the
-    // N x k crossJoin + row_number window. Pin (a) the member subtree
+    // Every index-build assignment (ivf/serve/insert/kmeans/two-level/
+    // image) rides nearestCell (top-1 or top-2) instead of the N x k
+    // crossJoin + row_number window. Pin (a) the member subtree
     // never shuffles (only the k-row centroid packing may), (b) bit parity
     // with the retired window formulation including an exact tie, a NaN
     // (zero-norm) member, and the rank-2 cell of the top-2 variant.
@@ -315,7 +320,7 @@ class PlanGuardSpec extends SparkSpec {
       (0L, Array(1.0f, 0.0f), 1.0),
       (1L, Array(0.0f, 1.0f), 1.0)
     ).toDF("cent_id", "cemb", "cnrm")
-    val folded = graft.analytics.LlmOps.foldAssignCell(members, cents)
+    val folded = graft.analytics.LlmOps.nearestCell(members, cents, "cent_id", "cemb", "cnrm")
       .select(col("vec_id"), col("cell"))
     val plan = folded.queryExecution.executedPlan.toString
     assert(!plan.contains("Window"), s"fold must not plan a window:\n${plan.take(600)}")
@@ -339,16 +344,17 @@ class PlanGuardSpec extends SparkSpec {
     val refTop2 = ref.filter(col("ark") <= 2)
       .select(col("vec_id"), col("cent_id"), col("ark"))
       .as[(Long, Long, Int)].collect().toSet
-    val folded2 = graft.analytics.LlmOps.foldAssignTop2(members, cents)
+    val folded2 = graft.analytics.LlmOps
+      .nearestCell(members, cents, "cent_id", "cemb", "cnrm", top2 = true)
       .select(col("vec_id"), col("cell"), col("ark"))
       .as[(Long, Long, Int)].collect().toSet
     assert(folded2 == refTop2, s"top2 fold=$folded2 window=$refTop2")
   }
 
   test("Lloyd-sum and ivf2 level-2 folds are row_number-exact; empty centroids emit zero rows") {
-    // Round-21 (r20 advice): the parity pin extended to foldAssignCellL
-    // (dot_fl over integer Lloyd-sum centroids) and the ivf2 level-2
-    // sub-centroid fold, with the same tie/zero-norm fixtures — and the
+    // The parity pin extended to nearestCell over integer Lloyd-sum
+    // centroids (dot_fl) and the ivf2 level-2 sub-centroid fold, with the
+    // same tie/zero-norm fixtures — and the
     // empty-centroid case, where the retired window formulations emitted
     // ZERO rows while the 1-row packed agg used to leak the -1 sentinel.
     import spark.implicits._
@@ -367,7 +373,7 @@ class PlanGuardSpec extends SparkSpec {
       (1L, Array(0L, 7L), 49.0)
     ).toDF("cell", "svec", "snrm")
     val foldedL = graft.analytics.LlmOps
-      .foldAssignCellL(members, centsL)
+      .nearestCell(members, centsL, "cell", "svec", "snrm")
       .select(col("vec_id"), col("cell"))
     val wRef = Window.partitionBy(col("vec_id")).orderBy(col("cos_c").desc, col("cell"))
     val refL = members.crossJoin(broadcast(centsL))
@@ -386,7 +392,8 @@ class PlanGuardSpec extends SparkSpec {
       (7L, 10L, Array(1.0f, 0.0f), 1.0),
       (7L, 11L, Array(0.0f, 1.0f), 1.0)
     ).toDF("scell", "sub_id", "semb", "ssnrm")
-    val sub = graft.analytics.LlmOps.foldAssignSubcell(l1, subcents)
+    val sub = graft.analytics.LlmOps
+      .nearestCell(l1, subcents, "sub_id", "semb", "ssnrm", by = Some("cell" -> "scell"))
       .select(col("vec_id"), col("subcell"))
     val wSub = Window.partitionBy(col("vec_id")).orderBy(col("cos_c").desc, col("sub_id"))
     val refSub = l1.join(broadcast(subcents), col("cell") === col("scell"))
@@ -402,15 +409,18 @@ class PlanGuardSpec extends SparkSpec {
     // empty centroid tables: zero rows out, never the -1 sentinel
     val centsF0 = spark.emptyDataset[(Long, Array[Float], Double)]
       .toDF("cent_id", "cemb", "cnrm")
-    assert(graft.analytics.LlmOps.foldAssignCell(members, centsF0).count() == 0L)
-    assert(graft.analytics.LlmOps.foldAssignTop2(members, centsF0).count() == 0L)
+    assert(graft.analytics.LlmOps
+      .nearestCell(members, centsF0, "cent_id", "cemb", "cnrm").count() == 0L)
+    assert(graft.analytics.LlmOps
+      .nearestCell(members, centsF0, "cent_id", "cemb", "cnrm", top2 = true).count() == 0L)
     val centsL0 = spark.emptyDataset[(Long, Array[Long], Double)]
       .toDF("cell", "svec", "snrm")
     assert(graft.analytics.LlmOps
-      .foldAssignCellL(members, centsL0).count() == 0L)
+      .nearestCell(members, centsL0, "cell", "svec", "snrm").count() == 0L)
     // k=1: the top-2 fold must emit ONE row per member (no sentinel rank 2)
     val cents1 = Seq((0L, Array(1.0f, 0.0f), 1.0)).toDF("cent_id", "cemb", "cnrm")
-    val one = graft.analytics.LlmOps.foldAssignTop2(members, cents1)
+    val one = graft.analytics.LlmOps
+      .nearestCell(members, cents1, "cent_id", "cemb", "cnrm", top2 = true)
       .groupBy(col("vec_id")).count().select(col("count")).distinct()
       .as[Long].collect().toSeq
     assert(one == Seq(1L), s"k=1 must yield exactly rank 1 per member, got $one")

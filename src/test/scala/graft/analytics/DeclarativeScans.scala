@@ -18,20 +18,30 @@ import org.apache.spark.sql.functions._
 object DeclarativeScans {
   import LlmOps.{classifierScore, classifierStops, gopherFractions, shinglesSpark, toksSpark}
 
-  def gopherScoredDeclarative(spark: SparkSession, dir: String): DataFrame = {
-    val base = Tables.documents(spark, dir)
-      .repartition(spark.sparkContext.defaultParallelism)
+  /** Gopher's six per-row counters, declaratively, over a frame's
+    * `text` column: adds the `toks` and `lns` arrays and n_words,
+    * n_lines, n_dup, n_bullet, sum_wl and n_bigrams. */
+  def gopherCountsDeclarative(texts: DataFrame): DataFrame =
+    texts
       .withColumn("toks", expr(toksSpark))
-    val perRow = base
       .withColumn("lns",
         filter(transform(split(col("text"), "\n"), l => trim(l)), l => l =!= ""))
-      .select(col("doc_id"),
-        size(col("toks")).cast("long").as("n_words"),
-        size(col("lns")).cast("long").as("n_lines"),
-        (size(col("lns")) - size(array_distinct(col("lns")))).cast("long").as("n_dup"),
-        expr("size(filter(lns, l -> substr(l, 1, 2) IN ('- ', '* ')))").cast("long").as("n_bullet"),
-        expr("aggregate(toks, 0L, (acc, t) -> acc + length(t))").as("sum_wl"),
-        greatest(size(col("toks")).cast("long") - 1L, lit(0L)).as("n_bigrams"))
+      .withColumn("n_words", size(col("toks")).cast("long"))
+      .withColumn("n_lines", size(col("lns")).cast("long"))
+      .withColumn("n_dup", (size(col("lns")) - size(array_distinct(col("lns")))).cast("long"))
+      .withColumn("n_bullet",
+        expr("size(filter(lns, l -> substr(l, 1, 2) IN ('- ', '* ')))").cast("long"))
+      .withColumn("sum_wl", expr("aggregate(toks, 0L, (acc, t) -> acc + length(t))"))
+      .withColumn("n_bigrams", greatest(size(col("toks")).cast("long") - 1L, lit(0L)))
+
+
+  def gopherScoredDeclarative(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documents(spark, dir)
+      .repartition(spark.sparkContext.defaultParallelism)
+    val base = docs.withColumn("toks", expr(toksSpark))
+    val perRow = gopherCountsDeclarative(docs)
+      .select(col("doc_id"), col("n_words"), col("n_lines"), col("n_dup"), col("n_bullet"),
+        col("sum_wl"), col("n_bigrams"))
       // identity aggregation over the unique doc_id — the InferFilters
       // pushdown guard the declarative form needed (PLANS.md)
       .groupBy(col("doc_id"))
@@ -50,20 +60,27 @@ object DeclarativeScans {
   }
 
 
-  def classifierScoredDeclarative(spark: SparkSession, dir: String): DataFrame = {
+  /** The classifier's five counters, declaratively, over a frame's
+    * `text` column: adds the `toks` array and n_toks, n_stop, n_short,
+    * n_long and n_rep. */
+  def classifierCountsDeclarative(texts: DataFrame): DataFrame = {
     val stopsIn = classifierStops.map(w => s"'$w'").mkString(", ")
+    texts
+      .withColumn("toks", expr(toksSpark))
+      .withColumn("n_toks", size(col("toks")).cast("long"))
+      .withColumn("n_stop", expr(s"size(filter(toks, t -> t IN ($stopsIn)))").cast("long"))
+      .withColumn("n_short", expr("size(filter(toks, t -> length(t) <= 2))").cast("long"))
+      .withColumn("n_long", expr("size(filter(toks, t -> length(t) >= 12))").cast("long"))
+      .withColumn("n_rep", (size(col("toks")) - size(array_distinct(col("toks")))).cast("long"))
+  }
+
+
+  def classifierScoredDeclarative(spark: SparkSession, dir: String): DataFrame =
     classifierScore(
-      Tables.documents(spark, dir)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .withColumn("toks", expr(toksSpark))
-        .withColumn("n_toks", size(col("toks")).cast("long"))
-        .withColumn("n_stop", expr(s"size(filter(toks, t -> t IN ($stopsIn)))").cast("long"))
-        .withColumn("n_short", expr("size(filter(toks, t -> length(t) <= 2))").cast("long"))
-        .withColumn("n_long", expr("size(filter(toks, t -> length(t) >= 12))").cast("long"))
-        .withColumn("n_rep", (size(col("toks")) - size(array_distinct(col("toks")))).cast("long"))
+      classifierCountsDeclarative(Tables.documents(spark, dir)
+          .repartition(spark.sparkContext.defaultParallelism))
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
           col("n_toks"), col("n_stop"), col("n_short"), col("n_long"), col("n_rep")))
-  }
 
 
   /** The wide-signature build generalized over permutation count —

@@ -1,7 +1,9 @@
 package graft.analytics
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test => ScTest}
 
 /** The `gopher_stats` kernel must be indistinguishable from the retired
   * declarative Gopher scan ([[DeclarativeScans.gopherScoredDeclarative]])
@@ -26,11 +28,64 @@ class GopherStatsSpec extends SparkSpec {
     assertFrameParity("/root/testdata/sf0.001")
   }
 
+  private val gopherCounts =
+    Seq("n_words", "n_lines", "n_dup", "n_bullet", "sum_wl", "n_bigrams")
+
+  /** `gopher_stats(text)` field for field against
+    * [[DeclarativeScans.gopherCountsDeclarative]] on every row of
+    * `texts`, and top_n NULL iff fewer than 2 tokens. A NULL text gives a
+    * NULL struct, as the declarative chain gives a NULL token array. */
+  private def assertGopherAgrees(texts: DataFrame): Unit = {
+    org.apache.spark.sql.graft.GraftFunctions.register(spark)
+    val rows = DeclarativeScans.gopherCountsDeclarative(
+      texts.withColumn("g", expr("gopher_stats(text)"))).collect()
+    rows.foreach { r =>
+      val text = Option(r.getAs[String]("text"))
+      val g = r.getStruct(r.fieldIndex("g"))
+      if (text.isEmpty) assert(g == null && r.isNullAt(r.fieldIndex("toks")), "NULL text")
+      else {
+        for (f <- gopherCounts)
+          assert(g.getAs[Long](f) == r.getAs[Long](f),
+            s"$f drifted for: ${text.get.take(50)} (kernel ${g.getAs[Long](f)}, declarative ${r.getAs[Long](f)})")
+        assert(g.isNullAt(g.fieldIndex("top_n")) == (r.getAs[Long]("n_words") < 2),
+          s"top_n nullability drifted for: ${text.get.take(50)}")
+      }
+    }
+  }
+
+  /** `classifier_stats(text)` field for field against
+    * [[DeclarativeScans.classifierCountsDeclarative]] on every row of
+    * `texts`; a NULL text gives a NULL struct and a NULL token array. */
+  private def assertClassifierAgrees(texts: DataFrame): Unit = {
+    val rows = DeclarativeScans.classifierCountsDeclarative(texts.withColumn("c",
+        org.apache.spark.sql.graft.ClassifierBridge
+          .classifierStats(col("text"), graft.analytics.LlmOps.classifierStops)))
+      .collect()
+    rows.foreach { r =>
+      val text = Option(r.getAs[String]("text"))
+      val c = r.getStruct(r.fieldIndex("c"))
+      if (text.isEmpty) assert(c == null && r.isNullAt(r.fieldIndex("toks")), "NULL text")
+      else
+        for (f <- Seq("n_toks", "n_stop", "n_short", "n_long", "n_rep"))
+          assert(c.getAs[Long](f) == r.getAs[Long](f),
+            s"$f drifted for: ${text.get.take(50)} (kernel ${c.getAs[Long](f)}, declarative ${r.getAs[Long](f)})")
+    }
+  }
+
+  /** Runs `check` on 10 batches of 200 [[TextGen]] texts, NULL and the
+    * empty string among them. */
+  private def holdsOnGenerated(check: DataFrame => Unit): Unit = {
+    import spark.implicits._
+    val res = ScTest.check(ScTest.Parameters.default.withMinSuccessfulTests(10),
+      Prop.forAll(Gen.listOfN(200, TextGen.text)) { batch =>
+        check((batch ++ Seq(None, Some(""))).toDF("text")); true
+      })
+    assert(res.passed, res.status.toString)
+  }
+
   test("kernel counters equal the declarative expressions on edge cases") {
     import spark.implicits._
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
-    val toks = raw"filter(split(lower(trim(text)), '\\s+'), t -> t != '')"
-    val texts = Seq(
+    assertGopherAgrees(Seq(
       "",                                    // empty: 0 toks, 0 lines
       "   ",                                 // whitespace only
       "one",                                 // 1 token -> top_n NULL, n_bigrams 0
@@ -42,29 +97,15 @@ class GopherStatsSpec extends SparkSpec {
       "- \n* \n-\n*",                        // bullet-only trimmed lines + bare markers
       "Тест 😀 emoji töken länge", // non-ASCII + astral
       (1 to 300).map(i => s"w${i % 7}").mkString(" "), // heavy bigram repetition
-      (1 to 50).map(i => s"line ${i % 5}").mkString("\n"))
-    val df = texts.toDF("text")
-      .withColumn("g", expr("gopher_stats(text)"))
-      .withColumn("toks", expr(toks))
-      .withColumn("lns",
-        filter(transform(split(col("text"), "\n"), l => trim(l)), l => l =!= ""))
-      .select(col("text"), col("g"),
-        size(col("toks")).cast("long").as("e_n_words"),
-        size(col("lns")).cast("long").as("e_n_lines"),
-        (size(col("lns")) - size(array_distinct(col("lns")))).cast("long").as("e_n_dup"),
-        expr("size(filter(lns, l -> substr(l, 1, 2) IN ('- ', '* ')))").cast("long").as("e_n_bullet"),
-        expr("aggregate(toks, 0L, (acc, t) -> acc + length(t))").as("e_sum_wl"),
-        greatest(size(col("toks")).cast("long") - 1L, lit(0L)).as("e_n_bigrams"))
-    df.collect().foreach { r =>
-      val g = r.getStruct(r.fieldIndex("g"))
-      def e(name: String): Long = r.getAs[Long](s"e_$name")
-      for (f <- Seq("n_words", "n_lines", "n_dup", "n_bullet", "sum_wl", "n_bigrams"))
-        assert(g.getAs[Long](f) == e(f),
-          s"$f drifted for: ${r.getString(0).take(50)} (kernel ${g.getAs[Long](f)}, declarative ${e(f)})")
-      // top_n nullability: NULL iff fewer than 2 tokens
-      assert(g.isNullAt(g.fieldIndex("top_n")) == (e("n_words") < 2),
-        s"top_n nullability drifted for: ${r.getString(0).take(50)}")
-    }
+      (1 to 50).map(i => s"line ${i % 5}").mkString("\n")).toDF("text"))
+  }
+
+  test("property: gopher_stats equals the declarative expressions on generated text") {
+    holdsOnGenerated(assertGopherAgrees)
+  }
+
+  test("property: classifier_stats equals the declarative counts on generated text") {
+    holdsOnGenerated(assertClassifierAgrees)
   }
 
   test("classifier kernel build equals the declarative chain on the real sf0.001 corpus") {
