@@ -96,9 +96,10 @@ def split_ctes(sql):
     """Parse `WITH [RECURSIVE] n1 AS (...), n2(cols) AS (...) <final>` into
     (recursive, [(name, collist_or_None, body), ...], final). Returns None
     when the SQL is not a plain top-level WITH-chain. Quote- and
-    paren-aware; '' escapes inside strings. Comments are stripped first
-    (see strip_comments) — the staged SQL therefore runs comment-free,
-    which is semantics-preserving."""
+    paren-aware: parens inside a '…' string or a "…" identifier do not
+    count, and '' / "" escape the quote inside them. Comments are stripped
+    first (see strip_comments) — the staged SQL therefore runs
+    comment-free, which is semantics-preserving."""
     s = strip_comments(sql).lstrip()
     m = re.match(r'(?is)^WITH\s+(RECURSIVE\s+)?', s)
     if not m:
@@ -113,17 +114,17 @@ def split_ctes(sql):
             return None
         name, cols = mm.group(1), mm.group(2)
         j = i + mm.end()
-        depth, k, n, in_sq = 1, i + mm.end(), len(s), False
+        depth, k, n, quote = 1, i + mm.end(), len(s), None
         while k < n and depth:
             c = s[k]
-            if in_sq:
-                if c == "'":
-                    if k + 1 < n and s[k + 1] == "'":
+            if quote:
+                if c == quote:
+                    if k + 1 < n and s[k + 1] == quote:
                         k += 1
                     else:
-                        in_sq = False
-            elif c == "'":
-                in_sq = True
+                        quote = None
+            elif c in "'\"":
+                quote = c
             elif c == '(':
                 depth += 1
             elif c == ')':

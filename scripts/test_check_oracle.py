@@ -45,6 +45,20 @@ class SplitCtesTest(unittest.TestCase):
                                 ("b", "(n)", "SELECT length(s) FROM a")])
         self.assertEqual(final, "SELECT n FROM b")
 
+    def test_a_paren_inside_a_double_quoted_identifier(self):
+        sql = 'WITH a AS (SELECT 1 AS "x)y"), b AS (SELECT * FROM a) SELECT * FROM b'
+        _, ctes, final = split_ctes(sql)
+        self.assertEqual(ctes, [("a", None, 'SELECT 1 AS "x)y"'),
+                                ("b", None, "SELECT * FROM a")])
+        self.assertEqual(final, "SELECT * FROM b")
+
+    def test_a_doubled_quote_inside_a_double_quoted_identifier(self):
+        sql = 'WITH a AS (SELECT 2 AS "p""(q"), b AS (SELECT "p""(q" + 1 AS v FROM a) SELECT v FROM b'
+        _, ctes, final = split_ctes(sql)
+        self.assertEqual(ctes, [("a", None, 'SELECT 2 AS "p""(q"'),
+                                ("b", None, 'SELECT "p""(q" + 1 AS v FROM a')])
+        self.assertEqual(final, "SELECT v FROM b")
+
     def test_a_comment_with_an_unbalanced_paren_does_not_desync(self):
         sql = "WITH a AS (SELECT 1 AS v /* ) */ -- (\n) SELECT v FROM a"
         _, ctes, final = split_ctes(sql)
@@ -67,6 +81,15 @@ class RunStagedTest(unittest.TestCase):
         staged = check_oracle.norm(run_staged(duckdb.connect, sql))
         self.assertEqual(len(mono), 7)
         self.assertTrue(staged.equals(mono))
+
+    def test_quoted_identifiers_stage_like_the_monolithic_query(self):
+        for sql in ['WITH a AS (SELECT 1 AS "x)y"), b AS (SELECT * FROM a) SELECT * FROM b',
+                    'WITH a AS (SELECT 2 AS "p""(q"), b AS (SELECT "p""(q" + 1 AS v FROM a) '
+                    'SELECT v FROM b']:
+            mono = check_oracle.norm(duckdb.connect().execute(sql).df())
+            staged = check_oracle.norm(run_staged(duckdb.connect, sql))
+            self.assertEqual(len(mono), 1)
+            self.assertTrue(staged.equals(mono))
 
     def test_chain_ending_in_a_recursive_cte(self):
         sql = """WITH RECURSIVE seed AS (SELECT 3 AS n),

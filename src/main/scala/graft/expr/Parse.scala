@@ -2,7 +2,8 @@ package graft.expr
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, StringType}
+import org.apache.spark.sql.graft.{ColumnBridge, JsNumberParse}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** JS-compatible scalar parsing/validation helpers, expressed as Catalyst
   * column expressions (no UDFs — everything here stays inside whole-stage
@@ -18,39 +19,118 @@ import org.apache.spark.sql.types.{DoubleType, StringType}
   *    `raise_error` — mirroring the reference aborting the whole run on the
   *    first bad row.
   *
-  * All helpers are ANSI-mode-safe: casts are guarded by regex prefilters so
-  * they never throw under `spark.sql.ansi.enabled=true`.
+  * The four number helpers are one codegen'd kernel,
+  * [[org.apache.spark.sql.graft.JsNumberParse]], whose contract is
+  * [[scanNumber]]'s. It never throws, so the helpers are ANSI-mode-safe.
   */
 object Parse {
 
-  /** Regex of strings that JS `Number()` / a guarded cast can parse as double. */
-  private val NumRe = "^[+-]?((\\d+\\.?\\d*)|(\\.\\d+))([eE][+-]?\\d+)?$"
-
-  /** Prefix regex for JS `parseFloat` (parses the longest valid numeric prefix). */
-  private val PrefixRe = "^\\s*[+-]?((\\d+\\.?\\d*)|(\\.\\d+))([eE][+-]?\\d+)?"
-
-  /** Safe cast: null unless the trimmed string is fully numeric. */
-  private def guardedCast(c: Column): Column = {
-    val t = trim(c)
-    when(t.rlike(NumRe), t.cast(DoubleType))
-  }
-
   /** JS `parseFloat(s)`: longest numeric prefix; null (≙ NaN) if none. */
-  def jsParseFloat(c: Column): Column =
-    guardedCast(regexp_extract(c, PrefixRe, 0))
+  def jsParseFloat(c: Column): Column = number(c, prefix = true, "")
 
-  /** JS `Number(s)`: whole-string parse; '' / whitespace → 0; null ≙ NaN. */
-  def jsNumber(c: Column): Column =
-    when(trim(c) === "", lit(0.0)).otherwise(guardedCast(c))
+  /** JS `Number(s)`: whole-string parse; '' / spaces → 0; null ≙ NaN. */
+  def jsNumber(c: Column): Column = number(c, prefix = false, "")
 
   /** BullionVault `parseNumber`: strip thousands commas, then parseFloat
     * (`bullionvault.js:11-13`). */
-  def parseNumber(c: Column): Column =
-    jsParseFloat(regexp_replace(c, ",", ""))
+  def parseNumber(c: Column): Column = number(c, prefix = true, ",")
 
   /** ii-style `Number` after stripping `£` and `,` (`ii.js:66-67,83`). */
-  def poundsNumber(c: Column): Column =
-    jsNumber(regexp_replace(c, "[£,]", ""))
+  def poundsNumber(c: Column): Column = number(c, prefix = false, "£,")
+
+  private def number(c: Column, prefix: Boolean, strip: String): Column =
+    ColumnBridge.column(JsNumberParse(ColumnBridge.expression(c), prefix, strip))
+
+  /** The number `in` spells once every character of `strip` is removed, or
+    * NaN (the kernel's NULL) when it spells none. The grammar is
+    * `[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?` over ASCII digits, the
+    * exponent taken only when it has digits; the matched text is read by
+    * `Double.parseDouble`, so `1e999` is Infinity.
+    *
+    *  - Prefix mode (`parseFloat`): skip leading `[ \t\n\x0B\f\r]`, then
+    *    read the longest grammar match. No match is NaN. So is a skipped run
+    *    that holds anything but `' '`: `"\t5"` is NaN, where JS
+    *    `parseFloat("\t5")` is 5.
+    *  - Whole mode (`Number`): strip `' '` at both ends (only spaces, so
+    *    `"\t"` is NaN, where JS `Number("\t")` is 0); nothing left is 0.
+    *    Otherwise the rest must be one grammar match, optionally followed by
+    *    exactly one `\n`, `\r` or `\r\n`: `"5\n"` is 5.
+    */
+  def scanNumber(in: UTF8String, prefix: Boolean, strip: String): Double = {
+    val s = without(in.toString, strip)
+    if (prefix) {
+      var i = 0
+      var spaces = true
+      while (i < s.length && isRegexSpace(s.charAt(i))) {
+        spaces &&= s.charAt(i) == ' '
+        i += 1
+      }
+      val end = grammarEnd(s, i)
+      if (end < 0 || !spaces) Double.NaN else java.lang.Double.parseDouble(s.substring(i, end))
+    } else {
+      var b = 0
+      var e = s.length
+      while (b < e && s.charAt(b) == ' ') b += 1
+      while (e > b && s.charAt(e - 1) == ' ') e -= 1
+      if (b == e) 0.0
+      else {
+        val end = grammarEnd(s, b)
+        if (end < 0 || !lineEnd(s, end, e)) Double.NaN
+        else java.lang.Double.parseDouble(s.substring(b, end))
+      }
+    }
+  }
+
+  private def without(s: String, strip: String): String = {
+    var i = 0
+    while (i < s.length && strip.indexOf(s.charAt(i)) < 0) i += 1
+    if (i == s.length) s
+    else {
+      val b = new java.lang.StringBuilder(s.length).append(s, 0, i)
+      while (i < s.length) {
+        if (strip.indexOf(s.charAt(i)) < 0) b.append(s.charAt(i))
+        i += 1
+      }
+      b.toString
+    }
+  }
+
+  private def isRegexSpace(ch: Char): Boolean =
+    ch == ' ' || ch == '\t' || ch == '\n' || ch == '\u000b' || ch == '\f' || ch == '\r'
+
+  /** End of the longest grammar match that starts at `from`, or -1. */
+  private def grammarEnd(s: String, from: Int): Int = {
+    var i = from
+    if (i < s.length && (s.charAt(i) == '+' || s.charAt(i) == '-')) i += 1
+    val int = digitsEnd(s, i)
+    if (int > i) {
+      i = int
+      if (i < s.length && s.charAt(i) == '.') i = digitsEnd(s, i + 1)
+    } else if (i < s.length && s.charAt(i) == '.' && digitsEnd(s, i + 1) > i + 1) {
+      i = digitsEnd(s, i + 1)
+    } else return -1
+    if (i < s.length && (s.charAt(i) == 'e' || s.charAt(i) == 'E')) {
+      var j = i + 1
+      if (j < s.length && (s.charAt(j) == '+' || s.charAt(j) == '-')) j += 1
+      val exp = digitsEnd(s, j)
+      if (exp > j) i = exp
+    }
+    i
+  }
+
+  private def digitsEnd(s: String, from: Int): Int = {
+    var i = from
+    while (i < s.length && s.charAt(i) >= '0' && s.charAt(i) <= '9') i += 1
+    i
+  }
+
+  /** Whether `s(end until e)` is empty or one final `\n`, `\r` or `\r\n`. */
+  private def lineEnd(s: String, end: Int, e: Int): Boolean = e - end match {
+    case 0 => true
+    case 1 => s.charAt(end) == '\n' || s.charAt(end) == '\r'
+    case 2 => s.charAt(end) == '\r' && s.charAt(end + 1) == '\n'
+    case _ => false
+  }
 
   /** JS falsy-string coalesce: first non-empty value, else null
     * (`row['ISIN'] || row['Ticker']` at `freetrade.js:136`; `ii.js:75`). */

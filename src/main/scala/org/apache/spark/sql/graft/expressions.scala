@@ -36,6 +36,39 @@ case class JsNumberFormat(child: Expression) extends UnaryExpression with Expect
     copy(child = newChild)
 }
 
+/** Native Catalyst expression for the JS number parses of
+  * [[graft.expr.Parse]]: one scan of the string, after every character of
+  * `strip` is removed, gives a double, or NULL when the string spells no
+  * number. `prefix` selects JS `parseFloat`'s longest-numeric-prefix rule,
+  * otherwise the whole string must be a number (JS `Number`); the contract
+  * of both modes, quirks included, is [[graft.expr.Parse.scanNumber]]'s.
+  * Codegen emits one static call whose NaN result is the NULL sentinel (the
+  * number grammar has no NaN spelling), so a broker projection that parses
+  * many columns stays a small, JIT-compilable method. */
+case class JsNumberParse(child: Expression, prefix: Boolean, strip: String)
+  extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
+  override def prettyName: String = "js_parse"
+
+  override def nullSafeEval(input: Any): Any = {
+    val d = graft.expr.Parse.scanNumber(input.asInstanceOf[UTF8String], prefix, strip)
+    if (java.lang.Double.isNaN(d)) null else d
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    // every character as a \uXXXX escape, so any strip set is a valid Java literal
+    val stripLit = strip.map(ch => f"\\u${ch.toInt}%04x").mkString("\"", "", "\"")
+    nullSafeCodeGen(ctx, ev, c =>
+      s"""${ev.value} = graft.expr.Parse.scanNumber($c, $prefix, $stripLit);
+         |${ev.isNull} = java.lang.Double.isNaN(${ev.value});""".stripMargin)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): JsNumberParse =
+    copy(child = newChild)
+}
+
 /** Native dot product over two `array<float>` embedding columns — the inner
   * loop of every similarity/near-dup operator. Numerically IDENTICAL to the
   * higher-order-function formulation
@@ -279,10 +312,10 @@ case class PassageHash(child: Expression, n: Int) extends UnaryExpression with E
 
 /** Per-document Gopher counter kernel: text → ONE struct of the six
   * repetition/quality counters gopherScored derives its fractions from —
-  * the [[ShingleHash32]] treatment applied to the Gopher rule scan (round
-  * 21 continuation; the r20 audit named the interpreted-lambda counters as
-  * the build's cost). Field-for-field equal to the declarative chain it
-  * replaces (pinned by GopherStatsSpec against edge cases AND the real
+  * the [[ShingleHash32]] treatment applied to the Gopher rule scan, so the
+  * counters run as one JVM loop instead of interpreted lambdas.
+  * Field-for-field equal to the declarative chain it replaces (pinned by
+  * GopherStatsSpec against edge cases, generated text AND the real
   * corpus):
   *
   *   toks      = filter(split(lower(trim(text)), '\s+'), t -> t != '')
@@ -373,9 +406,9 @@ object GopherBridge {
 
 /** Per-document TYPE-FREQUENCY kernel: text → array of (t, tf) structs —
   * one entry per distinct token with its instance count, the row-local
-  * form of the rarity_doc_tf census (round 21 continuation). Entry-for-
-  * entry equal (as a set; consumers aggregate or re-sort) to the
-  * declarative chain it replaces:
+  * form of the rarity_doc_tf census. Entry-for-entry equal (as a set;
+  * consumers aggregate or re-sort) to the declarative chain it replaces
+  * (pinned by TypeFreqSpec):
   *
   *   explode(filter(split(lower(trim(text)), '\s+'), t -> t != ''))
   *     → groupBy(doc, t) → count(*)
@@ -693,8 +726,7 @@ object TopKBridge {
 }
 
 /** One-pass MinHash slice-min AGGREGATE — the [[SimhashAgg]] treatment
-  * applied to the wide-signature build (round 21, the r20 verdict's ask):
-  * input is the shingle STRING; the kernel computes the perms/4 seeded
+  * applied to the wide-signature build: input is the shingle STRING; the kernel computes the perms/4 seeded
   * digests md5("w<d>:" || s) itself and folds each digest's four 8-hex
   * slices into a primitive unsigned-int min buffer — one expression where
   * the declarative build evaluated 32 md5 projections, 128 substrings and
