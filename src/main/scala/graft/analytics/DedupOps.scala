@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 /** Deduplication operators (dd_*): exact/URL/Jaccard/containment,
   * MinHash+LSH (8/64/128-perm), SimHash, clusters, passages, lines,
-  * contamination, embedding near-dup. Moved verbatim from LlmOps (round 15). */
+  * contamination, embedding near-dup. Mixed into [[LlmOps]]. */
 private[analytics] trait DedupOps {
   this: OpsKernels with TxtOps with SimOps with IngestOps with LlmOracles =>
 
@@ -543,9 +543,9 @@ private[analytics] trait DedupOps {
 
   /** The incremental probe's capped band-state frame ((doc_id, band, bh)
     * rows) — the band_state rows the takedown census and the post-state
-    * parity spec count. Reads the MEMOIZED [[incrCorpusBands]] (round 21, the r20
-    * advice): this is by definition the same index table, and the inline
-    * rebuild re-paid the band explode + bucket-cap window per call. */
+    * parity spec count. Reads the MEMOIZED [[incrCorpusBands]]: this is by
+    * definition the same index table, so the band stack + bucket-cap
+    * window is not paid again per call. */
   private[analytics] def takedownBandState(spark: SparkSession, dir: String): DataFrame =
     incrCorpusBands(spark, dir)
 
@@ -698,7 +698,7 @@ private[analytics] trait DedupOps {
     * `thinActive`. [[containmentPairs]] passes the corpus rungs. */
   private[analytics] def buildContainmentPairs(spark: SparkSession, dir: String,
       p: Int, thinActive: Boolean): DataFrame = {
-    // round 21 (continuation): the containment build is the THIRD consumer
+    // the containment build is the THIRD consumer
     // of the ref-counted shingle state — its private shingle pass ran the
     // identical ShingleHash32 kernel over the identical rows (the hold's
     // extra bkt column is n_chars-derived and changes nothing), so the
@@ -731,8 +731,8 @@ private[analytics] trait DedupOps {
     // EVERY doc or for none. That bounds the self-join's fanout at
     // Σ min(df, B)·df ≤ B·Σdf — LINEAR in corpus size — where the
     // unthinned Σdf² is quadratic on this closed synthetic vocabulary
-    // (typical df grows with N; r18 measured 376 s at sf10 even
-    // doc-sampled). The containment ratio is then computed over the KEPT
+    // (typical df grows with N; the unthinned build took 376 s at sf10
+    // even doc-sampled). The containment ratio is then computed over the KEPT
     // universe on BOTH sides (common_kept / |kept(A)|): survival is
     // per-type, so a true subset pair keeps containment exactly 1.0, and
     // the ratio estimator concentrates around true containment for every
@@ -766,7 +766,7 @@ private[analytics] trait DedupOps {
     // den is doc-count rows but referenced twice (na, nb) by a subtree the
     // direction-union used to execute twice more — persist the KB-scale
     // census instead of re-aggregating the cached shingle rows per
-    // reference (round 20). The unthinned denominator is the hold's
+    // reference. The unthinned denominator is the hold's
     // already-persisted sizes census (never unpersisted here — the hold
     // owns it); only the thinned-path nk is this build's own cache.
     val den = if (thinActive) nk.persist() else sizes
@@ -779,7 +779,7 @@ private[analytics] trait DedupOps {
     // union's two branches each contained the whole shingle self-join +
     // aggregation subtree, and exchange reuse does not reliably dedupe it
     // (the pagerank_edges lesson) — the halve-the-heaviest-stage comment
-    // above only holds when the join genuinely executes once (round 20).
+    // above only holds when the join genuinely executes once.
     // Pair-table-scale leaf, so the extra checkpoint is KB-sized.
     val sized = checkpointLeaf(spark, sizedPlan)
     // thinned-universe noise floor: with few kept shingles a 1-2-shingle
@@ -849,8 +849,8 @@ private[analytics] trait DedupOps {
 
 
   /** Doc-sample keep-threshold (out of 65536) for the FULL pair state,
-    * from the corpus doc count — the round-17 verdict's last superlinear
-    * build, scale-bounded by SAMPLING rather than banding: the full
+    * from the corpus doc count — the last superlinear pair build,
+    * scale-bounded by SAMPLING rather than banding: the full
     * state's consumers are reporting/calibration CENSUSES (jaccard bins,
     * source-overlap matrix, top-200 ranked list, band-gap accounting)
     * that need unbiased mid-Jaccard pairs, not every pair — so past the
@@ -909,7 +909,7 @@ private[analytics] trait DedupOps {
     * mid-Jaccard region (0.2–0.8) the 16×4 band stack deliberately
     * under-retrieves (the recall census MEASURES that under-retrieval —
     * ~12% at J=0.3), so neither may ride [[bandedJaccardPairs]]: the
-    * round-17 scale gates caught BOTH live — banded source-overlap
+    * sf2/sf10 scale gates caught BOTH live — banded source-overlap
     * missed 25 of 47 source-pair groups at sf10, and banded
     * ngram-jaccard's top-200 diverged from row 96 at sf2, where the list
     * dips to J≈0.63. Cost: a slice of the state the calibration censuses
@@ -920,7 +920,7 @@ private[analytics] trait DedupOps {
       jaccardPairs(spark, dir).filter(col("jaccard") >= 0.2)
         .select(col("ia"), col("ib"), col("jaccard"))))
 
-  /** Band-bounded exact-truth pairs (round-16 verdict ask #2): candidates
+  /** Band-bounded exact-truth pairs: candidates
     * from [[wideBandCandidates]] (capped 16×4 minhash bands — bounded at
     * bands × buckets × cap²/2, never doc²), then exact blocked Jaccard
     * computed ONLY for those pairs via a candidate-restricted shingle
@@ -962,7 +962,7 @@ private[analytics] trait DedupOps {
       // with buildJaccardPairs (built once for both back-to-back state
       // builds) and frees when the second builder checkpoints. Blocking
       // for the deterministic storage handoff between state builds; the
-      // sync wait costs milliseconds. (Round-17 note: an sf2
+      // sync wait costs milliseconds. (An sf2
       // containment_pairs slowdown first suspected to be an unpersist
       // cascade turned out to be box-level memory-pressure degradation —
       // identical binaries measured 96→244→272 s across three
@@ -983,7 +983,7 @@ private[analytics] trait DedupOps {
     * consumers that need mid- or sub-threshold pairs read
     * [[jaccardPairsFull02]] / [[jaccardBins]] off the full state.
     *
-    * GATED on measured recall (round-17 advice): banding is
+    * GATED on measured recall: banding is
     * probabilistic and cap-truncatable, and the action consumers' oracle
     * mirrors derive their ≥0.8 edges from the FULL pair state — so on a
     * corpus where band recall < 1 (e.g. a duplicate cluster larger than
@@ -1018,9 +1018,8 @@ private[analytics] trait DedupOps {
 
 
   /** Shared shingle prep for the THREE pair-state builders
-    * ([[buildJaccardPairs]], [[bandedJaccardPairs]] and — round 21
-    * continuation — [[buildContainmentPairs]], whose private pass ran the
-    * identical kernel): returns (sh, capped, sizes). `sh` and `capped`
+    * ([[buildJaccardPairs]], [[bandedJaccardPairs]] and
+    * [[buildContainmentPairs]], which all run the identical kernel): returns (sh, capped, sizes). `sh` and `capped`
     * arrive PERSISTED (MEMORY_AND_DISK, spill-safe) and the hold
     * unpersists them once the LAST pair table is checkpointed.
     *
@@ -1112,7 +1111,7 @@ private[analytics] trait DedupOps {
     // sizes is doc-count rows but each UNPERSISTED reference re-aggregated
     // the multi-million-row cached shingle table — and the two pair
     // builders reference it twice each (the na and nb denominator joins),
-    // four full sh scans per state stage for one KB-scale census (round 20)
+    // four full sh scans per state stage for one KB-scale census
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
       .select(col("doc_id"), col("n"))
       .persist()
@@ -1170,7 +1169,7 @@ private[analytics] trait DedupOps {
 
 
   /** BAND-GAP census at the ACTION threshold — the no-silent-caps rule
-    * applied to round 17's own optimization. [[jaccardEdges08]] retrieves
+    * applied to the banded edge build itself. [[jaccardEdges08]] retrieves
     * the dedup edge set through the capped 16×4 bands, which is
     * near-exact at J≥0.8 (per-pair miss probability ≤2.2e-4) but
     * PROBABILISTIC, and cap-truncatable on a duplicate-heavy corpus.
@@ -1211,7 +1210,7 @@ private[analytics] trait DedupOps {
 
 
   /** The connected-components LABEL table over the Jaccard-0.8 edge set
-    * — (d, lbl) — memoized as prewarmed state (round 20): the pointer-
+    * — (d, lbl) — memoized as prewarmed state: the pointer-
     * doubling fixpoint is a deterministic function of the memoized edge
     * table, and THREE query paths re-ran it per call ([[ddCluster]],
     * [[ddClusterHist]] through it, and [[ddDedupKeepBest]]). A production
@@ -1357,8 +1356,8 @@ private[analytics] trait DedupOps {
     // materialized, so executor storage is bounded by two label tables no
     // matter how many rounds run.
 
-    // Mark for local checkpoint (lazily — the round-1 job materializes
-    // edges, initial labels, and the round-1 state together).
+    // Mark for local checkpoint (lazily — the first iteration's job
+    // materializes edges, initial labels and the first state together).
     def ckptRdd(df: DataFrame): RDD[Row] = { val r = df.rdd; r.localCheckpoint(); r }
 
     val edges = edges0.select(col("a"), col("b"))
@@ -1426,8 +1425,7 @@ private[analytics] trait DedupOps {
 
 
   /** Unordered minhash signature table — same no-sort-before-checkpoint
-    * reasoning as [[simhashSig]], and since round 10 the same
-    * per-(session, dir) memo: the sig query, the pairs query (which reads
+    * reasoning as [[simhashSig]], and the same per-(session, dir) memo: the sig query, the pairs query (which reads
     * it three times), and any re-run share ONE build, prewarmed by
     * [[stateBuilders]]. */
   private[analytics] def minhashSig(spark: SparkSession, dir: String): DataFrame =
@@ -1457,6 +1455,76 @@ private[analytics] trait DedupOps {
   }
 
 
+  // ------------------------------------------------------------ band index
+
+
+  /** The band index behind every LSH near-dup query — banded LSH as
+    * Leskovec, Rajaraman & Ullman (*Mining of Massive Datasets*, ch. 3)
+    * define it: band b of a doc is the bucket `bandExprs(b)` computes from
+    * its signature columns. `sig`'s doc_id and `carry` columns in, one
+    * (doc_id, <carry>, band, <bucket>) row per doc and band out, through
+    * ONE `stack`. With a cap, each (band, bucket) keeps its `cap` lowest
+    * doc_ids (a deterministic row_number cut, mirrored by [[bandsDuck]]):
+    * a bucket then yields at most cap²/2 candidate pairs however large the
+    * biggest identical-signature cluster grows. */
+  private[analytics] def bands(sig: DataFrame, carry: Seq[String], bucket: String,
+      bandExprs: Seq[String], cap: Option[Int] = None): DataFrame = {
+    val stack = bandExprs.zipWithIndex.map { case (e, b) => s"$b, $e" }
+      .mkString(s"stack(${bandExprs.size}, ", ", ", s") as (band, $bucket)")
+    val rows = sig.selectExpr(("doc_id" +: carry) :+ stack: _*)
+    cap.fold(rows)(c => rows
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col("band"), col(bucket)).orderBy(col("doc_id"))))
+      .filter(col("rn") <= c).drop("rn"))
+  }
+
+
+  /** MinHash band buckets: `k` bands of `rows` consecutive slices, each
+    * bucket the md5 of its slices concatenated. The text is valid SQL in
+    * both engines, so the DuckDB mirrors band from the same list. */
+  private[analytics] def minhashBandExprs(k: Int, rows: Int): Seq[String] =
+    (0 until k).map(b => (0 until rows).map(r => s"mh${rows * b + r}")
+      .mkString("md5(concat(", ", ", "))"))
+
+
+  /** SimHash band buckets: `k` bands of `bits` consecutive bits of the
+    * non-negative `simhash`. `div` is the engine's integer division
+    * (`div` in Spark, `//` in DuckDB). */
+  private[analytics] def simhashBandExprs(k: Int, bits: Int, div: String = "div"): Seq[String] =
+    (0 until k).map(b => s"(simhash $div ${1L << (bits * b)}) % ${1L << bits}")
+
+
+  /** The production-width band geometry: [[MinhashWideBands]] bands × 4
+    * rows over the 64-slice signature. */
+  private[analytics] lazy val wideBandExprs = minhashBandExprs(MinhashWideBands, 4)
+
+
+  /** Candidate pairs of the band index: band rows of one geometry (see
+    * [[bands]]) in, the distinct pairs sharing a (band, bucket) out, as
+    * (ia, ib, <carry of a>, <carry of b>). `a` and `b` name each side's
+    * doc_id and carried columns. The self-join (`selfJoin`, one index on
+    * both sides) keeps ia < ib. The probe form joins a batch's bands to a
+    * corpus index, so it never pairs two batch docs. */
+  private[analytics] def bandCandidates(left: DataFrame, right: DataFrame, selfJoin: Boolean,
+      a: Seq[String] = Seq("ia"), b: Seq[String] = Seq("ib")): DataFrame = {
+    val bucket = left.columns.last
+    val on = col("band") === col("band2") && col(bucket) === col(s"${bucket}2")
+    left.toDF(a ++ Seq("band", bucket): _*)
+      .join(right.toDF(b ++ Seq("band2", s"${bucket}2"): _*),
+        if (selfJoin) on && col(a.head) < col(b.head) else on)
+      .select((Seq(a.head, b.head) ++ a.tail ++ b.tail).map(col): _*)
+      .distinct()
+  }
+
+
+  /** Candidate pairs joined to the signature as `a` (the `ia` side) and
+    * `b` (the `ib` side), for an estimate over both. */
+  private[analytics] def withSig(cand: DataFrame, sig: DataFrame,
+      ia: String = "ia", ib: String = "ib"): DataFrame =
+    cand.join(sig.as("a"), col(ia) === col("a.doc_id"))
+      .join(sig.as("b"), col(ib) === col("b.doc_id"))
+
+
   /** MinHash-LSH candidate pairs: 4 bands × 2 rows; docs sharing any band
     * bucket become candidates; estimated similarity = matching minhashes / 8.
     * Banding bounds candidates without any doc² join. */
@@ -1474,17 +1542,10 @@ private[analytics] trait DedupOps {
     // makes the opposite call — see buildJaccardPairs, where per-consumer
     // PLANNING cost dominates.
     val sig = minhashSig(spark, dir)
-    val bands = sig.selectExpr("doc_id",
-      "stack(4, 0, md5(concat(mh0, mh1)), 1, md5(concat(mh2, mh3)), " +
-        "2, md5(concat(mh4, mh5)), 3, md5(concat(mh6, mh7))) as (band, bh)")
-    val cand = bands.toDF("ia", "band", "bh")
-      .join(bands.toDF("ib", "band2", "bh2"),
-        col("band") === col("band2") && col("bh") === col("bh2") && col("ia") < col("ib"))
-      .select(col("ia"), col("ib")).distinct()
+    val bs = bands(sig, Nil, "bh", minhashBandExprs(4, 2))
     val est = (0 until 8).map(j => when(col(s"a.mh$j") === col(s"b.mh$j"), 1).otherwise(0))
       .reduce(_ + _).cast("double") / 8.0
-    cand.join(sig.as("a"), col("ia") === col("a.doc_id"))
-      .join(sig.as("b"), col("ib") === col("b.doc_id"))
+    withSig(bandCandidates(bs, bs, selfJoin = true), sig)
       .select(col("ia"), col("ib"), est.as("est_sim"))
       .orderBy(col("est_sim").desc, col("ia"), col("ib"))
       .limit(200)
@@ -1492,16 +1553,15 @@ private[analytics] trait DedupOps {
 
 
   /** The CORPUS-side capped band index of the incremental probe —
-    * memoized + prewarmed like the sibling band tables (round 20): this
-    * IS the persistent LSH index a continuous-ingestion pipeline holds
-    * between batches (the probe joins batch bands to corpus bands only),
-    * and deriving it inline paid the band explode + bucket-cap window on
-    * every probe. */
+    * memoized + prewarmed like the sibling band tables: this IS the
+    * persistent LSH index a continuous-ingestion pipeline holds between
+    * batches (the probe joins batch bands to corpus bands only), so the
+    * band stack + bucket-cap window runs once per state build, not once
+    * per probe. */
   private[analytics] def incrCorpusBands(spark: SparkSession, dir: String): DataFrame =
     memoSig(spark, dir, "incr_corpus_bands") {
-      cappedWideBands(
-        minhashWideSig(spark, dir).filter(col("doc_id") < IncrementalSplit),
-        IncrementalProbeCap)
+      bands(minhashWideSig(spark, dir).filter(col("doc_id") < IncrementalSplit), Nil, "bh",
+        wideBandExprs, Some(IncrementalProbeCap))
     }
 
 
@@ -1529,13 +1589,10 @@ private[analytics] trait DedupOps {
     val sig = minhashWideSig(spark, dir)
     val half = IncrementalSplit
     val cb = incrCorpusBands(spark, dir)
-    val cand = wideBands(sig.filter(col("doc_id") >= half)).toDF("ia", "band", "bh")
-      .join(cb.toDF("ib", "band2", "bh2"),
-        col("band") === col("band2") && col("bh") === col("bh2"))
-      .select(col("ia"), col("ib")).distinct()
+    val cand = bandCandidates(bands(sig.filter(col("doc_id") >= half), Nil, "bh", wideBandExprs),
+      cb, selfJoin = false)
     val wBest = Window.partitionBy(col("ia")).orderBy(col("est_sim").desc, col("ib"))
-    val best = cand.join(sig.as("a"), col("ia") === col("a.doc_id"))
-      .join(sig.as("b"), col("ib") === col("b.doc_id"))
+    val best = withSig(cand, sig)
       .select(col("ia"), col("ib"), wideEstSim.as("est_sim"))
       .withColumn("rn", row_number().over(wBest))
       .filter(col("rn") === 1)
@@ -1584,7 +1641,7 @@ private[analytics] trait DedupOps {
       // the 64-perm signature is by construction the first 64 slices of
       // the 128-perm table (same "w<d>:" seeds, same slice scheme), so
       // derive it from the memoized 128 table instead of paying a second
-      // full tokenize + shingle + digest pass over the corpus (round 20).
+      // full tokenize + shingle + digest pass over the corpus.
       // The stand-alone builder (DeclarativeScans in src/test) stays for
       // the spec that pins the equivalence.
       minhashWide128Arr(spark, dir)
@@ -1606,7 +1663,7 @@ private[analytics] trait DedupOps {
 
   /** The one memoized 128-perm signature table, held as (doc_id,
     * mh array<string>(128)) — built by the one-pass [[MinhashSlicesAgg]]
-    * kernel (round 21, the r20 verdict's ask #3): the kernel computes the
+    * kernel: the kernel computes the
     * 32 seeded digests inside the aggregate update and min-folds their
     * slices in a primitive int buffer, replacing 32 md5 projections + 128
     * substring + 128 string min-aggregates per shingle row, and the array
@@ -1634,30 +1691,6 @@ private[analytics] trait DedupOps {
         (0 until 128).map(j => col("mh").getItem(j).as(s"mh$j")): _*)
 
 
-  /** [[MinhashWideBands]]-band stack over a wide-signature frame →
-    * (doc_id, band, bh). One code site for the band geometry — the pairs
-    * query, the incremental probe, and the DuckDB mirrors
-    * ([[wideBandsDuckBranches]]) must agree on it exactly. */
-  private[analytics] def wideBands(sig: DataFrame): DataFrame = {
-    val stackArgs = (0 until MinhashWideBands).map { bd =>
-      val bh = (0 until 4).map(r => s"mh${4 * bd + r}").mkString("concat(", ", ", ")")
-      s"$bd, md5($bh)"
-    }.mkString(", ")
-    sig.selectExpr("doc_id", s"stack($MinhashWideBands, $stackArgs) as (band, bh)")
-  }
-
-
-  /** [[wideBands]] with a per-(band, bucket) membership cap (keep the
-    * smallest doc_ids, deterministic). Default [[SimhashBucketCap]]; the
-    * incremental probe passes [[IncrementalProbeCap]] — there the capped
-    * side is the recall-critical corpus. */
-  private[analytics] def cappedWideBands(sig: DataFrame, cap: Int = SimhashBucketCap): DataFrame =
-    wideBands(sig)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("band"), col("bh")).orderBy(col("doc_id"))))
-      .filter(col("rn") <= cap).drop("rn")
-
-
   /** Corpus-side bucket cap of the INCREMENTAL near-dup probe — 4× the
     * pairs-query cap, because here the capped side is the recall-critical
     * one: evicting an arriving doc's only colliding corpus twin from every
@@ -1678,7 +1711,8 @@ private[analytics] trait DedupOps {
     * discovering at audit time; the oracle pins it to zero on the
     * synthetic corpora, which is itself the claim worth checking. */
   def ddIncrementalCapped(spark: SparkSession, dir: String): DataFrame =
-    wideBands(minhashWideSig(spark, dir).filter(col("doc_id") < IncrementalSplit))
+    bands(minhashWideSig(spark, dir).filter(col("doc_id") < IncrementalSplit), Nil, "bh",
+        wideBandExprs)
       .groupBy(col("band"), col("bh")).agg(count(lit(1)).as("cnt"))
       .agg(sum(col("cnt")).as("n_rows"),
         count(lit(1)).as("n_buckets"),
@@ -1714,10 +1748,7 @@ private[analytics] trait DedupOps {
     * perms — identical docs agree on all 64 slices, so a giant exact-dup
     * cluster lands in one bucket per band. */
   def ddMinhashWidePairs(spark: SparkSession, dir: String): DataFrame = {
-    val sig = minhashWideSig(spark, dir)
-    val cand = wideBandCandidates(spark, dir).toDF("ia", "ib")
-    cand.join(sig.as("a"), col("ia") === col("a.doc_id"))
-      .join(sig.as("b"), col("ib") === col("b.doc_id"))
+    withSig(wideBandCandidates(spark, dir).toDF("ia", "ib"), minhashWideSig(spark, dir))
       .select(col("ia"), col("ib"), wideEstSim.as("est_sim"))
       .orderBy(col("est_sim").desc, col("ia"), col("ib"))
       .limit(200)
@@ -1778,11 +1809,9 @@ private[analytics] trait DedupOps {
     * (candidates ∩ truth, both pair-bounded), ≤ 21 output rows. */
   def ddMinhashCalibration(spark: SparkSession, dir: String): DataFrame = {
     val sig = minhashWideSig(spark, dir)
-    wideBandCandidates(spark, dir)
-      .join(jaccardBins(spark, dir),
-        col("ia") === col("ca") && col("ib") === col("cb"))
-      .join(sig.as("a"), col("ca") === col("a.doc_id"))
-      .join(sig.as("b"), col("cb") === col("b.doc_id"))
+    val cand = wideBandCandidates(spark, dir)
+      .join(jaccardBins(spark, dir), col("ia") === col("ca") && col("ib") === col("cb"))
+    withSig(cand, sig, "ca", "cb")
       .select(col("bin"), wideMatches.as("matches"))
       .groupBy(col("bin"))
       .agg(count(lit(1)).as("n_pairs"), sum(col("matches")).as("sum_matches"))
@@ -1803,7 +1832,7 @@ private[analytics] trait DedupOps {
 
   /** The banded candidate set (distinct ca &lt; cb band-bucket collisions
     * over the capped 16×4 bands) — the generation step shared by the
-    * pairs query and both censuses; [[bandCandDuck]]'s Spark twin.
+    * pairs query and both censuses; [[wideCandDuck]]'s Spark twin.
     * MEMOIZED like the signature table it derives from: all three
     * consumers re-ran the band stack + capped self-join (~5 s apiece at
     * sf2), and the distinct pair set is cap-bounded (never doc²) so the
@@ -1811,11 +1840,8 @@ private[analytics] trait DedupOps {
     * [[bruteTruthTable]]. */
   private[analytics] def wideBandCandidates(spark: SparkSession, dir: String): DataFrame =
     memoSig(spark, dir, "band_candidates") {
-      val bands = cappedWideBands(minhashWideSig(spark, dir))
-      bands.toDF("ca", "band", "bh")
-        .join(bands.toDF("cb", "band2", "bh2"),
-          col("band") === col("band2") && col("bh") === col("bh2") && col("ca") < col("cb"))
-        .select(col("ca"), col("cb")).distinct()
+      val bs = bands(minhashWideSig(spark, dir), Nil, "bh", wideBandExprs, Some(SimhashBucketCap))
+      bandCandidates(bs, bs, selfJoin = true, Seq("ca"), Seq("cb"))
     }
 
 
@@ -1846,7 +1872,7 @@ private[analytics] trait DedupOps {
     * column, so the sampled pairs twin is a FILTER over the shared table
     * instead of a second tokenize pass.
     *
-    * Round 21 (continuation): SimHash votes over the DISTINCT word set —
+    * SimHash votes over the DISTINCT word set —
     * exactly the key set of the memoized [[rarityDocTf]] census (identical
     * [[toksSpark]] tokenize; `array_distinct` ≡ the census's group-by
     * keys, empty docs dropped in both lineages) — so the build reads the
@@ -1890,27 +1916,19 @@ private[analytics] trait DedupOps {
 
 
   /** Capped LSH bucket membership of the 16-bit simhash over the sampled
-    * half — (doc_id, simhash, band, bv) — memoized index state like the
-    * signature table it derives from (round 20): a deployed LSH index
+    * half — (doc_id, simhash, band, bv), four 4-bit bands — memoized index
+    * state like the signature table it derives from: a deployed LSH index
     * PERSISTS bucket membership (bucket → members IS the index), and the
     * pairs query consumes the banded table on BOTH sides of its candidate
-    * self-join, which otherwise re-ran the band explode + bucket-cap
-    * window once per side (the formatted plan showed the whole
-    * Generate/Exchange/Sort/Window subtree twice). Cached, not
+    * self-join, which would otherwise plan the band stack + bucket-cap
+    * window once per side (PlanGuardSpec pins one). Cached, not
     * checkpointed — the AQE-disengagement lesson in [[ddMinhashPairs]]'
-    * comment applies verbatim. */
+    * comment applies verbatim. The sample is the memoized full-corpus
+    * table filtered by its precomputed flag: no second tokenize pass. */
   private[analytics] def simhashBands16(spark: SparkSession, dir: String): DataFrame =
     memoSig(spark, dir, "sig16_bands") {
-      // the memoized full-corpus table filtered by the precomputed sample
-      // flag — no second tokenize pass for the sampled twin
-      simhashSig(spark, dir).filter(col("efp"))
-        .select(col("doc_id"), col("simhash"),
-          explode_outer(expr("sequence(0, 3)")).as("band"))
-        .filter(col("band").isNotNull)
-        .withColumn("bv", expr("(simhash div CAST(pow(16, band) AS BIGINT)) % 16"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(col("band"), col("bv")).orderBy(col("doc_id"))))
-        .filter(col("rn") <= SimhashBucketCap).drop("rn")
+      bands(simhashSig(spark, dir).filter(col("efp")), Seq("simhash"), "bv",
+        simhashBandExprs(4, 4), Some(SimhashBucketCap))
     }
 
 
@@ -1919,15 +1937,21 @@ private[analytics] trait DedupOps {
     * state. */
   private[analytics] def simhashBands60(spark: SparkSession, dir: String): DataFrame =
     memoSig(spark, dir, "sig60_bands") {
-      simhashWideSig(spark, dir)
-        .select(col("doc_id"), col("simhash"),
-          explode_outer(expr("sequence(0, 5)")).as("band"))
-        .filter(col("band").isNotNull)
-        .withColumn("bv", expr("(simhash div shiftleft(CAST(1 AS BIGINT), 10 * band)) % 1024"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(col("band"), col("bv")).orderBy(col("doc_id"))))
-        .filter(col("rn") <= SimhashBucketCap).drop("rn")
+      bands(simhashWideSig(spark, dir), Seq("simhash"), "bv",
+        simhashBandExprs(6, 10), Some(SimhashBucketCap))
     }
+
+
+  /** SimHash near-dup pairs over a capped simhash band index: the band
+    * self-join's candidates verified by exact Hamming distance, the 200
+    * closest pairs (ties by ia, ib). */
+  private def simhashPairs(bs: DataFrame, maxHamming: Int): DataFrame =
+    bandCandidates(bs, bs, selfJoin = true, Seq("ia", "ha"), Seq("ib", "hb"))
+      .withColumn("hamming", expr("bit_count(ha ^ hb)"))
+      .filter(col("hamming") <= maxHamming)
+      .select(col("ia"), col("ib"), col("hamming"))
+      .orderBy(col("hamming"), col("ia"), col("ib"))
+      .limit(200)
 
 
   /** SimHash near-dup PAIRS: banded candidate generation + exact Hamming
@@ -1944,19 +1968,8 @@ private[analytics] trait DedupOps {
     * deterministic 1/2 content sample ([[evenFpSpark]], mirrored verbatim
     * in the oracle SQL) — candidates quarter while the banding/verify
     * plan under demonstration stays identical. */
-  def ddSimhashPairs(spark: SparkSession, dir: String): DataFrame = {
-    val bands = simhashBands16(spark, dir)
-    val cand = bands.toDF("ia", "ha", "band", "bv")
-      .join(bands.toDF("ib", "hb", "band2", "bv2"),
-        col("band") === col("band2") && col("bv") === col("bv2") && col("ia") < col("ib"))
-      .select(col("ia"), col("ib"), col("ha"), col("hb")).distinct()
-    cand
-      .withColumn("hamming", expr("bit_count(ha ^ hb)"))
-      .filter(col("hamming") <= 3)
-      .select(col("ia"), col("ib"), col("hamming"))
-      .orderBy(col("hamming"), col("ia"), col("ib"))
-      .limit(200)
-  }
+  def ddSimhashPairs(spark: SparkSession, dir: String): DataFrame =
+    simhashPairs(simhashBands16(spark, dir), 3)
 
 
   /** WIDE SimHash — the production-width configuration PLANS.md promises:
@@ -1969,7 +1982,7 @@ private[analytics] trait DedupOps {
 
   private[analytics] def simhashWideSig(spark: SparkSession, dir: String): DataFrame =
     memoSig(spark, dir, "sig60") {
-      // round 21 (continuation): the distinct word set read back from the
+      // the distinct word set read back from the
       // memoized per-doc census instead of a private corpus tokenize —
       // same move as the 16-bit twin above, no sample flag needed here
       val tok = rarityDocTf(spark, dir)
@@ -1992,19 +2005,8 @@ private[analytics] trait DedupOps {
     * candidates at sf0.1, the wide bands have 6×1024 buckets and the
     * candidate set collapses to the near-dup pairs themselves — the
     * measured form of "widening the hash divides candidate volume". */
-  def ddSimhashWidePairs(spark: SparkSession, dir: String): DataFrame = {
-    val bands = simhashBands60(spark, dir)
-    val cand = bands.toDF("ia", "ha", "band", "bv")
-      .join(bands.toDF("ib", "hb", "band2", "bv2"),
-        col("band") === col("band2") && col("bv") === col("bv2") && col("ia") < col("ib"))
-      .select(col("ia"), col("ib"), col("ha"), col("hb")).distinct()
-    cand
-      .withColumn("hamming", expr("bit_count(ha ^ hb)"))
-      .filter(col("hamming") <= 5)
-      .select(col("ia"), col("ib"), col("hamming"))
-      .orderBy(col("hamming"), col("ia"), col("ib"))
-      .limit(200)
-  }
+  def ddSimhashWidePairs(spark: SparkSession, dir: String): DataFrame =
+    simhashPairs(simhashBands60(spark, dir), 5)
 
 
   /** Per-label membership CAP for [[ddEmbedTopk]] — the [[SimhashBucketCap]]

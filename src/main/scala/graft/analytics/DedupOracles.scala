@@ -492,8 +492,7 @@ private[analytics] trait DedupOracles {
     // per-(band, bucket) cap mirrored from the Spark side
     "dd_minhash_wide_pairs" ->
       s"""WITH $baseDuck, ${wideSigStackDuck()},
-         |${cappedBandsDuck("")},
-         |${bandCandDuck("")}
+         |${wideCandDuck("")}
          |SELECT ia, ib,
          |  $wideEstSimDuck AS est_sim
          |FROM cand JOIN sig sa ON ia = sa.doc_id JOIN sig sb ON ib = sb.doc_id
@@ -507,8 +506,7 @@ private[analytics] trait DedupOracles {
     "dd_minhash_recall" ->
       s"""WITH $baseDuck, $shinglePairsSampledDuck,
          |${wideSigStackDuck("_w")},
-         |${cappedBandsDuck("_w")},
-         |${bandCandDuck("_w")},
+         |${wideCandDuck("_w")},
          |$jaccardBinsDuck
          |SELECT bin, bin * 5 AS j_lo_pct,
          |  count(*) AS n_pairs, count(c.ia) AS n_retrieved,
@@ -524,8 +522,7 @@ private[analytics] trait DedupOracles {
     "dd_band_gap" ->
       s"""WITH $baseDuck, $shinglePairsSampledDuck,
          |${wideSigStackDuck("_w")},
-         |${cappedBandsDuck("_w")},
-         |${bandCandDuck("_w")},
+         |${wideCandDuck("_w")},
          |edges AS (
          |  SELECT ia, ib FROM pairs
          |  JOIN sizes sa ON ia = sa.doc_id JOIN sizes sb ON ib = sb.doc_id
@@ -544,8 +541,7 @@ private[analytics] trait DedupOracles {
     "dd_minhash_calibration" ->
       s"""WITH $baseDuck, $shinglePairsSampledDuck,
          |${wideSigStackDuck("_w")},
-         |${cappedBandsDuck("_w")},
-         |${bandCandDuck("_w")},
+         |${wideCandDuck("_w")},
          |$jaccardBinsDuck
          |SELECT bin, count(*) AS n_pairs,
          |  CAST(sum($wideMatchesDuck) AS BIGINT) AS sum_matches,
@@ -561,11 +557,8 @@ private[analytics] trait DedupOracles {
     "dd_incremental_near" ->
       s"""WITH $baseDuck, ${wideSigStackDuck()},
          |$probeCappedBandsDuck,
-         |bb AS (
-         |  ${wideBandsDuckBranches(s" WHERE doc_id >= $IncrementalSplit")}),
-         |cand AS (
-         |  SELECT DISTINCT b.doc_id AS ia, c.doc_id AS ib
-         |  FROM bb b JOIN cb c ON b.band = c.band AND b.bh = c.bh),
+         |${bandsDuck("bb", s"sig WHERE doc_id >= $IncrementalSplit", Nil, "bh", wideBandExprs)},
+         |${bandCandDuck("cand", "bb", "cb", selfJoin = false)},
          |scored AS (
          |  SELECT ia, ib,
          |    $wideEstSimDuck AS est_sim
@@ -602,13 +595,8 @@ private[analytics] trait DedupOracles {
          |sig AS (
          |  SELECT doc_id, $minhashSliceCols
          |  FROM sh GROUP BY doc_id),
-         |bands AS (
-         |  ${(0 until 4).map(bd => s"SELECT doc_id, $bd AS band, md5(mh${2 * bd} || mh${2 * bd + 1}) AS bh FROM sig")
-              .mkString("\n  UNION ALL ")}),
-         |cand AS (
-         |  SELECT DISTINCT a.doc_id AS ia, b.doc_id AS ib
-         |  FROM bands a JOIN bands b
-         |    ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id)
+         |${bandsDuck("bands", "sig", Nil, "bh", minhashBandExprs(4, 2))},
+         |${bandCandDuck("cand", "bands", "bands", selfJoin = true)}
          |SELECT ia, ib,
          |  (${(0 until 8).map(j => s"CASE WHEN sa.mh$j = sb.mh$j THEN 1 ELSE 0 END").mkString(" + ")}) / 8.0 AS est_sim
          |FROM cand JOIN sig sa ON ia = sa.doc_id JOIN sig sb ON ib = sb.doc_id
@@ -616,17 +604,8 @@ private[analytics] trait DedupOracles {
 
 
     "dd_simhash" ->
-      s"""WITH $baseDuck, tok AS (
-         |  SELECT doc_id, unnest(list_distinct(toks)) AS t FROM base),
-         |hashed AS (
-         |  SELECT doc_id, CAST(${hex4("md5(t)")} AS BIGINT) AS h FROM tok),
-         |bits AS (
-         |  SELECT doc_id,
-         |    ${(0 until 16).map(i => s"sum(CASE WHEN (h // ${1L << i}) % 2 = 1 THEN 1 ELSE -1 END) AS b$i").mkString(",\n    ")}
-         |  FROM hashed GROUP BY doc_id)
-         |SELECT doc_id,
-         |  CAST(${(0 until 16).map(i => s"(CASE WHEN b$i > 0 THEN ${1L << i} ELSE 0 END)").mkString(" + ")} AS BIGINT) AS simhash
-         |FROM bits ORDER BY doc_id""".stripMargin,
+      s"""WITH $baseDuck, ${simhashSigDuck(16, s"CAST(${hex4("md5(t)")} AS BIGINT)")}
+         |SELECT doc_id, simhash FROM sig ORDER BY doc_id""".stripMargin,
 
 
     "dd_incremental" ->
@@ -654,80 +633,18 @@ private[analytics] trait DedupOracles {
     // same 1/2 content sample as the Spark side (evenFpSpark) — the
     // didactic 16-bit twin is bounded identically in both engines
     "dd_simhash_pairs" ->
-      s"""WITH $baseDuck, tok AS (
-         |  SELECT doc_id, unnest(list_distinct(toks)) AS t FROM base
-         |  WHERE substr(md5(text), 1, 1) IN ('0','2','4','6','8','a','c','e')),
-         |hashed AS (
-         |  SELECT doc_id, CAST(${hex4("md5(t)")} AS BIGINT) AS h FROM tok),
-         |bits AS (
-         |  SELECT doc_id,
-         |    ${(0 until 16).map(i => s"sum(CASE WHEN (h // ${1L << i}) % 2 = 1 THEN 1 ELSE -1 END) AS b$i").mkString(",\n    ")}
-         |  FROM hashed GROUP BY doc_id),
-         |sig AS (
-         |  SELECT doc_id,
-         |    CAST(${(0 until 16).map(i => s"(CASE WHEN b$i > 0 THEN ${1L << i} ELSE 0 END)").mkString(" + ")} AS BIGINT) AS simhash
-         |  FROM bits),
-         |bands AS (
-         |  SELECT doc_id, simhash, band,
-         |    (simhash // CAST(pow(16, band) AS BIGINT)) % 16 AS bv
-         |  FROM sig, unnest([0, 1, 2, 3]) AS u(band)),
-         |capped AS (
-         |  SELECT doc_id, simhash, band, bv FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY band, bv ORDER BY doc_id) AS rn
-         |    FROM bands) WHERE rn <= $SimhashBucketCap),
-         |cand AS (
-         |  SELECT DISTINCT a.doc_id AS ia, b.doc_id AS ib, a.simhash AS ha, b.simhash AS hb
-         |  FROM capped a JOIN capped b
-         |    ON a.band = b.band AND a.bv = b.bv AND a.doc_id < b.doc_id)
-         |SELECT ia, ib, bit_count(xor(ha, hb)) AS hamming
-         |FROM cand
-         |WHERE bit_count(xor(ha, hb)) <= 3
-         |ORDER BY hamming, ia, ib LIMIT 200""".stripMargin,
+      simhashPairsDuck(
+        simhashSigDuck(16, s"CAST(${hex4("md5(t)")} AS BIGINT)", s"\n  WHERE $evenFpSpark"),
+        simhashBandExprs(4, 4, "//"), 3),
 
 
     "dd_simhash_wide" ->
-      s"""WITH $baseDuck, tok AS (
-         |  SELECT doc_id, unnest(list_distinct(toks)) AS t FROM base),
-         |hashed AS (
-         |  SELECT doc_id, ${hex15("md5(t)")} AS h FROM tok),
-         |bits AS (
-         |  SELECT doc_id,
-         |    ${(0 until 60).map(i => s"sum(CASE WHEN (h // ${1L << i}) % 2 = 1 THEN 1 ELSE -1 END) AS b$i").mkString(",\n    ")}
-         |  FROM hashed GROUP BY doc_id)
-         |SELECT doc_id,
-         |  CAST(${(0 until 60).map(i => s"(CASE WHEN b$i > 0 THEN ${1L << i} ELSE 0 END)").mkString(" + ")} AS BIGINT) AS simhash
-         |FROM bits ORDER BY doc_id""".stripMargin,
+      s"""WITH $baseDuck, ${simhashSigDuck(60, hex15("md5(t)"))}
+         |SELECT doc_id, simhash FROM sig ORDER BY doc_id""".stripMargin,
 
 
     "dd_simhash_wide_pairs" ->
-      s"""WITH $baseDuck, tok AS (
-         |  SELECT doc_id, unnest(list_distinct(toks)) AS t FROM base),
-         |hashed AS (
-         |  SELECT doc_id, ${hex15("md5(t)")} AS h FROM tok),
-         |bits AS (
-         |  SELECT doc_id,
-         |    ${(0 until 60).map(i => s"sum(CASE WHEN (h // ${1L << i}) % 2 = 1 THEN 1 ELSE -1 END) AS b$i").mkString(",\n    ")}
-         |  FROM hashed GROUP BY doc_id),
-         |sig AS (
-         |  SELECT doc_id,
-         |    CAST(${(0 until 60).map(i => s"(CASE WHEN b$i > 0 THEN ${1L << i} ELSE 0 END)").mkString(" + ")} AS BIGINT) AS simhash
-         |  FROM bits),
-         |bands AS (
-         |  SELECT doc_id, simhash, band,
-         |    (simhash // CAST(pow(2, 10 * band) AS BIGINT)) % 1024 AS bv
-         |  FROM sig, unnest([0, 1, 2, 3, 4, 5]) AS u(band)),
-         |capped AS (
-         |  SELECT doc_id, simhash, band, bv FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY band, bv ORDER BY doc_id) AS rn
-         |    FROM bands) WHERE rn <= $SimhashBucketCap),
-         |cand AS (
-         |  SELECT DISTINCT a.doc_id AS ia, b.doc_id AS ib, a.simhash AS ha, b.simhash AS hb
-         |  FROM capped a JOIN capped b
-         |    ON a.band = b.band AND a.bv = b.bv AND a.doc_id < b.doc_id)
-         |SELECT ia, ib, bit_count(xor(ha, hb)) AS hamming
-         |FROM cand
-         |WHERE bit_count(xor(ha, hb)) <= 5
-         |ORDER BY hamming, ia, ib LIMIT 200""".stripMargin,
+      simhashPairsDuck(simhashSigDuck(60, hex15("md5(t)")), simhashBandExprs(6, 10, "//"), 5),
 
 
     "dd_embed_topk" ->

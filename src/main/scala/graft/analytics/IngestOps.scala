@@ -371,7 +371,7 @@ private[analytics] trait IngestOps {
 
 
   /** Per-cell REFERENCE cap for [[mmImageDedup]]'s within-cell self-join
-    * (the [[DedupOps.cappedWideBands]] treatment applied to the image
+    * (the [[DedupOps.bands]] cap applied to the image
     * index): each image compares against at
     * most this many lowest-id cell-mates, so a pathologically hot cell
     * costs occ·cap, never occ². Far above any occupancy the test corpora

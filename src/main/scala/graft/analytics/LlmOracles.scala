@@ -140,14 +140,8 @@ private[analytics] trait LlmOracles {
     * CTE is lazy in DuckDB) and dd_takedown mirrors, so the takedown
     * census can never drift from the band state it claims to census. */
   private[analytics] def probeCappedBandsDuck: String =
-    s"""cb0 AS (
-       |  ${wideBandsDuckBranches(s" WHERE doc_id < $IncrementalSplit")}),
-       |cb AS (
-       |  SELECT doc_id, band, bh FROM (
-       |    SELECT doc_id, band, bh,
-       |      row_number() OVER (PARTITION BY band, bh ORDER BY doc_id) AS rn
-       |    FROM cb0)
-       |  WHERE rn <= $IncrementalProbeCap)""".stripMargin
+    bandsDuck("cb", s"sig WHERE doc_id < $IncrementalSplit", Nil, "bh", wideBandExprs,
+      Some(IncrementalProbeCap))
 
 
   /** One admission-contract mirror for the single-scan gate and its
@@ -356,29 +350,85 @@ private[analytics] trait LlmOracles {
        |  FROM h$sfx GROUP BY doc_id)""".stripMargin
 
 
-  /** The [[cappedWideBands]] mirror (bands0→bands, keep-smallest-doc_ids
-    * row_number cap) over a suffixed `sig` CTE — ONE site for the
-    * per-(band, bucket) cap on the Duck side, shared by the banded-pairs
-    * mirror and the banding-recall census. */
-  private[analytics] def cappedBandsDuck(sfx: String): String =
-    s"""bands0$sfx AS (
-       |  ${wideBandsDuckBranches("", s"sig$sfx")}),
-       |bands$sfx AS (
-       |  SELECT doc_id, band, bh FROM (
-       |    SELECT doc_id, band, bh,
-       |      row_number() OVER (PARTITION BY band, bh ORDER BY doc_id) AS rn
-       |    FROM bands0$sfx)
-       |  WHERE rn <= $SimhashBucketCap)""".stripMargin
+  /** [[DedupOps.bands]] as DuckDB CTEs over `src` (a CTE name, with an
+    * optional WHERE): `name` holds one (doc_id, <carry>, band, <bucket>)
+    * row per doc and band, one UNION ALL branch per band expression. With
+    * a cap, `name`0 holds those rows and `name` keeps the `cap` lowest
+    * doc_ids per (band, bucket) — the Spark side's row_number cut. */
+  private[analytics] def bandsDuck(name: String, src: String, carry: Seq[String], bucket: String,
+      bandExprs: Seq[String], cap: Option[Int] = None): String = {
+    val cols = ("doc_id" +: carry).mkString(", ")
+    val rows = bandExprs.zipWithIndex
+      .map { case (e, b) => s"SELECT $cols, $b AS band, $e AS $bucket FROM $src" }
+      .mkString("\n  UNION ALL ")
+    cap.fold(s"$name AS (\n  $rows)")(c =>
+      s"""${name}0 AS (
+         |  $rows),
+         |$name AS (
+         |  SELECT $cols, band, $bucket FROM (
+         |    SELECT *, row_number() OVER (PARTITION BY band, $bucket ORDER BY doc_id) AS rn
+         |    FROM ${name}0)
+         |  WHERE rn <= $c)""".stripMargin)
+  }
 
 
-  /** The banded candidate set (distinct undirected band-bucket
-    * collisions) over [[cappedBandsDuck]]'s output — the generation step
-    * whose recall the census measures, shared with the pairs mirror. */
-  private[analytics] def bandCandDuck(sfx: String): String =
-    s"""cand$sfx AS (
-       |  SELECT DISTINCT a.doc_id AS ia, b.doc_id AS ib
-       |  FROM bands$sfx a JOIN bands$sfx b
-       |    ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id)""".stripMargin
+  /** [[DedupOps.bandCandidates]] as a DuckDB CTE: `name` holds the
+    * distinct (ia, ib) pairs of `left` and `right` band rows that share a
+    * (band, bucket), each carried column c riding as c_a and c_b. The
+    * self-join keeps ia < ib; the probe form joins batch bands to corpus
+    * bands only. */
+  private[analytics] def bandCandDuck(name: String, left: String, right: String,
+      selfJoin: Boolean, bucket: String = "bh", carry: Seq[String] = Nil): String = {
+    val carried = carry.map(c => s", a.$c AS ${c}_a, b.$c AS ${c}_b").mkString
+    val lt = if (selfJoin) " AND a.doc_id < b.doc_id" else ""
+    s"""$name AS (
+       |  SELECT DISTINCT a.doc_id AS ia, b.doc_id AS ib$carried
+       |  FROM $left a JOIN $right b
+       |    ON a.band = b.band AND a.$bucket = b.$bucket$lt)""".stripMargin
+  }
+
+
+  /** SimHash signature CTEs over `base` (tok → hashed → bits → sig): the
+    * per-bit majority vote over each doc's distinct word set, `width` bits
+    * of the token hash `hash` (a SQL expression over `t`); `where` filters
+    * the docs. The declarative form of [[simhashSig]] / [[simhashWideSig]],
+    * shared by the signature and pairs mirrors of both widths. */
+  private[analytics] def simhashSigDuck(width: Int, hash: String, where: String = ""): String =
+    s"""tok AS (
+       |  SELECT doc_id, unnest(list_distinct(toks)) AS t FROM base$where),
+       |hashed AS (
+       |  SELECT doc_id, $hash AS h FROM tok),
+       |bits AS (
+       |  SELECT doc_id,
+       |    ${(0 until width).map(i => s"sum(CASE WHEN (h // ${1L << i}) % 2 = 1 THEN 1 ELSE -1 END) AS b$i").mkString(",\n    ")}
+       |  FROM hashed GROUP BY doc_id),
+       |sig AS (
+       |  SELECT doc_id,
+       |    CAST(${(0 until width).map(i => s"(CASE WHEN b$i > 0 THEN ${1L << i} ELSE 0 END)").mkString(" + ")} AS BIGINT) AS simhash
+       |  FROM bits)""".stripMargin
+
+
+  /** The SimHash near-dup pairs mirror over [[simhashSigDuck]] CTEs: the
+    * capped band index of `bandExprs`, its self-join candidates, exact
+    * Hamming verify at `maxHamming`, the 200 closest pairs. */
+  private[analytics] def simhashPairsDuck(sigCtes: String, bandExprs: Seq[String],
+      maxHamming: Int): String =
+    s"""WITH $baseDuck, $sigCtes,
+       |${bandsDuck("bands", "sig", Seq("simhash"), "bv", bandExprs, Some(SimhashBucketCap))},
+       |${bandCandDuck("cand", "bands", "bands", selfJoin = true, "bv", Seq("simhash"))}
+       |SELECT ia, ib, bit_count(xor(simhash_a, simhash_b)) AS hamming
+       |FROM cand
+       |WHERE bit_count(xor(simhash_a, simhash_b)) <= $maxHamming
+       |ORDER BY hamming, ia, ib LIMIT 200""".stripMargin
+
+
+  /** The capped production-width band index over the `sig`+`sfx` CTE and
+    * its self-join candidates (`bands`+`sfx` → `cand`+`sfx`) — the
+    * [[DedupOps.wideBandCandidates]] mirror, shared by the banded-pairs
+    * mirror and the recall, band-gap and calibration censuses. */
+  private[analytics] def wideCandDuck(sfx: String): String =
+    s"""${bandsDuck(s"bands$sfx", s"sig$sfx", Nil, "bh", wideBandExprs, Some(SimhashBucketCap))},
+       |${bandCandDuck(s"cand$sfx", s"bands$sfx", s"bands$sfx", selfJoin = true)}""".stripMargin
 
 
   /** The benchmark excerpt windows keyed by item (bx → bwt CTEs) — the
@@ -732,16 +782,6 @@ private[analytics] trait LlmOracles {
   private[analytics] def minhashWideSliceColsN(perms: Int): String =
     (0 until perms).map(j => s"min(substr(h${j / 4}, ${1 + 8 * (j % 4)}, 8)) AS mh$j")
       .mkString(", ")
-
-
-  /** The [[wideBands]] geometry as DuckDB SQL — one UNION ALL branch per
-    * band over the named sig CTE, with `pred` appended as a WHERE clause
-    * (empty for the whole table). The single mirror of the Spark-side
-    * band hash composition. */
-  private[analytics] def wideBandsDuckBranches(pred: String, sigName: String = "sig"): String =
-    (0 until MinhashWideBands).map(bd =>
-      s"SELECT doc_id, $bd AS band, md5(mh${4 * bd} || mh${4 * bd + 1} || mh${4 * bd + 2} || mh${4 * bd + 3}) AS bh FROM $sigName$pred")
-      .mkString("\n  UNION ALL ")
 
 
   private[analytics] def minhashWideSigDuck: String = minhashWideSigDuckN(64)

@@ -425,4 +425,28 @@ class PlanGuardSpec extends SparkSpec {
       .as[Long].collect().toSeq
     assert(one == Seq(1L), s"k=1 must yield exactly rank 1 per member, got $one")
   }
+
+  test("the band-memo readers plan no band Generate or bucket-cap Window outside the memo") {
+    // dd_minhash_wide_pairs, dd_simhash_pairs and dd_simhash_wide_pairs
+    // read a memoized band index on both sides of the candidate join;
+    // planned inline, the band Generate + bucket-cap Window subtree would
+    // run once per side. The walk stops at InMemoryTableScan, so the
+    // memo's own build plan is not counted.
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    val helper = new AdaptiveSparkPlanHelper {}
+    val dir = "/root/testdata/sf0.001"
+    Seq("dd_minhash_wide_pairs", "dd_simhash_pairs", "dd_simhash_wide_pairs").foreach { name =>
+      val plan = SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan
+      val nodes = helper.collect(plan) {
+        case g: GenerateExec => s"Generate ${g.generator}"
+        case w: WindowExec => s"Window ${w.windowExpression.mkString(", ")}"
+      }
+      assert(nodes.isEmpty, s"$name plans its band index inline:\n${nodes.mkString("\n")}")
+      val memoScans = helper.collect(plan) { case m: InMemoryTableScanExec => m }
+      assert(memoScans.size >= 2, s"$name reads ${memoScans.size} memoized tables, expected both sides")
+    }
+  }
 }
