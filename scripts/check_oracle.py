@@ -179,29 +179,44 @@ def norm(df: pd.DataFrame) -> pd.DataFrame:
             df[c] = df[c].astype("float64")
     return df.reset_index(drop=True)
 
+def connect(sf_dir):
+    """A fresh DuckDB connection with one view per testdata table found in
+    `sf_dir`, under the DUCKDB_* settings named above."""
+    c = duckdb.connect()
+    if os.environ.get("DUCKDB_MEM"):
+        c.execute(f"SET memory_limit='{os.environ['DUCKDB_MEM']}'")
+    if os.environ.get("DUCKDB_TMP"):
+        c.execute(f"SET temp_directory='{os.environ['DUCKDB_TMP']}'")
+    if os.environ.get("DUCKDB_THREADS"):
+        c.execute(f"SET threads={int(os.environ['DUCKDB_THREADS'])}")
+    if os.environ.get("DUCKDB_NO_ORDER"):
+        # safe for the oracle contract: every oracle's FINAL select has
+        # a deterministic ORDER BY, which still applies; this only
+        # releases insertion-order guarantees inside joins/aggregates
+        # (a large spill-pressure win on the temp-disk-bound mirrors)
+        c.execute("SET preserve_insertion_order=false")
+    for t in TABLES:
+        p = f"{sf_dir}/{t}.parquet"
+        if os.path.exists(p):
+            c.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    return c
+
+def unmirrored(out_dir, oracle):
+    """The Verify output directories (one per query) with no oracle entry."""
+    return sorted(d for d in os.listdir(out_dir)
+                  if os.path.isdir(os.path.join(out_dir, d)) and d not in oracle)
+
 def main(out_dir: str, sf_dir: str, staged_all: bool = False, only=()) -> int:
     def make_con():
-        c = duckdb.connect()
-        if os.environ.get("DUCKDB_MEM"):
-            c.execute(f"SET memory_limit='{os.environ['DUCKDB_MEM']}'")
-        if os.environ.get("DUCKDB_TMP"):
-            c.execute(f"SET temp_directory='{os.environ['DUCKDB_TMP']}'")
-        if os.environ.get("DUCKDB_THREADS"):
-            c.execute(f"SET threads={int(os.environ['DUCKDB_THREADS'])}")
-        if os.environ.get("DUCKDB_NO_ORDER"):
-            # safe for the oracle contract: every oracle's FINAL select has
-            # a deterministic ORDER BY, which still applies; this only
-            # releases insertion-order guarantees inside joins/aggregates
-            # (a large spill-pressure win on the temp-disk-bound mirrors)
-            c.execute("SET preserve_insertion_order=false")
-        for t in TABLES:
-            p = f"{sf_dir}/{t}.parquet"
-            if os.path.exists(p):
-                c.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-        return c
+        return connect(sf_dir)
     con = make_con()
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
+    for name in unmirrored(out_dir, oracle):
+        if only and name not in only:
+            continue
+        print(f"FAIL {name}: spark output with no oracle entry")
+        n_fail += 1
     for name, sql in sorted(oracle.items()):
         if only and name not in only:
             continue

@@ -105,5 +105,28 @@ class RunStagedTest(unittest.TestCase):
         self.assertTrue(staged.equals(mono))
 
 
+class CoverageTest(unittest.TestCase):
+
+    def test_a_query_output_with_no_oracle_entry_fails(self):
+        import io
+        import json
+        import tempfile
+        from contextlib import redirect_stdout
+        with tempfile.TemporaryDirectory() as out:
+            for name in ("a", "b"):
+                os.mkdir(os.path.join(out, name))
+                duckdb.connect().execute(
+                    f"COPY (SELECT 1 AS x) TO '{out}/{name}/part-0.parquet' (FORMAT parquet)")
+            with open(os.path.join(out, "oracle_sql.json"), "w") as fh:
+                json.dump({"a": "SELECT 1 AS x"}, fh)
+            self.assertEqual(check_oracle.unmirrored(out, {"a": ""}), ["b"])
+            buf = io.StringIO()
+            with redirect_stdout(buf):
+                rc = check_oracle.main(out, out)
+            self.assertEqual(rc, 1)
+            self.assertIn("FAIL b: spark output with no oracle entry", buf.getvalue())
+            self.assertIn("== 1 pass, 1 fail ==", buf.getvalue())
+
+
 if __name__ == "__main__":
     unittest.main()

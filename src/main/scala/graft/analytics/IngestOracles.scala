@@ -1,9 +1,8 @@
 package graft.analytics
 
-/** DuckDB oracle mirrors for the ingestion + multimodal (ingest_ and mm_ prefixes)
-  * family — the per-query entries moved VERBATIM out of the LlmOracles
-  * monolith (round 16, same family seams as the round-15 ops split);
-  * every shared fragment stays in [[LlmOracles]], reached through the
+/** DuckDB oracle mirrors for the ingestion + multimodal (ingest_ and mm_
+  * prefixes) family. The image index is built and probed with the shared
+  * vector-index fragments of [[LlmOracles]], reached through the
   * self-type. */
 private[analytics] trait IngestOracles {
   this: OpsKernels with TxtOps with DedupOps with SimOps with IngestOps with LlmOracles =>
@@ -45,32 +44,17 @@ private[analytics] trait IngestOracles {
       s"""WITH $paramsDuck,
          |$mmImgCellDuck,
          |q AS (
-         |  SELECT vec_id AS qid, embedding AS qe, nrm AS qn FROM e
+         |  SELECT vec_id, embedding, nrm FROM e
          |  WHERE vec_id % 25 = 0 ORDER BY vec_id LIMIT $SimQueryCap),
-         |truth AS (
-         |  SELECT qid, cid FROM (
-         |    SELECT q.qid, i.vec_id AS cid,
-         |      row_number() OVER (PARTITION BY q.qid
-         |        ORDER BY (${dot("q.qe", "i.embedding", 1)}) / sqrt(q.qn * i.nrm) DESC,
-         |                 i.vec_id) AS rk
-         |    FROM q CROSS JOIN img i)
-         |  WHERE rk <= 5),
-         |qc AS (
-         |  SELECT qid, qe, qn, cell FROM (
-         |    SELECT q.qid, q.qe, q.qn, c.cent_id AS cell,
-         |      row_number() OVER (PARTITION BY q.qid
-         |        ORDER BY (${dot("q.qe", "c.cemb", 1)}) / sqrt(q.qn * c.cnrm) DESC,
-         |                 c.cent_id) AS ark
-         |    FROM q CROSS JOIN cents c)
-         |  WHERE ark <= 2),
-         |ivf5 AS (
-         |  SELECT qid, cid FROM (
-         |    SELECT qc.qid, cl.cid,
-         |      row_number() OVER (PARTITION BY qc.qid
-         |        ORDER BY (${dot("qc.qe", "cl.ce", 1)}) / sqrt(qc.qn * cl.cn) DESC,
-         |                 cl.cid) AS rk
-         |    FROM qc JOIN cell cl ON qc.cell = cl.cell)
-         |  WHERE rk <= 5),
+         |${top5Duck("truth", s"""(
+              |    SELECT q.vec_id AS qid, i.vec_id AS cid,
+              |      ${cosDuck("q.embedding", "q.nrm", "i.embedding", "i.nrm")} AS cos
+              |    FROM q CROSS JOIN img i)""".stripMargin, "cos")},
+         |${nearestCellDuck("qc", "q", "cents", cols = "vec_id AS qid, embedding AS qe, nrm AS qn, cent_id AS cell",
+              depth = 2)},
+         |${top5Duck("ivf5", s"""(
+              |    SELECT qc.qid, cl.cid, ${cosDuck("qc.qe", "qc.qn", "cl.ce", "cl.cn")} AS cos
+              |    FROM qc JOIN cell cl ON qc.cell = cl.cell)""".stripMargin, "cos")},
          |cen AS (
          |  SELECT t.qid, count(i.cid) AS hits_ivf,
          |    max(CASE WHEN t.cid = t.qid - t.qid % 2 THEN 1 ELSE 0 END) AS hit_pair_exact
@@ -89,8 +73,8 @@ private[analytics] trait IngestOracles {
     // retrieval census serves from — max cosine to a lower-id cell-mate,
     // keep at 0.9 (the dd_semdedup convention; max over doubles is
     // order-independent, so both engines agree exactly). The reference
-    // side carries the IDENTICAL per-cell cap as the Spark plan (round 21
-    // — see IngestOps.ImageCellCap), so the mirrors agree even on a corpus
+    // side carries the same per-cell cap as the Spark plan
+    // (IngestOps.ImageCellCap), so the mirrors agree even on a corpus
     // where the cap binds.
     "mm_image_dedup" ->
       s"""WITH $paramsDuck,
@@ -102,7 +86,7 @@ private[analytics] trait IngestOracles {
          |  WHERE rn <= $ImageCellCap),
          |low AS (
          |  SELECT a.cid AS ia,
-         |    max((${dot("a.ce", "b.ce", 1)}) / sqrt(a.cn * b.cn)) AS max_cos_lower
+         |    max(${cosDuck("a.ce", "a.cn", "b.ce", "b.cn")}) AS max_cos_lower
          |  FROM cell a JOIN capped b ON a.cell = b.cell AND b.cid < a.cid
          |  GROUP BY a.cid)
          |SELECT c.cid AS vec_id, c.cell, l.max_cos_lower,
@@ -179,23 +163,14 @@ private[analytics] trait IngestOracles {
 
 
   /** The image-side IVF chain (e → img → cents → cell), DuckDB text —
-    * ONE definition for the two mm oracles that serve from the image
-    * index ([[IngestOps.imageCellAssign]]'s mirror: even half, first-k
-    * even centroids, ark = 1). Requires `params` in scope. */
+    * ONE definition for the mm oracles that serve from the image index
+    * ([[IngestOps.imageCellAssign]]'s mirror: even half, first-k even
+    * centroids, nearest cell). Requires `params` in scope. */
   private[analytics] lazy val mmImgCellDuck: String =
-    s"""e AS (
-       |  SELECT vec_id, embedding, ${dot("embedding", "embedding", 1)} AS nrm
-       |  FROM embeddings),
+    s"""$eNrmDuck,
        |img AS (SELECT * FROM e WHERE vec_id % 2 = 0),
        |cents AS (
        |  SELECT vec_id AS cent_id, embedding AS cemb, nrm AS cnrm
        |  FROM img WHERE vec_id < 2 * (SELECT k FROM params)),
-       |cell AS (
-       |  SELECT cid, ce, cn, cell FROM (
-       |    SELECT i.vec_id AS cid, i.embedding AS ce, i.nrm AS cn, c.cent_id AS cell,
-       |      row_number() OVER (PARTITION BY i.vec_id
-       |        ORDER BY (${dot("i.embedding", "c.cemb", 1)}) / sqrt(i.nrm * c.cnrm) DESC,
-       |                 c.cent_id) AS ark
-       |    FROM img i CROSS JOIN cents c)
-       |  WHERE ark = 1)""".stripMargin
+       |${nearestCellDuck("cell", "img", "cents", cols = "vec_id AS cid, embedding AS ce, nrm AS cn, cent_id AS cell")}""".stripMargin
 }

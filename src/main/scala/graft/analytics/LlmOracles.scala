@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
 
 /** The DuckDB mirror layer: every shared SQL fragment, plus the full
   * per-query oracle map assembled from the four family traits
-  * ([[TxtOracles]]/[[DedupOracles]]/[[SimOracles]]/[[IngestOracles]] —
-  * round-16 split along the ops-split seams; entries moved verbatim). */
+  * ([[TxtOracles]]/[[DedupOracles]]/[[SimOracles]]/[[IngestOracles]],
+  * one per family of the ops traits). A fragment that mirrors a Spark
+  * kernel is written here once and every mirror that needs it calls it. */
 private[analytics] trait LlmOracles {
   this: OpsKernels with TxtOps with DedupOps with SimOps with IngestOps
     with TxtOracles with DedupOracles with SimOracles with IngestOracles =>
@@ -173,14 +174,14 @@ private[analytics] trait LlmOracles {
 
   /** The serve lifecycle's frozen base, ONE definition for the e/cents
     * CTE pair that every serve-index mirror (serve, serve_pq, insert,
-    * delete, compact, retrain, retrain_exec) opens with: embeddings with
-    * norms, and the corpus-only centroid table — the k lowest-id
-    * non-held-out (vec_id % 4 <> 3) vectors. Twin of [[serveCentroids]]
-    * on the Spark side; edits to the frozen-index definition happen here
-    * or nowhere. */
+    * delete, compact, retrain, retrain_exec, filtered, filtered_pq) opens
+    * with: embeddings with labels and norms, and the corpus-only centroid
+    * table — the k lowest-id non-held-out (vec_id % 4 <> 3) vectors. Twin
+    * of [[serveCentroids]] on the Spark side; edits to the frozen-index
+    * definition happen here or nowhere. */
   private[analytics] def serveECentsDuck: String =
     s"""e AS (
-       |  SELECT vec_id, embedding, ${dot("embedding", "embedding", 1)} AS nrm
+       |  SELECT vec_id, embedding, label, ${dot("embedding", "embedding", 1)} AS nrm
        |  FROM embeddings),
        |cents AS (
        |  SELECT vec_id AS cent_id, embedding AS cemb, nrm AS cnrm
@@ -555,27 +556,86 @@ private[analytics] trait LlmOracles {
        |  GROUP BY lang, (cum - n_toks) // 64)""".stripMargin
 
 
-  /** The shared first-k IVF quantizer chain (e → cents → ass → cell),
-    * DuckDB text — ONE definition for every oracle that assigns the FULL
-    * corpus against the first-k centroids (the [[ivfAssignTable]] mirror):
-    * sim_ivf, sim_ivf_nprobe2, sim_ivf_recall, dd_semdedup, and the PQ
-    * family via [[ivfPqPairsDuckN]]. Requires `params` ([[paramsDuck]]) in
-    * scope. The serve-path oracles keep their own chains — their corpus
-    * filter (%4<>3) and centroid rule differ. Declared BEFORE
-    * [[ivfPqPairsDuck]], whose init-time call interpolates it. */
+  /** The cosine of embeddings `a` and `b` over their stored squared
+    * norms `an` and `bn`: the left-associated [[dot]] chain over
+    * sqrt(an * bn), the Duck form of the Spark side's
+    * dot_f(a, b) / sqrt(an * bn). */
+  private[analytics] def cosDuck(a: String, an: String, b: String, bn: String): String =
+    s"(${dot(a, b, 1)}) / sqrt($an * $bn)"
+
+
+  /** The cosine rank window of every vector-index mirror: numbers the
+    * rows of each `part` 1, 2, … by (`score` DESC, `tie` ASC), the order
+    * of [[nearestCell]], [[probeCells]] and [[exactTop5]] (an exact tie
+    * keeps the lower `tie`). */
+  private[analytics] def cosRankDuck(part: String, score: String, tie: String): String =
+    s"row_number() OVER (PARTITION BY $part ORDER BY $score DESC, $tie)"
+
+
+  /** The nearest-cell CTE, the Duck twin of [[nearestCell]] and
+    * [[probeCells]]. `name` ranks, for each row m of `members` (vec_id,
+    * embedding, nrm, …) that passes `filter` (a predicate over m's
+    * columns, or ""), the centroids c of `cents` (cent_id, cemb, cnrm) by
+    * cosine, and keeps ranks 1 to `depth` as `cols`: a projection over
+    * m's columns, `cent_id` and the rank `ark`. With `by` = (member key,
+    * centroid key) a member ranks only the centroids of its own key. */
+  private[analytics] def nearestCellDuck(name: String, members: String, cents: String,
+      filter: String = "", cols: String = "vec_id, embedding, nrm, cent_id AS cell",
+      depth: Int = 1, by: Option[(String, String)] = None): String = {
+    val join = by.fold(s"CROSS JOIN $cents c") { case (mk, ck) => s"JOIN $cents c ON m.$mk = c.$ck" }
+    val where = if (filter.isEmpty) "" else s" WHERE $filter"
+    val rank = cosRankDuck("m.vec_id", cosDuck("m.embedding", "m.nrm", "c.cemb", "c.cnrm"), "c.cent_id")
+    s"""$name AS (
+       |  SELECT $cols FROM (
+       |    SELECT m.*, c.cent_id, $rank AS ark
+       |    FROM $members m $join$where)
+       |  WHERE ark <= $depth)""".stripMargin
+  }
+
+
+  /** The top-k tail, the Duck twin of [[exactTop5]]: `name` keeps, for
+    * each qid of `src` (a FROM item of (qid, cid, `carry`…, `score`)
+    * rows), its first `depth` rows by (`score` DESC, cid) as (qid, cid,
+    * `carry`…, `score`, rk). Depth 5 is every emitted top-5; the
+    * re-rank shortlists take [[PqRerankDepth]]. */
+  private[analytics] def top5Duck(name: String, src: String, score: String,
+      carry: Seq[String] = Nil, depth: Int = 5): String =
+    s"""$name AS (
+       |  SELECT * FROM (
+       |    SELECT qid, cid${carry.map(", " + _).mkString}, $score,
+       |      ${cosRankDuck("qid", score, "cid")} AS rk
+       |    FROM $src)
+       |  WHERE rk <= $depth)""".stripMargin
+
+
+  /** The first-k IVF quantizer chain (e → cents → ass → cell), the
+    * [[ivfAssignTable]] mirror: the full corpus assigned to the k
+    * lowest-id vectors. `ass` holds each vector's two nearest cells as
+    * (vec_id, embedding, nrm, cell, ark), `cell` the nearest one. Read by
+    * sim_ivf, sim_ivf_nprobe2, sim_ivf_recall, sim_ivf_balance,
+    * dd_semdedup, dd_semdedup_keep and the PQ family
+    * ([[ivfPqPairsDuckN]]); the serve-path mirrors build their index
+    * with the same [[nearestCellDuck]] over the corpus centroids of
+    * [[serveECentsDuck]]. Requires `params` ([[paramsDuck]]) in scope. */
   private[analytics] lazy val ivfCellChainDuck: String =
-    s"""${eNrmDuck},
+    s"""$eNrmDuck,
        |cents AS (
        |  SELECT vec_id AS cent_id, embedding AS cemb, nrm AS cnrm
        |  FROM e WHERE vec_id < (SELECT k FROM params)),
-       |ass AS (
-       |  SELECT e.vec_id, e.embedding, e.nrm, cents.cent_id,
-       |    row_number() OVER (PARTITION BY e.vec_id
-       |      ORDER BY (${dot("e.embedding", "cents.cemb", 1)}) / sqrt(e.nrm * cents.cnrm) DESC,
-       |               cents.cent_id) AS ark
-       |  FROM e CROSS JOIN cents),
-       |cell AS (
-       |  SELECT vec_id, embedding, nrm, cent_id AS cell FROM ass WHERE ark = 1)""".stripMargin
+       |${nearestCellDuck("ass", "e", "cents", cols = "vec_id, embedding, nrm, cent_id AS cell, ark", depth = 2)},
+       |cell AS (SELECT vec_id, embedding, nrm, cell FROM ass WHERE ark = 1)""".stripMargin
+
+
+  /** The (qid, cid, cos_exact) pairs of an IVF cell scan, as a FROM item:
+    * each sampled query (vec_id % 50 = 0) of `q` with every other member
+    * of `cells` in one of its cells. Both carry (vec_id, embedding, nrm,
+    * cell). */
+  private[analytics] def cellPairsDuck(q: String, cells: String): String =
+    s"""(
+       |    SELECT q.vec_id AS qid, c.vec_id AS cid,
+       |      ${cosDuck("q.embedding", "q.nrm", "c.embedding", "c.nrm")} AS cos_exact
+       |    FROM $q q JOIN $cells c
+       |      ON q.cell = c.cell AND q.vec_id % 50 = 0 AND q.vec_id <> c.vec_id)""".stripMargin
 
 
   /** The norm-carrying embedding CTE (`e`) — the opener shared by
@@ -587,46 +647,29 @@ private[analytics] trait LlmOracles {
        |  FROM embeddings)""".stripMargin
 
 
-  /** The k-means-refined quantizer chain (cents0→a0→m0→ rounds →a1→cell1),
+  /** The k-means-refined quantizer chain (cents0→m0→ rounds →cell1),
     * DuckDB text, requiring `e`/`params` in scope — [[ivfKmeansAssignment]]'s
     * mirror (sampled Lloyd rounds, integer-quantized component sums),
     * hoisted out of the sim_ivf_kmeans entry so the balance census reads
     * the SAME chain. The static SQL unrolls all [[KmRounds]] rounds; the
     * Spark builder's fixed-point early stop is result-identical. */
-  private[analytics] def kmCellChainDuck: String =
+  private[analytics] def kmCellChainDuck: String = {
+    val sample = "vec_id % 5 = 0"
+    val members = "vec_id, embedding, cent_id AS cell"
+    val rounds = (1 to KmRounds).map { r =>
+      val sums = s"""cents$r AS (
+        |  SELECT cell, $kmSumsVecDuck
+        |  FROM m${r - 1} GROUP BY cell),
+        |cn$r AS (SELECT cell AS cent_id, svec AS cemb, ${dot("svec", "svec", 1)} AS cnrm FROM cents$r)""".stripMargin
+      if (r < KmRounds) sums + ",\n" + nearestCellDuck(s"m$r", "e", s"cn$r", sample, members) else sums
+    }
     s"""cents0 AS (
        |  SELECT vec_id AS cent_id, embedding AS cemb, nrm AS cnrm
        |  FROM e WHERE vec_id < (SELECT k FROM params)),
-       |a0 AS (
-       |  SELECT e.vec_id, e.embedding, cents0.cent_id,
-       |    row_number() OVER (PARTITION BY e.vec_id
-       |      ORDER BY (${dot("e.embedding", "cents0.cemb", 1)}) / sqrt(e.nrm * cents0.cnrm) DESC,
-       |               cents0.cent_id) AS ark
-       |  FROM e CROSS JOIN cents0 WHERE e.vec_id % 5 = 0),
-       |m0 AS (SELECT vec_id, embedding, cent_id AS cell FROM a0 WHERE ark = 1),
-       |${(1 to KmRounds).map { r =>
-           val sums = s"""cents$r AS (
-             |  SELECT cell, $kmSumsVecDuck
-             |  FROM m${r - 1} GROUP BY cell),
-             |cn$r AS (SELECT cell, svec, ${dot("svec", "svec", 1)} AS snrm FROM cents$r)""".stripMargin
-           val nextMembers = s""",
-             |m$r AS (
-             |  SELECT vec_id, embedding, cell FROM (
-             |    SELECT e.vec_id, e.embedding, c.cell,
-             |      row_number() OVER (PARTITION BY e.vec_id
-             |        ORDER BY (${dot("e.embedding", "c.svec", 1)}) / sqrt(e.nrm * c.snrm) DESC,
-             |                 c.cell) AS ark
-             |    FROM e CROSS JOIN cn$r c WHERE e.vec_id % 5 = 0)
-             |  WHERE ark = 1)""".stripMargin
-           sums + (if (r < KmRounds) nextMembers else "")
-         }.mkString(",\n")},
-       |a1 AS (
-       |  SELECT e.vec_id, e.embedding, e.nrm, c.cell,
-       |    row_number() OVER (PARTITION BY e.vec_id
-       |      ORDER BY (${dot("e.embedding", "c.svec", 1)}) / sqrt(e.nrm * c.snrm) DESC,
-       |               c.cell) AS ark
-       |  FROM e CROSS JOIN cn$KmRounds c),
-       |cell1 AS (SELECT vec_id, embedding, nrm, cell FROM a1 WHERE ark = 1)""".stripMargin
+       |${nearestCellDuck("m0", "e", "cents0", sample, members)},
+       |${rounds.mkString(",\n")},
+       |${nearestCellDuck("cell1", "e", s"cn$KmRounds")}""".stripMargin
+  }
 
 
   /** The bucketed embedding table (vec_id, embedding, nrm, bucket),
@@ -642,20 +685,19 @@ private[analytics] trait LlmOracles {
 
 
   /** Brute-force truth (q → truth): the capped query sample's exact
-    * top-5 as (qid, cid) — shared by both recall-census oracles. Requires
-    * an `e` CTE with (vec_id, embedding, nrm) in scope. */
-  private[analytics] lazy val bruteTruthDuck: String =
+    * top-5 as (qid, cid, cos, rk) — shared by sim_topk_cosine and both
+    * recall-census oracles. Requires an `e` CTE with (vec_id, embedding,
+    * nrm) in scope. */
+  private[analytics] lazy val bruteTruthDuck: String = {
+    val pairs = s"""(
+      |    SELECT q.vec_id AS qid, c.vec_id AS cid,
+      |      ${cosDuck("q.embedding", "q.nrm", "c.embedding", "c.nrm")} AS cos
+      |    FROM q JOIN e c ON q.vec_id <> c.vec_id)""".stripMargin
     s"""q AS (
        |  SELECT vec_id, embedding, nrm FROM e
        |  WHERE vec_id % 50 = 0 ORDER BY vec_id LIMIT $SimQueryCap),
-       |truth AS (
-       |  SELECT qid, cid FROM (
-       |    SELECT q.vec_id AS qid, c.vec_id AS cid,
-       |      row_number() OVER (PARTITION BY q.vec_id
-       |        ORDER BY (${dot("q.embedding", "c.embedding", 1)}) / sqrt(q.nrm * c.nrm) DESC,
-       |                 c.vec_id) AS rk
-       |    FROM q JOIN e c ON q.vec_id <> c.vec_id)
-       |  WHERE rk <= 5)""".stripMargin
+       |${top5Duck("truth", pairs, "cos")}""".stripMargin
+  }
 
 
   /** The three LSH probing radii as (qid, qe, qn, probe) sources over the
@@ -677,28 +719,21 @@ private[analytics] trait LlmOracles {
       "FROM e WHERE vec_id % 50 = 0"
 
 
-  /** Exact-ranked LSH candidates for one probing radius (`ranked$sfx`),
-    * generic over the probe source — ONE definition for the three base
-    * oracles (sfx = "", full output) and the recall census (suffixed,
-    * rk<=5 projected). */
+  /** The exact top-5 of the LSH candidates of one probing radius
+    * (`ranked$sfx`), generic over the probe source — ONE definition for
+    * the three base oracles (sfx = "") and the recall census (suffixed). */
   private[analytics] def annRankedDuck(sfx: String, qSrc: String): String =
-    s"""ranked$sfx AS (
-       |  SELECT qid, cid, cos_exact,
-       |    row_number() OVER (PARTITION BY qid ORDER BY cos_exact DESC, cid) AS rk
-       |  FROM (
-       |    SELECT q.qid, c.vec_id AS cid,
-       |      (${dot("q.qe", "c.embedding", 1)}) / sqrt(q.qn * c.nrm) AS cos_exact
-       |    FROM ($qSrc) q JOIN e c ON q.probe = c.bucket AND q.qid <> c.vec_id))""".stripMargin
+    top5Duck(s"ranked$sfx",
+      s"""(
+         |    SELECT q.qid, c.vec_id AS cid,
+         |      ${cosDuck("q.qe", "q.qn", "c.embedding", "c.nrm")} AS cos_exact
+         |    FROM ($qSrc) q JOIN e c ON q.probe = c.bucket AND q.qid <> c.vec_id)""".stripMargin,
+      "cos_exact")
 
 
   /** Shared CTE body of the IVF-PQ oracles (everything through the ADC
-    * `pairs`), mirroring [[ivfPqAdcPairs]]: coarse cells as in sim_ivf; the
-    * PQ codebook is the first [[PqCodes]] vectors' subvectors (one UNION
-    * branch per subspace so every array index is a literal); encode =
-    * argmin (cc - 2*sub.cent, code); the pair score is [[PqM]] list lookups
-    * into the query's (s, code)-ordered ADC table, summed left-to-right and
-    * normalized by the stored exact norms — every chain fixed-order double
-    * arithmetic, same as the Spark side. */
+    * `pairs`), mirroring [[ivfPqAdcPairs]]: coarse cells as in sim_ivf,
+    * then [[pqChainDuck]] over the first [[PqCodes]] vectors' codebook. */
   private[analytics] lazy val ivfPqPairsDuck: String = ivfPqPairsDuckN(PqCodes)
 
 
@@ -713,16 +748,44 @@ private[analytics] trait LlmOracles {
   /** The PQ encode + ADC chain alone (cb→enc→enc_rk→codes→qpart→qtab→
     * pairs, every CTE `sfx`-suffixed), generic over code width and
     * WITHOUT the cell chain — so the code-width recall census can
-    * instantiate TWO widths over one shared [[ivfCellChainDuck]].
-    * Requires `e`/`cell` in scope. */
+    * instantiate TWO widths over one shared [[ivfCellChainDuck]]. The
+    * codebook is the first `nCodes` vectors, code = vec_id. Requires
+    * `e`/`cell` in scope. */
   private[analytics] def pqChainDuck(nCodes: Int, sfx: String): String =
-    s"""cb$sfx AS (SELECT vec_id, embedding FROM e WHERE vec_id < $nCodes),
-       |enc$sfx AS (
+    s"""cb$sfx AS (SELECT vec_id AS code, embedding FROM e WHERE vec_id < $nCodes),
+       |${pqEncodeDuck(sfx, s"cb$sfx")},
+       |${adcTableDuck(sfx, s"cb$sfx", "vec_id % 50 = 0")},
+       |pairs$sfx AS (
+       |  SELECT q.vec_id AS qid, c.vec_id AS cid, ${adcCosDuck(nCodes, "q.nrm")} AS cos_adc
+       |  FROM cell q JOIN cell c
+       |    ON q.cell = c.cell AND q.vec_id % 50 = 0 AND q.vec_id <> c.vec_id
+       |  JOIN qtab$sfx t ON t.qid = q.vec_id
+       |  JOIN codes$sfx k2 ON k2.vec_id = c.vec_id)""".stripMargin
+
+
+  /** The serve index's PQ codebook (`scb`): the first [[PqCodes]] corpus
+    * (vec_id % 4 <> 3) vectors, code = rank in vec_id order from 0. */
+  private[analytics] def serveCodebookDuck: String =
+    s"""scb AS (
+       |  SELECT CAST(row_number() OVER (ORDER BY vec_id) AS BIGINT) - 1 AS code, embedding
+       |  FROM (SELECT vec_id, embedding FROM e WHERE vec_id % 4 <> 3
+       |        ORDER BY vec_id LIMIT $PqCodes))""".stripMargin
+
+
+  /** The PQ encode chain (enc → enc_rk → codes, `sfx`-suffixed), the Duck
+    * twin of [[pqEncode]]: each vector of `e` that passes `filter` (a
+    * predicate over e's columns, or "") takes, per subspace s, the
+    * codebook `cb` (code, embedding) entry with the least (d, code),
+    * d = cc − 2·sub·cent. One UNION ALL branch per subspace, so every
+    * array index is a literal. `codes` holds (vec_id, codes[PqM]). */
+  private[analytics] def pqEncodeDuck(sfx: String, cb: String, filter: String = ""): String = {
+    val where = if (filter.isEmpty) "" else s" WHERE $filter"
+    s"""enc$sfx AS (
        |${(0 until PqM).map { s =>
            val b = s * PqSub + 1
-           s"""  SELECT e.vec_id, $s AS s, c.vec_id AS code,
-              |    (${pqDot("c.embedding", "c.embedding", b)}) - 2 * (${pqDot("e.embedding", "c.embedding", b)}) AS d
-              |  FROM e CROSS JOIN cb$sfx c""".stripMargin
+           s"""  SELECT v.vec_id, $s AS s, c.code,
+              |    (${pqDot("c.embedding", "c.embedding", b)}) - 2 * (${pqDot("v.embedding", "c.embedding", b)}) AS d
+              |  FROM e v CROSS JOIN $cb c$where""".stripMargin
          }.mkString("\n  UNION ALL\n")}),
        |enc_rk$sfx AS (
        |  SELECT vec_id, s, code,
@@ -730,31 +793,53 @@ private[analytics] trait LlmOracles {
        |  FROM enc$sfx),
        |codes$sfx AS (
        |  SELECT vec_id, list(code ORDER BY s) AS codes
-       |  FROM enc_rk$sfx WHERE erk = 1 GROUP BY vec_id),
-       |qpart$sfx AS (
+       |  FROM enc_rk$sfx WHERE erk = 1 GROUP BY vec_id)""".stripMargin
+  }
+
+
+  /** The per-query ADC tables (qpart → qtab, `sfx`-suffixed): for each
+    * vector of `e` that passes `filter`, the sub·cent partial dot of
+    * every (subspace, `cb` code) in (s, code) order, as one list. */
+  private[analytics] def adcTableDuck(sfx: String, cb: String, filter: String): String =
+    s"""qpart$sfx AS (
        |${(0 until PqM).map { s =>
            val b = s * PqSub + 1
-           s"""  SELECT q.vec_id AS qid, $s AS s, c.vec_id AS code,
+           s"""  SELECT q.vec_id AS qid, $s AS s, c.code,
               |    (${pqDot("q.embedding", "c.embedding", b)}) AS part
-              |  FROM e q CROSS JOIN cb$sfx c WHERE q.vec_id % 50 = 0""".stripMargin
+              |  FROM e q CROSS JOIN $cb c WHERE $filter""".stripMargin
          }.mkString("\n  UNION ALL\n")}),
        |qtab$sfx AS (
        |  SELECT qid, list(part ORDER BY s, code) AS qtab
-       |  FROM qpart$sfx GROUP BY qid),
-       |pairs$sfx AS (
-       |  SELECT q.vec_id AS qid, c.vec_id AS cid,
-       |    (${(0 until PqM).map(s => s"(t.qtab[($s * $nCodes + k2.codes[${s + 1}]) + 1])").mkString(" + ")})
-       |      / sqrt(q.nrm * c.nrm) AS cos_adc
-       |  FROM cell q JOIN cell c
-       |    ON q.cell = c.cell AND q.vec_id % 50 = 0 AND q.vec_id <> c.vec_id
-       |  JOIN qtab$sfx t ON t.qid = q.vec_id
-       |  JOIN codes$sfx k2 ON k2.vec_id = c.vec_id)""".stripMargin
+       |  FROM qpart$sfx GROUP BY qid)""".stripMargin
 
 
-  /** The full per-query oracle map — assembled from the four family
-    * traits (round-16 split; entries moved verbatim, one map per
-    * family seam matching the ops split). Lazy: trait-init order must
-    * not matter. */
+  /** The ADC cosine of a (query, code row) pair: [[PqM]] lookups into
+    * the query's qtab `t` at the candidate's codes `k2`, summed
+    * left-to-right over sqrt(`qn` * c.nrm) — the query's and the stored
+    * candidate's exact norms. */
+  private[analytics] def adcCosDuck(nCodes: Int, qn: String): String =
+    s"(${(0 until PqM).map(s => s"(t.qtab[($s * $nCodes + k2.codes[${s + 1}]) + 1])").mkString(" + ")})" +
+      s" / sqrt($qn * c.nrm)"
+
+
+  /** The exact re-rank of an ADC shortlist (short → rer → ranked), the
+    * twin of [[simIvfPqRerank]]: `short` keeps each query's first
+    * [[PqRerankDepth]] `pairs` by (cos_adc DESC, cid), `rer` scores them
+    * with exact cosines over `e`, and `ranked` holds the exact top 5.
+    * `carry` columns of `pairs` ride along. */
+  private[analytics] def pqRerankDuck(carry: Seq[String] = Nil): String =
+    s"""${top5Duck("short", "pairs", "cos_adc", carry, PqRerankDepth)},
+       |rer AS (
+       |  SELECT s.*, ${cosDuck("q.embedding", "q.nrm", "c.embedding", "c.nrm")} AS cos_exact
+       |  FROM short s
+       |  JOIN e q ON q.vec_id = s.qid
+       |  JOIN e c ON c.vec_id = s.cid),
+       |${top5Duck("ranked", "rer", "cos_exact", carry)}""".stripMargin
+
+
+  /** The full per-query oracle map, assembled from the four family
+    * traits (one map per family, matching the ops traits). Lazy:
+    * trait-init order must not matter. */
   lazy val duckdb: Map[String, String] =
     txtOracleMap ++ ddOracleMap ++ simOracleMap ++ ingestOracleMap
 

@@ -1,64 +1,38 @@
 package graft.analytics
 
-/** DuckDB oracle mirrors for the similarity/ANN (sim_ prefix)
-  * family — the per-query entries moved VERBATIM out of the LlmOracles
-  * monolith (round 16, same family seams as the round-15 ops split);
-  * every shared fragment stays in [[LlmOracles]], reached through the
-  * self-type. */
+/** DuckDB oracle mirrors for the similarity/ANN (sim_ prefix) family.
+  * Every vector-index step (nearest cell, cell probe, top-k, PQ encode,
+  * ADC table, re-rank) is a shared fragment in [[LlmOracles]], reached
+  * through the self-type; the entries here only wire them together. */
 private[analytics] trait SimOracles {
   this: OpsKernels with TxtOps with DedupOps with SimOps with IngestOps with LlmOracles =>
+
+  /** The base LSH mirrors: the exact top-5 of one probing radius. */
+  private def annTop5Duck(qSrc: String): String =
+    s"""WITH $paramsDuck,
+       |$annEDuck,
+       |${annRankedDuck("", qSrc)}
+       |SELECT qid, rk, cid, cos_exact AS cos FROM ranked ORDER BY qid, rk""".stripMargin
 
   private[analytics] lazy val simOracleMap: Map[String, String] = Map(
 
     "sim_topk_cosine" ->
-      s"""WITH e AS (
-         |  SELECT vec_id, embedding, ${dot("embedding", "embedding", 1)} AS nrm
-         |  FROM embeddings),
-         |q AS (
-         |  SELECT vec_id, embedding, nrm FROM e
-         |  WHERE vec_id % 50 = 0 ORDER BY vec_id LIMIT $SimQueryCap),
-         |pairs AS (
-         |  SELECT q.vec_id AS qid, c.vec_id AS cid,
-         |    (${dot("q.embedding", "c.embedding", 1)}) / sqrt(q.nrm * c.nrm) AS cos_exact
-         |  FROM q JOIN e c ON q.vec_id <> c.vec_id),
-         |ranked AS (
-         |  SELECT qid, cid, cos_exact,
-         |    row_number() OVER (PARTITION BY qid ORDER BY cos_exact DESC, cid) AS rk
-         |  FROM pairs)
-         |SELECT qid, rk, cid, cos_exact AS cos
-         |FROM ranked WHERE rk <= 5 ORDER BY qid, rk""".stripMargin,
+      s"""WITH $eNrmDuck,
+         |$bruteTruthDuck
+         |SELECT qid, rk, cid, cos FROM truth ORDER BY qid, rk""".stripMargin,
 
 
-    "sim_ann_multiprobe" ->
-      s"""WITH $paramsDuck,
-         |$annEDuck,
-         |${annRankedDuck("", annQMultiDuck)}
-         |SELECT qid, rk, cid, cos_exact AS cos
-         |FROM ranked WHERE rk <= 5 ORDER BY qid, rk""".stripMargin,
+    "sim_ann_multiprobe" -> annTop5Duck(annQMultiDuck),
 
 
-    "sim_ann_lsh" ->
-      s"""WITH $paramsDuck,
-         |$annEDuck,
-         |${annRankedDuck("", annQHomeDuck)}
-         |SELECT qid, rk, cid, cos_exact AS cos
-         |FROM ranked WHERE rk <= 5 ORDER BY qid, rk""".stripMargin,
+    "sim_ann_lsh" -> annTop5Duck(annQHomeDuck),
 
 
     "sim_ivf" ->
       s"""WITH $paramsDuck,
          |$ivfCellChainDuck,
-         |pairs AS (
-         |  SELECT q.vec_id AS qid, c.vec_id AS cid,
-         |    (${dot("q.embedding", "c.embedding", 1)}) / sqrt(q.nrm * c.nrm) AS cos_exact
-         |  FROM cell q JOIN cell c
-         |    ON q.cell = c.cell AND q.vec_id % 50 = 0 AND q.vec_id <> c.vec_id),
-         |ranked AS (
-         |  SELECT qid, cid, cos_exact,
-         |    row_number() OVER (PARTITION BY qid ORDER BY cos_exact DESC, cid) AS rk
-         |  FROM pairs)
-         |SELECT qid, rk, cid, cos_exact AS cos
-         |FROM ranked WHERE rk <= 5 ORDER BY qid, rk""".stripMargin,
+         |${top5Duck("ranked", cellPairsDuck("cell", "cell"), "cos_exact")}
+         |SELECT qid, rk, cid, cos_exact AS cos FROM ranked ORDER BY qid, rk""".stripMargin,
 
 
     // SERVE path: corpus (vec_id % 4 <> 3) builds the index — centroids
@@ -67,32 +41,15 @@ private[analytics] trait SimOracles {
     "sim_ivf_serve" ->
       s"""WITH $paramsDuck,
          |$serveECentsDuck,
-         |corpus AS (
-         |  SELECT vec_id, embedding, nrm, cent_id AS cell FROM (
-         |    SELECT e.vec_id, e.embedding, e.nrm, cents.cent_id,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY (${dot("e.embedding", "cents.cemb", 1)}) / sqrt(e.nrm * cents.cnrm) DESC,
-         |                 cents.cent_id) AS ark
-         |    FROM e CROSS JOIN cents WHERE e.vec_id % 4 <> 3)
-         |  WHERE ark = 1),
-         |q AS (
-         |  SELECT vec_id AS qid, embedding AS qe, nrm AS qn, cell FROM (
-         |    SELECT e.vec_id, e.embedding, e.nrm, cents.cent_id AS cell,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY (${dot("e.embedding", "cents.cemb", 1)}) / sqrt(e.nrm * cents.cnrm) DESC,
-         |                 cents.cent_id) AS ark
-         |    FROM e CROSS JOIN cents WHERE e.vec_id % 200 = 3)
-         |  WHERE ark = 1),
+         |${nearestCellDuck("corpus", "e", "cents", "vec_id % 4 <> 3")},
+         |${nearestCellDuck("q", "e", "cents", "vec_id % 200 = 3",
+              "vec_id AS qid, embedding AS qe, nrm AS qn, cent_id AS cell")},
          |pairs AS (
          |  SELECT q.qid, c.vec_id AS cid,
-         |    (${dot("q.qe", "c.embedding", 1)}) / sqrt(q.qn * c.nrm) AS cos_exact
+         |    ${cosDuck("q.qe", "q.qn", "c.embedding", "c.nrm")} AS cos_exact
          |  FROM q JOIN corpus c ON q.cell = c.cell),
-         |ranked AS (
-         |  SELECT qid, cid, cos_exact,
-         |    row_number() OVER (PARTITION BY qid ORDER BY cos_exact DESC, cid) AS rk
-         |  FROM pairs)
-         |SELECT qid, rk, cid, cos_exact AS cos
-         |FROM ranked WHERE rk <= 5 ORDER BY qid, rk""".stripMargin,
+         |${top5Duck("ranked", "pairs", "cos_exact")}
+         |SELECT qid, rk, cid, cos_exact AS cos FROM ranked ORDER BY qid, rk""".stripMargin,
 
 
     // SERVE path against the COMPRESSED index: corpus-only centroids AND
@@ -102,75 +59,19 @@ private[analytics] trait SimOracles {
     "sim_ivf_serve_pq" ->
       s"""WITH $paramsDuck,
          |$serveECentsDuck,
-         |corpus AS (
-         |  SELECT vec_id, embedding, nrm, cent_id AS cell FROM (
-         |    SELECT e.vec_id, e.embedding, e.nrm, cents.cent_id,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY (${dot("e.embedding", "cents.cemb", 1)}) / sqrt(e.nrm * cents.cnrm) DESC,
-         |                 cents.cent_id) AS ark
-         |    FROM e CROSS JOIN cents WHERE e.vec_id % 4 <> 3)
-         |  WHERE ark = 1),
-         |q2 AS (
-         |  SELECT qid, qn, cell FROM (
-         |    SELECT e.vec_id AS qid, e.nrm AS qn, cents.cent_id AS cell,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY (${dot("e.embedding", "cents.cemb", 1)}) / sqrt(e.nrm * cents.cnrm) DESC,
-         |                 cents.cent_id) AS ark
-         |    FROM e CROSS JOIN cents WHERE e.vec_id % 200 = 3)
-         |  WHERE ark <= $ServeNprobe),
-         |scb AS (
-         |  SELECT CAST(row_number() OVER (ORDER BY vec_id) AS BIGINT) - 1 AS code, embedding
-         |  FROM (SELECT vec_id, embedding FROM e WHERE vec_id % 4 <> 3
-         |        ORDER BY vec_id LIMIT $PqCodes)),
-         |enc AS (
-         |${(0 until PqM).map { s =>
-             val b = s * PqSub + 1
-             s"""  SELECT v.vec_id, $s AS s, b.code,
-                |    (${pqDot("b.embedding", "b.embedding", b)}) - 2 * (${pqDot("v.embedding", "b.embedding", b)}) AS d
-                |  FROM e v CROSS JOIN scb b WHERE v.vec_id % 4 <> 3""".stripMargin
-           }.mkString("\n  UNION ALL\n")}),
-         |enc_rk AS (
-         |  SELECT vec_id, s, code,
-         |    row_number() OVER (PARTITION BY vec_id, s ORDER BY d ASC, code) AS erk
-         |  FROM enc),
-         |codes AS (
-         |  SELECT vec_id, list(code ORDER BY s) AS codes
-         |  FROM enc_rk WHERE erk = 1 GROUP BY vec_id),
-         |qpart AS (
-         |${(0 until PqM).map { s =>
-             val b = s * PqSub + 1
-             s"""  SELECT q.vec_id AS qid, $s AS s, b.code,
-                |    (${pqDot("q.embedding", "b.embedding", b)}) AS part
-                |  FROM e q CROSS JOIN scb b WHERE q.vec_id % 200 = 3""".stripMargin
-           }.mkString("\n  UNION ALL\n")}),
-         |qtab AS (
-         |  SELECT qid, list(part ORDER BY s, code) AS qtab
-         |  FROM qpart GROUP BY qid),
+         |${nearestCellDuck("corpus", "e", "cents", "vec_id % 4 <> 3")},
+         |${nearestCellDuck("q2", "e", "cents", "vec_id % 200 = 3",
+              "vec_id AS qid, nrm AS qn, cent_id AS cell", ServeNprobe)},
+         |$serveCodebookDuck,
+         |${pqEncodeDuck("", "scb", "vec_id % 4 <> 3")},
+         |${adcTableDuck("", "scb", "vec_id % 200 = 3")},
          |pairs AS (
-         |  SELECT q.qid, c.vec_id AS cid,
-         |    (${(0 until PqM).map(s => s"(t.qtab[($s * $PqCodes + k2.codes[${s + 1}]) + 1])").mkString(" + ")})
-         |      / sqrt(q.qn * c.nrm) AS cos_adc
+         |  SELECT q.qid, c.vec_id AS cid, ${adcCosDuck(PqCodes, "q.qn")} AS cos_adc
          |  FROM q2 q JOIN corpus c ON q.cell = c.cell
          |  JOIN qtab t ON t.qid = q.qid
          |  JOIN codes k2 ON k2.vec_id = c.vec_id),
-         |short AS (
-         |  SELECT qid, cid FROM (
-         |    SELECT qid, cid,
-         |      row_number() OVER (PARTITION BY qid ORDER BY cos_adc DESC, cid) AS ark
-         |    FROM pairs)
-         |  WHERE ark <= $PqRerankDepth),
-         |rer AS (
-         |  SELECT s.qid, s.cid,
-         |    (${dot("q.embedding", "c.embedding", 1)}) / sqrt(q.nrm * c.nrm) AS cos_exact
-         |  FROM short s
-         |  JOIN e q ON q.vec_id = s.qid
-         |  JOIN e c ON c.vec_id = s.cid),
-         |ranked AS (
-         |  SELECT qid, cid, cos_exact,
-         |    row_number() OVER (PARTITION BY qid ORDER BY cos_exact DESC, cid) AS rk
-         |  FROM rer)
-         |SELECT qid, rk, cid, cos_exact AS cos
-         |FROM ranked WHERE rk <= 5 ORDER BY qid, rk""".stripMargin,
+         |${pqRerankDuck()}
+         |SELECT qid, rk, cid, cos_exact AS cos FROM ranked ORDER BY qid, rk""".stripMargin,
 
 
     // filtered search against the compressed index: label predicate joins
@@ -178,82 +79,21 @@ private[analytics] trait SimOracles {
     // probes; top-PqRerankDepth shortlist re-ranked exactly
     "sim_ivf_filtered_pq" ->
       s"""WITH $paramsDuck,
-         |e AS (
-         |  SELECT vec_id, embedding, label, ${dot("embedding", "embedding", 1)} AS nrm
-         |  FROM embeddings),
-         |cents AS (
-         |  SELECT vec_id AS cent_id, embedding AS cemb, nrm AS cnrm
-         |  FROM e WHERE vec_id % 4 <> 3
-         |  ORDER BY vec_id LIMIT (SELECT k FROM params)),
-         |corpus AS (
-         |  SELECT vec_id, embedding, nrm, label, cent_id AS cell FROM (
-         |    SELECT e.vec_id, e.embedding, e.nrm, e.label, cents.cent_id,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY (${dot("e.embedding", "cents.cemb", 1)}) / sqrt(e.nrm * cents.cnrm) DESC,
-         |                 cents.cent_id) AS ark
-         |    FROM e CROSS JOIN cents WHERE e.vec_id % 4 <> 3)
-         |  WHERE ark = 1),
-         |q2 AS (
-         |  SELECT qid, qn, qlabel, cell FROM (
-         |    SELECT e.vec_id AS qid, e.nrm AS qn, e.label AS qlabel, cents.cent_id AS cell,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY (${dot("e.embedding", "cents.cemb", 1)}) / sqrt(e.nrm * cents.cnrm) DESC,
-         |                 cents.cent_id) AS ark
-         |    FROM e CROSS JOIN cents WHERE e.vec_id % 200 = 3)
-         |  WHERE ark <= $FilteredNprobe),
-         |scb AS (
-         |  SELECT CAST(row_number() OVER (ORDER BY vec_id) AS BIGINT) - 1 AS code, embedding
-         |  FROM (SELECT vec_id, embedding FROM e WHERE vec_id % 4 <> 3
-         |        ORDER BY vec_id LIMIT $PqCodes)),
-         |enc AS (
-         |${(0 until PqM).map { s =>
-             val b = s * PqSub + 1
-             s"""  SELECT v.vec_id, $s AS s, b.code,
-                |    (${pqDot("b.embedding", "b.embedding", b)}) - 2 * (${pqDot("v.embedding", "b.embedding", b)}) AS d
-                |  FROM e v CROSS JOIN scb b WHERE v.vec_id % 4 <> 3""".stripMargin
-           }.mkString("\n  UNION ALL\n")}),
-         |enc_rk AS (
-         |  SELECT vec_id, s, code,
-         |    row_number() OVER (PARTITION BY vec_id, s ORDER BY d ASC, code) AS erk
-         |  FROM enc),
-         |codes AS (
-         |  SELECT vec_id, list(code ORDER BY s) AS codes
-         |  FROM enc_rk WHERE erk = 1 GROUP BY vec_id),
-         |qpart AS (
-         |${(0 until PqM).map { s =>
-             val b = s * PqSub + 1
-             s"""  SELECT q.vec_id AS qid, $s AS s, b.code,
-                |    (${pqDot("q.embedding", "b.embedding", b)}) AS part
-                |  FROM e q CROSS JOIN scb b WHERE q.vec_id % 200 = 3""".stripMargin
-           }.mkString("\n  UNION ALL\n")}),
-         |qtab AS (
-         |  SELECT qid, list(part ORDER BY s, code) AS qtab
-         |  FROM qpart GROUP BY qid),
+         |$serveECentsDuck,
+         |${nearestCellDuck("corpus", "e", "cents", "vec_id % 4 <> 3",
+              "vec_id, embedding, nrm, label, cent_id AS cell")},
+         |${nearestCellDuck("q2", "e", "cents", "vec_id % 200 = 3",
+              "vec_id AS qid, nrm AS qn, label AS qlabel, cent_id AS cell", FilteredNprobe)},
+         |$serveCodebookDuck,
+         |${pqEncodeDuck("", "scb", "vec_id % 4 <> 3")},
+         |${adcTableDuck("", "scb", "vec_id % 200 = 3")},
          |pairs AS (
-         |  SELECT q.qid, c.vec_id AS cid, q.qlabel,
-         |    (${(0 until PqM).map(s => s"(t.qtab[($s * $PqCodes + k2.codes[${s + 1}]) + 1])").mkString(" + ")})
-         |      / sqrt(q.qn * c.nrm) AS cos_adc
+         |  SELECT q.qid, c.vec_id AS cid, q.qlabel, ${adcCosDuck(PqCodes, "q.qn")} AS cos_adc
          |  FROM q2 q JOIN corpus c ON q.cell = c.cell AND q.qlabel = c.label
          |  JOIN qtab t ON t.qid = q.qid
          |  JOIN codes k2 ON k2.vec_id = c.vec_id),
-         |short AS (
-         |  SELECT qid, cid, qlabel FROM (
-         |    SELECT qid, cid, qlabel,
-         |      row_number() OVER (PARTITION BY qid ORDER BY cos_adc DESC, cid) AS ark
-         |    FROM pairs)
-         |  WHERE ark <= $PqRerankDepth),
-         |rer AS (
-         |  SELECT s.qid, s.cid, s.qlabel,
-         |    (${dot("q.embedding", "c.embedding", 1)}) / sqrt(q.nrm * c.nrm) AS cos_exact
-         |  FROM short s
-         |  JOIN e q ON q.vec_id = s.qid
-         |  JOIN e c ON c.vec_id = s.cid),
-         |ranked AS (
-         |  SELECT qid, cid, qlabel, cos_exact,
-         |    row_number() OVER (PARTITION BY qid ORDER BY cos_exact DESC, cid) AS rk
-         |  FROM rer)
-         |SELECT qid, rk, cid, qlabel AS label, cos_exact AS cos
-         |FROM ranked WHERE rk <= 5 ORDER BY qid, rk""".stripMargin,
+         |${pqRerankDuck(Seq("qlabel"))}
+         |SELECT qid, rk, cid, qlabel AS label, cos_exact AS cos FROM ranked ORDER BY qid, rk""".stripMargin,
 
 
     // serve-index INSERT path: held-out vectors quantized against the
@@ -262,32 +102,9 @@ private[analytics] trait SimOracles {
     "sim_ivf_serve_insert" ->
       s"""WITH $paramsDuck,
          |$serveECentsDuck,
-         |assigned AS (
-         |  SELECT vec_id, nrm, cent_id AS cell FROM (
-         |    SELECT e.vec_id, e.nrm, cents.cent_id,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY (${dot("e.embedding", "cents.cemb", 1)}) / sqrt(e.nrm * cents.cnrm) DESC,
-         |                 cents.cent_id) AS ark
-         |    FROM e CROSS JOIN cents WHERE e.vec_id % 4 = 3)
-         |  WHERE ark = 1),
-         |scb AS (
-         |  SELECT CAST(row_number() OVER (ORDER BY vec_id) AS BIGINT) - 1 AS code, embedding
-         |  FROM (SELECT vec_id, embedding FROM e WHERE vec_id % 4 <> 3
-         |        ORDER BY vec_id LIMIT $PqCodes)),
-         |enc AS (
-         |${(0 until PqM).map { s =>
-             val b = s * PqSub + 1
-             s"""  SELECT v.vec_id, $s AS s, b.code,
-                |    (${pqDot("b.embedding", "b.embedding", b)}) - 2 * (${pqDot("v.embedding", "b.embedding", b)}) AS d
-                |  FROM e v CROSS JOIN scb b WHERE v.vec_id % 4 = 3""".stripMargin
-           }.mkString("\n  UNION ALL\n")}),
-         |enc_rk AS (
-         |  SELECT vec_id, s, code,
-         |    row_number() OVER (PARTITION BY vec_id, s ORDER BY d ASC, code) AS erk
-         |  FROM enc),
-         |codes AS (
-         |  SELECT vec_id, list(code ORDER BY s) AS codes
-         |  FROM enc_rk WHERE erk = 1 GROUP BY vec_id)
+         |${nearestCellDuck("assigned", "e", "cents", "vec_id % 4 = 3", "vec_id, nrm, cent_id AS cell")},
+         |$serveCodebookDuck,
+         |${pqEncodeDuck("", "scb", "vec_id % 4 = 3")}
          |SELECT a.vec_id, a.cell, a.nrm,
          |  ${(0 until PqM).map(s => s"CAST(k2.codes[${s + 1}] AS BIGINT) AS c$s").mkString(", ")}
          |FROM assigned a JOIN codes k2 ON k2.vec_id = a.vec_id
@@ -299,14 +116,7 @@ private[analytics] trait SimOracles {
     "sim_ivf_serve_delete" ->
       s"""WITH $paramsDuck,
          |$serveECentsDuck,
-         |corpus AS (
-         |  SELECT vec_id, cent_id AS cell FROM (
-         |    SELECT e.vec_id, cents.cent_id,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY (${dot("e.embedding", "cents.cemb", 1)}) / sqrt(e.nrm * cents.cnrm) DESC,
-         |                 cents.cent_id) AS ark
-         |    FROM e CROSS JOIN cents WHERE e.vec_id % 4 <> 3)
-         |  WHERE ark = 1)
+         |${nearestCellDuck("corpus", "e", "cents", "vec_id % 4 <> 3", "vec_id, cent_id AS cell")}
          |SELECT cell, count(*) AS n_before,
          |  count(*) FILTER (vec_id % 5 = 0) AS n_deleted,
          |  count(*) FILTER (vec_id % 5 <> 0) AS n_live,
@@ -320,14 +130,8 @@ private[analytics] trait SimOracles {
     "sim_ivf_compact" ->
       s"""WITH $paramsDuck,
          |$serveECentsDuck,
-         |corpus AS (
-         |  SELECT vec_id, cent_id AS cell, (vec_id % 5 = 0) AS tomb0 FROM (
-         |    SELECT e.vec_id, cents.cent_id,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY (${dot("e.embedding", "cents.cemb", 1)}) / sqrt(e.nrm * cents.cnrm) DESC,
-         |                 cents.cent_id) AS ark
-         |    FROM e CROSS JOIN cents WHERE e.vec_id % 4 <> 3)
-         |  WHERE ark = 1),
+         |${nearestCellDuck("corpus", "e", "cents", "vec_id % 4 <> 3",
+              "vec_id, cent_id AS cell, (vec_id % 5 = 0) AS tomb0")},
          |census AS (
          |  SELECT cell,
          |    (count(*) - count(*) FILTER (tomb0)) / count(*) < 0.8 AS compacted
@@ -344,15 +148,8 @@ private[analytics] trait SimOracles {
     "sim_ivf_retrain" ->
       s"""WITH $paramsDuck,
          |$serveECentsDuck,
-         |assign AS (
-         |  SELECT vec_id, cell, ins FROM (
-         |    SELECT e.vec_id, cents.cent_id AS cell,
-         |      CAST(e.vec_id % 4 = 3 AS BIGINT) AS ins,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY (${dot("e.embedding", "cents.cemb", 1)}) / sqrt(e.nrm * cents.cnrm) DESC,
-         |                 cents.cent_id) AS ark
-         |    FROM e CROSS JOIN cents)
-         |  WHERE ark = 1),
+         |${nearestCellDuck("assign", "e", "cents",
+              cols = "vec_id, cent_id AS cell, CAST(vec_id % 4 = 3 AS BIGINT) AS ins")},
          |census AS (
          |  SELECT cell, count(*) AS n_total,
          |    CAST(sum(ins) AS BIGINT) AS n_inserted,
@@ -376,26 +173,14 @@ private[analytics] trait SimOracles {
     "sim_ivf_retrain_exec" ->
       s"""WITH $paramsDuck,
          |$serveECentsDuck,
-         |members AS (
-         |  SELECT vec_id, embedding, nrm, cell FROM (
-         |    SELECT e.vec_id, e.embedding, e.nrm, cents.cent_id AS cell,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY (${dot("e.embedding", "cents.cemb", 1)}) / sqrt(e.nrm * cents.cnrm) DESC,
-         |                 cents.cent_id) AS ark
-         |    FROM e CROSS JOIN cents)
-         |  WHERE ark = 1),
+         |${nearestCellDuck("members", "e", "cents")},
          |sums AS (
          |  SELECT cell, $kmSumsVecDuck
          |  FROM members GROUP BY cell),
-         |cn AS (SELECT cell AS ncell, svec, ${dot("svec", "svec", 1)} AS snrm FROM sums),
-         |after0 AS (
-         |  SELECT m.vec_id, c.ncell,
-         |    row_number() OVER (PARTITION BY m.vec_id
-         |      ORDER BY (${dot("m.embedding", "c.svec", 1)}) / sqrt(m.nrm * c.snrm) DESC,
-         |               c.ncell) AS ark
-         |  FROM members m CROSS JOIN cn c),
+         |cn AS (SELECT cell AS cent_id, svec AS cemb, ${dot("svec", "svec", 1)} AS cnrm FROM sums),
+         |${nearestCellDuck("after0", "members", "cn", cols = "vec_id, cent_id AS ncell")},
          |bc AS (SELECT cell, count(*) AS n_before FROM members GROUP BY cell),
-         |ac AS (SELECT ncell AS cell, count(*) AS n_after FROM after0 WHERE ark = 1 GROUP BY ncell),
+         |ac AS (SELECT ncell AS cell, count(*) AS n_after FROM after0 GROUP BY ncell),
          |j AS (
          |  SELECT coalesce(bc.cell, ac.cell) AS cell,
          |    coalesce(n_before, 0) AS n_before, coalesce(n_after, 0) AS n_after
@@ -415,86 +200,36 @@ private[analytics] trait SimOracles {
     // queries probe FilteredNprobe cells against the label-carrying index
     "sim_ivf_filtered" ->
       s"""WITH $paramsDuck,
-         |e AS (
-         |  SELECT vec_id, embedding, label, ${dot("embedding", "embedding", 1)} AS nrm
-         |  FROM embeddings),
-         |cents AS (
-         |  SELECT vec_id AS cent_id, embedding AS cemb, nrm AS cnrm
-         |  FROM e WHERE vec_id % 4 <> 3
-         |  ORDER BY vec_id LIMIT (SELECT k FROM params)),
-         |corpus AS (
-         |  SELECT vec_id, embedding, nrm, label, cent_id AS cell FROM (
-         |    SELECT e.vec_id, e.embedding, e.nrm, e.label, cents.cent_id,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY (${dot("e.embedding", "cents.cemb", 1)}) / sqrt(e.nrm * cents.cnrm) DESC,
-         |                 cents.cent_id) AS ark
-         |    FROM e CROSS JOIN cents WHERE e.vec_id % 4 <> 3)
-         |  WHERE ark = 1),
-         |q AS (
-         |  SELECT vec_id AS qid, embedding AS qe, nrm AS qn, label AS qlabel, cell FROM (
-         |    SELECT e.vec_id, e.embedding, e.nrm, e.label, cents.cent_id AS cell,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY (${dot("e.embedding", "cents.cemb", 1)}) / sqrt(e.nrm * cents.cnrm) DESC,
-         |                 cents.cent_id) AS ark
-         |    FROM e CROSS JOIN cents WHERE e.vec_id % 200 = 3)
-         |  WHERE ark <= $FilteredNprobe),
+         |$serveECentsDuck,
+         |${nearestCellDuck("corpus", "e", "cents", "vec_id % 4 <> 3",
+              "vec_id, embedding, nrm, label, cent_id AS cell")},
+         |${nearestCellDuck("q", "e", "cents", "vec_id % 200 = 3",
+              "vec_id AS qid, embedding AS qe, nrm AS qn, label AS qlabel, cent_id AS cell", FilteredNprobe)},
          |pairs AS (
          |  SELECT q.qid, c.vec_id AS cid, q.qlabel,
-         |    (${dot("q.qe", "c.embedding", 1)}) / sqrt(q.qn * c.nrm) AS cos_exact
+         |    ${cosDuck("q.qe", "q.qn", "c.embedding", "c.nrm")} AS cos_exact
          |  FROM q JOIN corpus c ON q.cell = c.cell AND q.qlabel = c.label),
-         |ranked AS (
-         |  SELECT qid, cid, qlabel, cos_exact,
-         |    row_number() OVER (PARTITION BY qid ORDER BY cos_exact DESC, cid) AS rk
-         |  FROM pairs)
-         |SELECT qid, rk, cid, qlabel AS label, cos_exact AS cos
-         |FROM ranked WHERE rk <= 5 ORDER BY qid, rk""".stripMargin,
+         |${top5Duck("ranked", "pairs", "cos_exact", Seq("qlabel"))}
+         |SELECT qid, rk, cid, qlabel AS label, cos_exact AS cos FROM ranked ORDER BY qid, rk""".stripMargin,
 
 
     // same quantizer CTEs; queries probe their rank-1 AND rank-2 cells
     "sim_ivf_nprobe2" ->
       s"""WITH $paramsDuck,
          |$ivfCellChainDuck,
-         |q2 AS (
-         |  SELECT vec_id, embedding, nrm, cent_id AS cell FROM ass
-         |  WHERE ark <= 2 AND vec_id % 50 = 0),
-         |pairs AS (
-         |  SELECT q.vec_id AS qid, c.vec_id AS cid,
-         |    (${dot("q.embedding", "c.embedding", 1)}) / sqrt(q.nrm * c.nrm) AS cos_exact
-         |  FROM q2 q JOIN cell c
-         |    ON q.cell = c.cell AND q.vec_id <> c.vec_id),
-         |ranked AS (
-         |  SELECT qid, cid, cos_exact,
-         |    row_number() OVER (PARTITION BY qid ORDER BY cos_exact DESC, cid) AS rk
-         |  FROM pairs)
-         |SELECT qid, rk, cid, cos_exact AS cos
-         |FROM ranked WHERE rk <= 5 ORDER BY qid, rk""".stripMargin,
+         |${top5Duck("ranked", cellPairsDuck("ass", "cell"), "cos_exact")}
+         |SELECT qid, rk, cid, cos_exact AS cos FROM ranked ORDER BY qid, rk""".stripMargin,
 
 
     // recall census: brute-force truth on the capped sample vs the IVF
-    // top-5 at nprobe=1 (cell) and nprobe=2 (ark<=2); per-qid overlap
+    // top-5 at nprobe=1 (cell) and nprobe=2 (ass); per-qid overlap
     // counts and the int/int recall division
     "sim_ivf_recall" ->
       s"""WITH $paramsDuck,
          |$ivfCellChainDuck,
          |$bruteTruthDuck,
-         |np1 AS (
-         |  SELECT qid, cid FROM (
-         |    SELECT a.vec_id AS qid, c.vec_id AS cid,
-         |      row_number() OVER (PARTITION BY a.vec_id
-         |        ORDER BY (${dot("a.embedding", "c.embedding", 1)}) / sqrt(a.nrm * c.nrm) DESC,
-         |                 c.vec_id) AS rk
-         |    FROM cell a JOIN cell c
-         |      ON a.cell = c.cell AND a.vec_id % 50 = 0 AND a.vec_id <> c.vec_id)
-         |  WHERE rk <= 5),
-         |np2 AS (
-         |  SELECT qid, cid FROM (
-         |    SELECT a.vec_id AS qid, c.vec_id AS cid,
-         |      row_number() OVER (PARTITION BY a.vec_id
-         |        ORDER BY (${dot("a.embedding", "c.embedding", 1)}) / sqrt(a.nrm * c.nrm) DESC,
-         |                 c.vec_id) AS rk
-         |    FROM (SELECT vec_id, embedding, nrm, cent_id AS cell FROM ass WHERE ark <= 2) a
-         |      JOIN cell c ON a.cell = c.cell AND a.vec_id % 50 = 0 AND a.vec_id <> c.vec_id)
-         |  WHERE rk <= 5)
+         |${top5Duck("np1", cellPairsDuck("cell", "cell"), "cos_exact")},
+         |${top5Duck("np2", cellPairsDuck("ass", "cell"), "cos_exact")}
          |SELECT t.qid,
          |  count(n1.cid) AS hits_np1, count(n1.cid) / 5 AS recall_np1,
          |  count(n2.cid) AS hits_np2, count(n2.cid) / 5 AS recall_np2
@@ -510,46 +245,27 @@ private[analytics] trait SimOracles {
     // in params, matching the Scala side exactly)
     "sim_ivf2" ->
       s"""WITH $paramsDuck,
-         |e AS (
-         |  SELECT vec_id, embedding, ${dot("embedding", "embedding", 1)} AS nrm
-         |  FROM embeddings),
+         |$eNrmDuck,
          |cents AS (
          |  SELECT vec_id AS cent_id, embedding AS cemb, nrm AS cnrm
          |  FROM e WHERE vec_id < (SELECT kc FROM params)),
-         |l1 AS (
-         |  SELECT vec_id, embedding, nrm, cent_id AS cell FROM (
-         |    SELECT e.vec_id, e.embedding, e.nrm, cents.cent_id,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY (${dot("e.embedding", "cents.cemb", 1)}) / sqrt(e.nrm * cents.cnrm) DESC,
-         |                 cents.cent_id) AS ark
-         |    FROM e CROSS JOIN cents)
-         |  WHERE ark = 1),
+         |${nearestCellDuck("l1", "e", "cents")},
          |subc AS (
-         |  SELECT cell AS scell, vec_id AS sub_id, embedding AS semb, nrm AS ssnrm FROM (
+         |  SELECT cell AS scell, vec_id AS cent_id, embedding AS cemb, nrm AS cnrm FROM (
          |    SELECT vec_id, embedding, nrm, cell,
          |      row_number() OVER (PARTITION BY cell ORDER BY vec_id) AS srk
          |    FROM l1)
          |  WHERE srk <= (SELECT kc FROM params)),
-         |l2 AS (
-         |  SELECT vec_id, embedding, nrm, cell, sub_id AS subcell FROM (
-         |    SELECT l1.vec_id, l1.embedding, l1.nrm, l1.cell, s.sub_id,
-         |      row_number() OVER (PARTITION BY l1.vec_id
-         |        ORDER BY (${dot("l1.embedding", "s.semb", 1)}) / sqrt(l1.nrm * s.ssnrm) DESC,
-         |                 s.sub_id) AS ark
-         |    FROM l1 JOIN subc s ON l1.cell = s.scell)
-         |  WHERE ark = 1),
+         |${nearestCellDuck("l2", "l1", "subc", cols = "vec_id, embedding, nrm, cell, cent_id AS subcell",
+              by = Some(("cell", "scell")))},
          |pairs AS (
          |  SELECT q.vec_id AS qid, c.vec_id AS cid,
-         |    (${dot("q.embedding", "c.embedding", 1)}) / sqrt(q.nrm * c.nrm) AS cos_exact
+         |    ${cosDuck("q.embedding", "q.nrm", "c.embedding", "c.nrm")} AS cos_exact
          |  FROM l2 q JOIN l2 c
          |    ON q.cell = c.cell AND q.subcell = c.subcell
          |    AND q.vec_id % 50 = 0 AND q.vec_id <> c.vec_id),
-         |ranked AS (
-         |  SELECT qid, cid, cos_exact,
-         |    row_number() OVER (PARTITION BY qid ORDER BY cos_exact DESC, cid) AS rk
-         |  FROM pairs)
-         |SELECT qid, rk, cid, cos_exact AS cos
-         |FROM ranked WHERE rk <= 5 ORDER BY qid, rk""".stripMargin,
+         |${top5Duck("ranked", "pairs", "cos_exact")}
+         |SELECT qid, rk, cid, cos_exact AS cos FROM ranked ORDER BY qid, rk""".stripMargin,
 
 
     // k-means-refined IVF: KmRounds sampled Lloyd rounds with INTEGER
@@ -564,17 +280,8 @@ private[analytics] trait SimOracles {
       s"""WITH $paramsDuck,
          |$eNrmDuck,
          |$kmCellChainDuck,
-         |pairs AS (
-         |  SELECT q.vec_id AS qid, c.vec_id AS cid,
-         |    (${dot("q.embedding", "c.embedding", 1)}) / sqrt(q.nrm * c.nrm) AS cos_exact
-         |  FROM cell1 q JOIN cell1 c
-         |    ON q.cell = c.cell AND q.vec_id % 50 = 0 AND q.vec_id <> c.vec_id),
-         |ranked AS (
-         |  SELECT qid, cid, cos_exact,
-         |    row_number() OVER (PARTITION BY qid ORDER BY cos_exact DESC, cid) AS rk
-         |  FROM pairs)
-         |SELECT qid, rk, cid, cos_exact AS cos
-         |FROM ranked WHERE rk <= 5 ORDER BY qid, rk""".stripMargin,
+         |${top5Duck("ranked", cellPairsDuck("cell1", "cell1"), "cos_exact")}
+         |SELECT qid, rk, cid, cos_exact AS cos FROM ranked ORDER BY qid, rk""".stripMargin,
 
 
     // quantizer-balance census: per-cell occupancy histograms of the
@@ -599,24 +306,16 @@ private[analytics] trait SimOracles {
     "sim_ivf_pq" ->
       s"""WITH $paramsDuck,
          |$ivfPqPairsDuck,
-         |ranked AS (
-         |  SELECT qid, cid, cos_adc,
-         |    row_number() OVER (PARTITION BY qid ORDER BY cos_adc DESC, cid) AS rk
-         |  FROM pairs)
-         |SELECT qid, rk, cid, cos_adc
-         |FROM ranked WHERE rk <= 5 ORDER BY qid, rk""".stripMargin,
+         |${top5Duck("ranked", "pairs", "cos_adc")}
+         |SELECT qid, rk, cid, cos_adc FROM ranked ORDER BY qid, rk""".stripMargin,
 
 
     // production 8-bit code width: same CTE body at a 256-entry codebook
     "sim_ivf_pq256" ->
       s"""WITH $paramsDuck,
          |${ivfPqPairsDuckN(PqCodesProd)},
-         |ranked AS (
-         |  SELECT qid, cid, cos_adc,
-         |    row_number() OVER (PARTITION BY qid ORDER BY cos_adc DESC, cid) AS rk
-         |  FROM pairs)
-         |SELECT qid, rk, cid, cos_adc
-         |FROM ranked WHERE rk <= 5 ORDER BY qid, rk""".stripMargin,
+         |${top5Duck("ranked", "pairs", "cos_adc")}
+         |SELECT qid, rk, cid, cos_adc FROM ranked ORDER BY qid, rk""".stripMargin,
 
 
     // code-width recall census: brute-force truth on the capped sample vs
@@ -628,18 +327,8 @@ private[analytics] trait SimOracles {
          |${pqChainDuck(PqCodes, "_16")},
          |${pqChainDuck(PqCodesProd, "_256")},
          |$bruteTruthDuck,
-         |top_16 AS (
-         |  SELECT qid, cid FROM (
-         |    SELECT qid, cid,
-         |      row_number() OVER (PARTITION BY qid ORDER BY cos_adc DESC, cid) AS rk
-         |    FROM pairs_16)
-         |  WHERE rk <= 5),
-         |top_256 AS (
-         |  SELECT qid, cid FROM (
-         |    SELECT qid, cid,
-         |      row_number() OVER (PARTITION BY qid ORDER BY cos_adc DESC, cid) AS rk
-         |    FROM pairs_256)
-         |  WHERE rk <= 5)
+         |${top5Duck("top_16", "pairs_16", "cos_adc")},
+         |${top5Duck("top_256", "pairs_256", "cos_adc")}
          |SELECT t.qid,
          |  count(p16.cid) AS hits_pq16, count(p16.cid) / 5 AS recall_pq16,
          |  count(p256.cid) AS hits_pq256, count(p256.cid) / 5 AS recall_pq256
@@ -655,35 +344,14 @@ private[analytics] trait SimOracles {
     "sim_ivf_pq_rerank" ->
       s"""WITH $paramsDuck,
          |$ivfPqPairsDuck,
-         |short AS (
-         |  SELECT qid, cid FROM (
-         |    SELECT qid, cid,
-         |      row_number() OVER (PARTITION BY qid ORDER BY cos_adc DESC, cid) AS ark
-         |    FROM pairs)
-         |  WHERE ark <= $PqRerankDepth),
-         |rer AS (
-         |  SELECT s.qid, s.cid,
-         |    (${dot("q.embedding", "c.embedding", 1)}) / sqrt(q.nrm * c.nrm) AS cos_exact
-         |  FROM short s
-         |  JOIN e q ON q.vec_id = s.qid
-         |  JOIN e c ON c.vec_id = s.cid),
-         |ranked AS (
-         |  SELECT qid, cid, cos_exact,
-         |    row_number() OVER (PARTITION BY qid ORDER BY cos_exact DESC, cid) AS rk
-         |  FROM rer)
-         |SELECT qid, rk, cid, cos_exact AS cos
-         |FROM ranked WHERE rk <= 5 ORDER BY qid, rk""".stripMargin,
+         |${pqRerankDuck()}
+         |SELECT qid, rk, cid, cos_exact AS cos FROM ranked ORDER BY qid, rk""".stripMargin,
 
 
     // radius-2 multiprobe: the full MaxPlanes mask list sliced to the
     // 1 + pl + pl(pl-1)/2 masks valid for the data-sized plane count
     // (the list is ordered by highest set bit, so that slice is exact)
-    "sim_ann_probe2" ->
-      s"""WITH $paramsDuck,
-         |$annEDuck,
-         |${annRankedDuck("", annQProbe2Duck)}
-         |SELECT qid, rk, cid, cos_exact AS cos
-         |FROM ranked WHERE rk <= 5 ORDER BY qid, rk""".stripMargin,
+    "sim_ann_probe2" -> annTop5Duck(annQProbe2Duck),
 
 
     // LSH recall census: brute-force truth vs the three probing radii
@@ -699,11 +367,8 @@ private[analytics] trait SimOracles {
          |  count(a1.cid) AS hits_r1, count(a1.cid) / 5 AS recall_r1,
          |  count(a2.cid) AS hits_r2, count(a2.cid) / 5 AS recall_r2
          |FROM truth t
-         |LEFT JOIN (SELECT qid, cid FROM rankedr0 WHERE rk <= 5) a0
-         |  ON t.qid = a0.qid AND t.cid = a0.cid
-         |LEFT JOIN (SELECT qid, cid FROM rankedr1 WHERE rk <= 5) a1
-         |  ON t.qid = a1.qid AND t.cid = a1.cid
-         |LEFT JOIN (SELECT qid, cid FROM rankedr2 WHERE rk <= 5) a2
-         |  ON t.qid = a2.qid AND t.cid = a2.cid
+         |LEFT JOIN rankedr0 a0 ON t.qid = a0.qid AND t.cid = a0.cid
+         |LEFT JOIN rankedr1 a1 ON t.qid = a1.qid AND t.cid = a1.cid
+         |LEFT JOIN rankedr2 a2 ON t.qid = a2.qid AND t.cid = a2.cid
          |GROUP BY t.qid ORDER BY t.qid""".stripMargin)
 }

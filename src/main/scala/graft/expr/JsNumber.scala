@@ -21,10 +21,13 @@ import org.apache.spark.sql.graft.{ColumnBridge, JsNumberFormat}
   * the round-tripping digits of `Double.toString`: for p = 1, 2, … they are
   * rounded half-up to p digits, and the first that converts back to the
   * value (`BigDecimal.doubleValue` rounds correctly, like
-  * `Double.parseDouble`) is rendered. That is the digit string and the
-  * rounding `Formatter`'s `%.{p-1}e` applies, so the result equals the search
-  * over `%.{p-1}e` renderings (kept as the test reference
-  * `graft.expr.JsNumberReference`) without formatting a string per try.
+  * `Double.parseDouble`) is rendered. Rounding those digits rather than the
+  * exact binary value can only go wrong when they end in 5 and the answer
+  * is one digit shorter: both neighbours are then equally far from the
+  * digits, and only the exact value tells which ECMA-262 picks
+  * (`nearestShort`). The test reference `graft.expr.JsNumberReference`
+  * rounds the exact value for every p; `JsNumberNodeSpec` checks both
+  * against node.
   */
 object JsNumber {
 
@@ -41,13 +44,44 @@ object JsNumber {
     val a = math.abs(d)
     // Double.toString's digits always round-trip; keep the shortest half-up
     // rounding of them that does too
-    val all = new java.math.BigDecimal(java.lang.Double.toString(a))
+    val s = java.lang.Double.toString(a)
+    val all = new java.math.BigDecimal(s)
     var p = 1
     var r = all.round(halfUp(p))
     while (r.doubleValue != a) { p += 1; r = all.round(halfUp(p)) }
+    // decimals of at most 15 significant digits name distinct doubles, so
+    // two round-tripping neighbours need 16 or more digits
+    if (all.precision > 15 && p >= all.precision - 1 && endsIn5(s))
+      r = nearestShort(a, all, r)
     val digits = r.unscaledValue.toString
     val exp = r.precision - r.scale - 1
     render(neg, digits, exp)
+  }
+
+  /** The tie branch: `all`'s last digit is 5, so its two neighbours one
+    * digit shorter lie equally far from `all`, and the half-up search
+    * takes the upper one (or, when only the lower round-trips, keeps
+    * `all`). ECMAScript takes, among the shortest digit strings that
+    * round-trip, the one closest to the exact binary value, the even one
+    * on an exact tie. `r` is the half-up search's result. */
+  private def nearestShort(a: Double, all: java.math.BigDecimal, r: java.math.BigDecimal): java.math.BigDecimal = {
+    val n = all.precision
+    val up = all.round(halfUp(n - 1))
+    val down = all.round(new java.math.MathContext(n - 1, java.math.RoundingMode.DOWN))
+    if (down.doubleValue != a) r
+    else if (up.doubleValue != a) down
+    else {
+      val exact = new java.math.BigDecimal(a)
+      val c = exact.subtract(down).compareTo(up.subtract(exact))
+      if (c < 0 || (c == 0 && !down.unscaledValue.testBit(0))) down else up
+    }
+  }
+
+  /** Whether the last significant digit of a `Double.toString` rendering
+    * is 5. */
+  private def endsIn5(s: String): Boolean = {
+    val e = s.indexOf('E')
+    s.charAt((if (e < 0) s.length else e) - 1) == '5'
   }
 
   /** JS layout of significant `digits` whose first digit has decimal

@@ -47,12 +47,12 @@ class PropertySpec extends SparkSpec {
     }, min = 500)
   }
 
-  /** Doubles where the digit-string search could part from the `%.{p}e`
-    * search: every bit pattern, subnormals, the ranges JS prints in fixed
-    * notation but `Double.toString` in exponent form ([1e7, 1e21) and
-    * (1e-7, 1e-3)), its own fixed range [1e-3, 1e7), a few ulps around the
-    * 1e21, 1e-6 and 1e-7 thresholds, and money-shaped decimals; each with
-    * either sign. */
+  /** Doubles where the digit-string search could part from the
+    * exact-value search of `JsNumberReference`: every bit pattern,
+    * subnormals, the ranges JS prints in fixed notation but
+    * `Double.toString` in exponent form ([1e7, 1e21) and (1e-7, 1e-3)),
+    * its own fixed range [1e-3, 1e7), a few ulps around the 1e21, 1e-6 and
+    * 1e-7 thresholds, and money-shaped decimals; each with either sign. */
   private val digitSearchDouble: Gen[Double] = {
     def bits(d: Double) = java.lang.Double.doubleToLongBits(d)
     def between(lo: Double, hi: Double) =

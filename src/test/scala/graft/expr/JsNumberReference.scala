@@ -1,8 +1,10 @@
 package graft.expr
 
-/** Reference digit selection for [[JsNumber.format]]: format the value with
-  * `%.{p-1}e` for p = 1..17 and take the first rendering that parses back to
-  * it. It builds a format string and runs `Formatter` per try, so it is far
+/** Reference digit selection for [[JsNumber.format]], the ECMA-262
+  * `Number::toString` rule taken literally: for p = 1..17, round the exact
+  * binary value to p significant digits (half-even: the closest p-digit
+  * decimal, the even one on a tie) and take the first that parses back to
+  * the value. Rounding the exact value (up to ~770 digits) per try is far
   * slower than `JsNumber.format`, which must render every double the same. */
 object JsNumberReference {
   def format(d: Double): String = {
@@ -10,19 +12,14 @@ object JsNumberReference {
     if (d == java.lang.Double.POSITIVE_INFINITY) return "Infinity"
     if (d == java.lang.Double.NEGATIVE_INFINITY) return "-Infinity"
     if (d == 0.0) return "0"
-    val a = math.abs(d)
-    var digits: String = null
-    var exp = 0
+    val exact = new java.math.BigDecimal(math.abs(d))
     var p = 1
-    while (digits == null && p <= 17) {
-      val s = String.format(java.util.Locale.ROOT, "%." + (p - 1) + "e", Double.box(a))
-      if (java.lang.Double.parseDouble(s) == a) {
-        val i = s.indexOf('e')
-        digits = s.substring(0, i).replace(".", "")
-        exp = Integer.parseInt(s.substring(i + 1))
-      }
+    var r = exact.round(new java.math.MathContext(p, java.math.RoundingMode.HALF_EVEN))
+    while (r.doubleValue != math.abs(d)) {
       p += 1
+      r = exact.round(new java.math.MathContext(p, java.math.RoundingMode.HALF_EVEN))
     }
-    JsNumber.render(d < 0, digits, exp)
+    val digits = r.unscaledValue.toString.reverse.dropWhile(_ == '0').reverse
+    JsNumber.render(d < 0, digits, r.precision - r.scale - 1)
   }
 }
